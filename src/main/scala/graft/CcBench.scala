@@ -28,6 +28,12 @@ import graft.ops.Dedup
   * reuse, but re-deriving the banding pipeline per loop would put
   * ~2× the setup cost into whichever loop runs second.
   *
+  * The loops run with `spark.sql.autoBroadcastJoinThreshold = -1`
+  * (set after the pair graph is built): an edge list within the
+  * broadcast budget would take the driver union-find and run no
+  * round, and rounds × per-round wall is the shape under test. Each
+  * loop's line and the JSON name the regime that ran.
+  *
   * Usage: CcBench <documentsDir> [outDir] [maxPlain=200] [maxFast=40]
   */
 object CcBench {
@@ -58,6 +64,10 @@ object CcBench {
     val pairsSec = (System.nanoTime() - tPairs0) / 1e9
     println(f"pairs: $nPairs rows in $pairsSec%.1f s")
 
+    // the distributed loops are the comparison: no driver finish
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def regime(rounds: Int): String =
+      if (rounds == 0) "driver" else "distributed"
     def timeLoop(tag: String, run: () => org.apache.spark.sql.DataFrame)
     : (org.apache.spark.sql.DataFrame, Int, Double) = {
       val t0 = System.nanoTime()
@@ -65,8 +75,10 @@ object CcBench {
       val n = labels.count() // the loop materializes on return; count pins it
       val sec = (System.nanoTime() - t0) / 1e9
       val rounds = Dedup.lastCcRounds
-      println(f"$tag: $n labels, $rounds rounds, $sec%.1f s " +
-        f"(${sec / rounds}%.2f s/round)")
+      val perRound =
+        if (rounds == 0) "" else f" (${sec / rounds}%.2f s/round)"
+      println(f"$tag: ${regime(rounds)}, $n labels, $rounds rounds, " +
+        f"$sec%.1f s$perRound")
       (labels, rounds, sec)
     }
     // fast first: if the plain loop blows its round budget the fast
@@ -94,9 +106,12 @@ object CcBench {
     val json =
       f"""{"metric":"cc_chain","docs":$nDocs,"pairs":$nPairs,""" +
         f""""pairs_sec":$pairsSec%.1f,"components":$components,""" +
-        f""""plain":{"rounds":$plainRounds,"sec":$plainSec%.1f},""" +
-        f""""fast":{"rounds":$fastRounds,"sec":$fastSec%.1f},""" +
-        f""""auto":{"rounds":$autoRounds,"sec":$autoSec%.1f},""" +
+        f""""plain":{"regime":"${regime(plainRounds)}",""" +
+        f""""rounds":$plainRounds,"sec":$plainSec%.1f},""" +
+        f""""fast":{"regime":"${regime(fastRounds)}",""" +
+        f""""rounds":$fastRounds,"sec":$fastSec%.1f},""" +
+        f""""auto":{"regime":"${regime(autoRounds)}",""" +
+        f""""rounds":$autoRounds,"sec":$autoSec%.1f},""" +
         f""""label_mismatches":$mismatches,""" +
         f""""auto_label_mismatches":$autoMismatches}"""
     println(json)

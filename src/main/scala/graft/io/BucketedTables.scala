@@ -54,7 +54,8 @@ object BucketedTables {
     * parallelism bounded. One bucket per `targetBucketBytes` of the
     * frame's ESTIMATED size (Catalyst stats — file-length-based for
     * parquet scans, so cheap and metadata-only), rounded UP to a power
-    * of two and clamped to [minBuckets, maxBuckets]. Powers of two
+    * of two and THEN clamped to [minBuckets, maxBuckets] (a
+    * non-power-of-two bound wins over the rounding). Powers of two
     * because the bucket count is the layout's JOIN contract: Spark
     * elides the join shuffle when the sides' counts agree, or (with
     * coalesceBucketsInJoin) when one divides the other — power-of-two
@@ -74,11 +75,11 @@ object BucketedTables {
       s"need 1 <= minBuckets ($minBuckets) <= maxBuckets ($maxBuckets)")
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val raw = ((bytes + targetBucketBytes - 1) / targetBucketBytes)
-      .min(BigInt(maxBuckets)).max(BigInt(minBuckets)).toLong
-    Integer.highestOneBit(raw.toInt) match {
-      case p if p == raw => p
-      case p => p << 1 // round UP to the next power of two
-    }
+      .max(BigInt(1))
+    // round UP to the next power of two in BigInt (no Int overflow past
+    // 2^30), THEN clamp: a non-power-of-two bound is itself respected
+    val pow2 = BigInt(1) << (raw - 1).bitLength
+    pow2.min(BigInt(maxBuckets)).max(BigInt(minBuckets)).toInt
   }
 
   /** Write `df` as an external parquet table bucketed by `bucketCol`

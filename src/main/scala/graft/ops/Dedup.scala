@@ -1204,138 +1204,62 @@ object Dedup {
     * decisions; components cannot).
     *
     * Scale shape: the edge list (derived from the expensive banding
-    * pipeline) is persisted once, so each iteration pays ONE hash
-    * shuffle (neighbor-label join + min agg) over cached edges —
-    * without the persist every iteration would re-run the whole
-    * MinHash/verify pipeline. The loop early-stops on a converged
-    * iteration via a bounded driver-side count — the same documented
-    * driver-action pattern as [[Similarity]]'s kmeansIterate — and
-    * throws if `maxIters` rounds did not converge (silently returning
-    * partial labels would split components, the exact inconsistency
-    * this operator exists to prevent).
+    * pipeline) is persisted once and its size observed with one count
+    * over that cache. If it fits the session's broadcast budget
+    * ([[DriverFinish]]: 16 B per directed edge against
+    * `spark.sql.autoBroadcastJoinThreshold`), the edges are collected
+    * and the components come from a driver union-find in one pass —
+    * no rounds, [[lastCcRounds]] = 0. At curation sizes (a few
+    * thousand pairs) that replaces ~30 Spark jobs of a few kilobytes
+    * each. Above the budget, or with the threshold at -1, the
+    * distributed loop runs: each iteration pays ONE hash shuffle
+    * (neighbor-label join + min agg) over the cached edges — without
+    * the persist every iteration would re-run the whole MinHash/verify
+    * pipeline. The loop early-stops on a converged iteration observed
+    * on the round's own checkpoint job, and throws if `maxIters`
+    * rounds did not converge (silently returning partial labels would
+    * split components, the exact inconsistency this operator exists to
+    * prevent).
     *
-    * CONVERGENCE CONTRACT: rounds-to-converge = O(component DIAMETER),
-    * not corpus size — plus one final all-stable round to observe
-    * convergence. Near-dup clusters in real corpora are template
-    * families, star/clique-shaped with diameter ≤ ~3, so the loop is
-    * a handful of rounds at ANY corpus size (measured on the 4M-doc
-    * grown corpus: 4 rounds — 3 changing + 1 stability-observation —
-    * per-round wall flat; DOCS_4m_r14 /
-    * SCALE_r14 §4; per-round changed-counts and walls log under
-    * GRAFT_CC_LOG=1). The adversary is a CHAIN-shaped graph
-    * (a~b~c~…~z, diameter = n): min-label propagation needs O(n)
+    * CONVERGENCE CONTRACT: the driver finish is exact in one pass at
+    * any diameter, so `maxIters` only bounds the distributed loop.
+    * There, rounds-to-converge = O(component DIAMETER), not corpus
+    * size — plus one final all-stable round to observe convergence.
+    * Near-dup clusters in real corpora are template families,
+    * star/clique-shaped with diameter ≤ ~3, so the loop is a handful of
+    * rounds at ANY corpus size (measured on the 4M-doc grown corpus:
+    * 4 rounds — 3 changing + 1 stability-observation — per-round wall
+    * flat; DOCS_4m_r14 / SCALE_r14 §4; per-round changed-counts and
+    * walls log under GRAFT_CC_LOG=1). The adversary is a CHAIN-shaped
+    * graph (a~b~c~…~z, diameter = n): min-label propagation needs O(n)
     * rounds there, and `maxIters` exists to turn that pathology into a
-    * loud error instead of an unbounded driver loop. A corpus whose
-    * near-dup graph legitimately carries long chains wants a
-    * pointer-doubling variant (labels propagate along label-graph
-    * edges, O(log diameter) rounds at ~2× per-round cost) — not
-    * needed for the template-family regime this engine targets.
+    * loud error instead of an unbounded driver loop; graphs that
+    * legitimately carry long chains want [[connectedComponentsFast]]
+    * or [[connectedComponentsAuto]].
     *
     * Returns (id, rep): one row per node of the pair graph (isolated
     * docs never enter; their "component" is trivially themselves). The
-    * API owns every cache it creates: the converged labels are
-    * materialized once via an eager `localCheckpoint` (same pattern as
-    * [[crossDedupFlags]]'s batch frame) and every intermediate persist
-    * is dropped before returning, so no CacheManager entry escapes —
-    * the checkpoint blocks are reclaimed by the ContextCleaner when the
-    * returned frame goes unreferenced, with no caller-side `unpersist()`
-    * obligation (the round-6 foot-gun).
+    * API owns every cache it creates: the driver finish returns a
+    * local relation, and the distributed loop materializes its labels
+    * via an eager `localCheckpoint` (same pattern as
+    * [[crossDedupFlags]]'s batch frame) and drops every intermediate
+    * persist before returning, so no CacheManager entry escapes — the
+    * checkpoint blocks are reclaimed by the ContextCleaner when the
+    * returned frame goes unreferenced, with no caller-side
+    * `unpersist()` obligation (the round-6 foot-gun).
     */
-  /** Iteration count of the most recent connectedComponents /
-    * connectedComponentsFast call that CONVERGED — a driver-side bench
-    * hook (CcBench records rounds × per-round wall without parsing the
-    * GRAFT_CC_LOG stderr). Last-writer-wins under concurrency; never
-    * read it for correctness.
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 20)
+  : DataFrame =
+    componentsLoop(pairs, maxIters, jumpFrom = Int.MaxValue,
+      "connectedComponents", " (component diameter exceeds maxIters)")
+
+  /** Iteration count of the most recent connected-components call that
+    * CONVERGED — a driver-side bench hook (CcBench records rounds ×
+    * per-round wall without parsing the GRAFT_CC_LOG stderr). 0 when
+    * the call took the driver finish (no rounds ran). Last-writer-wins
+    * under concurrency; never read it for correctness.
     */
   @volatile private[graft] var lastCcRounds: Int = 0
-
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20)
-  : DataFrame = {
-    // edges persist for the one-time setup, not the loop: `closed`
-    // references edges TWICE (the union below) and the initial labels
-    // scan it once more — unpersisted, each consumer re-runs the full
-    // upstream MinHash/verify pairs pipeline before closed's own cache
-    // populates (~2-3× one-time setup cost, the r14 advice finding).
-    // Dropped right after the first materialization below.
-    val edges = pairs.select(col("id1").as("a"), col("id2").as("b"))
-      .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
-      .persist()
-    // self-loops CLOSE the neighborhood so each round is ONE join+agg
-    // with labels referenced ONCE. The former round shape —
-    // union(neighbor-min join, own labels) — referenced labels TWICE,
-    // doubling the LOGICAL plan per round: invisible at the
-    // template-family diameter (≤4 rounds ⇒ ≤16 copies) but a
-    // diameter-16 random graph OOM'd plan stringification at 2¹⁶
-    // copies before maxIters could fire (found by the r14 differential
-    // sweep). Same semantics: min over the closed neighborhood.
-    val closed = edges.unionByName(
-      edges.select(col("a"), col("a").as("b")).distinct()).persist()
-    // per-round labels are lineage-truncated (eager localCheckpoint):
-    // persist alone caches DATA but leaves the logical tree growing
-    // with every round, and the checkpoint also sidesteps Catalyst's
-    // union-constraint rewrite bug that a union over a checkpointed
-    // frame trips (see connectedComponentsFast). Derived from `closed`
-    // (node set is identical — self-loops add no ids), so this eager
-    // materialization also populates closed's cache, after which the
-    // edges cache has no further reader.
-    // labels init = the SELF-LOOP rows of closed (b === a), which ARE
-    // the distinct node set by construction — the former
-    // `closed.select(a).distinct()` paid a second corpus-wide
-    // exchange+agg for a set the closed union already materializes
-    // (r19). The filter scans closed once, so this eager checkpoint
-    // still populates closed's cache, after which the edges cache has
-    // no further reader. (Self-edges in caller-supplied pairs can
-    // duplicate an init row; the first round's groupBy(id) collapses
-    // them — labels after any round are unique per id.)
-    var labels = closed.filter(col("b") === col("a"))
-      .select(col("a").as("id"), col("a").as("rep")).localCheckpoint(true)
-    edges.unpersist()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val t0 = System.nanoTime()
-      // the self-loop row (a,a) carries a's OWN current label through
-      // the join, so the same aggregate that takes the neighborhood min
-      // also recovers the pre-round label — and convergence (no label
-      // shrank) rides the checkpoint MATERIALIZATION job itself as an
-      // Observation (r19; min(rep) ≤ _old always since the self row
-      // participates in the min, so `changed` counts exactly the rows
-      // the r18 filter+count — and the pre-r18 propagated⋈labels join —
-      // counted). One exchange AND one job per plain round: the
-      // separate count action over the checkpointed blocks was pure
-      // job-dispatch overhead per round — one extra full-label pass
-      // per round at 10⁹ nodes.
-      val obs = org.apache.spark.sql.Observation()
-      val prop0 = closed.join(labels, closed("b") === labels("id"))
-        .select(closed("a").as("id"),
-          (closed("b") === closed("a")).as("_self"), col("rep"))
-        .groupBy("id").agg(min(col("rep")).as("rep"),
-          min(when(col("_self"), col("rep"))).as("_old"))
-        .observe(obs,
-          count(when(col("rep") < col("_old"), lit(1))).as("changed"))
-        .localCheckpoint(true)
-      val changed = obs.get("changed").asInstanceOf[Long]
-      labels = prop0.select(col("id"), col("rep"))
-      converged = changed == 0
-      i += 1
-      // scale-measurement hook (SCALE_r10/r14): per-iteration
-      // label-change counts and round walls put the driver-loop cost
-      // curve on record — opt-in via env so the gate's stderr stays
-      // quiet
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        System.err.println(f"[cc] iter $i changed=$changed " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    closed.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters iterations " +
-          "(component diameter exceeds maxIters); raise maxIters")
-    lastCcRounds = i
-    // the converged labels are already checkpoint-materialized; the
-    // caller gets a plain frame with no unpersist obligation
-    labels
-  }
 
   /** [[connectedComponents]] with POINTER JUMPING — the chain-graph
     * escape the plain loop's scaladoc names: min-label propagation
@@ -1350,7 +1274,9 @@ object Dedup {
     * template-family regime (diameter ≤ ~3) it is strictly MORE
     * expensive — use it when components can legitimately be long
     * chains (citation/link graphs, time-ordered revision chains), not
-    * as a default.
+    * as a default. Same regime rule as the plain loop: an edge list
+    * within the broadcast budget takes the driver union-find instead
+    * of any round, whatever its diameter.
     *
     * Correctness: both steps only DECREASE labels and both preserve
     * "label is the id of a node reachable from me" (neighbor labels
@@ -1365,94 +1291,10 @@ object Dedup {
     * chain 10× longer than its maxIters.
     */
   def connectedComponentsFast(pairs: DataFrame, maxIters: Int = 20)
-  : DataFrame = {
-    // persisted for the same one-time-setup reason as the plain loop:
-    // closed's union reads edges twice and the initial labels once —
-    // without the cache each re-runs the upstream pairs pipeline
-    val edges = pairs.select(col("id1").as("a"), col("id2").as("b"))
-      .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
-      .persist()
-    // self-loops CLOSE the neighborhood once, outside the loop, so each
-    // round's propagate is a single join+agg — the plain loop's
-    // per-round `union(neighbor mins, own labels)` form is unusable
-    // here: unioning against a checkpoint-truncated labels frame trips
-    // Catalyst's union-constraint rewrite (AttributeMap lookup fails on
-    // the join-side constraint attribute at planning)
-    val closed = edges.unionByName(
-      edges.select(col("a"), col("a").as("b")).distinct()).persist()
-    // each round's labels are LINEAGE-TRUNCATED (eager localCheckpoint,
-    // not persist): the jump step references the round's propagated
-    // frame TWICE (both sides of the self-join), so under persist alone
-    // the LOGICAL plan doubles every round — 2^rounds copies of the
-    // base tree by round 10, an analyzer/optimizer OOM before any task
-    // runs (measured: 8 GB heap dies at a 101-node chain). Checkpoint
-    // blocks are reclaimed by the ContextCleaner as each round's frame
-    // goes unreferenced, same ownership story as the plain loop's
-    // returned frame. Derived from `closed` so this eager
-    // materialization populates closed's cache; the edges cache is
-    // done after it.
-    // labels init = the SELF-LOOP rows of closed (b === a), which ARE
-    // the distinct node set by construction — the former
-    // `closed.select(a).distinct()` paid a second corpus-wide
-    // exchange+agg for a set the closed union already materializes
-    // (r19). The filter scans closed once, so this eager checkpoint
-    // still populates closed's cache, after which the edges cache has
-    // no further reader. (Self-edges in caller-supplied pairs can
-    // duplicate an init row; the first round's groupBy(id) collapses
-    // them — labels after any round are unique per id.)
-    var labels = closed.filter(col("b") === col("a"))
-      .select(col("a").as("id"), col("a").as("rep")).localCheckpoint(true)
-    edges.unpersist()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val t0 = System.nanoTime()
-      // propagate: everyone adopts the min label in their CLOSED
-      // neighborhood (self-loops supply the own-label term).
-      // Checkpointed before the self-join below — it is consumed twice.
-      // The self row also recovers the PRE-round label (`_old`) in the
-      // same aggregate — see the plain loop's round for the argument
-      // (r18 optimization)
-      val propagated = closed.join(labels, closed("b") === labels("id"))
-        .select(closed("a").as("id"),
-          (closed("b") === closed("a")).as("_self"), col("rep"))
-        .groupBy("id").agg(min(col("rep")).as("rep"),
-          min(when(col("_self"), col("rep"))).as("_old"))
-        .localCheckpoint(true)
-      // shortcut: follow the label one hop through the label table
-      // itself — rep ids are node ids, so this is a self-join; a rep
-      // that is already a component min maps to itself. `_old` rides
-      // through: the jump only ever DECREASES rep further, so
-      // rep < _old still counts exactly the changed rows — observed on
-      // the jump checkpoint's own materialization job (r19; the
-      // separate count action was one extra full-label pass per round)
-      val obs = org.apache.spark.sql.Observation()
-      val jumped = propagated.as("p")
-        .join(propagated.select(col("id").as("rep"),
-          col("rep").as("rep2")).as("q"), Seq("rep"), "left")
-        .select(col("id"),
-          least(col("rep"), coalesce(col("rep2"), col("rep"))).as("rep"),
-          col("_old"))
-        .observe(obs,
-          count(when(col("rep") < col("_old"), lit(1))).as("changed"))
-        .localCheckpoint(true)
-      val changed = obs.get("changed").asInstanceOf[Long]
-      labels = jumped.select(col("id"), col("rep"))
-      converged = changed == 0
-      i += 1
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        System.err.println(f"[cc-fast] iter $i changed=$changed " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    closed.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsFast did not converge in $maxIters " +
-          "iterations (log₂ of the component diameter exceeds maxIters?); " +
-          "raise maxIters")
-    lastCcRounds = i
-    labels
-  }
+  : DataFrame =
+    componentsLoop(pairs, maxIters, jumpFrom = 0,
+      "connectedComponentsFast",
+      " (log₂ of the component diameter exceeds maxIters?)")
 
   /** [[connectedComponents]] with the plain-vs-pointer-doubling regime
     * AUTO-selected — the third measured-boundary auto (after
@@ -1466,7 +1308,10 @@ object Dedup {
     * observed after `switchAfter` rounds — a diameter the caller never
     * sees costs nothing (template families converge before the switch
     * and pay exactly the plain loop), while a chain pays `switchAfter`
-    * cheap rounds then finishes in O(log remaining-diameter).
+    * cheap rounds then finishes in O(log remaining-diameter). Both
+    * choices are under the plain loop's regime rule: an edge list
+    * within the broadcast budget takes the driver union-find and runs
+    * no round of either shape.
     *
     * Interleaving is sound because BOTH round shapes preserve the two
     * invariants the fixpoint argument needs — labels only DECREASE and
@@ -1488,20 +1333,109 @@ object Dedup {
       maxIters: Int = 20): DataFrame = {
     require(switchAfter >= 1 && switchAfter <= maxIters,
       s"switchAfter ($switchAfter) must be in [1, maxIters=$maxIters]")
+    componentsLoop(pairs, maxIters, jumpFrom = switchAfter,
+      "connectedComponentsAuto", "")
+  }
+
+  /** The one loop behind the three public forms: plain propagation
+    * rounds before round `jumpFrom`, propagate + pointer-jump rounds
+    * from it on (`Int.MaxValue` = plain loop, 0 = fast loop), after the
+    * shared prologue that may finish on the driver instead.
+    */
+  private def componentsLoop(pairs: DataFrame, maxIters: Int,
+      jumpFrom: Int, name: String, hint: String): DataFrame = {
+    // edges persist for the one-time setup, not the loop: the size
+    // probe counts them, `closed` references them TWICE (the union
+    // below) and the initial labels scan them once more — unpersisted,
+    // each consumer re-runs the full upstream MinHash/verify pairs
+    // pipeline (~2-3× one-time setup cost, the r14 advice finding).
+    // Dropped right after the first materialization of closed.
     val edges = pairs.select(col("id1").as("a"), col("id2").as("b"))
       .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
       .persist()
-    val closed = edges.unionByName(
-      edges.select(col("a"), col("a").as("b")).distinct()).persist()
-    // labels init = the SELF-LOOP rows of closed (b === a), which ARE
-    // the distinct node set by construction — the former
-    // `closed.select(a).distinct()` paid a second corpus-wide
-    // exchange+agg for a set the closed union already materializes
-    // (r19). The filter scans closed once, so this eager checkpoint
-    // still populates closed's cache, after which the edges cache has
-    // no further reader. (Self-edges in caller-supplied pairs can
-    // duplicate an init row; the first round's groupBy(id) collapses
-    // them — labels after any round are unique per id.)
+    driverComponents(edges) match {
+      case Some(labels) =>
+        edges.unpersist()
+        lastCcRounds = 0
+        if (sys.env.contains("GRAFT_CC_LOG"))
+          System.err.println(s"[$name] driver finish")
+        labels
+      case None =>
+        distributedComponents(edges, maxIters, jumpFrom, name, hint)
+    }
+  }
+
+  /** Union-find components of a persisted directed edge list (a, b)
+    * when it fits the broadcast budget ([[DriverFinish]], 16 B per
+    * row); None — and the distributed loop runs — above the budget,
+    * with the rule disabled, for non-integral ids, or if an id is null
+    * (the distributed loop's own null semantics then apply). Linking
+    * the larger root under the smaller makes every root its
+    * component's min id, the distributed loop's fixpoint label.
+    */
+  private def driverComponents(edges: DataFrame): Option[DataFrame] = {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val idType = edges.schema("a").dataType
+    if (idType != LongType && idType != IntegerType) None
+    else DriverFinish.collectWithin(edges, rowBytes = 16L)
+      .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      .map { rows =>
+        def id(r: org.apache.spark.sql.Row, i: Int): Long =
+          if (idType == LongType) r.getLong(i) else r.getInt(i).toLong
+        // both directions are in the list, so `a` alone is the node set
+        val ids = rows.map(id(_, 0)).distinct.sorted
+        val parent = Array.range(0, ids.length)
+        def find(x: Int): Int = {
+          var root = x
+          while (parent(root) != root) root = parent(root)
+          var y = x
+          while (parent(y) != root) {
+            val up = parent(y); parent(y) = root; y = up
+          }
+          root
+        }
+        rows.foreach { r =>
+          val x = find(java.util.Arrays.binarySearch(ids, id(r, 0)))
+          val y = find(java.util.Arrays.binarySearch(ids, id(r, 1)))
+          if (x != y) parent(math.max(x, y)) = math.min(x, y)
+        }
+        val spark = edges.sparkSession
+        import spark.implicits._
+        ids.indices.map(i => (ids(i), ids(find(i)))).toDF("id", "rep")
+          .select(col("id").cast(idType), col("rep").cast(idType))
+      }
+  }
+
+  private def distributedComponents(edges: DataFrame, maxIters: Int,
+      jumpFrom: Int, name: String, hint: String): DataFrame = {
+    // self-loops CLOSE the neighborhood so each round is ONE join+agg
+    // with labels referenced ONCE. The former round shape —
+    // union(neighbor-min join, own labels) — referenced labels TWICE,
+    // doubling the LOGICAL plan per round: invisible at the
+    // template-family diameter (≤4 rounds ⇒ ≤16 copies) but a
+    // diameter-16 random graph OOM'd plan stringification at 2¹⁶
+    // copies before maxIters could fire (found by the r14 differential
+    // sweep), and unioning against a checkpoint-truncated labels frame
+    // trips Catalyst's union-constraint rewrite (AttributeMap lookup
+    // fails on the join-side constraint attribute at planning). Same
+    // semantics: min over the closed neighborhood. Caller self-edges
+    // (x, x) leave the edge branch — the synthesized self-loop is the
+    // same row — so the b === a rows of closed ARE the distinct
+    // self-loop branch.
+    val closed = edges.filter(!(col("a") <=> col("b")))
+      .unionByName(edges.select(col("a"), col("a").as("b")).distinct())
+      .persist()
+    // labels init = the self-loop rows of closed: the distinct node
+    // set, one row per id by construction rather than by the first
+    // round's groupBy. Filtering closed scans it once, so this eager
+    // checkpoint populates closed's cache, after which the edges cache
+    // has no further reader. Per-round labels are lineage-truncated
+    // the same way (eager localCheckpoint): persist alone caches DATA
+    // but leaves the logical tree growing with every round, and a jump
+    // round references its propagated frame TWICE (both sides of the
+    // self-join) — 2^rounds copies of the base tree by round 10, an
+    // analyzer OOM before any task runs (measured: 8 GB heap dies at a
+    // 101-node chain).
     var labels = closed.filter(col("b") === col("a"))
       .select(col("a").as("id"), col("a").as("rep")).localCheckpoint(true)
     edges.unpersist()
@@ -1509,13 +1443,15 @@ object Dedup {
     var i = 0
     while (!converged && i < maxIters) {
       val t0 = System.nanoTime()
-      val jump = i >= switchAfter
-      // same fused convergence as the fixed loops: the self row
-      // recovers the pre-round label in the propagate aggregate, and
-      // `changed` rides the ROUND's last checkpoint materialization as
-      // an Observation (r19) — one exchange and one job per plain
-      // round, two per jump round (was +1 count job per round; and two
-      // and three exchanges with the pre-r18 changed-check join)
+      val jump = i >= jumpFrom
+      // propagate: everyone adopts the min label in their CLOSED
+      // neighborhood. The self row (a,a) carries a's OWN current label
+      // through the join, so the same aggregate also recovers the
+      // pre-round label (`_old`) — and convergence (no label shrank)
+      // rides the round's LAST checkpoint materialization job as an
+      // Observation (r19; min(rep) ≤ _old always since the self row
+      // participates in the min). One exchange and one job per plain
+      // round, two per jump round.
       val obs = org.apache.spark.sql.Observation()
       def observed(df: DataFrame): DataFrame = df.observe(obs,
         count(when(col("rep") < col("_old"), lit(1))).as("changed"))
@@ -1527,6 +1463,11 @@ object Dedup {
       val next =
         if (!jump) observed(propagated0).localCheckpoint(true)
         else {
+          // shortcut: follow the label one hop through the label table
+          // itself — rep ids are node ids, so this is a self-join; a
+          // rep that is already a component min maps to itself. The
+          // jump only ever DECREASES rep further, so rep < _old still
+          // counts exactly the changed rows.
           val propagated = propagated0.localCheckpoint(true)
           observed(propagated.as("p")
             .join(propagated.select(col("id").as("rep"),
@@ -1540,17 +1481,23 @@ object Dedup {
       labels = next.select(col("id"), col("rep"))
       converged = changed == 0
       i += 1
+      // scale-measurement hook (SCALE_r10/r14): per-iteration
+      // label-change counts and round walls put the driver-loop cost
+      // curve on record — opt-in via env so the gate's stderr stays
+      // quiet
       if (sys.env.contains("GRAFT_CC_LOG"))
-        System.err.println(f"[cc-auto] iter $i " +
+        System.err.println(f"[$name] iter $i " +
           f"${if (jump) "jump" else "plain"} changed=$changed " +
           f"wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     closed.unpersist()
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponentsAuto did not converge in $maxIters " +
-          "iterations; raise maxIters")
+        s"$name did not converge in $maxIters iterations$hint; " +
+          "raise maxIters")
     lastCcRounds = i
+    // the converged labels are already checkpoint-materialized; the
+    // caller gets a plain frame with no unpersist obligation
     labels
   }
 

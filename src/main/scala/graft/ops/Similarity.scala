@@ -156,33 +156,53 @@ object Similarity {
         round(col("_best.d"), 5).as("cell_dist2"): _*)
   }
 
-  /** Driver-side Lloyd iterations over a codebook-sized point set —
-    * used to cluster the CODEBOOK itself for [[ivfAssignHierarchical]]
-    * (points = centroids, so |points| ≤ tens of thousands; this never
-    * touches corpus data). Deterministic: strided init over the input
-    * order, ties to the lower index, empty clusters keep their
-    * previous mean.
+  /** Driver-side Lloyd iterations over a point set already in driver
+    * memory — the one driver Lloyd of the engine. It clusters the
+    * CODEBOOK itself for [[ivfAssignHierarchical]] (points =
+    * centroids, so |points| ≤ tens of thousands) and finishes
+    * [[kmeansIterate]] when that loop's input fits the broadcast
+    * budget. The rules are [[kmeansIterate]]'s: each point goes to its
+    * nearest mean by a strict `<` scan from `Double.MaxValue` (ties to
+    * the lower index), empty clusters keep their previous mean, and
+    * the loop stops after `maxIters` rounds or once the largest mean
+    * L2 movement is ≤ `tol`. Means are per-dimension sums in point
+    * order divided by the member count.
     */
-  private def localKmeans(points: IndexedSeq[Seq[Double]], k: Int,
-      iters: Int = 10): IndexedSeq[Seq[Double]] = {
-    val stride = math.max(1, points.size / k)
-    var means = (0 until k).map(i =>
-      points(math.min(i * stride, points.size - 1)))
-    def sq(a: Seq[Double], b: Seq[Double]): Double = {
+  private def localKmeans(points: IndexedSeq[Array[Double]],
+      init: IndexedSeq[Array[Double]], maxIters: Int, tol: Double)
+  : IndexedSeq[Array[Double]] = {
+    def sq(a: Array[Double], b: Array[Double]): Double = {
+      if (a.length != b.length) throw new IllegalArgumentException(
+        s"vector length mismatch: ${a.length} vs ${b.length}")
       var s = 0.0; var i = 0
       while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
       s
     }
-    for (_ <- 0 until iters) {
-      val assign = points.map(p => means.indices.minBy(j => sq(p, means(j))))
-      means = means.indices.map { j =>
-        val mine = points.indices.filter(assign(_) == j)
-        if (mine.isEmpty) means(j)
-        else {
-          val dim = points(0).size
-          (0 until dim).map(d => mine.map(points(_)(d)).sum / mine.size)
+    var means = init
+    var iter = 0
+    var moved = Double.MaxValue
+    while (iter < maxIters && moved > tol) {
+      val k = means.size
+      val sums = Array.fill(k)(new Array[Double](means(0).length))
+      val n = new Array[Long](k)
+      points.foreach { p =>
+        var best = -1; var bestD = Double.MaxValue; var j = 0
+        while (j < k) {
+          val d = sq(p, means(j))
+          if (d < bestD) { best = j; bestD = d }
+          j += 1
+        }
+        if (best >= 0) {
+          n(best) += 1
+          val acc = sums(best); var i = 0
+          while (i < acc.length) { acc(i) += p(i); i += 1 }
         }
       }
+      val next = means.indices.map(j =>
+        if (n(j) == 0) means(j) else sums(j).map(_ / n(j)))
+      moved = means.indices.map(j => math.sqrt(sq(means(j), next(j)))).max
+      means = next
+      iter += 1
     }
     means
   }
@@ -209,7 +229,13 @@ object Similarity {
       ((e._1 eq cents) || e._1 == cents)) match {
       case Some((_, _, st)) => st
       case None =>
-        val means = localKmeans(cents.map(_._2).toIndexedSeq, s)
+        // strided init over the codebook order; tol 0 stops only on
+        // an exact fixpoint, where further rounds change nothing
+        val points = cents.map(_._2.toArray).toIndexedSeq
+        val stride = math.max(1, points.size / s)
+        val means = localKmeans(points, (0 until s).map(i =>
+          points(math.min(i * stride, points.size - 1))), 10, 0.0)
+          .map(_.toIndexedSeq)
         def sq(a: Seq[Double], b: Seq[Double]): Double = {
           var acc = 0.0; var i = 0
           while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
@@ -1331,25 +1357,62 @@ object Similarity {
       .groupBy(col("cell"), (col("dim0") + 1).as("dim"))
       .agg(round(avg(col("x")), 5).as("mean"), count(lit(1)).as("n"))
 
-  /** Lloyd iterations to convergence — the offline IVF codebook builder
-    * as a driver loop over the [[kmeansStep]] shape: each round assigns
-    * every vector with the zero-shuffle broadcast fold, recomputes the
-    * per-cell means with ONE (cell, dim)-keyed shuffle (map-side
-    * partial agg), and pulls the codebook back to seed the next round.
-    * The per-round collect is |codebook|·dim rows — driver-sized by
-    * construction, the same bound [[collectCodebook]] documents.
-    * Lineage never grows: every iteration re-plans from the source with
-    * the new codebook shipped as a literal, so no checkpointing is
-    * needed no matter how many rounds run. Stops when the largest
-    * centroid L2 movement drops below `tol`; empty cells keep their
-    * previous centroid. Returns the final codebook (cid, centroid).
+  /** Lloyd iterations to convergence — the offline IVF codebook
+    * builder. Stops when the largest centroid L2 movement drops below
+    * `tol` or after `maxIters` rounds; each vector goes to its nearest
+    * centroid (strict `<`, ties to the lower cid), null vectors are
+    * skipped, and empty cells keep their previous centroid. Returns
+    * the final codebook (cid, centroid).
+    *
+    * Regime rule ([[DriverFinish]]): when the training input fits the
+    * session's broadcast budget — rows × (8·dim + 16) B against
+    * `spark.sql.autoBroadcastJoinThreshold`, observed with one count —
+    * it is collected once and the rounds run in driver memory
+    * ([[localKmeans]], the same rules), as [[Pq.train]] trains on its
+    * bounded driver sample. A √n codebook's training sample is that
+    * size at curation scale, where each distributed round is a Spark
+    * job over a few kilobytes. Above the budget, or with the threshold
+    * at -1, the rounds are a driver loop over the [[kmeansStep]]
+    * shape: each assigns every vector with the zero-shuffle broadcast
+    * fold, recomputes the per-cell means with ONE (cell, dim)-keyed
+    * shuffle (map-side partial agg), and pulls the codebook back to
+    * seed the next round. The per-round collect is |codebook|·dim rows
+    * — driver-sized by construction, the same bound
+    * [[collectCodebook]] documents. Lineage never grows: every
+    * iteration re-plans from the source with the new codebook shipped
+    * as a literal, so no checkpointing is needed no matter how many
+    * rounds run. The two regimes agree to floating-point summation
+    * order (SimilaritySpec pins 1e-9).
     */
   def kmeansIterate(emb: DataFrame, idCol: String, vecCol: String,
       initCentroids: DataFrame, centroidIdCol: String,
       centroidVecCol: String, maxIters: Int = 10, tol: Double = 1e-6)
   : DataFrame = {
-    var cents = collectCodebook(initCentroids, centroidIdCol,
+    val init = collectCodebook(initCentroids, centroidIdCol,
       centroidVecCol)
+    val dim = init.head._2.size
+    val cents = DriverFinish.collectWithin(
+      emb.select(asDouble(col(vecCol))), rowBytes = 8L * dim + 16)
+      .map { rows =>
+        // a null vector, or one with a null element, has no nearest
+        // cell in the distributed fold either
+        val points = rows.iterator.filterNot(_.isNullAt(0))
+          .map(_.getSeq[Any](0)).filterNot(_.contains(null))
+          .map(_.map(_.asInstanceOf[Double]).toArray).toIndexedSeq
+        init.map(_._1).zip(localKmeans(points,
+          init.map(_._2.toArray).toIndexedSeq, maxIters, tol)
+          .map(_.toSeq))
+      }
+      .getOrElse(distributedKmeans(emb, vecCol, init, maxIters, tol))
+    val spark = emb.sparkSession
+    import spark.implicits._
+    cents.toDF(centroidIdCol, centroidVecCol)
+  }
+
+  private def distributedKmeans(emb: DataFrame, vecCol: String,
+      init: Seq[(Long, Seq[Double])], maxIters: Int, tol: Double)
+  : Seq[(Long, Seq[Double])] = {
+    var cents = init
     var iter = 0
     var moved = Double.MaxValue
     while (iter < maxIters && moved > tol) {
@@ -1371,9 +1434,7 @@ object Similarity {
       cents = next
       iter += 1
     }
-    val spark = emb.sparkSession
-    import spark.implicits._
-    cents.toDF(centroidIdCol, centroidVecCol)
+    cents
   }
 
   /** ANN restricted to the query's LSH bucket: the scale path — the scan

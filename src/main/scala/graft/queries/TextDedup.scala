@@ -491,8 +491,10 @@ object TextDedup {
     // Duplicate-GROUP clustering: connected components by min-label
     // propagation over the shingle near-dup pair graph (each component
     // named by its smallest member). One shuffle per iteration,
-    // iterations = cluster diameter; the pairwise greedy drop can split
-    // a transitive a~b~c chain — components cannot.
+    // iterations = cluster diameter, above the broadcast budget; at gate
+    // sizes the edge list fits it and a driver union-find finishes. The
+    // pairwise greedy drop can split a transitive a~b~c chain —
+    // components cannot.
     "q107_dup_components" -> ((s, d) => {
       val pairs = Dedup.minhashBandPairsOver(Tables.documents(s, d),
         TextFunctions.wordShingles(col("text"), 3), "doc_id",

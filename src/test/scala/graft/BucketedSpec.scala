@@ -142,4 +142,25 @@ class BucketedSpec extends AnyFunSuite {
     assert(files.length === n,
       s"expected one file per bucket ($n), got ${files.length}")
   }
+
+  test("bucketCountFor clamps AFTER rounding: a non-power-of-two " +
+    "maxBuckets is respected and counts past 2^30 do not overflow") {
+    val rows = (0L until 4000L).map(i => (i % 100L, i)).toDF("k", "lv")
+    // raw count far above 100: rounding first would give 128
+    assert(BucketedTables.bucketCountFor(rows, targetBucketBytes = 1L,
+      minBuckets = 8, maxBuckets = 100) === 100)
+    // a non-power-of-two floor is respected the same way
+    assert(BucketedTables.bucketCountFor(rows, targetBucketBytes = 1L << 40,
+      minBuckets = 5, maxBuckets = 100) === 5)
+    // Range stats are metadata-only: 2^40 longs = 2^43 estimated bytes
+    val huge = spark.range(1L << 40).toDF()
+    // raw 2^30 is itself a power of two
+    assert(BucketedTables.bucketCountFor(huge, targetBucketBytes = 1L << 13,
+      minBuckets = 8, maxBuckets = Int.MaxValue) === (1 << 30))
+    // raw 2^31 must clamp to the Int bound, not wrap negative
+    assert(BucketedTables.bucketCountFor(huge, targetBucketBytes = 1L << 12,
+      minBuckets = 8, maxBuckets = Int.MaxValue) === Int.MaxValue)
+    assert(BucketedTables.bucketCountFor(huge, targetBucketBytes = 1L,
+      minBuckets = 8, maxBuckets = (1 << 30) + 1) === (1 << 30) + 1)
+  }
 }

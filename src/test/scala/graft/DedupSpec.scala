@@ -24,6 +24,16 @@ class DedupSpec extends AnyFunSuite {
     Dedup.simhashNeighborsOver(df, tokensExpr, idCol, nBits = nBits,
       maxHamming = maxHamming, maxBucket = maxBucket)
 
+  // The connected-components loops finish on the driver when the edge
+  // list fits the broadcast budget; threshold -1 pins the distributed
+  // rounds the loop-shape specs below are about.
+  private def withBroadcastThreshold[T](v: String)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+    try body
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   test("minhash: identical token sets collide regardless of order/dups") {
     import spark.implicits._
     val docs = Seq(
@@ -714,49 +724,51 @@ class DedupSpec extends AnyFunSuite {
     "converges on a chain an order of magnitude longer than its round " +
     "budget (where plain propagation's O(diameter) loop throws)") {
     import spark.implicits._
-    // parity on a mixed graph: chain + clique + isolated pair
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L),
-      (20L, 21L), (21L, 22L), (20L, 22L))
-      .toDF("id1", "id2")
-    val plain = graft.ops.Dedup.connectedComponents(pairs)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    val fast = graft.ops.Dedup.connectedComponentsFast(pairs)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    assert(fast === plain, "pointer doubling changed the components")
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "connectedComponentsFast leaked a cached frame")
-    // the loud-error contract, at a cheap size: a 10-node path
-    // (diameter 9) cannot converge in 3 propagation rounds
-    assertThrows[IllegalStateException] {
-      graft.ops.Dedup.connectedComponents(
-        (0L until 9L).map(i => (i, i + 1)).toDF("id1", "id2"),
-        maxIters = 3)
-    }
-    // the chain adversary: a 101-node path (diameter 100). Plain
-    // propagation moves the min one hop per round — it would need
-    // ~100 rounds; doubling covers the distance in ~7 rounds plus the
-    // stability round, inside a 10-round budget
-    val chain = (0L until 100L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val fastChain = graft.ops.Dedup.connectedComponentsFast(
-      chain, maxIters = 10)
-    assert(fastChain.count() == 101)
-    assert(fastChain.filter(col("rep") =!= 0L).count() == 0,
-      "chain did not collapse to the single min label")
-    // seeded random-graph differential sweep: sparse graphs (fragmented
-    // components) and denser ones (few big components) must agree with
-    // the plain loop label-for-label
-    for (seed <- Seq(11, 12, 13); density <- Seq(0.6, 1.5)) {
-      val rnd = new scala.util.Random(seed * 1000 + (density * 10).toInt)
-      val n = 60
-      val es = (1 to (n * density).toInt).map { _ =>
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
-      }.filter(e => e._1 != e._2)
-      val g = es.toDF("id1", "id2")
-      val want = graft.ops.Dedup.connectedComponents(g, maxIters = 40)
+    withBroadcastThreshold("-1") {
+      // parity on a mixed graph: chain + clique + isolated pair
+      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L),
+        (20L, 21L), (21L, 22L), (20L, 22L))
+        .toDF("id1", "id2")
+      val plain = graft.ops.Dedup.connectedComponents(pairs)
         .orderBy("id").as[(Long, Long)].collect().toSeq
-      val got = graft.ops.Dedup.connectedComponentsFast(g, maxIters = 40)
+      val fast = graft.ops.Dedup.connectedComponentsFast(pairs)
         .orderBy("id").as[(Long, Long)].collect().toSeq
-      assert(got === want, s"divergence at seed=$seed density=$density")
+      assert(fast === plain, "pointer doubling changed the components")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "connectedComponentsFast leaked a cached frame")
+      // the loud-error contract, at a cheap size: a 10-node path
+      // (diameter 9) cannot converge in 3 propagation rounds
+      assertThrows[IllegalStateException] {
+        graft.ops.Dedup.connectedComponents(
+          (0L until 9L).map(i => (i, i + 1)).toDF("id1", "id2"),
+          maxIters = 3)
+      }
+      // the chain adversary: a 101-node path (diameter 100). Plain
+      // propagation moves the min one hop per round — it would need
+      // ~100 rounds; doubling covers the distance in ~7 rounds plus the
+      // stability round, inside a 10-round budget
+      val chain = (0L until 100L).map(i => (i, i + 1)).toDF("id1", "id2")
+      val fastChain = graft.ops.Dedup.connectedComponentsFast(
+        chain, maxIters = 10)
+      assert(fastChain.count() == 101)
+      assert(fastChain.filter(col("rep") =!= 0L).count() == 0,
+        "chain did not collapse to the single min label")
+      // seeded random-graph differential sweep: sparse graphs (fragmented
+      // components) and denser ones (few big components) must agree with
+      // the plain loop label-for-label
+      for (seed <- Seq(11, 12, 13); density <- Seq(0.6, 1.5)) {
+        val rnd = new scala.util.Random(seed * 1000 + (density * 10).toInt)
+        val n = 60
+        val es = (1 to (n * density).toInt).map { _ =>
+          (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
+        }.filter(e => e._1 != e._2)
+        val g = es.toDF("id1", "id2")
+        val want = graft.ops.Dedup.connectedComponents(g, maxIters = 40)
+          .orderBy("id").as[(Long, Long)].collect().toSeq
+        val got = graft.ops.Dedup.connectedComponentsFast(g, maxIters = 40)
+          .orderBy("id").as[(Long, Long)].collect().toSeq
+        assert(got === want, s"divergence at seed=$seed density=$density")
+      }
     }
   }
 
@@ -765,52 +777,150 @@ class DedupSpec extends AnyFunSuite {
     "budget the plain loop throws on, and labels match both fixed " +
     "loops on a seeded sweep") {
     import spark.implicits._
-    // shallow mixed graph (diameter 4 < switchAfter 5): converges in
-    // 5 rounds — all plain, no jump round ever paid
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L),
-      (20L, 21L), (21L, 22L), (20L, 22L))
-      .toDF("id1", "id2")
-    val plain = graft.ops.Dedup.connectedComponents(pairs)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    val auto = graft.ops.Dedup.connectedComponentsAuto(pairs,
-      switchAfter = 5)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    assert(auto === plain, "auto loop changed the components")
-    assert(graft.ops.Dedup.lastCcRounds <= 5,
-      s"shallow graph took ${graft.ops.Dedup.lastCcRounds} rounds — " +
-        "it should converge before the switch")
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "connectedComponentsAuto leaked a cached frame")
-    // the chain adversary under a budget the PLAIN loop throws on:
-    // 4 plain rounds advance the min 4 hops, then doubling covers the
-    // remaining ~96 in ~7 jump rounds + stability — inside 15
-    val chain = (0L until 100L).map(i => (i, i + 1)).toDF("id1", "id2")
-    assertThrows[IllegalStateException] {
-      graft.ops.Dedup.connectedComponents(chain, maxIters = 15)
+    withBroadcastThreshold("-1") {
+      // shallow mixed graph (diameter 4 < switchAfter 5): converges in
+      // 5 rounds — all plain, no jump round ever paid
+      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L),
+        (20L, 21L), (21L, 22L), (20L, 22L))
+        .toDF("id1", "id2")
+      val plain = graft.ops.Dedup.connectedComponents(pairs)
+        .orderBy("id").as[(Long, Long)].collect().toSeq
+      val auto = graft.ops.Dedup.connectedComponentsAuto(pairs,
+        switchAfter = 5)
+        .orderBy("id").as[(Long, Long)].collect().toSeq
+      assert(auto === plain, "auto loop changed the components")
+      assert(graft.ops.Dedup.lastCcRounds <= 5,
+        s"shallow graph took ${graft.ops.Dedup.lastCcRounds} rounds — " +
+          "it should converge before the switch")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "connectedComponentsAuto leaked a cached frame")
+      // the chain adversary under a budget the PLAIN loop throws on:
+      // 4 plain rounds advance the min 4 hops, then doubling covers the
+      // remaining ~96 in ~7 jump rounds + stability — inside 15
+      val chain = (0L until 100L).map(i => (i, i + 1)).toDF("id1", "id2")
+      assertThrows[IllegalStateException] {
+        graft.ops.Dedup.connectedComponents(chain, maxIters = 15)
+      }
+      val autoChain = graft.ops.Dedup.connectedComponentsAuto(
+        chain, switchAfter = 4, maxIters = 15)
+      assert(autoChain.count() == 101)
+      assert(autoChain.filter(col("rep") =!= 0L).count() == 0,
+        "chain did not collapse to the single min label")
+      // seeded sweep incl. a switch mid-convergence (switchAfter 1 jumps
+      // from round 2): any plain/jump interleave must land on the same
+      // fixpoint
+      for (seed <- Seq(31, 32); switchAfter <- Seq(1, 3)) {
+        val rnd = new scala.util.Random(seed * 977 + switchAfter)
+        val n = 50
+        val es = (1 to (n * 2)).map { _ =>
+          (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
+        }.filter(e => e._1 != e._2)
+        val g = es.toDF("id1", "id2")
+        val want = graft.ops.Dedup.connectedComponents(g, maxIters = 40)
+          .orderBy("id").as[(Long, Long)].collect().toSeq
+        val got = graft.ops.Dedup.connectedComponentsAuto(g,
+          switchAfter = switchAfter, maxIters = 40)
+          .orderBy("id").as[(Long, Long)].collect().toSeq
+        assert(got === want,
+          s"divergence at seed=$seed switchAfter=$switchAfter")
+      }
     }
-    val autoChain = graft.ops.Dedup.connectedComponentsAuto(
-      chain, switchAfter = 4, maxIters = 15)
-    assert(autoChain.count() == 101)
-    assert(autoChain.filter(col("rep") =!= 0L).count() == 0,
-      "chain did not collapse to the single min label")
-    // seeded sweep incl. a switch mid-convergence (switchAfter 1 jumps
-    // from round 2): any plain/jump interleave must land on the same
-    // fixpoint
-    for (seed <- Seq(31, 32); switchAfter <- Seq(1, 3)) {
-      val rnd = new scala.util.Random(seed * 977 + switchAfter)
-      val n = 50
-      val es = (1 to (n * 2)).map { _ =>
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
+  }
+
+  test("connected components: the driver finish matches every " +
+    "distributed loop label for label (seeded sweep, 101-node chain, " +
+    "self-edges, duplicate pairs) and leaves no cache or round behind") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    def labels(df: DataFrame): Seq[(Long, Long)] =
+      df.orderBy("id").as[(Long, Long)].collect().toSeq
+    def driver(g: DataFrame): Seq[(Long, Long)] = {
+      val got = labels(Dedup.connectedComponents(g, maxIters = 40))
+      assert(Dedup.lastCcRounds == 0, "the driver finish ran rounds")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "the driver finish leaked a cached frame")
+      got
+    }
+    def distributed(g: DataFrame, plain: Boolean): Seq[Seq[(Long, Long)]] =
+      withBroadcastThreshold("-1") {
+        val loops = Seq(
+          () => Dedup.connectedComponentsFast(g, maxIters = 40),
+          () => Dedup.connectedComponentsAuto(g, switchAfter = 3,
+            maxIters = 40)) ++
+          (if (plain) Seq(() => Dedup.connectedComponents(g, maxIters = 40))
+          else Nil)
+        loops.map { run =>
+          val got = labels(run())
+          assert(Dedup.lastCcRounds > 0, "threshold -1 took the driver")
+          got
+        }
+      }
+    val sweep = for (seed <- Seq(11, 12); density <- Seq(0.6, 1.5)) yield {
+      val rnd = new scala.util.Random(seed * 1000 + (density * 10).toInt)
+      val n = 60
+      s"seed=$seed density=$density" -> (1 to (n * density).toInt).map {
+        _ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
       }.filter(e => e._1 != e._2)
-      val g = es.toDF("id1", "id2")
-      val want = graft.ops.Dedup.connectedComponents(g, maxIters = 40)
-        .orderBy("id").as[(Long, Long)].collect().toSeq
-      val got = graft.ops.Dedup.connectedComponentsAuto(g,
-        switchAfter = switchAfter, maxIters = 40)
-        .orderBy("id").as[(Long, Long)].collect().toSeq
-      assert(got === want,
-        s"divergence at seed=$seed switchAfter=$switchAfter")
     }
+    val graphs = sweep ++ Seq(
+      // self-edges (one on an otherwise isolated node) and the same
+      // pair listed in both orientations and twice
+      "self-edges+duplicates" -> Seq((1L, 1L), (1L, 2L), (2L, 1L),
+        (1L, 2L), (2L, 3L), (3L, 3L), (9L, 9L), (5L, 6L), (6L, 5L)))
+    for ((name, es) <- graphs) {
+      val g = es.toDF("id1", "id2")
+      val want = driver(g)
+      for (got <- distributed(g, plain = true))
+        assert(got === want, s"regime divergence on $name")
+    }
+    assert(driver(Seq((1L, 1L), (9L, 9L)).toDF("id1", "id2")) ===
+      Seq((1L, 1L), (9L, 9L)))
+    // the 101-node chain: the driver finish is exact at any diameter,
+    // even under a round budget the plain loop throws on
+    val chain = (0L until 100L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val chainLabels = labels(Dedup.connectedComponents(chain, maxIters = 15))
+    assert(chainLabels === (0L to 100L).map(i => (i, 0L)))
+    assert(Dedup.lastCcRounds == 0)
+    for (got <- distributed(chain, plain = false))
+      assert(got === chainLabels, "chain regime divergence")
+    // int ids keep their type through the driver finish
+    val intIds = Seq((3, 4), (4, 5)).toDF("id1", "id2")
+    val intLabels = Dedup.connectedComponents(intIds)
+    assert(intLabels.schema.map(_.dataType) ===
+      Seq(org.apache.spark.sql.types.IntegerType,
+        org.apache.spark.sql.types.IntegerType))
+    assert(intLabels.orderBy("id").as[(Int, Int)].collect().toSeq ===
+      Seq((3, 3), (4, 3), (5, 3)))
+  }
+
+  test("connected components at maxIters = 0 with a self-edge: the " +
+    "distributed loops throw instead of returning unpropagated labels, " +
+    "and a self-edge-only graph converges to one label per node") {
+    import spark.implicits._
+    val g = Seq((1L, 1L), (1L, 2L), (7L, 7L)).toDF("id1", "id2")
+    withBroadcastThreshold("-1") {
+      assertThrows[IllegalStateException] {
+        Dedup.connectedComponents(g, maxIters = 0)
+      }
+      assertThrows[IllegalStateException] {
+        Dedup.connectedComponentsFast(g, maxIters = 0)
+      }
+      assertThrows[IllegalArgumentException] {
+        Dedup.connectedComponentsAuto(g, switchAfter = 1, maxIters = 0)
+      }
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "a throwing loop leaked a cached frame")
+      // a graph of self-edges alone is converged after its first
+      // round: one label per node, each its own rep
+      val selfOnly = Seq((1L, 1L), (7L, 7L), (7L, 7L)).toDF("id1", "id2")
+      assert(Dedup.connectedComponents(selfOnly, maxIters = 1)
+        .orderBy("id").as[(Long, Long)].collect().toSeq ===
+        Seq((1L, 1L), (7L, 7L)))
+    }
+    // the driver finish needs no rounds: the same graph at maxIters = 0
+    assert(Dedup.connectedComponents(g, maxIters = 0)
+      .orderBy("id").as[(Long, Long)].collect().toSeq ===
+      Seq((1L, 1L), (2L, 1L), (7L, 7L)))
   }
 
   test("crossDedupFlagsFromIndexes: flag-identical to the inline path " +

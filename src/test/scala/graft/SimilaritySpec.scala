@@ -528,6 +528,51 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("kmeansIterate: the driver finish and the distributed rounds " +
+    "train the same centroids (within 1e-9) on the kmeans fixtures") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    def train(emb: DataFrame, init: DataFrame, maxIters: Int,
+        tol: Double): Map[Long, Seq[Double]] =
+      Similarity.kmeansIterate(emb, "vec_id", "embedding", init, "cid",
+        "cvec", maxIters = maxIters, tol = tol)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    def distributed(emb: DataFrame, init: DataFrame, maxIters: Int,
+        tol: Double): Map[Long, Seq[Double]] = {
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try train(emb, init, maxIters, tol)
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+    val rnd = new scala.util.Random(31)
+    def around(cx: Double, cy: Double, n: Int) =
+      (1 to n).map(_ => Seq(cx + rnd.nextGaussian() * 0.1,
+        cy + rnd.nextGaussian() * 0.1))
+    val clusters = (around(0.0, 0.0, 200) ++ around(10.0, 10.0, 200))
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }
+    val fixtures = Seq(
+      // the convergence fixture: bad init, stops on tol
+      (clusters.toDF("vec_id", "embedding"),
+        Seq((0L, Seq(1.0, 1.0)), (1L, Seq(6.0, 6.0))), 20, 1e-9),
+      // the empty-cell fixture
+      (Seq((1L, Seq(0.0, 0.0)), (2L, Seq(0.2, 0.0)))
+        .toDF("vec_id", "embedding"),
+        Seq((0L, Seq(0.1, 0.0)), (1L, Seq(50.0, 50.0))), 3, 1e-6),
+      // a null vector is skipped and a tie goes to the lower cid
+      (Seq((1L, Seq(0.0, 0.0)), (2L, null), (3L, Seq(2.0, 0.0)),
+        (4L, Seq(4.0, 0.0))).toDF("vec_id", "embedding"),
+        Seq((5L, Seq(1.0, 0.0)), (6L, Seq(3.0, 0.0))), 10, 1e-6))
+    for ((emb, init, maxIters, tol) <- fixtures) {
+      val initDf = init.toDF("cid", "cvec")
+      val got = train(emb, initDf, maxIters, tol)
+      val want = distributed(emb, initDf, maxIters, tol)
+      assert(got.keySet == want.keySet)
+      for ((cid, c) <- want; (x, y) <- c.zip(got(cid)))
+        assert(math.abs(x - y) < 1e-9,
+          s"cid $cid: driver ${got(cid)} vs distributed $c")
+    }
+  }
+
   test("kmeansIterate: an empty cell keeps its previous centroid") {
     import spark.implicits._
     val emb = Seq((1L, Seq(0.0, 0.0)), (2L, Seq(0.2, 0.0)))
