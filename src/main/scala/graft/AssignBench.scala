@@ -70,25 +70,21 @@ object AssignBench {
 
     val lines = Seq(128, 447, 1000, 4000).map { k =>
       val stride = math.max(1, n / k)
-      val cb = emb.filter(col("vec_id") % stride === 0)
-        .orderBy("vec_id").limit(k)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-        .cache()
-      cb.count(): Unit
+      val cb = Similarity.Centroids(emb.filter(col("vec_id") % stride === 0)
+        .orderBy("vec_id").limit(k), "vec_id", "embedding")
       val flatSec = timeNoop(Similarity.ivfAssign(
-        emb, "vec_id", "embedding", cb, "cid", "cvec"))
+        emb, "vec_id", "embedding", cb))
       val hierSec = timeNoop(Similarity.ivfAssignHierarchical(
-        emb, "vec_id", "embedding", cb, "cid", "cvec"))
+        emb, "vec_id", "embedding", cb))
       val agree = Similarity.ivfAssign(
-        emb, "vec_id", "embedding", cb, "cid", "cvec")
+        emb, "vec_id", "embedding", cb)
         .select(col("vec_id"), col("cell").as("flat_cell"))
         .join(Similarity.ivfAssignHierarchical(
-          emb, "vec_id", "embedding", cb, "cid", "cvec")
+          emb, "vec_id", "embedding", cb)
           .select(col("vec_id"), col("cell").as("hier_cell")), "vec_id")
         .agg(avg(when(col("flat_cell") === col("hier_cell"), 1.0)
           .otherwise(0.0)))
         .collect()(0).getDouble(0)
-      cb.unpersist(): Unit
       val line = f"""{"cells":$k,"flat_sec":$flatSec%.2f,""" +
         f""""hier_sec":$hierSec%.2f,"agreement":$agree%.4f,""" +
         f""""us_per_row_flat":${flatSec * 1e6 / n}%.2f,""" +

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Shared measurement-protocol primitives for the bench mains — ONE
   * definition of the host-window evidence every artifact carries, so
   * "load1" and "calib" mean the same thing in BENCH_*, DOCS_*,
@@ -8,6 +10,23 @@ package graft
   * [[Bench]]).
   */
 private[graft] object BenchProto {
+
+  /** The one session [[Bench]], [[TimeQ]], [[JobProf]] and [[Explain]]
+    * run on, so a query is timed, profiled and planned under the same
+    * configuration: `local[SPARK_GRAFT_CPUS]` (default 32) with as many
+    * shuffle partitions, AQE on, UTC session time zone, no UI.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName("graft-bench")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+  }
 
   /** 1-minute load average from /proc/loadavg; -1 if unreadable. */
   def load1(): Double =

@@ -1,15 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit helper: prints formatted physical plans for named queries
-  * (pushdown / join-strategy inspection during development).
+  * (pushdown / join-strategy inspection during development), planned
+  * on [[Bench]]'s session.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq

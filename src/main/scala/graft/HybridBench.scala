@@ -87,15 +87,15 @@ object HybridBench {
       "vec_id", "embedding", init, "cid", "cvec", maxIters = 5,
       tol = 1e-4)
       .write.mode("overwrite").parquet(s"$work/codebook")
-    val cents = spark.read.parquet(s"$work/codebook")
-      .localCheckpoint(true)
+    val cents = Similarity.Centroids(spark.read.parquet(s"$work/codebook"),
+      "cid", "cvec")
     val pqCb = Pq.train(corpus, "vec_id", "embedding", m, k,
       sampleN = 20000, iters = 5)
 
     Similarity.ivfIndexWrite(corpus, "vec_id", "embedding",
-      cents, "cid", "cvec", s"$work/ivf")
+      cents, s"$work/ivf")
     Pq.ivfPqIndexWrite(corpus, "vec_id", "embedding",
-      cents, "cid", "cvec", pqCb, s"$work/ivfpq")
+      cents, pqCb, s"$work/ivfpq")
     val ivf = spark.read.parquet(s"$work/ivf")
     val ivfpq = spark.read.parquet(s"$work/ivfpq")
 
@@ -107,16 +107,16 @@ object HybridBench {
 
     def flagsOf(kind: String, band: Double) = kind match {
       case "exact" => Similarity.semanticDedupFlags(batch, "vec_id",
-        "embedding", ivf, "vec_id", "embedding", cents, "cid", "cvec",
+        "embedding", ivf, "vec_id", "embedding", cents,
         tau = cosT, nProbe = nProbe, excludeSelf = false)
       case "adc" => Pq.semanticDedupFlagsPq(batch, "vec_id",
-        "embedding", ivfpq, "vec_id", cents, "cid", "cvec", pqCb,
+        "embedding", ivfpq, "vec_id", cents, pqCb,
         tauDist = tauA, nProbe = nProbe, excludeSelf = false)
       case "sdc" => Pq.semanticDedupFlagsPqSdc(batch, "vec_id",
-        "embedding", ivfpq, "vec_id", cents, "cid", "cvec", pqCb,
+        "embedding", ivfpq, "vec_id", cents, pqCb,
         tauDist = tauS, nProbe = nProbe, excludeSelf = false)
       case "hybrid" => Pq.semanticDedupFlagsPqHybrid(batch, "vec_id",
-        "embedding", ivfpq, "vec_id", cents, "cid", "cvec", pqCb,
+        "embedding", ivfpq, "vec_id", cents, pqCb,
         tauSdc = tauS, tauAdc = tauA, band = band, refineK = 4,
         nProbe = nProbe, excludeSelf = false)
     }

@@ -1,21 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd}
 
 /** Scratch: per-Spark-job wall-time profile of a named query (dev
   * helper for the optimization rounds — heavy operators run many jobs;
-  * the bench total says nothing about WHICH job is the wall).
+  * the bench total says nothing about WHICH job is the wall), on
+  * [[Bench]]'s session.
   */
 object JobProf {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("ERROR")
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -166,11 +166,12 @@ object PqBench {
         init, "cid", "cvec", maxIters = 8, tol = 1e-4)
       ivfCb.write.mode("overwrite").parquet(s"$outDir/ivfcb")
     }
-    val cbDf = spark.read.parquet(s"$outDir/ivfcb")
-    val nCells = cbDf.count().toInt
+    val ivfCents = Similarity.Centroids(spark.read.parquet(s"$outDir/ivfcb"),
+      "cid", "cvec")
+    val nCells = ivfCents.cells.size
     val t2 = System.nanoTime()
-    if (!reuse) Pq.ivfPqIndexWritePair(emb, "vec_id", "embedding", cbDf,
-      "cid", "cvec", cb, s"$outDir/ivfpq", s"$outDir/ivfvecs")
+    if (!reuse) Pq.ivfPqIndexWritePair(emb, "vec_id", "embedding", ivfCents,
+      cb, s"$outDir/ivfpq", s"$outDir/ivfvecs")
     val indexSec = (System.nanoTime() - t2) / 1e9
     val indexBytes = bytesOf(s"$outDir/ivfpq")
     val index = spark.read.parquet(s"$outDir/ivfpq")
@@ -182,12 +183,12 @@ object PqBench {
       val df =
         if (refined)
           Pq.ivfPqSearchRefined(queries, "vec_id", "embedding", index,
-            vecTree, "vec_id", "embedding", cbDf, "cid", "cvec", cb,
+            vecTree, "vec_id", "embedding", ivfCents, cb,
             k = kTop, nProbe = nProbe, refineFactor = refineFactor,
             metric = metric)
         else
           Pq.ivfPqSearchBatch(queries, "vec_id", "embedding", index,
-            "vec_id", cbDf, "cid", "cvec", cb, k = kTop, nProbe = nProbe,
+            "vec_id", ivfCents, cb, k = kTop, nProbe = nProbe,
             metric = metric)
       val rows = df.select(col("qid"), col("vec_id"))
         .as[(Long, Long)].collect()
@@ -219,7 +220,7 @@ object PqBench {
       val t = System.nanoTime()
       val rows = Pq.ivfPqSearchRefined(fetchQueries, "vec_id",
         "embedding", index, vecTree, "vec_id", "embedding",
-        cbDf, "cid", "cvec", cb, k = kTop, nProbe = 2,
+        ivfCents, cb, k = kTop, nProbe = 2,
         refineFactor = refineFactor)
         .select(col("qid"), col("vec_id")).as[(Long, Long)].collect()
       (rows.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap,
@@ -231,7 +232,7 @@ object PqBench {
         .partitionBy(col("qid"))
         .orderBy(col("cos_sim").desc, col("vec_id").asc)
       val cand = Pq.ivfPqSearchBatch(fetchQueries, "vec_id", "embedding",
-        index, "vec_id", cbDf, "cid", "cvec", cb,
+        index, "vec_id", ivfCents, cb,
         k = kTop * refineFactor, nProbe = 2)
         .select(col("qid"), col("vec_id"))
       val qv = fetchQueries.select(col("vec_id").as("qid"),
@@ -265,7 +266,7 @@ object PqBench {
     // payload" separates, and the unpruned column must track n while
     // the pruned one tracks n/cells = √n at the √n codebook sizing.
     val candShared = Pq.ivfPqSearchBatch(fetchQueries, "vec_id",
-      "embedding", index, "vec_id", cbDf, "cid", "cvec", cb,
+      "embedding", index, "vec_id", ivfCents, cb,
       k = kTop * refineFactor, nProbe = 2)
       .select(col("qid"), col("vec_id"), col("cell"))
       .localCheckpoint(true)

@@ -90,8 +90,7 @@ object ProbeBench {
       // codebook: a deterministic k-vector sample of the fixture
       // family (selection cost does not depend on codebook quality;
       // agreement is measured against the SAME codebook both ways)
-      val cents = mkVecs(k, 0L).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+      val cents = Similarity.Centroids(mkVecs(k, 0L), "vec_id", "embedding")
       val calib = BenchProto.calibSec()
       // flat leg = the degenerate superProbe ≥ superCells > 2 path:
       // the literal whole-codebook explode ivfSearchBatch runs

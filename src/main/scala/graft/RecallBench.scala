@@ -93,12 +93,13 @@ object RecallBench {
       init, "cid", "cvec", maxIters = 8, tol = 1e-4)
     codebook.write.mode("overwrite").parquet(s"$outDir/codebook")
     val kmeansSec = (System.nanoTime() - t0) / 1e9
-    val cb = spark.read.parquet(s"$outDir/codebook")
-    val nCells = cb.count().toInt
+    val cb = Similarity.Centroids(spark.read.parquet(s"$outDir/codebook"),
+      "cid", "cvec")
+    val nCells = cb.cells.size
 
     // --- persisted index ----------------------------------------------
     val t1 = System.nanoTime()
-    Similarity.ivfIndexWrite(emb, "vec_id", "embedding", cb, "cid", "cvec",
+    Similarity.ivfIndexWrite(emb, "vec_id", "embedding", cb,
       s"$outDir/ivf")
     val buildSec = (System.nanoTime() - t1) / 1e9
     val index = spark.read.parquet(s"$outDir/ivf")
@@ -108,7 +109,7 @@ object RecallBench {
     def topSets(nProbe: Int): (Map[Long, Set[Long]], Double) = {
       val t = System.nanoTime()
       val rows = Similarity.ivfSearchBatch(queries, "vec_id", "embedding",
-        index, "vec_id", "embedding", cb, "cid", "cvec",
+        index, "vec_id", "embedding", cb,
         k = kTop, nProbe = nProbe)
         .select(col("qid"), col("vec_id")).as[(Long, Long)].collect()
       val sec = (System.nanoTime() - t) / 1e9

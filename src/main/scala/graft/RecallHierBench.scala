@@ -79,12 +79,12 @@ object RecallHierBench {
     val cbDf = mkVecs(kCells, 90000000L)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     cbDf.write.mode("overwrite").parquet(s"$outDir/codebook")
-    val cb = spark.read.parquet(s"$outDir/codebook")
-    val cents = Similarity.collectCodebook(cb, "cid", "cvec")
+    val cents = Similarity.Centroids(spark.read.parquet(s"$outDir/codebook"),
+      "cid", "cvec")
 
     val t1 = System.nanoTime()
-    Similarity.ivfIndexWrite(emb, "vec_id", "embedding", cb, "cid",
-      "cvec", s"$outDir/ivf")
+    Similarity.ivfIndexWrite(emb, "vec_id", "embedding", cents,
+      s"$outDir/ivf")
     val buildSec = (System.nanoTime() - t1) / 1e9
     val index = spark.read.parquet(s"$outDir/ivf")
     val occupied = index.select("cell").distinct().count().toInt
@@ -118,7 +118,7 @@ object RecallHierBench {
     // ground truth: every cell probed ⇒ the exact cosine top-k
     val (truth, truthSec, _) = topSets(Similarity.ivfSearchBatch(
       queries, "vec_id", "embedding", index, "vec_id", "embedding",
-      cb, "cid", "cvec", k = kTop, nProbe = kCells))
+      cents, k = kTop, nProbe = kCells))
     require(truth.size == nQueries &&
       truth.values.forall(_.size == kTop),
       s"degenerate truth: ${truth.size} queries, " +
@@ -127,7 +127,7 @@ object RecallHierBench {
     val points = Seq(2, 8).flatMap { np =>
       val (flat, flatSec, flatL) = topSets(Similarity.ivfSearchBatch(
         queries, "vec_id", "embedding", index, "vec_id", "embedding",
-        cb, "cid", "cvec", k = kTop, nProbe = np))
+        cents, k = kTop, nProbe = np))
       val flatRecall = recallOf(flat, truth)
       val flatLine =
         f"""{"n_probe":$np,"selector":"flat","recall_at_10":$flatRecall%.4f,""" +
@@ -135,7 +135,7 @@ object RecallHierBench {
       val hierLines = Seq(1, 2, 4).map { sp =>
         val (hier, hierSec, hierL) = topSets(Similarity.ivfSearchBatchHier(
           queries, "vec_id", "embedding", index, "vec_id", "embedding",
-          cb, "cid", "cvec", k = kTop, nProbe = np, superProbe = sp))
+          cents, k = kTop, nProbe = np, superProbe = sp))
         val hierRecall = recallOf(hier, truth)
         val vsFlat = recallOf(hier, flat.view.mapValues(identity).toMap)
         // probe-set agreement at this (nProbe, superProbe): the proxy

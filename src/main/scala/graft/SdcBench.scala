@@ -60,14 +60,13 @@ object SdcBench {
     // strided IVF codebook (no Lloyd pass: both probes share it, and
     // the A/B measures probe COST, not cell quality)
     val stride = math.max(1, n / kCells)
-    val centroids = emb.filter(col("vec_id") % stride === 0)
-      .orderBy("vec_id").limit(kCells)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      .localCheckpoint(true)
+    val centroids = Similarity.Centroids(
+      emb.filter(col("vec_id") % stride === 0).orderBy("vec_id")
+        .limit(kCells), "vec_id", "embedding")
     val cb = Pq.train(emb, "vec_id", "embedding", m, k,
       sampleN = 20000, iters = 5)
-    Pq.ivfPqIndexWrite(emb, "vec_id", "embedding", centroids, "cid",
-      "cvec", cb, s"$work/ivfpq")
+    Pq.ivfPqIndexWrite(emb, "vec_id", "embedding", centroids, cb,
+      s"$work/ivfpq")
     val index = spark.read.parquet(s"$work/ivfpq")
 
     def queriesOf(batchN: Int) = spark.range(batchN.toLong).as[Long]
@@ -83,11 +82,11 @@ object SdcBench {
     def probe(kind: String, q: org.apache.spark.sql.DataFrame) =
       if (kind == "adc")
         Pq.ivfPqSearchBatchChunked(q, "vec_id", "embedding", index,
-          "vec_id", centroids, "cid", "cvec", cb, k = 1,
+          "vec_id", centroids, cb, k = 1,
           nProbe = nProbe, excludeSelf = false)
       else
         Pq.ivfPqSearchBatchSdc(q, "vec_id", "embedding", index, "vec_id",
-          centroids, "cid", "cvec", cb, k = 1, nProbe = nProbe,
+          centroids, cb, k = 1, nProbe = nProbe,
           excludeSelf = false)
 
     def point(kind: String, q: org.apache.spark.sql.DataFrame)

@@ -78,10 +78,11 @@ object SemDedupBench {
       emb.filter(col("vec_id") % 10 === 0), "vec_id", "embedding",
       init, "cid", "cvec", maxIters = 8, tol = 1e-4)
     codebook.write.mode("overwrite").parquet(s"$outDir/codebook")
-    val cb = spark.read.parquet(s"$outDir/codebook")
-    val nCells = cb.count().toInt
+    val cb = Similarity.Centroids(spark.read.parquet(s"$outDir/codebook"),
+      "cid", "cvec")
+    val nCells = cb.cells.size
 
-    Similarity.ivfIndexWrite(emb, "vec_id", "embedding", cb, "cid", "cvec",
+    Similarity.ivfIndexWrite(emb, "vec_id", "embedding", cb,
       s"$outDir/ivf")
     val index = spark.read.parquet(s"$outDir/ivf")
 
@@ -114,7 +115,7 @@ object SemDedupBench {
     def bestCos(nProbe: Int): (Map[Long, Double], Double) = {
       def mk() = Similarity.semanticDedupFlags(
         batch, "vec_id", "embedding", index, "vec_id", "embedding",
-        cb, "cid", "cvec", tau = 2.0 /* keep-all: we want cos only */,
+        cb, tau = 2.0 /* keep-all: we want cos only */,
         nProbe = nProbe, excludeSelf = false)
       mk().write.format("noop").mode("overwrite").save() // warm
       val t0 = System.nanoTime()

@@ -154,7 +154,8 @@ object SemIngestBench {
       init, "cid", "cvec", maxIters = 8, tol = 1e-4)
       .write.mode("overwrite").parquet(s"$work/codebook")
     val cb = spark.read.parquet(s"$work/codebook")
-    val nCells = cb.count().toInt
+    val cents = Similarity.Centroids(cb, "cid", "cvec")
+    val nCells = cents.cells.size
     // PQ codebook trained on the same pre-stream sample (m=8 over
     // dim=64 → 8-double subspaces, k=256 — the documented standard
     // point, 64× raw payload shrink)
@@ -245,22 +246,22 @@ object SemIngestBench {
       if (mode == "pq" && probe0 == "hybrid")
         graft.ops.Pq.semanticDedupFlagsPqHybrid(
           probe, "vec_id", "embedding", prior(), "vec_id",
-          cb, "cid", "cvec", pqCb, tauSdc = tauDist, tauAdc = tauAdcH,
+          cents, pqCb, tauSdc = tauDist, tauAdc = tauAdcH,
           band = band, refineK = 4, nProbe = nProbe,
           excludeSelf = true)
       else if (mode == "pq" && probe0 == "sdc")
         graft.ops.Pq.semanticDedupFlagsPqSdc(
           probe, "vec_id", "embedding", prior(), "vec_id",
-          cb, "cid", "cvec", pqCb, tauDist = tauDist, nProbe = nProbe,
+          cents, pqCb, tauDist = tauDist, nProbe = nProbe,
           excludeSelf = true)
       else if (mode == "pq")
         graft.ops.Pq.semanticDedupFlagsPq(
           probe, "vec_id", "embedding", prior(), "vec_id",
-          cb, "cid", "cvec", pqCb, tauDist = tauDist, nProbe = nProbe,
+          cents, pqCb, tauDist = tauDist, nProbe = nProbe,
           excludeSelf = true)
       else Similarity.semanticDedupFlags(
         probe, "vec_id", "embedding", prior(), "vec_id", "embedding",
-        cb, "cid", "cvec", tau = tau, nProbe = nProbe,
+        cents, tau = tau, nProbe = nProbe,
         excludeSelf = true)
     def lookupSamples(): Seq[Double] = {
       lookupFlags().write.format("noop").mode("overwrite").save() // warm

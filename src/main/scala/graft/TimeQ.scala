@@ -1,7 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Scratch: time named queries once-warm at a given SF (dev helper). */
+/** Scratch: time named queries once-warm at a given SF (dev helper),
+  * on [[Bench]]'s session.
+  */
 object TimeQ {
   def main(args: Array[String]): Unit = {
     // the f interpolator renders %f under the JVM default locale; a
@@ -9,10 +10,7 @@ object TimeQ {
     // the codebook stamp) — pin ROOT for the whole process
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { n =>
       SparkEntry.queries.get(n) match {

@@ -71,19 +71,18 @@ object TopKBench {
       .write.mode("overwrite").parquet(s"$outDir/corpus")
     val emb = spark.read.parquet(s"$outDir/corpus")
     val stride = math.max(1, n / kCells)
-    val codebook = emb.filter(col("vec_id") % stride === 0)
-      .orderBy("vec_id").limit(kCells)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      .localCheckpoint(true)
+    val codebook = Similarity.Centroids(
+      emb.filter(col("vec_id") % stride === 0).orderBy("vec_id")
+        .limit(kCells), "vec_id", "embedding")
     Similarity.ivfIndexWrite(emb, "vec_id", "embedding", codebook,
-      "cid", "cvec", s"$outDir/ivf")
+      s"$outDir/ivf")
     val index = spark.read.parquet(s"$outDir/ivf")
     val batch = interpolated(
       spark.range(10000000L, 10000000L + batchN).as[java.lang.Long], 91L)
       .localCheckpoint(true)
 
     def search(k: Int) = Similarity.ivfSearchBatch(batch, "vec_id",
-      "embedding", index, "vec_id", "embedding", codebook, "cid", "cvec",
+      "embedding", index, "vec_id", "embedding", codebook,
       k = k, nProbe = nProbe, excludeSelf = false)
     def point(k: Int): (Double, Seq[Double], Long, Long) = {
       search(k).write.format("noop").mode("overwrite").save() // warm

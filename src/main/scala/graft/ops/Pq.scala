@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
+import graft.ops.Similarity.Centroids
 
 /** Product quantization — the MEMORY tier of the ANN family
   * (reference similarity surface `hebrew_alignment_tool.py:351`
@@ -55,7 +56,7 @@ object Pq {
     * on a sample is the standard PQ training regime (codebooks
     * generalize from ~10⁴–10⁵ points; the corpus-scale passes are
     * encode and search, not training) and keeps this collect in the
-    * same bounded class as [[Similarity.collectCodebook]].
+    * same bounded class as the IVF codebook's [[Similarity.Centroids]].
     *
     * Deterministic: strided init over the sample order, strict-<
     * argmin (ties to the lower index), empty clusters keep their
@@ -422,8 +423,8 @@ object Pq {
   /** The pair identity of an IVF-PQ layout: both codebooks, one stamp
     * (graft-wide: the streaming PQ ingest stamps its tree with it too).
     */
-  private[graft] def combinedStamp(ivfStamp: String, cb: Codebook): String =
-    s"$ivfStamp+${cb.stamp}"
+  private[graft] def combinedStamp(centroids: Centroids, cb: Codebook)
+  : String = s"${centroids.stamp}+${cb.stamp}"
 
   /** Build AND persist an IVF-PQ index: cell-partitioned like
     * [[Similarity.ivfIndexWrite]], but each row stores its PQ code and
@@ -439,17 +440,12 @@ object Pq {
     * ([[ivfPqSearchRefined]]) — that join is k·|batch| rows, not the
     * corpus.
     */
-  /** Assign + encode + stamp over a pre-collected codebook — the one
-    * canonical derivation every writer below shares (one centroid
-    * collect per build, not one per call layer).
-    */
-  private def frameFrom(emb: DataFrame, idCol: String, vecCol: String,
-      cents: Seq[(Long, Seq[Double])], cb: Codebook)
-  : (DataFrame, String) = {
-    val stamp = combinedStamp(Similarity.codebookStamp(cents), cb)
-    (encode(Similarity.ivfAssignLocal(emb, vecCol, cents), vecCol, cb)
-      .select(col(idCol), col("pq_code"), col("cell"))
-      .withColumn("_params", lit(stamp)), stamp)
+  def ivfPqIndexWrite(emb: DataFrame, idCol: String, vecCol: String,
+      centroids: Centroids, cb: Codebook, indexDir: String): Unit = {
+    ivfPqIndexFrame(emb, idCol, vecCol, centroids, cb)
+      .write.partitionBy("cell").mode("overwrite").parquet(indexDir)
+    Similarity.writeStampSidecar(emb.sparkSession, indexDir,
+      combinedStamp(centroids, cb))
   }
 
   /** The stamped IVF-PQ index FRAME [[ivfPqIndexWrite]] persists —
@@ -458,30 +454,10 @@ object Pq {
     * embeds the write in a larger plan) produce the identical rows.
     */
   def ivfPqIndexFrame(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      cb: Codebook): DataFrame =
-    frameFrom(emb, idCol, vecCol, Similarity.collectCodebook(centroids,
-      centroidIdCol, centroidVecCol), cb)._1
-
-  def ivfPqIndexWrite(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      cb: Codebook, indexDir: String): Unit =
-    ivfPqIndexWriteFrom(emb, idCol, vecCol,
-      Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), cb, indexDir)
-
-  /** [[ivfPqIndexWrite]] over a PRE-COLLECTED codebook — a query body
-    * that builds the index and probes it under the same centroids
-    * threads ONE collect through both (r19, extending r18's `*From`
-    * threading).
-    */
-  private[graft] def ivfPqIndexWriteFrom(emb: DataFrame, idCol: String,
-      vecCol: String, cents: Seq[(Long, Seq[Double])], cb: Codebook,
-      indexDir: String): Unit = {
-    val (frame, stamp) = frameFrom(emb, idCol, vecCol, cents, cb)
-    frame.write.partitionBy("cell").mode("overwrite").parquet(indexDir)
-    Similarity.writeStampSidecar(emb.sparkSession, indexDir, stamp)
-  }
+      centroids: Centroids, cb: Codebook): DataFrame =
+    encode(Similarity.ivfAssign(emb, idCol, vecCol, centroids), vecCol, cb)
+      .select(col(idCol), col("pq_code"), col("cell"))
+      .withColumn("_params", lit(combinedStamp(centroids, cb)))
 
   /** Build the IVF-PQ code tree AND its refine companion — the
     * cell-partitioned FULL-VECTOR layout ([[Similarity.ivfIndexWrite]]'s
@@ -499,24 +475,11 @@ object Pq {
     * is touched only by the refine tail's cell-pruned fetch.
     */
   def ivfPqIndexWritePair(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      cb: Codebook, indexDir: String, vectorsDir: String): Unit =
-    ivfPqIndexWritePairFrom(emb, idCol, vecCol,
-      Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), cb, indexDir, vectorsDir)
-
-  /** [[ivfPqIndexWritePair]] over a PRE-COLLECTED codebook — a query
-    * body that pair-builds and then probes threads ONE collect through
-    * build and probe (r19).
-    */
-  private[graft] def ivfPqIndexWritePairFrom(emb: DataFrame,
-      idCol: String, vecCol: String, cents: Seq[(Long, Seq[Double])],
-      cb: Codebook, indexDir: String, vectorsDir: String): Unit = {
+      centroids: Centroids, cb: Codebook, indexDir: String,
+      vectorsDir: String): Unit = {
     val spark = emb.sparkSession
-    // one centroid collect for the whole pair build: the vector-tree
-    // write threads the same collected codebook the stamp uses (r18)
-    Similarity.ivfIndexWriteFrom(emb, vecCol, cents, vectorsDir)
-    val stamp = combinedStamp(Similarity.codebookStamp(cents), cb)
+    Similarity.ivfIndexWrite(emb, idCol, vecCol, centroids, vectorsDir)
+    val stamp = combinedStamp(centroids, cb)
     encode(spark.read.parquet(vectorsDir), vecCol, cb)
       .select(col(idCol), col("pq_code"), col("cell"))
       .withColumn("_params", lit(stamp))
@@ -550,17 +513,14 @@ object Pq {
     */
   def rebuildPairUnderCodebooks(spark: SparkSession,
       oldVectorsRoot: String, idCol: String, vecCol: String,
-      newCentroids: DataFrame, centroidIdCol: String,
-      centroidVecCol: String, cb: Codebook,
+      newCentroids: Centroids, cb: Codebook,
       newIndexDir: String, newVectorsDir: String): String = {
     require(newIndexDir != oldVectorsRoot &&
       newVectorsDir != oldVectorsRoot && newIndexDir != newVectorsDir,
       "rebuildPairUnderCodebooks: the three roots must be distinct — " +
         "in-place migration is impossible by design")
-    val cents = Similarity.collectCodebook(newCentroids, centroidIdCol,
-      centroidVecCol)
-    val ivfStamp = Similarity.codebookStamp(cents)
-    val pairStamp = combinedStamp(ivfStamp, cb)
+    val ivfStamp = newCentroids.stamp
+    val pairStamp = combinedStamp(newCentroids, cb)
     val root = new org.apache.hadoop.fs.Path(oldVectorsRoot)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val pendingManifest = new org.apache.hadoop.fs.Path(
@@ -593,8 +553,7 @@ object Pq {
     }
     ivfPqIndexWritePair(
       spark.read.parquet(oldVectorsRoot).select(col(idCol), col(vecCol)),
-      idCol, vecCol, newCentroids, centroidIdCol, centroidVecCol, cb,
-      newIndexDir, newVectorsDir)
+      idCol, vecCol, newCentroids, cb, newIndexDir, newVectorsDir)
     pairStamp
   }
 
@@ -620,18 +579,15 @@ object Pq {
     * the repair is the paired append).
     */
   def ivfPqIndexAppend(newVectors: DataFrame, idCol: String,
-      vecCol: String, indexDir: String, centroids: DataFrame,
-      centroidIdCol: String, centroidVecCol: String, cb: Codebook)
-  : Unit = {
+      vecCol: String, indexDir: String, centroids: Centroids,
+      cb: Codebook): Unit = {
     require(newVectors.columns.contains(idCol) &&
       newVectors.columns.contains(vecCol),
       s"ivfPqIndexAppend: newVectors needs columns '$idCol' and " +
         s"'$vecCol' (has ${newVectors.columns.mkString(", ")})")
-    val (assigned, stamp) = frameFrom(newVectors, idCol, vecCol,
-      Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), cb)
-    Similarity.appendToStampedLayout(assigned, indexDir, stamp,
-      "ivfPqIndexAppend")
+    Similarity.appendToStampedLayout(
+      ivfPqIndexFrame(newVectors, idCol, vecCol, centroids, cb), indexDir,
+      combinedStamp(centroids, cb), "ivfPqIndexAppend")
   }
 
   /** Append to BOTH trees of an [[ivfPqIndexWritePair]] layout in one
@@ -657,17 +613,14 @@ object Pq {
     */
   def ivfPqIndexAppendPair(newVectors: DataFrame, idCol: String,
       vecCol: String, indexDir: String, vectorsDir: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      cb: Codebook): Unit = {
+      centroids: Centroids, cb: Codebook): Unit = {
     require(newVectors.columns.contains(idCol) &&
       newVectors.columns.contains(vecCol),
       s"ivfPqIndexAppendPair: newVectors needs columns '$idCol' and " +
         s"'$vecCol' (has ${newVectors.columns.mkString(", ")})")
     val spark = newVectors.sparkSession
-    val cents = Similarity.collectCodebook(centroids, centroidIdCol,
-      centroidVecCol)
-    val ivfStamp = Similarity.codebookStamp(cents)
-    val pairStamp = combinedStamp(ivfStamp, cb)
+    val ivfStamp = centroids.stamp
+    val pairStamp = combinedStamp(centroids, cb)
     // verify BOTH trees before either write: failing the second append
     // after the first committed would manufacture the very desync this
     // call exists to prevent
@@ -679,8 +632,8 @@ object Pq {
       desc = "code tree built under different codebooks"): Unit
     // one assignment for both trees — batch-sized, checkpointed so the
     // two appends don't re-run the distance fold
-    val assigned = Similarity.ivfAssignLocal(
-      newVectors.select(col(idCol), col(vecCol)), vecCol, cents)
+    val assigned = Similarity.ivfAssign(
+      newVectors.select(col(idCol), col(vecCol)), idCol, vecCol, centroids)
       .localCheckpoint(false)
     Similarity.appendToStampedLayout(
       assigned.withColumn("_params", lit(ivfStamp)),
@@ -717,33 +670,15 @@ object Pq {
     */
   def ivfPqSearchBatch(queries: DataFrame, queryIdCol: String,
       queryVecCol: String, index: DataFrame, idCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      cb: Codebook, k: Int, nProbe: Int = 2,
-      excludeSelf: Boolean = true, metric: String = "l2",
-      superCells: Int = 0, superProbe: Int = 0): DataFrame =
-    ivfPqSearchBatchFrom(queries, queryIdCol, queryVecCol, index, idCol,
-      Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), cb, k, nProbe, excludeSelf, metric, superCells,
-      superProbe)
-
-  /** [[ivfPqSearchBatch]] over a PRE-COLLECTED codebook — the form the
-    * chunked wrappers and the streaming ingest thread their one
-    * centroid collect through (the DataFrame entry point re-collected
-    * the centroids per call: one extra job per chunk/layer; r18).
-    */
-  private[graft] def ivfPqSearchBatchFrom(queries: DataFrame,
-      queryIdCol: String, queryVecCol: String, index: DataFrame,
-      idCol: String, cents: Seq[(Long, Seq[Double])],
-      cb: Codebook, k: Int, nProbe: Int = 2,
+      centroids: Centroids, cb: Codebook, k: Int, nProbe: Int = 2,
       excludeSelf: Boolean = true, metric: String = "l2",
       superCells: Int = 0, superProbe: Int = 0): DataFrame = {
     val checked = Similarity.verifyStamp(index,
-      combinedStamp(Similarity.codebookStamp(cents), cb),
-      "ivfPqSearchBatch")
+      combinedStamp(centroids, cb), "ivfPqSearchBatch")
     // cell selection stays L2 against the IVF centroids regardless of
     // metric — cells ARE L2-nearest regions of that codebook
     val (lut, scoreCol, _) = metricPieces(metric, cb, col("qvec"))
-    val codebook = typedLit(cents)
+    val codebook = typedLit(centroids.cells)
     val q = queries.select(col(queryIdCol).as("qid"),
       col(queryVecCol).cast("array<double>").as("qvec"))
     // (qid, cell) probe pairs and (qid, LUT) kept SEPARATE: computing
@@ -756,7 +691,7 @@ object Pq {
     // (O(s + superProbe·k/s) distance rows per query instead of O(k) —
     // [[Similarity.probeCellsHierarchical]]'s approximation contract)
     val qcells = (if (superProbe > 0)
-      Similarity.probeCellsHierarchical(q, cents, nProbe, superCells,
+      Similarity.probeCellsHierarchical(q, centroids, nProbe, superCells,
         superProbe)
     else Similarity.probeTopCells(q
       .select(col("qid"), col("qvec"), explode(codebook).as("c"))
@@ -848,28 +783,12 @@ object Pq {
     */
   def ivfPqSearchBatchSdc(queries: DataFrame, queryIdCol: String,
       queryVecCol: String, index: DataFrame, idCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      cb: Codebook, k: Int, nProbe: Int = 2,
-      excludeSelf: Boolean = true,
-      superCells: Int = 0, superProbe: Int = 0): DataFrame =
-    ivfPqSearchBatchSdcFrom(queries, queryIdCol, queryVecCol, index,
-      idCol, Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), cb, k, nProbe, excludeSelf, superCells,
-      superProbe)
-
-  /** [[ivfPqSearchBatchSdc]] over a PRE-COLLECTED codebook — see
-    * [[ivfPqSearchBatchFrom]].
-    */
-  private[graft] def ivfPqSearchBatchSdcFrom(queries: DataFrame,
-      queryIdCol: String, queryVecCol: String, index: DataFrame,
-      idCol: String, cents: Seq[(Long, Seq[Double])],
-      cb: Codebook, k: Int, nProbe: Int = 2,
+      centroids: Centroids, cb: Codebook, k: Int, nProbe: Int = 2,
       excludeSelf: Boolean = true,
       superCells: Int = 0, superProbe: Int = 0): DataFrame = {
     val checked = Similarity.verifyStamp(index,
-      combinedStamp(Similarity.codebookStamp(cents), cb),
-      "ivfPqSearchBatchSdc")
-    val codebook = typedLit(cents)
+      combinedStamp(centroids, cb), "ivfPqSearchBatchSdc")
+    val codebook = typedLit(centroids.cells)
     // the m·k² table rides INSIDE the pq_sdc expression as a primitive
     // double[] constructor constant — as a typedLit child it converted
     // to boxed ArrayData and the per-row pointer chases measured 6×
@@ -881,7 +800,7 @@ object Pq {
     // the second quantization); query codes ride a separate tiny
     // frame; superProbe > 0 opts into the coarse probe tier
     val qcells = (if (superProbe > 0)
-      Similarity.probeCellsHierarchical(q, cents, nProbe, superCells,
+      Similarity.probeCellsHierarchical(q, centroids, nProbe, superCells,
         superProbe)
     else Similarity.probeTopCells(q
       .select(col("qid"), col("qvec"), explode(codebook).as("c"))
@@ -921,24 +840,10 @@ object Pq {
     */
   def semanticDedupFlagsPqSdc(batch: DataFrame, batchIdCol: String,
       batchVecCol: String, index: DataFrame, idCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      cb: Codebook, tauDist: Double, nProbe: Int = 2,
-      excludeSelf: Boolean = true): DataFrame =
-    semanticDedupFlagsPqSdcFrom(batch, batchIdCol, batchVecCol, index,
-      idCol, Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), cb, tauDist, nProbe, excludeSelf)
-
-  /** [[semanticDedupFlagsPqSdc]] over a PRE-COLLECTED codebook — the
-    * streaming ingest's entry point (it already holds the collected
-    * centroids for its stamp check; r18).
-    */
-  private[graft] def semanticDedupFlagsPqSdcFrom(batch: DataFrame,
-      batchIdCol: String, batchVecCol: String, index: DataFrame,
-      idCol: String, cents: Seq[(Long, Seq[Double])],
-      cb: Codebook, tauDist: Double, nProbe: Int = 2,
-      excludeSelf: Boolean = true): DataFrame = {
-    val top = ivfPqSearchBatchSdcChunkedFrom(batch, batchIdCol,
-      batchVecCol, index, idCol, cents, cb,
+      centroids: Centroids, cb: Codebook, tauDist: Double,
+      nProbe: Int = 2, excludeSelf: Boolean = true): DataFrame = {
+    val top = ivfPqSearchBatchSdcChunked(batch, batchIdCol,
+      batchVecCol, index, idCol, centroids, cb,
       k = 1, nProbe = nProbe, excludeSelf = excludeSelf)
       .select(col("qid"), col(idCol).as("neighbor_id"), col("sdc_dist"))
     batch.select(col(batchIdCol))
@@ -974,32 +879,16 @@ object Pq {
     */
   def semanticDedupFlagsPqHybrid(batch: DataFrame, batchIdCol: String,
       batchVecCol: String, index: DataFrame, idCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      cb: Codebook, tauSdc: Double, tauAdc: Double, band: Double,
-      refineK: Int = 4, nProbe: Int = 2, excludeSelf: Boolean = true)
-  : DataFrame =
-    semanticDedupFlagsPqHybridFrom(batch, batchIdCol, batchVecCol,
-      index, idCol, Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), cb, tauSdc, tauAdc, band, refineK, nProbe,
-      excludeSelf)
-
-  /** [[semanticDedupFlagsPqHybrid]] over a PRE-COLLECTED codebook —
-    * one centroid collect feeds the SDC pass, the straddler rescore,
-    * and the caller's stamp check (r18).
-    */
-  private[graft] def semanticDedupFlagsPqHybridFrom(batch: DataFrame,
-      batchIdCol: String, batchVecCol: String, index: DataFrame,
-      idCol: String, cents: Seq[(Long, Seq[Double])],
-      cb: Codebook, tauSdc: Double, tauAdc: Double, band: Double,
-      refineK: Int = 4, nProbe: Int = 2, excludeSelf: Boolean = true)
-  : DataFrame = {
+      centroids: Centroids, cb: Codebook, tauSdc: Double, tauAdc: Double,
+      band: Double, refineK: Int = 4, nProbe: Int = 2,
+      excludeSelf: Boolean = true): DataFrame = {
     require(band >= 0, "band must be ≥ 0")
     require(refineK >= 1, "refineK must be ≥ 1")
     // one symmetric probe, top-refineK per query — candidate-sized
     // (refineK·|batch| rows), checkpointed: it feeds the best-agg, the
     // straddler join, and (through it) the cell collect
-    val top = ivfPqSearchBatchSdcChunkedFrom(batch, batchIdCol,
-      batchVecCol, index, idCol, cents, cb,
+    val top = ivfPqSearchBatchSdcChunked(batch, batchIdCol,
+      batchVecCol, index, idCol, centroids, cb,
       k = refineK, nProbe = nProbe, excludeSelf = excludeSelf)
       .localCheckpoint(true)
     // SDC top-1 = rank 1 of the top-K (same (dist asc, id asc) order)
@@ -1025,8 +914,7 @@ object Pq {
         .filter(lit(false))
     } else {
       val checked = Similarity.verifyStamp(index,
-        combinedStamp(Similarity.codebookStamp(cents), cb),
-        "semanticDedupFlagsPqHybrid")
+        combinedStamp(centroids, cb), "semanticDedupFlagsPqHybrid")
       // LUTs ship for the BAND-SIZED query subset only — the bounded
       // form of the cost ADC pays for the whole batch
       val qluts = batch
@@ -1071,22 +959,7 @@ object Pq {
     */
   def ivfPqSearchBatchSdcChunked(queries: DataFrame, queryIdCol: String,
       queryVecCol: String, index: DataFrame, idCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      cb: Codebook, k: Int, nProbe: Int = 2,
-      excludeSelf: Boolean = true,
-      maxCodeBatch: Int = 524288): DataFrame =
-    ivfPqSearchBatchSdcChunkedFrom(queries, queryIdCol, queryVecCol,
-      index, idCol, Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), cb, k, nProbe, excludeSelf, maxCodeBatch)
-
-  /** [[ivfPqSearchBatchSdcChunked]] over a PRE-COLLECTED codebook —
-    * ONE centroid collect for every chunk (the DataFrame entry point
-    * re-collected per chunk; r18).
-    */
-  private[graft] def ivfPqSearchBatchSdcChunkedFrom(queries: DataFrame,
-      queryIdCol: String, queryVecCol: String, index: DataFrame,
-      idCol: String, cents: Seq[(Long, Seq[Double])],
-      cb: Codebook, k: Int, nProbe: Int = 2,
+      centroids: Centroids, cb: Codebook, k: Int, nProbe: Int = 2,
       excludeSelf: Boolean = true,
       maxCodeBatch: Int = 524288): DataFrame = {
     require(maxCodeBatch >= 1, "maxCodeBatch must be ≥ 1")
@@ -1094,14 +967,14 @@ object Pq {
     val nChunks =
       math.max(1L, (nQueries + maxCodeBatch - 1) / maxCodeBatch).toInt
     if (nChunks <= 1)
-      ivfPqSearchBatchSdcFrom(queries, queryIdCol, queryVecCol, index,
-        idCol, cents, cb, k, nProbe, excludeSelf)
+      ivfPqSearchBatchSdc(queries, queryIdCol, queryVecCol, index,
+        idCol, centroids, cb, k, nProbe, excludeSelf)
     else (0 until nChunks).map { chunk =>
       // an unlucky-empty chunk probes nothing and unions empty — safe
-      ivfPqSearchBatchSdcFrom(
+      ivfPqSearchBatchSdc(
         queries.filter(
           pmod(xxhash64(col(queryIdCol)), lit(nChunks)) === lit(chunk)),
-        queryIdCol, queryVecCol, index, idCol, cents, cb, k, nProbe,
+        queryIdCol, queryVecCol, index, idCol, centroids, cb, k, nProbe,
         excludeSelf)
     }.reduce(_ union _)
   }
@@ -1137,23 +1010,10 @@ object Pq {
     */
   def semanticDedupFlagsPq(batch: DataFrame, batchIdCol: String,
       batchVecCol: String, index: DataFrame, idCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      cb: Codebook, tauDist: Double, nProbe: Int = 2,
-      excludeSelf: Boolean = true): DataFrame =
-    semanticDedupFlagsPqFrom(batch, batchIdCol, batchVecCol, index,
-      idCol, Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), cb, tauDist, nProbe, excludeSelf)
-
-  /** [[semanticDedupFlagsPq]] over a PRE-COLLECTED codebook — see
-    * [[semanticDedupFlagsPqSdcFrom]].
-    */
-  private[graft] def semanticDedupFlagsPqFrom(batch: DataFrame,
-      batchIdCol: String, batchVecCol: String, index: DataFrame,
-      idCol: String, cents: Seq[(Long, Seq[Double])],
-      cb: Codebook, tauDist: Double, nProbe: Int = 2,
-      excludeSelf: Boolean = true): DataFrame = {
-    val top = ivfPqSearchBatchChunkedFrom(batch, batchIdCol, batchVecCol,
-      index, idCol, cents, cb,
+      centroids: Centroids, cb: Codebook, tauDist: Double,
+      nProbe: Int = 2, excludeSelf: Boolean = true): DataFrame = {
+    val top = ivfPqSearchBatchChunked(batch, batchIdCol, batchVecCol,
+      index, idCol, centroids, cb,
       k = 1, nProbe = nProbe, excludeSelf = excludeSelf, metric = "l2")
       .select(col("qid"), col(idCol).as("neighbor_id"), col("adc_dist"))
     batch.select(col(batchIdCol))
@@ -1185,21 +1045,7 @@ object Pq {
     */
   def ivfPqSearchBatchChunked(queries: DataFrame, queryIdCol: String,
       queryVecCol: String, index: DataFrame, idCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      cb: Codebook, k: Int, nProbe: Int = 2,
-      excludeSelf: Boolean = true, metric: String = "l2",
-      maxLutBatch: Int = 8192): DataFrame =
-    ivfPqSearchBatchChunkedFrom(queries, queryIdCol, queryVecCol, index,
-      idCol, Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), cb, k, nProbe, excludeSelf, metric, maxLutBatch)
-
-  /** [[ivfPqSearchBatchChunked]] over a PRE-COLLECTED codebook —
-    * ONE centroid collect for every chunk (r18).
-    */
-  private[graft] def ivfPqSearchBatchChunkedFrom(queries: DataFrame,
-      queryIdCol: String, queryVecCol: String, index: DataFrame,
-      idCol: String, cents: Seq[(Long, Seq[Double])],
-      cb: Codebook, k: Int, nProbe: Int = 2,
+      centroids: Centroids, cb: Codebook, k: Int, nProbe: Int = 2,
       excludeSelf: Boolean = true, metric: String = "l2",
       maxLutBatch: Int = 8192): DataFrame = {
     require(maxLutBatch >= 1, "maxLutBatch must be ≥ 1")
@@ -1207,14 +1053,14 @@ object Pq {
     val nChunks =
       math.max(1L, (nQueries + maxLutBatch - 1) / maxLutBatch).toInt
     if (nChunks <= 1)
-      ivfPqSearchBatchFrom(queries, queryIdCol, queryVecCol, index,
-        idCol, cents, cb, k, nProbe, excludeSelf, metric)
+      ivfPqSearchBatch(queries, queryIdCol, queryVecCol, index,
+        idCol, centroids, cb, k, nProbe, excludeSelf, metric)
     else (0 until nChunks).map { chunk =>
       // an unlucky-empty chunk probes nothing and unions empty — safe
-      ivfPqSearchBatchFrom(
+      ivfPqSearchBatch(
         queries.filter(
           pmod(xxhash64(col(queryIdCol)), lit(nChunks)) === lit(chunk)),
-        queryIdCol, queryVecCol, index, idCol, cents, cb, k, nProbe,
+        queryIdCol, queryVecCol, index, idCol, centroids, cb, k, nProbe,
         excludeSelf, metric)
     }.reduce(_ union _)
   }
@@ -1247,37 +1093,20 @@ object Pq {
   def ivfPqSearchRefined(queries: DataFrame, queryIdCol: String,
       queryVecCol: String, index: DataFrame, vectors: DataFrame,
       sourceIdCol: String, sourceVecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      cb: Codebook, k: Int, nProbe: Int = 2, refineFactor: Int = 4,
-      excludeSelf: Boolean = true, metric: String = "l2"): DataFrame =
-    ivfPqSearchRefinedFrom(queries, queryIdCol, queryVecCol, index,
-      vectors, sourceIdCol, sourceVecCol,
-      Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), cb, k, nProbe, refineFactor, excludeSelf,
-      metric)
-
-  /** [[ivfPqSearchRefined]] over a PRE-COLLECTED codebook — ONE
-    * centroid collect feeds the vector-tree stamp check AND the inner
-    * ADC probe (which previously re-collected through the public
-    * [[ivfPqSearchBatch]]) (r19).
-    */
-  private[graft] def ivfPqSearchRefinedFrom(queries: DataFrame,
-      queryIdCol: String, queryVecCol: String, index: DataFrame,
-      vectors: DataFrame, sourceIdCol: String, sourceVecCol: String,
-      cents: Seq[(Long, Seq[Double])],
-      cb: Codebook, k: Int, nProbe: Int = 2, refineFactor: Int = 4,
-      excludeSelf: Boolean = true, metric: String = "l2"): DataFrame = {
+      centroids: Centroids, cb: Codebook, k: Int, nProbe: Int = 2,
+      refineFactor: Int = 4, excludeSelf: Boolean = true,
+      metric: String = "l2"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(refineFactor >= 1, "refineFactor must be ≥ 1")
     val checkedVecs = Similarity.verifyStamp(vectors,
-      Similarity.codebookStamp(cents), "ivfPqSearchRefined",
+      centroids.stamp, "ivfPqSearchRefined",
       desc = "refine vector layout assigned under a different codebook")
     // candidate-sized by construction (k·refineFactor·|batch| rows);
     // checkpointed because it feeds TWO consumers — the cell collect
     // and the fetch join — and re-running the ADC probe per consumer
     // would double the probe cost
-    val cand = ivfPqSearchBatchFrom(queries, queryIdCol, queryVecCol,
-      index, sourceIdCol, cents, cb,
+    val cand = ivfPqSearchBatch(queries, queryIdCol, queryVecCol,
+      index, sourceIdCol, centroids, cb,
       k = k * refineFactor, nProbe = nProbe, excludeSelf = excludeSelf,
       metric = metric)
       .select(col("qid"), col(sourceIdCol), col("cell"))

@@ -46,6 +46,95 @@ object Similarity {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
+  /** A collected IVF codebook — the one value every IVF and IVF-PQ op
+    * takes, as every PQ op takes a [[Pq.Codebook]]. `cells` are
+    * (cid, centroid) sorted by cid, which the assignment folds rely on
+    * for their smallest-cid tie-break.
+    *
+    * The codebook is tiny by construction (an IVF index has 10²–10⁴
+    * centroids for billions of vectors), so [[Centroids.apply]]
+    * collects it ONCE and every op ships `cells` inside its plan as a
+    * literal. A query body that builds, appends and probes under one
+    * codebook resolves it once and passes the value to each call; no
+    * op collects a codebook again.
+    *
+    * `stamp` is the codebook identity a persisted [[ivfIndex]] layout
+    * carries: cell count + md5 of the (cid, centroid) stream. Cells are
+    * nearest-centroid regions OF A SPECIFIC CODEBOOK — probing an index
+    * assigned under a different codebook mis-routes the probe and
+    * silently returns wrong neighbors, so the reload path verifies this
+    * stamp the way [[graft.ops.Dedup.crossDedupFlagsFromIndexes]]
+    * verifies band params. Its byte format is fixed: layouts persisted
+    * by earlier builds must keep verifying (SimilaritySpec pins it).
+    */
+  final case class Centroids(cells: Seq[(Long, Seq[Double])]) {
+    require(cells.nonEmpty, "IVF codebook: no centroids")
+    require(cells.iterator.map(_._1).sliding(2).forall {
+      case Seq(a, b) => a < b
+      case _ => true
+    }, "IVF codebook: cells must be sorted by strictly increasing id")
+
+    lazy val stamp: String = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      cells.foreach { case (cid, v) =>
+        md.update(cid.toString.getBytes("UTF-8"))
+        // Locale.ROOT: the f interpolator uses the JVM default locale,
+        // so a comma-decimal locale would render the same codebook to a
+        // DIFFERENT stamp — an index built on one machine would
+        // spuriously fail the codebook check on another
+        v.foreach(x => md.update(String.format(java.util.Locale.ROOT,
+          "%.9e,", Double.box(x)).getBytes("UTF-8")))
+      }
+      s"ivf${cells.size}/" +
+        md.digest().map("%02x".format(_)).mkString.take(12)
+    }
+
+    /** The codebook as a (cid: bigint, cvec: array<double>) frame over a
+      * `LocalRelation`: collecting it is a driver-side `LocalTableScan`
+      * with no Spark job. The form for a caller that must hand a
+      * DataFrame codebook to an op which collects it per call — the
+      * streaming sinks collect theirs once per micro-batch.
+      */
+    def frame(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      cells.toDF("cid", "cvec")
+    }
+  }
+
+  object Centroids {
+    /** Collect `centroids` (one Spark job) into a [[Centroids]] value.
+      * The frame is input from outside the engine, so it is checked
+      * here: a null id or vector, a null vector element (its distance
+      * would be null, so the centroid could never win a cell yet would
+      * still count in the stamp) or a duplicate id (two centroids under
+      * one cell label) fails with the offending column named.
+      */
+    def apply(centroids: DataFrame, idCol: String, vecCol: String)
+    : Centroids = {
+      val rows = centroids
+        .select(col(idCol).cast("long"), asDouble(col(vecCol)))
+        .collect()
+      require(rows.nonEmpty,
+        s"IVF codebook: no rows in the centroid frame ($idCol, $vecCol)")
+      val cells = rows.map { r =>
+        require(!r.isNullAt(0), s"IVF codebook: null id in column '$idCol'")
+        val cid = r.getLong(0)
+        require(!r.isNullAt(1),
+          s"IVF codebook: null vector in column '$vecCol' (cell $cid)")
+        val v = r.getSeq[Any](1)
+        require(!v.contains(null),
+          s"IVF codebook: null element in column '$vecCol' (cell $cid)")
+        (cid, v.map(_.asInstanceOf[Double]))
+      }.sortBy(_._1).toSeq
+      cells.iterator.map(_._1).sliding(2).foreach {
+        case Seq(a, b) => require(a != b,
+          s"IVF codebook: duplicate id $a in column '$idCol'")
+        case _ =>
+      }
+      Centroids(cells)
+    }
+  }
+
   /** Brute-force cosine top-k neighbors of `queryId` (excluded from the
     * results). Broadcasts the single query row.
     */
@@ -108,38 +197,16 @@ object Similarity {
     * the cell id becomes the partition column; probing searches only
     * the query's cell(s).
     *
-    * The codebook is tiny by construction (an IVF index has 10²-10⁴
-    * centroids for billions of vectors), so it is collected once and
-    * shipped inside the plan as a literal array; the argmin is a per-row
-    * `aggregate` fold — ZERO shuffle, zero join, no row replication.
-    * (The previous crossJoin + row_number().over(partitionBy(id)) form
-    * shuffled n×k rows just to pick each row's min — a scale-killer.)
+    * The collected codebook ships inside the plan as a literal array;
+    * the argmin is a per-row `aggregate` fold — ZERO shuffle, zero
+    * join, no row replication. (The previous crossJoin +
+    * row_number().over(partitionBy(id)) form shuffled n×k rows just to
+    * pick each row's min — a scale-killer.)
     */
   def ivfAssign(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String)
-  : DataFrame =
-    ivfAssignLocal(emb, vecCol, collectCodebook(centroids,
-      centroidIdCol, centroidVecCol))
-
-  /** Pull the (tiny) codebook to the driver once; callers that need it
-    * both for assignment and probe selection collect a single time.
-    */
-  private[graft] def collectCodebook(centroids: DataFrame, centroidIdCol: String,
-      centroidVecCol: String): Seq[(Long, Seq[Double])] = {
-    val cents = centroids
-      .select(col(centroidIdCol).cast("long"),
-        asDouble(col(centroidVecCol)))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
-      .toSeq
-    require(cents.nonEmpty, "ivfAssign: empty centroid codebook")
-    cents
-  }
-
-  private[graft] def ivfAssignLocal(emb: DataFrame, vecCol: String,
-      cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    val codebook = typedLit(cents) // array<struct<_1:bigint,_2:array<double>>>
+      centroids: Centroids): DataFrame = {
+    // array<struct<_1:bigint,_2:array<double>>>
+    val codebook = typedLit(centroids.cells)
     val v = asDouble(col(vecCol))
     // fold state: struct(cid, d) — strict < keeps the first (smallest
     // cid, codebook sorted) on ties, matching the old (dist, cid) sort
@@ -291,9 +358,9 @@ object Similarity {
     * was the scale problem, and that is what the hierarchy removes.
     */
   def ivfAssignHierarchical(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      superCells: Int = 0, superProbe: Int = 2): DataFrame = {
-    val cents = collectCodebook(centroids, centroidIdCol, centroidVecCol)
+      centroids: Centroids, superCells: Int = 0, superProbe: Int = 2)
+  : DataFrame = {
+    val cents = centroids.cells
     val s = if (superCells > 0) superCells
       else math.ceil(math.sqrt(cents.size.toDouble)).toInt
     require(superProbe >= 1 && superProbe <= 2 || superProbe >= s,
@@ -309,7 +376,7 @@ object Similarity {
       // EVERY group is also exact, but runs the full two-level
       // machinery — the registered q122 gate uses that shape to pin
       // the hierarchy against the flat DuckDB oracle.
-      ivfAssignLocal(emb, vecCol, cents)
+      ivfAssign(emb, idCol, vecCol, centroids)
     } else {
       // only super-cells that won members: an empty localKmeans cluster
       // must not be probe-able (element_at would return null members)
@@ -361,16 +428,14 @@ object Similarity {
     * partition-prunable, which is the entire point of an IVF index.
     */
   def ivfSearch(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      queryId: Long, k: Int, nProbe: Int = 2): DataFrame = {
-    // one codebook collect (shared with assignment), one query-row scan;
-    // the query vector ships as a literal — no second source scan, no
-    // crossJoin
-    val cents = collectCodebook(centroids, centroidIdCol, centroidVecCol)
-    val assigned = ivfAssignLocal(emb, vecCol, cents)
+      centroids: Centroids, queryId: Long, k: Int, nProbe: Int = 2)
+  : DataFrame = {
+    // one query-row scan; the query vector ships as a literal — no
+    // second source scan, no crossJoin
+    val assigned = ivfAssign(emb, idCol, vecCol, centroids)
     val qVec = emb.filter(col(idCol) === queryId)
       .select(asDouble(col(vecCol))).collect()(0).getSeq[Double](0)
-    val probes = cents.map { case (cid, cv) =>
+    val probes = centroids.cells.map { case (cid, cv) =>
       (cv.zip(qVec).map { case (x, y) => (x - y) * (x - y) }.sum, cid)
     }.sorted.take(nProbe).map(_._2)
     val qLit = typedLit(qVec)
@@ -380,29 +445,6 @@ object Similarity {
         round(cosine(asDouble(col(vecCol)), qLit), 5).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)
-  }
-
-  /** Codebook identity stamp carried by a persisted [[ivfIndex]]: cell
-    * count + md5 of the (cid, rounded-centroid) stream. Cells are
-    * nearest-centroid regions OF A SPECIFIC CODEBOOK — probing an index
-    * assigned under a different codebook mis-routes the probe and
-    * silently returns wrong neighbors, so the reload path verifies this
-    * stamp the way [[graft.ops.Dedup.crossDedupFlagsFromIndexes]]
-    * verifies band params.
-    */
-  private[graft] def codebookStamp(cents: Seq[(Long, Seq[Double])]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    cents.foreach { case (cid, v) =>
-      md.update(cid.toString.getBytes("UTF-8"))
-      // Locale.ROOT: the f interpolator uses the JVM default locale, so
-      // a comma-decimal locale would render the same codebook to a
-      // DIFFERENT stamp — an index built on one machine would spuriously
-      // fail the codebook check on another (r9 ADVICE).
-      v.foreach(x => md.update(String.format(java.util.Locale.ROOT,
-        "%.9e,", Double.box(x)).getBytes("UTF-8")))
-    }
-    s"ivf${cents.size}/" +
-      md.digest().map("%02x".format(_)).mkString.take(12)
   }
 
   /** Sidecar stamp file at an [[ivfIndex]] layout root. Named with a
@@ -529,12 +571,9 @@ object Similarity {
     * the corpus per query) cannot offer.
     */
   def ivfIndex(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String)
-  : DataFrame = {
-    val cents = collectCodebook(centroids, centroidIdCol, centroidVecCol)
-    ivfAssignLocal(emb, vecCol, cents)
-      .withColumn("_params", lit(codebookStamp(cents)))
-  }
+      centroids: Centroids): DataFrame =
+    ivfAssign(emb, idCol, vecCol, centroids)
+      .withColumn("_params", lit(centroids.stamp))
 
   /** Build AND persist an [[ivfIndex]] layout: the cell-partitioned
     * parquet tree plus the [[StampSidecar]] stamp file, so every later
@@ -546,25 +585,12 @@ object Similarity {
     * unless the write must be embedded in a larger job.
     */
   def ivfIndexWrite(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      indexDir: String): Unit =
-    ivfIndexWriteFrom(emb, vecCol,
-      collectCodebook(centroids, centroidIdCol, centroidVecCol), indexDir)
-
-  /** [[ivfIndexWrite]] over a PRE-COLLECTED codebook — callers that
-    * already hold the collected centroids (the IVF-PQ pair build's
-    * stamp derivation) thread them through instead of paying a second
-    * centroid collect per build (r18).
-    */
-  private[graft] def ivfIndexWriteFrom(emb: DataFrame, vecCol: String,
-      cents: Seq[(Long, Seq[Double])], indexDir: String): Unit = {
-    val stamp = codebookStamp(cents)
-    ivfAssignLocal(emb, vecCol, cents)
-      .withColumn("_params", lit(stamp))
+      centroids: Centroids, indexDir: String): Unit = {
+    ivfIndex(emb, idCol, vecCol, centroids)
       .write.partitionBy("cell").mode("overwrite").parquet(indexDir)
     // after the data commit: a crash between the two leaves a layout
     // that still verifies (slow path), never one that lies
-    writeStampSidecar(emb.sparkSession, indexDir, stamp)
+    writeStampSidecar(emb.sparkSession, indexDir, centroids.stamp)
   }
 
   /** Managed codebook MIGRATION — the path out of the refusal every
@@ -611,14 +637,12 @@ object Similarity {
     */
   def rebuildUnderCodebook(spark: SparkSession, oldRoot: String,
       newRoot: String, idCol: String, vecCol: String,
-      newCentroids: DataFrame, centroidIdCol: String,
-      centroidVecCol: String): String = {
+      newCentroids: Centroids): String = {
     require(newRoot != oldRoot,
       "rebuildUnderCodebook: in-place migration is impossible by " +
         "design (every row changes cell) — pass a fresh newRoot and " +
         "cut over after this returns")
-    val stamp = codebookStamp(
-      collectCodebook(newCentroids, centroidIdCol, centroidVecCol))
+    val stamp = newCentroids.stamp
     val (fs, oldPath) = fsOf(spark, oldRoot)
     val pendingManifest = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(
@@ -650,8 +674,7 @@ object Similarity {
     }
     ivfIndexWrite(
       spark.read.parquet(oldRoot).select(col(idCol), col(vecCol)),
-      idCol, vecCol, newCentroids, centroidIdCol, centroidVecCol,
-      newRoot)
+      idCol, vecCol, newCentroids, newRoot)
     stamp
   }
 
@@ -777,25 +800,10 @@ object Similarity {
     * than silently trusted.
     */
   def ivfSearchIndexed(index: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      queryVec: Seq[Double], k: Int, nProbe: Int = 2,
-      excludeId: Option[Long] = None): DataFrame =
-    ivfSearchIndexedFrom(index, idCol, vecCol,
-      collectCodebook(centroids, centroidIdCol, centroidVecCol),
-      queryVec, k, nProbe, excludeId)
-
-  /** [[ivfSearchIndexed]] over a PRE-COLLECTED codebook — a query body
-    * that just built/appended the index under the same centroids
-    * threads ONE collect through build and probe (r19, extending the
-    * r18 `*From` threading).
-    */
-  private[graft] def ivfSearchIndexedFrom(index: DataFrame, idCol: String,
-      vecCol: String, cents: Seq[(Long, Seq[Double])],
-      queryVec: Seq[Double], k: Int, nProbe: Int = 2,
-      excludeId: Option[Long] = None): DataFrame = {
-    val checked = verifyStamp(index, codebookStamp(cents),
-      "ivfSearchIndexed")
-    val probes = cents.map { case (cid, cv) =>
+      centroids: Centroids, queryVec: Seq[Double], k: Int,
+      nProbe: Int = 2, excludeId: Option[Long] = None): DataFrame = {
+    val checked = verifyStamp(index, centroids.stamp, "ivfSearchIndexed")
+    val probes = centroids.cells.map { case (cid, cv) =>
       (cv.zip(queryVec).map { case (x, y) => (x - y) * (x - y) }.sum, cid)
     }.sorted.take(nProbe).map(_._2)
     val qLit = typedLit(queryVec)
@@ -900,23 +908,10 @@ object Similarity {
 
   def ivfSearchBatch(queries: DataFrame, queryIdCol: String,
       queryVecCol: String, index: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      k: Int, nProbe: Int = 2, excludeSelf: Boolean = true): DataFrame =
-    ivfSearchBatchFrom(queries, queryIdCol, queryVecCol, index, idCol,
-      vecCol, collectCodebook(centroids, centroidIdCol, centroidVecCol),
-      k, nProbe, excludeSelf)
-
-  /** [[ivfSearchBatch]] over a PRE-COLLECTED codebook — the form
-    * callers that already hold the collected centroids (the streaming
-    * ingest's stamp check) thread them through instead of paying a
-    * second centroid collect per probe (r18).
-    */
-  private[graft] def ivfSearchBatchFrom(queries: DataFrame,
-      queryIdCol: String, queryVecCol: String, index: DataFrame,
-      idCol: String, vecCol: String, cents: Seq[(Long, Seq[Double])],
-      k: Int, nProbe: Int = 2, excludeSelf: Boolean = true): DataFrame = {
-    val checked = verifyStamp(index, codebookStamp(cents), "ivfSearchBatch")
-    val codebook = typedLit(cents)
+      centroids: Centroids, k: Int, nProbe: Int = 2,
+      excludeSelf: Boolean = true): DataFrame = {
+    val checked = verifyStamp(index, centroids.stamp, "ivfSearchBatch")
+    val codebook = typedLit(centroids.cells)
     val q = queries.select(col(queryIdCol).as("qid"),
       asDouble(col(queryVecCol)).as("qvec"))
       .localCheckpoint(true) // one pass feeds probe ranking + vector join
@@ -956,25 +951,14 @@ object Similarity {
     */
   def ivfSearchBatchHier(queries: DataFrame, queryIdCol: String,
       queryVecCol: String, index: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      k: Int, nProbe: Int = 2, excludeSelf: Boolean = true,
-      superCells: Int = 0, superProbe: Int = 2): DataFrame =
-    ivfSearchBatchHierFrom(queries, queryIdCol, queryVecCol, index,
-      idCol, vecCol, collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), k, nProbe, excludeSelf, superCells, superProbe)
-
-  /** [[ivfSearchBatchHier]] over a PRE-COLLECTED codebook (r19). */
-  private[graft] def ivfSearchBatchHierFrom(queries: DataFrame,
-      queryIdCol: String, queryVecCol: String, index: DataFrame,
-      idCol: String, vecCol: String, cents: Seq[(Long, Seq[Double])],
-      k: Int, nProbe: Int = 2, excludeSelf: Boolean = true,
-      superCells: Int = 0, superProbe: Int = 2): DataFrame = {
-    val checked = verifyStamp(index, codebookStamp(cents),
-      "ivfSearchBatchHier")
+      centroids: Centroids, k: Int, nProbe: Int = 2,
+      excludeSelf: Boolean = true, superCells: Int = 0,
+      superProbe: Int = 2): DataFrame = {
+    val checked = verifyStamp(index, centroids.stamp, "ivfSearchBatchHier")
     val q = queries.select(col(queryIdCol).as("qid"),
       asDouble(col(queryVecCol)).as("qvec"))
       .localCheckpoint(true) // one pass feeds probe ranking + vector join
-    val qcells = probeCellsHierarchical(q, cents, nProbe, superCells,
+    val qcells = probeCellsHierarchical(q, centroids, nProbe, superCells,
       superProbe)
       .localCheckpoint(true) // probe side computed once: cells collect + join
     searchFromProbe(checked, q, qcells, idCol, vecCol, k, excludeSelf)
@@ -1006,8 +990,9 @@ object Similarity {
     * pin it against q115's flat oracle).
     */
   private[graft] def probeCellsHierarchical(q: DataFrame,
-      cents: Seq[(Long, Seq[Double])], nProbe: Int,
+      centroids: Centroids, nProbe: Int,
       superCells: Int = 0, superProbe: Int = 2): DataFrame = {
+    val cents = centroids.cells
     val s = if (superCells > 0) superCells
       else math.ceil(math.sqrt(cents.size.toDouble)).toInt
     require(superProbe >= 1,
@@ -1179,24 +1164,13 @@ object Similarity {
     * file-open cost grows with the fragment count.
     */
   def ivfIndexAppend(newVectors: DataFrame, idCol: String, vecCol: String,
-      indexDir: String, centroids: DataFrame, centroidIdCol: String,
-      centroidVecCol: String): Unit =
-    ivfIndexAppendFrom(newVectors, idCol, vecCol, indexDir,
-      collectCodebook(centroids, centroidIdCol, centroidVecCol))
-
-  /** [[ivfIndexAppend]] over a PRE-COLLECTED codebook (r19). */
-  private[graft] def ivfIndexAppendFrom(newVectors: DataFrame,
-      idCol: String, vecCol: String, indexDir: String,
-      cents: Seq[(Long, Seq[Double])]): Unit = {
+      indexDir: String, centroids: Centroids): Unit = {
     require(newVectors.columns.contains(idCol) &&
       newVectors.columns.contains(vecCol),
       s"ivfIndexAppend: newVectors needs columns '$idCol' and '$vecCol'" +
         s" (has ${newVectors.columns.mkString(", ")})")
-    val stamp = codebookStamp(cents)
-    appendToStampedLayout(
-      ivfAssignLocal(newVectors, vecCol, cents)
-        .withColumn("_params", lit(stamp)),
-      indexDir, stamp, "ivfIndexAppend")
+    appendToStampedLayout(ivfIndex(newVectors, idCol, vecCol, centroids),
+      indexDir, centroids.stamp, "ivfIndexAppend")
   }
 
   /** Shared append tail for cell-partitioned stamped layouts (the
@@ -1311,26 +1285,15 @@ object Similarity {
     */
   def semanticDedupFlags(batch: DataFrame, batchIdCol: String,
       batchVecCol: String, index: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, centroidIdCol: String, centroidVecCol: String,
-      tau: Double, nProbe: Int = 2, excludeSelf: Boolean = true)
-  : DataFrame =
-    semanticDedupFlagsFrom(batch, batchIdCol, batchVecCol, index, idCol,
-      vecCol, collectCodebook(centroids, centroidIdCol, centroidVecCol),
-      tau, nProbe, excludeSelf)
-
-  /** [[semanticDedupFlags]] over a PRE-COLLECTED codebook (r18). */
-  private[graft] def semanticDedupFlagsFrom(batch: DataFrame,
-      batchIdCol: String, batchVecCol: String, index: DataFrame,
-      idCol: String, vecCol: String, cents: Seq[(Long, Seq[Double])],
-      tau: Double, nProbe: Int = 2, excludeSelf: Boolean = true)
-  : DataFrame = {
+      centroids: Centroids, tau: Double, nProbe: Int = 2,
+      excludeSelf: Boolean = true): DataFrame = {
     // excludeSelf matters when batch and corpus SHARE an id space (the
     // corpus-refresh case: a re-embedded doc must not match its own
     // old row). When the batch's ids are independent of the corpus's,
     // pass false — an id collision would otherwise silently skip a
     // genuine near-duplicate candidate.
-    val top = ivfSearchBatchFrom(batch, batchIdCol, batchVecCol,
-      index, idCol, vecCol, cents,
+    val top = ivfSearchBatch(batch, batchIdCol, batchVecCol,
+      index, idCol, vecCol, centroids,
       k = 1, nProbe = nProbe, excludeSelf = excludeSelf)
       .select(col("qid"), col(idCol).as("neighbor_id"), col("cos_sim"))
     batch.select(col(batchIdCol))
@@ -1351,7 +1314,8 @@ object Similarity {
   def kmeansStep(emb: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, centroidIdCol: String, centroidVecCol: String)
   : DataFrame =
-    ivfAssign(emb, idCol, vecCol, centroids, centroidIdCol, centroidVecCol)
+    ivfAssign(emb, idCol, vecCol,
+      Centroids(centroids, centroidIdCol, centroidVecCol))
       .select(col("cell"),
         posexplode(asDouble(col(vecCol))).as(Seq("dim0", "x")))
       .groupBy(col("cell"), (col("dim0") + 1).as("dim"))
@@ -1377,8 +1341,8 @@ object Similarity {
     * fold, recomputes the per-cell means with ONE (cell, dim)-keyed
     * shuffle (map-side partial agg), and pulls the codebook back to
     * seed the next round. The per-round collect is |codebook|·dim rows
-    * — driver-sized by construction, the same bound
-    * [[collectCodebook]] documents. Lineage never grows: every
+    * — driver-sized by construction, the same bound as
+    * [[Centroids]]' own collect. Lineage never grows: every
     * iteration re-plans from the source with the new codebook shipped
     * as a literal, so no checkpointing is needed no matter how many
     * rounds run. The two regimes agree to floating-point summation
@@ -1388,9 +1352,8 @@ object Similarity {
       initCentroids: DataFrame, centroidIdCol: String,
       centroidVecCol: String, maxIters: Int = 10, tol: Double = 1e-6)
   : DataFrame = {
-    val init = collectCodebook(initCentroids, centroidIdCol,
-      centroidVecCol)
-    val dim = init.head._2.size
+    val init = Centroids(initCentroids, centroidIdCol, centroidVecCol)
+    val dim = init.cells.head._2.size
     val cents = DriverFinish.collectWithin(
       emb.select(asDouble(col(vecCol))), rowBytes = 8L * dim + 16)
       .map { rows =>
@@ -1399,24 +1362,25 @@ object Similarity {
         val points = rows.iterator.filterNot(_.isNullAt(0))
           .map(_.getSeq[Any](0)).filterNot(_.contains(null))
           .map(_.map(_.asInstanceOf[Double]).toArray).toIndexedSeq
-        init.map(_._1).zip(localKmeans(points,
-          init.map(_._2.toArray).toIndexedSeq, maxIters, tol)
+        init.cells.map(_._1).zip(localKmeans(points,
+          init.cells.map(_._2.toArray).toIndexedSeq, maxIters, tol)
           .map(_.toSeq))
       }
-      .getOrElse(distributedKmeans(emb, vecCol, init, maxIters, tol))
+      .getOrElse(distributedKmeans(emb, idCol, vecCol, init, maxIters,
+        tol).cells)
     val spark = emb.sparkSession
     import spark.implicits._
     cents.toDF(centroidIdCol, centroidVecCol)
   }
 
-  private def distributedKmeans(emb: DataFrame, vecCol: String,
-      init: Seq[(Long, Seq[Double])], maxIters: Int, tol: Double)
-  : Seq[(Long, Seq[Double])] = {
+  private def distributedKmeans(emb: DataFrame, idCol: String,
+      vecCol: String, init: Centroids, maxIters: Int, tol: Double)
+  : Centroids = {
     var cents = init
     var iter = 0
     var moved = Double.MaxValue
     while (iter < maxIters && moved > tol) {
-      val means = ivfAssignLocal(emb, vecCol, cents)
+      val means = ivfAssign(emb, idCol, vecCol, cents)
         .select(col("cell"),
           posexplode(asDouble(col(vecCol))).as(Seq("dim0", "x")))
         .groupBy(col("cell"), col("dim0"))
@@ -1425,10 +1389,10 @@ object Similarity {
       val byCell = means.groupBy(_.getLong(0)).map { case (cell, rows) =>
         cell -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
       }
-      val next = cents.map { case (cid, old) =>
+      val next = Centroids(cents.cells.map { case (cid, old) =>
         (cid, byCell.getOrElse(cid, old))
-      }
-      moved = cents.zip(next).map { case ((_, a), (_, b)) =>
+      })
+      moved = cents.cells.zip(next.cells).map { case ((_, a), (_, b)) =>
         math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
       }.max
       cents = next

@@ -59,13 +59,12 @@ object MultimodalQueries {
       val emb = Multimodal.embed(media(s, d))
         .filter(col("kind") === "image")
         .select(col("media_id"), col("embedding"))
-      val centroids = emb.filter(col("media_id") < 12)
-        .select(col("media_id").as("cid"), col("embedding").as("cvec"))
+      val cents = Similarity.Centroids(emb.filter(col("media_id") < 12),
+        "media_id", "embedding")
       val out = QueryTmp.dir("q118", s, d)
-      // one codebook collect threads through build AND probe (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
-      Similarity.ivfIndexWriteFrom(emb, "embedding", cents, s"$out/ivf")
-      Similarity.ivfSearchBatchFrom(
+      Similarity.ivfIndexWrite(emb, "media_id", "embedding", cents,
+        s"$out/ivf")
+      Similarity.ivfSearchBatch(
         emb.filter(col("media_id") < 6), "media_id", "embedding",
         s.read.parquet(s"$out/ivf"), "media_id", "embedding",
         cents, k = 5, nProbe = 2)

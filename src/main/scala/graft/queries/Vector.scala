@@ -49,10 +49,8 @@ object Vector {
     // then per-cell occupancy — the inverted-file partition layout.
     "q59_ivf_cells" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       Similarity.ivfAssign(emb, "vec_id", "embedding",
-        centroids, "cid", "cvec")
+        fixtureCentroids(emb))
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("min_id"),
           round(avg(col("cell_dist2")), 4).as("avg_dist2"))
@@ -70,10 +68,8 @@ object Vector {
     // agreement/cost trade on a real corpus is ASSIGN_200k_r11.json).
     "q122_ivf_hier_cells" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       Similarity.ivfAssignHierarchical(emb, "vec_id", "embedding",
-        centroids, "cid", "cvec", superCells = 2, superProbe = 2)
+        fixtureCentroids(emb), superCells = 2, superProbe = 2)
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("min_id"),
           round(avg(col("cell_dist2")), 4).as("avg_dist2"))
@@ -84,10 +80,8 @@ object Vector {
     // the query's 2 nearest cells.
     "q88_ivf_search" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       Similarity.ivfSearch(emb, "vec_id", "embedding",
-        centroids, "cid", "cvec", queryId = 0L, k = 5, nProbe = 2)
+        fixtureCentroids(emb), queryId = 0L, k = 5, nProbe = 2)
     }),
 
     // q88's amortized production path: the assigned corpus persists ONCE
@@ -97,16 +91,14 @@ object Vector {
     // Shares q88's oracle verbatim: same codebook, query, k, nProbe.
     "q114_ivf_indexed" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val out = QueryTmp.dir("q114", s, d)
-      // one codebook collect threads through build AND probe (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
-      Similarity.ivfIndexWriteFrom(emb, "embedding", cents, s"$out/ivf")
+      val cents = fixtureCentroids(emb)
+      Similarity.ivfIndexWrite(emb, "vec_id", "embedding", cents,
+        s"$out/ivf")
       val qVec = emb.filter(col("vec_id") === 0L)
         .select(col("embedding").cast("array<double>"))
         .collect()(0).getSeq[Double](0)
-      Similarity.ivfSearchIndexedFrom(s.read.parquet(s"$out/ivf"),
+      Similarity.ivfSearchIndexed(s.read.parquet(s"$out/ivf"),
         "vec_id", "embedding", cents,
         qVec, k = 5, nProbe = 2, excludeId = Some(0L))
     }),
@@ -119,21 +111,17 @@ object Vector {
     // layout's cells are irrelevant after re-assignment.
     "q139_ivf_migrated" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val oldCentroids = emb.filter(col("vec_id") >= 8 && col("vec_id") < 12)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+      val cents = fixtureCentroids(emb)
       val out = QueryTmp.dir("q139", s, d)
       Similarity.ivfIndexWrite(emb, "vec_id", "embedding",
-        oldCentroids, "cid", "cvec", s"$out/old")
+        fixtureCentroids(emb, from = 8L, until = 12L), s"$out/old")
       Similarity.rebuildUnderCodebook(s, s"$out/old", s"$out/new",
-        "vec_id", "embedding", centroids, "cid", "cvec")
+        "vec_id", "embedding", cents)
       val qVec = emb.filter(col("vec_id") === 0L)
         .select(col("embedding").cast("array<double>"))
         .collect()(0).getSeq[Double](0)
-      Similarity.ivfSearchIndexedFrom(s.read.parquet(s"$out/new"),
-        "vec_id", "embedding",
-        Similarity.collectCodebook(centroids, "cid", "cvec"),
+      Similarity.ivfSearchIndexed(s.read.parquet(s"$out/new"),
+        "vec_id", "embedding", cents,
         qVec, k = 5, nProbe = 2, excludeId = Some(0L))
     }),
 
@@ -143,13 +131,11 @@ object Vector {
     // q114's single probe.
     "q115_ivf_batch_search" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val out = QueryTmp.dir("q115", s, d)
-      // one codebook collect threads through build AND probe (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
-      Similarity.ivfIndexWriteFrom(emb, "embedding", cents, s"$out/ivf")
-      Similarity.ivfSearchBatchFrom(
+      val cents = fixtureCentroids(emb)
+      Similarity.ivfIndexWrite(emb, "vec_id", "embedding", cents,
+        s"$out/ivf")
+      Similarity.ivfSearchBatch(
         emb.filter(col("vec_id") < 2), "vec_id", "embedding",
         s.read.parquet(s"$out/ivf"), "vec_id", "embedding",
         cents, k = 5, nProbe = 2)
@@ -167,13 +153,11 @@ object Vector {
     // is PROBE_*_r17's measurement, like q122 vs ASSIGN_200k_r11).
     "q142_ivf_batch_hier" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val out = QueryTmp.dir("q142", s, d)
-      // one codebook collect threads through build AND probe (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
-      Similarity.ivfIndexWriteFrom(emb, "embedding", cents, s"$out/ivf")
-      Similarity.ivfSearchBatchHierFrom(
+      val cents = fixtureCentroids(emb)
+      Similarity.ivfIndexWrite(emb, "vec_id", "embedding", cents,
+        s"$out/ivf")
+      Similarity.ivfSearchBatchHier(
         emb.filter(col("vec_id") < 2), "vec_id", "embedding",
         s.read.parquet(s"$out/ivf"), "vec_id", "embedding",
         cents, k = 5, nProbe = 2,
@@ -189,20 +173,17 @@ object Vector {
     // like a single-shot build over the full corpus.
     "q121_ivf_append" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val isNew = col("vec_id") % 10 === 9
       val out = QueryTmp.dir("q121", s, d)
-      // one codebook collect threads through build, append AND probe
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
-      Similarity.ivfIndexWriteFrom(emb.filter(!isNew), "embedding",
+      val cents = fixtureCentroids(emb)
+      Similarity.ivfIndexWrite(emb.filter(!isNew), "vec_id", "embedding",
         cents, s"$out/ivf")
-      Similarity.ivfIndexAppendFrom(emb.filter(isNew), "vec_id",
+      Similarity.ivfIndexAppend(emb.filter(isNew), "vec_id",
         "embedding", s"$out/ivf", cents)
       val qVec = emb.filter(col("vec_id") === 0L)
         .select(col("embedding").cast("array<double>"))
         .collect()(0).getSeq[Double](0)
-      Similarity.ivfSearchIndexedFrom(s.read.parquet(s"$out/ivf"),
+      Similarity.ivfSearchIndexed(s.read.parquet(s"$out/ivf"),
         "vec_id", "embedding", cents,
         qVec, k = 5, nProbe = 2, excludeId = Some(0L))
     }),
@@ -217,15 +198,12 @@ object Vector {
     // shuffled; batch broadcast.
     "q120_semantic_dedup" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val isBatch = col("vec_id") % 10 === 9
       val out = QueryTmp.dir("q120", s, d)
-      // one codebook collect threads through build AND probe (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
-      Similarity.ivfIndexWriteFrom(emb.filter(!isBatch), "embedding",
-        cents, s"$out/ivf")
-      Similarity.semanticDedupFlagsFrom(
+      val cents = fixtureCentroids(emb)
+      Similarity.ivfIndexWrite(emb.filter(!isBatch), "vec_id",
+        "embedding", cents, s"$out/ivf")
+      Similarity.semanticDedupFlags(
         emb.filter(isBatch), "vec_id", "embedding",
         s.read.parquet(s"$out/ivf"), "vec_id", "embedding",
         cents, tau = 0.4, nProbe = 2)
@@ -272,14 +250,11 @@ object Vector {
     "q126_ivfpq_search" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cb = fixturePqCodebook(emb)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val out = QueryTmp.dir("q126", s, d)
-      // one codebook collect threads through build AND probe (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
-      graft.ops.Pq.ivfPqIndexWriteFrom(emb, "vec_id", "embedding",
+      val cents = fixtureCentroids(emb)
+      graft.ops.Pq.ivfPqIndexWrite(emb, "vec_id", "embedding",
         cents, cb, s"$out/ivfpq")
-      graft.ops.Pq.ivfPqSearchBatchFrom(
+      graft.ops.Pq.ivfPqSearchBatch(
         emb.filter(col("vec_id") < 2), "vec_id", "embedding",
         s.read.parquet(s"$out/ivfpq"), "vec_id",
         cents, cb, k = 5, nProbe = 2)
@@ -296,15 +271,11 @@ object Vector {
     "q127_ivfpq_refined" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cb = fixturePqCodebook(emb)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val out = QueryTmp.dir("q127", s, d)
-      // one codebook collect threads through pair build AND the
-      // refined probe (whose inner ADC probe also shares it) (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
-      graft.ops.Pq.ivfPqIndexWritePairFrom(emb, "vec_id", "embedding",
+      val cents = fixtureCentroids(emb)
+      graft.ops.Pq.ivfPqIndexWritePair(emb, "vec_id", "embedding",
         cents, cb, s"$out/ivfpq", s"$out/vecs")
-      graft.ops.Pq.ivfPqSearchRefinedFrom(
+      graft.ops.Pq.ivfPqSearchRefined(
         emb.filter(col("vec_id") < 2), "vec_id", "embedding",
         s.read.parquet(s"$out/ivfpq"), s.read.parquet(s"$out/vecs"),
         "vec_id", "embedding",
@@ -323,15 +294,12 @@ object Vector {
     "q133_semantic_dedup_pq" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cb = fixturePqCodebook(emb)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val isBatch = col("vec_id") % 10 === 9
       val out = QueryTmp.dir("q133", s, d)
-      // one codebook collect threads through build AND probe (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
-      graft.ops.Pq.ivfPqIndexWriteFrom(emb.filter(!isBatch), "vec_id",
+      val cents = fixtureCentroids(emb)
+      graft.ops.Pq.ivfPqIndexWrite(emb.filter(!isBatch), "vec_id",
         "embedding", cents, cb, s"$out/ivfpq")
-      graft.ops.Pq.semanticDedupFlagsPqFrom(
+      graft.ops.Pq.semanticDedupFlagsPq(
         emb.filter(isBatch), "vec_id", "embedding",
         s.read.parquet(s"$out/ivfpq"), "vec_id",
         cents, cb, tauDist = 1.2, nProbe = 2)
@@ -351,17 +319,15 @@ object Vector {
     // pure function (id spaces disjoint, so excludeSelf is moot).
     "q135_semantic_ingest" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val isBatch = col("vec_id") % 10 === 9
       val root = QueryTmp.dir("q135", s, d)
-      // one codebook collect for BOTH epochs (r19): the multi-batch
-      // driver threads the collected centroids through each batch body
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
+      // one codebook collect job for BOTH epochs: each batch's sink
+      // collect reads the driver-local frame
+      val cents = fixtureCentroids(emb).frame(s)
       def ingest(df: DataFrame, b: Long): Unit =
-        graft.streaming.IdempotentSink.semanticIngestByBatchFrom(
+        graft.streaming.IdempotentSink.semanticIngestByBatch(
           s"$root/idx", s"$root/flags", "vec_id", "embedding",
-          cents, tau = 0.4, nProbe = 2)(df, b)
+          cents, "cid", "cvec", tau = 0.4, nProbe = 2)(df, b)
       ingest(emb.filter(!isBatch), 0L)
       ingest(emb.filter(isBatch), 1L)
       s.read.parquet(s"$root/flags")
@@ -386,18 +352,15 @@ object Vector {
       // 0 — measured, first cut) — the sparser regime keeps most batch
       // codes unoccupied so the distances and the flag actually split
       val cb = fixturePqCodebookK(emb, 16)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val isCorpus = col("vec_id") % 10 === 0
       val isBatch = col("vec_id") % 10 === 9
       val tau = graft.ops.Pq.calibrateTauDist(emb.filter(isCorpus),
         "vec_id", "embedding", cb, cosThreshold = 0.8, mode = "sdc")
       val out = QueryTmp.dir("q140", s, d)
-      // one codebook collect threads through build AND probe (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
-      graft.ops.Pq.ivfPqIndexWriteFrom(emb.filter(isCorpus), "vec_id",
+      val cents = fixtureCentroids(emb)
+      graft.ops.Pq.ivfPqIndexWrite(emb.filter(isCorpus), "vec_id",
         "embedding", cents, cb, s"$out/ivfpq")
-      graft.ops.Pq.semanticDedupFlagsPqSdcFrom(
+      graft.ops.Pq.semanticDedupFlagsPqSdc(
         emb.filter(isBatch), "vec_id", "embedding",
         s.read.parquet(s"$out/ivfpq"), "vec_id",
         cents, cb, tauDist = tau, nProbe = 2)
@@ -415,8 +378,6 @@ object Vector {
     "q145_semantic_dedup_pq_hybrid" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cb = fixturePqCodebookK(emb, 16)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val isCorpus = col("vec_id") % 10 === 0
       val isBatch = col("vec_id") % 10 === 9
       // both τs from ONE sample collect + ONE boundary-score pass —
@@ -425,11 +386,10 @@ object Vector {
         emb.filter(isCorpus), "vec_id", "embedding", cb,
         cosThreshold = 0.8)
       val out = QueryTmp.dir("q145", s, d)
-      // one codebook collect threads through build AND probe (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
-      graft.ops.Pq.ivfPqIndexWriteFrom(emb.filter(isCorpus), "vec_id",
+      val cents = fixtureCentroids(emb)
+      graft.ops.Pq.ivfPqIndexWrite(emb.filter(isCorpus), "vec_id",
         "embedding", cents, cb, s"$out/ivfpq")
-      graft.ops.Pq.semanticDedupFlagsPqHybridFrom(
+      graft.ops.Pq.semanticDedupFlagsPqHybrid(
         emb.filter(isBatch), "vec_id", "embedding",
         s.read.parquet(s"$out/ivfpq"), "vec_id",
         cents, cb, tauSdc = tauS, tauAdc = tauA,
@@ -444,17 +404,14 @@ object Vector {
     "q144_semantic_dedup_pq_calibrated" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cb = fixturePqCodebook(emb)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val isBatch = col("vec_id") % 10 === 9
       val tau = graft.ops.Pq.calibrateTauDist(emb.filter(!isBatch),
         "vec_id", "embedding", cb, cosThreshold = 0.9, mode = "adc")
       val out = QueryTmp.dir("q144", s, d)
-      // one codebook collect threads through build AND probe (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
-      graft.ops.Pq.ivfPqIndexWriteFrom(emb.filter(!isBatch), "vec_id",
+      val cents = fixtureCentroids(emb)
+      graft.ops.Pq.ivfPqIndexWrite(emb.filter(!isBatch), "vec_id",
         "embedding", cents, cb, s"$out/ivfpq")
-      graft.ops.Pq.semanticDedupFlagsPqFrom(
+      graft.ops.Pq.semanticDedupFlagsPq(
         emb.filter(isBatch), "vec_id", "embedding",
         s.read.parquet(s"$out/ivfpq"), "vec_id",
         cents, cb, tauDist = tau, nProbe = 2)
@@ -472,18 +429,16 @@ object Vector {
     "q138_semantic_ingest_pq" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cb = fixturePqCodebook(emb)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val isBatch = col("vec_id") % 10 === 9
       val tau = graft.ops.Pq.calibrateTauDist(emb.filter(!isBatch),
         "vec_id", "embedding", cb, cosThreshold = 0.9, mode = "adc")
       val root = QueryTmp.dir("q138", s, d)
-      // one codebook collect for BOTH epochs (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
+      // one codebook collect job for BOTH epochs (see q135)
+      val cents = fixtureCentroids(emb).frame(s)
       def ingest(df: DataFrame, b: Long): Unit =
-        graft.streaming.IdempotentSink.semanticIngestPqByBatchFrom(
+        graft.streaming.IdempotentSink.semanticIngestPqByBatch(
           s"$root/idx", s"$root/flags", "vec_id", "embedding",
-          cents, cb, tauDist = tau, nProbe = 2)(df, b)
+          cents, "cid", "cvec", cb, tauDist = tau, nProbe = 2)(df, b)
       ingest(emb.filter(!isBatch), 0L)
       ingest(emb.filter(isBatch), 1L)
       s.read.parquet(s"$root/flags")
@@ -506,19 +461,17 @@ object Vector {
     "q141_semantic_ingest_pq_sdc" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cb = fixturePqCodebookK(emb, 16)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val isCorpus = col("vec_id") % 10 === 0
       val isBatch = col("vec_id") % 10 === 9
       val tau = graft.ops.Pq.calibrateTauDist(emb.filter(isCorpus),
         "vec_id", "embedding", cb, cosThreshold = 0.8, mode = "sdc")
       val root = QueryTmp.dir("q141", s, d)
-      // one codebook collect for BOTH epochs (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
+      // one codebook collect job for BOTH epochs (see q135)
+      val cents = fixtureCentroids(emb).frame(s)
       def ingest(df: DataFrame, b: Long): Unit =
-        graft.streaming.IdempotentSink.semanticIngestPqByBatchFrom(
+        graft.streaming.IdempotentSink.semanticIngestPqByBatch(
           s"$root/idx", s"$root/flags", "vec_id", "embedding",
-          cents, cb, tauDist = tau, nProbe = 2,
+          cents, "cid", "cvec", cb, tauDist = tau, nProbe = 2,
           probeMode = "sdc")(df, b)
       ingest(emb.filter(isCorpus), 0L)
       ingest(emb.filter(isBatch), 1L)
@@ -541,8 +494,6 @@ object Vector {
     "q146_semantic_ingest_pq_hybrid" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cb = fixturePqCodebookK(emb, 16)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val isCorpus = col("vec_id") % 10 === 0
       val isBatch = col("vec_id") % 10 === 9
       // both τs from ONE sample collect + ONE boundary-score pass —
@@ -551,12 +502,12 @@ object Vector {
         emb.filter(isCorpus), "vec_id", "embedding", cb,
         cosThreshold = 0.8)
       val root = QueryTmp.dir("q146", s, d)
-      // one codebook collect for BOTH epochs (r19)
-      val cents = Similarity.collectCodebook(centroids, "cid", "cvec")
+      // one codebook collect job for BOTH epochs (see q135)
+      val cents = fixtureCentroids(emb).frame(s)
       def ingest(df: DataFrame, b: Long): Unit =
-        graft.streaming.IdempotentSink.semanticIngestPqByBatchFrom(
+        graft.streaming.IdempotentSink.semanticIngestPqByBatch(
           s"$root/idx", s"$root/flags", "vec_id", "embedding",
-          cents, cb, tauDist = tauS, nProbe = 2,
+          cents, "cid", "cvec", cb, tauDist = tauS, nProbe = 2,
           probeMode = "hybrid", tauAdc = tauA, band = 0.2,
           refineK = 4)(df, b)
       ingest(emb.filter(isCorpus), 0L)
@@ -579,6 +530,15 @@ object Vector {
         .orderBy("cell", "dim")
     })
   )
+
+  /** The IVF fixture codebook: the vectors with `from ≤ vec_id < until`
+    * as centroids, cid = vec_id (q59's 8 cells by default).
+    */
+  private def fixtureCentroids(emb: DataFrame, from: Long = 0L,
+      until: Long = 8L): Similarity.Centroids =
+    Similarity.Centroids(
+      emb.filter(col("vec_id") >= from && col("vec_id") < until),
+      "vec_id", "embedding")
 
   /** m=2 × k PQ codebook whose sub-centroid c in subspace j is the
     * j-th HALF of fixture vector c (vec_id < k) — data-derived, like

@@ -415,31 +415,22 @@ object IdempotentSink {
     * (the fold here is ONE [[compactBatches]] call, partitionCol
     * "cell"); the flags tree is the caller's to fold
     * ([[compactBatchesFlat]]) if its consumers want it.
+    *
+    * The centroid frame is collected once per micro-batch (one Spark
+    * job per batch on a plan-backed frame). A caller that feeds many
+    * batches by hand resolves the codebook once with
+    * [[graft.ops.Similarity.Centroids]] and passes its
+    * [[graft.ops.Similarity.Centroids#frame]], whose collect runs no
+    * job.
     */
   def semanticIngestByBatch(indexRoot: String, flagsOut: String,
       idCol: String, vecCol: String, centroids: DataFrame,
       centroidIdCol: String, centroidVecCol: String, tau: Double,
       nProbe: Int = 2, excludeSelf: Boolean = false, foldEvery: Int = 0,
-      foldTail: Boolean = false)(df: DataFrame, batchId: Long): Unit =
-    semanticIngestByBatchFrom(indexRoot, flagsOut, idCol, vecCol,
-      graft.ops.Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), tau, nProbe, excludeSelf, foldEvery, foldTail)(
-      df, batchId)
-
-  /** [[semanticIngestByBatch]] over a PRE-COLLECTED codebook — a
-    * multi-batch caller (the two-epoch gate queries; any driver loop
-    * feeding batches by hand) collects the centroid frame ONCE instead
-    * of paying one collect job per batch (r19, the same threading as
-    * the probe-layer `*From` variants from r18). The stream invariant
-    * is unchanged: the stamp is computed from `cents` and checked
-    * against the tree's sidecar before any mutation.
-    */
-  private[graft] def semanticIngestByBatchFrom(indexRoot: String,
-      flagsOut: String, idCol: String, vecCol: String,
-      cents: Seq[(Long, Seq[Double])], tau: Double,
-      nProbe: Int = 2, excludeSelf: Boolean = false, foldEvery: Int = 0,
       foldTail: Boolean = false)(df: DataFrame, batchId: Long): Unit = {
     import graft.ops.Similarity
+    val cents = Similarity.Centroids(centroids, centroidIdCol,
+      centroidVecCol)
     val spark = df.sparkSession
     val vecDir = s"$indexRoot/vec"
     // drift check BEFORE the fold: the fold rewrites/deletes _batch
@@ -447,7 +438,7 @@ object IdempotentSink {
     // is refused before ANY tree mutation — a fold-due batch with a
     // drifted codebook must not compact the tree it is about to refuse
     // to write into (r16 ADVICE)
-    val stamp = Similarity.codebookStamp(cents)
+    val stamp = cents.stamp
     val sidecar = Similarity.readStampSidecar(spark, vecDir)
     sidecar.foreach { s =>
       if (s != stamp)
@@ -473,9 +464,7 @@ object IdempotentSink {
     val flags = (if (graft.io.FsUtil.hasBatchDataBelow(fs, p, batchId)) {
       val prior = spark.read.parquet(vecDir)
         .filter(col("_batch").cast("long") < batchId).drop("_batch")
-      // cents — collected once above for the stamp — threads through
-      // the probe instead of a second centroid collect (r18)
-      Similarity.semanticDedupFlagsFrom(df, idCol, vecCol, prior, idCol,
+      Similarity.semanticDedupFlags(df, idCol, vecCol, prior, idCol,
         vecCol, cents, tau, nProbe, excludeSelf)
     } else
       // first batch: no prior tree — everything keeps, no search job
@@ -496,8 +485,8 @@ object IdempotentSink {
     // same rows, and the probe's per-cell listing is exactly what the
     // fold exists to protect. The shuffle is batch-sized (the bounded
     // quantity).
-    val keptAssigned = Similarity.ivfAssignLocal(
-      kept.select(col(idCol), col(vecCol)), vecCol, cents)
+    val keptAssigned = Similarity.ivfAssign(
+      kept.select(col(idCol), col(vecCol)), idCol, vecCol, cents)
       .select(col(idCol), col(vecCol), col("cell"))
       .repartition(col("cell"))
     graft.io.ParallelActions.run(Seq(
@@ -589,28 +578,15 @@ object IdempotentSink {
     * stream's source table (candidate-sized join) — the ingest
     * deliberately does not persist a vector twin, that regime is the
     * plain [[semanticIngestByBatch]].
+    *
+    * Like the plain ingest, each micro-batch collects the centroid
+    * frame once; a multi-batch caller passes a resolved codebook's
+    * [[graft.ops.Similarity.Centroids#frame]] so that collect runs no
+    * Spark job.
     */
   def semanticIngestPqByBatch(indexRoot: String, flagsOut: String,
       idCol: String, vecCol: String, centroids: DataFrame,
       centroidIdCol: String, centroidVecCol: String,
-      cb: graft.ops.Pq.Codebook, tauDist: Double, nProbe: Int = 2,
-      excludeSelf: Boolean = false, foldEvery: Int = 0,
-      foldTail: Boolean = false, probeMode: String = "adc",
-      tauAdc: Double = Double.NaN, band: Double = Double.NaN,
-      refineK: Int = 4)(
-      df: DataFrame, batchId: Long): Unit =
-    semanticIngestPqByBatchFrom(indexRoot, flagsOut, idCol, vecCol,
-      graft.ops.Similarity.collectCodebook(centroids, centroidIdCol,
-        centroidVecCol), cb, tauDist, nProbe, excludeSelf, foldEvery,
-      foldTail, probeMode, tauAdc, band, refineK)(df, batchId)
-
-  /** [[semanticIngestPqByBatch]] over a PRE-COLLECTED codebook — one
-    * centroid collect per multi-batch driver instead of one per batch
-    * (r19); see [[semanticIngestByBatchFrom]].
-    */
-  private[graft] def semanticIngestPqByBatchFrom(indexRoot: String,
-      flagsOut: String, idCol: String, vecCol: String,
-      cents: Seq[(Long, Seq[Double])],
       cb: graft.ops.Pq.Codebook, tauDist: Double, nProbe: Int = 2,
       excludeSelf: Boolean = false, foldEvery: Int = 0,
       foldTail: Boolean = false, probeMode: String = "adc",
@@ -633,11 +609,13 @@ object IdempotentSink {
           s"parameters (probeMode=$probeMode) — a silently-ignored " +
           "threshold is a mis-calibration waiting to happen")
     import graft.ops.{Pq, Similarity}
+    val cents = Similarity.Centroids(centroids, centroidIdCol,
+      centroidVecCol)
     val spark = df.sparkSession
     val codeDir = s"$indexRoot/code"
     // drift (either codebook) refused BEFORE any tree mutation,
     // including a due fold — same ordering contract as the plain ingest
-    val stamp = Pq.combinedStamp(Similarity.codebookStamp(cents), cb)
+    val stamp = Pq.combinedStamp(cents, cb)
     val sidecar = Similarity.readStampSidecar(spark, codeDir)
     sidecar.foreach { s =>
       if (s != stamp)
@@ -669,21 +647,18 @@ object IdempotentSink {
     val flags = (if (graft.io.FsUtil.hasBatchDataBelow(fs, p, batchId)) {
       val prior = spark.read.parquet(codeDir)
         .filter(col("_batch").cast("long") < batchId).drop("_batch")
-      // the *From variants thread `cents` — collected once above for
-      // the stamp check — through the probe instead of re-collecting
-      // the centroid frame per layer/chunk (r18)
       probeMode match {
         case "sdc" =>
-          Pq.semanticDedupFlagsPqSdcFrom(df, idCol, vecCol, prior,
+          Pq.semanticDedupFlagsPqSdc(df, idCol, vecCol, prior,
             idCol, cents, cb, tauDist, nProbe, excludeSelf)
         case "hybrid" =>
-          Pq.semanticDedupFlagsPqHybridFrom(df, idCol, vecCol, prior,
+          Pq.semanticDedupFlagsPqHybrid(df, idCol, vecCol, prior,
             idCol, cents, cb,
             tauSdc = tauDist, tauAdc = tauAdc, band = band,
             refineK = refineK, nProbe = nProbe,
             excludeSelf = excludeSelf)
         case _ =>
-          Pq.semanticDedupFlagsPqFrom(df, idCol, vecCol, prior, idCol,
+          Pq.semanticDedupFlagsPq(df, idCol, vecCol, prior, idCol,
             cents, cb, tauDist, nProbe, excludeSelf)
       }
     } else
@@ -700,7 +675,7 @@ object IdempotentSink {
     // one file per TOUCHED cell per batch (same listing math as the
     // plain ingest — the shuffle is batch-sized)
     val keptCodes = Pq.encode(
-      Similarity.ivfAssignLocal(kept.select(col(idCol), col(vecCol)),
+      Similarity.ivfAssign(kept.select(col(idCol), col(vecCol)), idCol,
         vecCol, cents), vecCol, cb)
       .select(col(idCol), col("pq_code"), col("cell"))
       .repartition(col("cell"))

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.{Pq, Similarity}
+import graft.ops.Similarity.Centroids
 
 /** The managed codebook-migration ops — the path out of the drift
   * refusal every probe/append/ingest gives a re-clustered codebook:
@@ -34,6 +35,8 @@ class MigrationSpec extends AnyFunSuite {
     Seq((0L, Seq(0.0, 0.0, 1.0, 0.0)), (1L, Seq(0.0, 0.0, 0.0, 1.0)),
       (2L, Seq(0.5, 0.5, 0.0, 0.0))).toDF("cid", "cvec")
   }
+  private lazy val codebookA = Centroids(centsA, "cid", "cvec")
+  private lazy val codebookB = Centroids(centsB, "cid", "cvec")
 
   private def rowsOf(dir: String): Set[(Long, Long)] =
     spark.read.parquet(dir)
@@ -46,14 +49,14 @@ class MigrationSpec extends AnyFunSuite {
     val emb = vecsDf(60, 17)
     val oldRoot = TestDirs.tmp("mig_old").toFile.getAbsolutePath
     Similarity.ivfIndexWrite(emb, "vec_id", "vec",
-      centsA, "cid", "cvec", oldRoot)
+      codebookA, oldRoot)
     val newRoot = TestDirs.tmp("mig_new").toFile.getAbsolutePath + "/idx"
     val stamp = Similarity.rebuildUnderCodebook(spark, oldRoot, newRoot,
-      "vec_id", "vec", centsB, "cid", "cvec")
+      "vec_id", "vec", codebookB)
     // equivalence to a fresh build under B from the original rows
     val freshRoot = TestDirs.tmp("mig_fresh").toFile.getAbsolutePath
     Similarity.ivfIndexWrite(emb, "vec_id", "vec",
-      centsB, "cid", "cvec", freshRoot)
+      codebookB, freshRoot)
     assert(rowsOf(newRoot) === rowsOf(freshRoot),
       "migrated assignment diverged from a fresh build")
     assert(Similarity.readStampSidecar(spark, newRoot) === Some(stamp))
@@ -61,7 +64,7 @@ class MigrationSpec extends AnyFunSuite {
     def probe(dir: String) = Similarity.ivfSearchBatch(
       emb.filter(col("vec_id") < 3), "vec_id", "vec",
       spark.read.parquet(dir), "vec_id", "vec",
-      centsB, "cid", "cvec", k = 3, nProbe = 2)
+      codebookB, k = 3, nProbe = 2)
       .select(col("qid"), col("vec_id"), col("cos_sim"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
@@ -70,7 +73,7 @@ class MigrationSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException] {
       Similarity.ivfSearchBatch(emb.filter(col("vec_id") < 1),
         "vec_id", "vec", spark.read.parquet(newRoot), "vec_id", "vec",
-        centsA, "cid", "cvec", k = 1, nProbe = 1).collect()
+        codebookA, k = 1, nProbe = 1).collect()
     }
     assert(e.getMessage.contains("codebook"))
   }
@@ -90,22 +93,22 @@ class MigrationSpec extends AnyFunSuite {
     ingest(emb.filter(col("vec_id") % 2 === 1), 1L)
     val newRoot = TestDirs.tmp("mig_stream_new").toString + "/idx"
     val stamp = Similarity.rebuildUnderCodebook(spark, s"$root/idx/vec",
-      newRoot, "vec_id", "vec", centsB, "cid", "cvec")
+      newRoot, "vec_id", "vec", codebookB)
     // batch layout, all rows, fresh-build-equivalent assignment
     val freshRoot = TestDirs.tmp("mig_stream_fresh").toString
     Similarity.ivfIndexWrite(emb, "vec_id", "vec",
-      centsB, "cid", "cvec", freshRoot)
+      codebookB, freshRoot)
     assert(rowsOf(newRoot) === rowsOf(freshRoot))
     assert(!spark.read.parquet(newRoot).columns.contains("_batch"),
       "the migrated layout must be a plain batch tree")
     // idempotent resume: the second call no-ops (sidecar matches)
     assert(Similarity.rebuildUnderCodebook(spark, s"$root/idx/vec",
-      newRoot, "vec_id", "vec", centsB, "cid", "cvec") === stamp)
+      newRoot, "vec_id", "vec", codebookB) === stamp)
     assert(rowsOf(newRoot) === rowsOf(freshRoot))
     // a COMPLETE layout under some other codebook refuses
     val e = intercept[IllegalStateException] {
       Similarity.rebuildUnderCodebook(spark, s"$root/idx/vec", newRoot,
-        "vec_id", "vec", centsA, "cid", "cvec")
+        "vec_id", "vec", codebookA)
     }
     assert(e.getMessage.contains("refusing to overwrite"))
   }
@@ -116,7 +119,7 @@ class MigrationSpec extends AnyFunSuite {
     val emb = vecsDf(20, 31)
     val oldRoot = TestDirs.tmp("mig_pend").toFile.getAbsolutePath
     Similarity.ivfIndexWrite(emb, "vec_id", "vec",
-      centsA, "cid", "cvec", oldRoot)
+      codebookA, oldRoot)
     // plant a pending swap: a temp tree WITH a committed manifest
     val fs = new org.apache.hadoop.fs.Path(oldRoot)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -128,7 +131,7 @@ class MigrationSpec extends AnyFunSuite {
     val newRoot = TestDirs.tmp("mig_pend_new").toString + "/idx"
     val e = intercept[IllegalStateException] {
       Similarity.rebuildUnderCodebook(spark, oldRoot, newRoot,
-        "vec_id", "vec", centsB, "cid", "cvec")
+        "vec_id", "vec", codebookB)
     }
     assert(e.getMessage.contains("pending compaction"))
     fs.delete(tmp, true)
@@ -136,7 +139,7 @@ class MigrationSpec extends AnyFunSuite {
     val bare = TestDirs.tmp("mig_bare").toFile.getAbsolutePath
     val e2 = intercept[IllegalArgumentException] {
       Similarity.rebuildUnderCodebook(spark, bare, newRoot,
-        "vec_id", "vec", centsB, "cid", "cvec")
+        "vec_id", "vec", codebookB)
     }
     assert(e2.getMessage.contains("no data files"))
   }
@@ -293,16 +296,16 @@ class MigrationSpec extends AnyFunSuite {
     val emb = vecsDf(80, 41)
     val cbOld = Pq.train(emb, "vec_id", "vec", m = 2, k = 4, sampleN = 80)
     val oldOut = TestDirs.tmp("mig_pair_old").toString
-    Pq.ivfPqIndexWritePair(emb, "vec_id", "vec", centsA, "cid", "cvec",
+    Pq.ivfPqIndexWritePair(emb, "vec_id", "vec", codebookA,
       cbOld, s"$oldOut/codes", s"$oldOut/vecs")
     // new codebooks: re-clustered cells AND a re-trained PQ codebook
     val cbNew = Pq.Codebook(cbOld.flat.map(_ * 0.9), cbOld.m, cbOld.k)
     val newOut = TestDirs.tmp("mig_pair_new").toString
     val stamp = Pq.rebuildPairUnderCodebooks(spark, s"$oldOut/vecs",
-      "vec_id", "vec", centsB, "cid", "cvec", cbNew,
+      "vec_id", "vec", codebookB, cbNew,
       s"$newOut/codes", s"$newOut/vecs")
     val freshOut = TestDirs.tmp("mig_pair_fresh").toString
-    Pq.ivfPqIndexWritePair(emb, "vec_id", "vec", centsB, "cid", "cvec",
+    Pq.ivfPqIndexWritePair(emb, "vec_id", "vec", codebookB,
       cbNew, s"$freshOut/codes", s"$freshOut/vecs")
     def codesOf(dir: String) = spark.read.parquet(dir)
       .select(col("vec_id"), col("cell").cast("long"),
@@ -317,16 +320,16 @@ class MigrationSpec extends AnyFunSuite {
     val got = Pq.ivfPqSearchRefined(emb.filter(col("vec_id") < 2),
       "vec_id", "vec", spark.read.parquet(s"$newOut/codes"),
       spark.read.parquet(s"$newOut/vecs"), "vec_id", "vec",
-      centsB, "cid", "cvec", cbNew, k = 3, nProbe = 2)
+      codebookB, cbNew, k = 3, nProbe = 2)
     assert(got.count() === 6, "refined search over the migrated pair")
     // idempotent resume
     assert(Pq.rebuildPairUnderCodebooks(spark, s"$oldOut/vecs",
-      "vec_id", "vec", centsB, "cid", "cvec", cbNew,
+      "vec_id", "vec", codebookB, cbNew,
       s"$newOut/codes", s"$newOut/vecs") === stamp)
     // a complete foreign layout at a new root refuses
     val e = intercept[IllegalStateException] {
       Pq.rebuildPairUnderCodebooks(spark, s"$oldOut/vecs",
-        "vec_id", "vec", centsA, "cid", "cvec", cbOld,
+        "vec_id", "vec", codebookA, cbOld,
         s"$newOut/codes", s"$newOut/vecs")
     }
     assert(e.getMessage.contains("refusing to overwrite"))

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.{Similarity, SkewJoin}
+import graft.ops.Similarity.Centroids
 
 /** Physical-plan regression gates: the properties that make the headline
   * queries scale (pushdown reaching the scan, dims broadcast, zero-
@@ -62,7 +63,7 @@ class PlanRegressionSpec extends AnyFunSuite {
     val centroids = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding",
-      centroids, "cid", "cvec")
+      Centroids(centroids, "cid", "cvec"))
     assert(shufflesOf(assigned).isEmpty,
       "IVF assignment reintroduced a shuffle")
   }
@@ -73,7 +74,7 @@ class PlanRegressionSpec extends AnyFunSuite {
     val centroids = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     val assigned = Similarity.ivfAssign(emb, "vec_id", "embedding",
-      centroids, "cid", "cvec")
+      Centroids(centroids, "cid", "cvec"))
     val dir = TestDirs.tmp("ivf_layout")
       .toFile.getAbsolutePath
     // one file per cell directory ⇒ numFiles read == cells touched
@@ -106,12 +107,13 @@ class PlanRegressionSpec extends AnyFunSuite {
   test("ivfSearchIndexed on a persisted ivfIndex layout prunes to the " +
     "probed cells' files (the q114 shape)") {
     val emb = Tables.embeddings(spark, sf)
-    val centroids = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val centroids = Centroids(emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+      "cid", "cvec")
     val dir = TestDirs.tmp("ivf_api_layout").toFile.getAbsolutePath
     // one file per cell directory ⇒ numFiles read == cells probed
     Similarity.ivfIndex(emb, "vec_id", "embedding",
-      centroids, "cid", "cvec")
+      centroids)
       .coalesce(1).write.partitionBy("cell")
       .mode("overwrite").parquet(dir)
     val nCells = new java.io.File(dir).listFiles()
@@ -121,7 +123,7 @@ class PlanRegressionSpec extends AnyFunSuite {
       .select(col("embedding").cast("array<double>"))
       .collect()(0).getSeq[Double](0)
     val probed = Similarity.ivfSearchIndexed(spark.read.parquet(dir),
-      "vec_id", "embedding", centroids, "cid", "cvec",
+      "vec_id", "embedding", centroids,
       qVec, k = 5, nProbe = 2, excludeId = Some(0L))
     probed.collect() // populate scan metrics
     val scan = probed.queryExecution.executedPlan.collectLeaves()
@@ -140,21 +142,22 @@ class PlanRegressionSpec extends AnyFunSuite {
     // count even though pruning still limits the DIRECTORIES read.
     // compactCells must bring numFiles back to one per probed cell.
     val emb = Tables.embeddings(spark, sf)
-    val centroids = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val centroids = Centroids(emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+      "cid", "cvec")
     val dir = TestDirs.tmp("ivf_compact_layout").toFile.getAbsolutePath
     Similarity.ivfIndexWrite(emb.filter(col("vec_id") % 5 === 0),
-      "vec_id", "embedding", centroids, "cid", "cvec", dir)
+      "vec_id", "embedding", centroids, dir)
     for (b <- 1 to 4)
       Similarity.ivfIndexAppend(emb.filter(col("vec_id") % 5 === b),
-        "vec_id", "embedding", dir, centroids, "cid", "cvec")
+        "vec_id", "embedding", dir, centroids)
     val compacted = Similarity.compactCells(spark, dir, maxFilesPerCell = 1)
     assert(compacted.nonEmpty, "append loop produced no fragmentation")
     val qVec = emb.filter(col("vec_id") === 0L)
       .select(col("embedding").cast("array<double>"))
       .collect()(0).getSeq[Double](0)
     val probed = Similarity.ivfSearchIndexed(spark.read.parquet(dir),
-      "vec_id", "embedding", centroids, "cid", "cvec",
+      "vec_id", "embedding", centroids,
       qVec, k = 5, nProbe = 2, excludeId = Some(0L))
     probed.collect()
     val scan = probed.queryExecution.executedPlan.collectLeaves()
@@ -176,9 +179,10 @@ class PlanRegressionSpec extends AnyFunSuite {
       val emb = Tables.embeddings(spark, sf)
       val centroids = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+      val codebook = Centroids(centroids, "cid", "cvec")
       val dir = TestDirs.tmp("ivf_batch_layout").toFile.getAbsolutePath
       Similarity.ivfIndex(emb, "vec_id", "embedding",
-        centroids, "cid", "cvec")
+        codebook)
         .coalesce(1).write.partitionBy("cell")
         .mode("overwrite").parquet(dir)
       val nCells = new java.io.File(dir).listFiles()
@@ -204,7 +208,7 @@ class PlanRegressionSpec extends AnyFunSuite {
       val res = Similarity.ivfSearchBatch(
         emb.filter(col("vec_id") < 2), "vec_id", "embedding",
         spark.read.parquet(dir), "vec_id", "embedding",
-        centroids, "cid", "cvec", k = 5, nProbe = 2)
+        codebook, k = 5, nProbe = 2)
       res.collect() // populate scan metrics
       val scan = res.queryExecution.executedPlan.collect {
         case s: org.apache.spark.sql.execution.FileSourceScanExec
@@ -226,13 +230,14 @@ class PlanRegressionSpec extends AnyFunSuite {
     // per query before the exchange — assert the plan shape so a
     // refactor can't silently reintroduce the window
     val emb = Tables.embeddings(spark, sf)
-    val centroids = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val centroids = Centroids(emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+      "cid", "cvec")
     val res = Similarity.ivfSearchBatch(
       emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       Similarity.ivfIndex(emb, "vec_id", "embedding",
-        centroids, "cid", "cvec"),
-      "vec_id", "embedding", centroids, "cid", "cvec",
+        centroids),
+      "vec_id", "embedding", centroids,
       k = 1, nProbe = 2)
     res.collect()
     val plan = res.queryExecution.executedPlan.toString
@@ -247,8 +252,8 @@ class PlanRegressionSpec extends AnyFunSuite {
     val res5 = Similarity.ivfSearchBatch(
       emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       Similarity.ivfIndex(emb, "vec_id", "embedding",
-        centroids, "cid", "cvec"),
-      "vec_id", "embedding", centroids, "cid", "cvec",
+        centroids),
+      "vec_id", "embedding", centroids,
       k = 5, nProbe = 2)
     res5.collect()
     val plan5 = res5.queryExecution.executedPlan.toString
@@ -262,8 +267,8 @@ class PlanRegressionSpec extends AnyFunSuite {
     val resBig = Similarity.ivfSearchBatch(
       emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       Similarity.ivfIndex(emb, "vec_id", "embedding",
-        centroids, "cid", "cvec"),
-      "vec_id", "embedding", centroids, "cid", "cvec",
+        centroids),
+      "vec_id", "embedding", centroids,
       k = graft.functions.TopKByScore.MaxK + 1, nProbe = 2)
     assert(resBig.queryExecution.executedPlan.toString.contains("Window"),
       "k past the buffer guard should rank through the window top-k")
@@ -291,9 +296,10 @@ class PlanRegressionSpec extends AnyFunSuite {
         .select(col("media_id"), col("embedding"))
       val centroids = emb.filter(col("media_id") < 12)
         .select(col("media_id").as("cid"), col("embedding").as("cvec"))
+      val codebook = Centroids(centroids, "cid", "cvec")
       val dir = TestDirs.tmp("ivf_media_layout").toFile.getAbsolutePath
       Similarity.ivfIndex(emb, "media_id", "embedding",
-        centroids, "cid", "cvec")
+        codebook)
         .coalesce(1).write.partitionBy("cell")
         .mode("overwrite").parquet(dir)
       val nCells = new java.io.File(dir).listFiles()
@@ -315,7 +321,7 @@ class PlanRegressionSpec extends AnyFunSuite {
       val res = Similarity.ivfSearchBatch(
         emb.filter(col("media_id") < 6), "media_id", "embedding",
         spark.read.parquet(dir), "media_id", "embedding",
-        centroids, "cid", "cvec", k = 5, nProbe = 2)
+        codebook, k = 5, nProbe = 2)
       res.collect()
       val scan = res.queryExecution.executedPlan.collect {
         case sc: org.apache.spark.sql.execution.FileSourceScanExec
@@ -719,17 +725,18 @@ class PlanRegressionSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val emb = Tables.embeddings(spark, sf)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+      val centroids = Centroids(emb.filter(col("vec_id") < 8)
+        .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+        "cid", "cvec")
       val cb = graft.ops.Pq.train(emb, "vec_id", "embedding",
         m = 2, k = 4, sampleN = 64)
       val dir = TestDirs.tmp("ivfpq_layout").toFile.getAbsolutePath
       graft.ops.Pq.ivfPqIndexWrite(emb, "vec_id", "embedding",
-        centroids, "cid", "cvec", cb, dir)
+        centroids, cb, dir)
       val probed = graft.ops.Pq.ivfPqSearchBatch(
         emb.filter(col("vec_id") < 2), "vec_id", "embedding",
         spark.read.parquet(dir), "vec_id",
-        centroids, "cid", "cvec", cb, k = 5, nProbe = 2)
+        centroids, cb, k = 5, nProbe = 2)
       probed.collect() // populate scan metrics
       val scans = probed.queryExecution.executedPlan.collectLeaves()
         .collect {
@@ -772,19 +779,20 @@ class PlanRegressionSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val emb = Tables.embeddings(spark, sf)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+      val centroids = Centroids(emb.filter(col("vec_id") < 8)
+        .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+        "cid", "cvec")
       val cb = graft.ops.Pq.train(emb, "vec_id", "embedding",
         m = 2, k = 4, sampleN = 64)
       val dir = TestDirs.tmp("ivfpq_ref_layout").toFile.getAbsolutePath
       val vecDir = TestDirs.tmp("ivfpq_ref_vecs").toFile.getAbsolutePath
       graft.ops.Pq.ivfPqIndexWritePair(emb, "vec_id", "embedding",
-        centroids, "cid", "cvec", cb, dir, vecDir)
+        centroids, cb, dir, vecDir)
       val refined = graft.ops.Pq.ivfPqSearchRefined(
         emb.filter(col("vec_id") < 2), "vec_id", "embedding",
         spark.read.parquet(dir), spark.read.parquet(vecDir),
         "vec_id", "embedding",
-        centroids, "cid", "cvec", cb, k = 3, nProbe = 2,
+        centroids, cb, k = 3, nProbe = 2,
         refineFactor = 4)
       refined.collect() // populate scan metrics
       val plan = refined.queryExecution.executedPlan.toString

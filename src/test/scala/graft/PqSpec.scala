@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.ops.{Pq, Similarity}
+import graft.ops.Similarity.Centroids
 
 /** Product-quantization family: kernel correctness against a
   * driver-side reference, search differentials against brute force,
@@ -207,17 +208,17 @@ class PqSpec extends AnyFunSuite {
     val vecs = randVecs(400, dim, 55)
     val df = vecs.toDF("id", "vec")
     val cb = Pq.train(df, "id", "vec", m = 4, k = 8, sampleN = 400)
-    val cents = vecs.take(6).map { case (i, v) => (i, v) }
-      .toDF("cid", "cvec")
+    val cents = Centroids(vecs.take(6).map { case (i, v) => (i, v) }
+      .toDF("cid", "cvec"), "cid", "cvec")
     val dir = TestDirs.tmp("ivfpq").toFile.getAbsolutePath
     val vecDir = TestDirs.tmp("ivfpq_vecs").toFile.getAbsolutePath
-    Pq.ivfPqIndexWritePair(df, "id", "vec", cents, "cid", "cvec", cb,
+    Pq.ivfPqIndexWritePair(df, "id", "vec", cents, cb,
       dir, vecDir)
     val index = spark.read.parquet(dir)
     assert(index.columns.toSet == Set("id", "pq_code", "cell", "_params"))
     val queries = vecs.take(2).toDF("id", "vec")
     val got = Pq.ivfPqSearchBatch(queries, "id", "vec", index, "id",
-      cents, "cid", "cvec", cb, k = 5, nProbe = 6) // all cells probed
+      cents, cb, k = 5, nProbe = 6) // all cells probed
       .select(col("qid"), col("id"), col("adc_dist")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     val codes = Pq.encode(df, "vec", cb).select(col("id"), col("pq_code"))
@@ -228,7 +229,7 @@ class PqSpec extends AnyFunSuite {
     // refine over the whole candidate set ⇒ exact cosine knn (the
     // fetch runs against the pair build's cell-partitioned vector tree)
     val refined = Pq.ivfPqSearchRefined(queries, "id", "vec", index,
-      spark.read.parquet(vecDir), "id", "vec", cents, "cid", "cvec",
+      spark.read.parquet(vecDir), "id", "vec", cents,
       cb, k = 3, nProbe = 6, refineFactor = 200)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
@@ -254,14 +255,14 @@ class PqSpec extends AnyFunSuite {
     val vecs = randVecs(400, dim, 77)
     val df = vecs.toDF("id", "vec")
     val cb = Pq.train(df, "id", "vec", m = 4, k = 8, sampleN = 400)
-    val cents = vecs.take(4).toDF("cid", "cvec")
+    val cents = Centroids(vecs.take(4).toDF("cid", "cvec"), "cid", "cvec")
     val dir = TestDirs.tmp("ivfpq_plan").toFile.getAbsolutePath
-    Pq.ivfPqIndexWrite(df, "id", "vec", cents, "cid", "cvec", cb, dir)
+    Pq.ivfPqIndexWrite(df, "id", "vec", cents, cb, dir)
     val index = spark.read.parquet(dir)
     val queries = vecs.take(3).toDF("id", "vec")
     def probe(k: Int, metric: String = "l2") =
       Pq.ivfPqSearchBatch(queries, "id", "vec", index, "id",
-        cents, "cid", "cvec", cb, k = k, nProbe = 2, metric = metric)
+        cents, cb, k = k, nProbe = 2, metric = metric)
     def planOf(df: org.apache.spark.sql.DataFrame): String = {
       df.collect(); df.queryExecution.executedPlan.toString
     }
@@ -304,9 +305,9 @@ class PqSpec extends AnyFunSuite {
     val corpus = randVecs(300, dim, 91)
     val df = corpus.toDF("id", "vec")
     val cb = Pq.train(df, "id", "vec", m = 4, k = 8, sampleN = 300)
-    val cents = corpus.take(4).toDF("cid", "cvec")
+    val cents = Centroids(corpus.take(4).toDF("cid", "cvec"), "cid", "cvec")
     val dir = TestDirs.tmp("ivfpq_dedup").toFile.getAbsolutePath
-    Pq.ivfPqIndexWrite(df, "id", "vec", cents, "cid", "cvec", cb, dir)
+    Pq.ivfPqIndexWrite(df, "id", "vec", cents, cb, dir)
     val index = spark.read.parquet(dir)
     // 900: vector 7 + tiny noise — its best ADC distance is the
     // quantization floor; 901: the same vector scaled −10× — its best
@@ -320,7 +321,7 @@ class PqSpec extends AnyFunSuite {
     val far = corpus(7)._2.map(x => -10.0 * x)
     val batch = Seq((900L, near), (901L, far)).toDF("id", "vec")
     val probed = Pq.ivfPqSearchBatch(batch, "id", "vec", index, "id",
-      cents, "cid", "cvec", cb, k = 1, nProbe = 4, excludeSelf = false)
+      cents, cb, k = 1, nProbe = 4, excludeSelf = false)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(3)))
       .toMap
     val (dNear, dFar) = (probed(900L)._2, probed(901L)._2)
@@ -328,7 +329,7 @@ class PqSpec extends AnyFunSuite {
       s"fixture broken: near $dNear not below far $dFar")
     val tau = (dNear + dFar) / 2
     val flags = Pq.semanticDedupFlagsPq(batch, "id", "vec", index, "id",
-      cents, "cid", "cvec", cb, tauDist = tau, nProbe = 4,
+      cents, cb, tauDist = tau, nProbe = 4,
       excludeSelf = false)
       .orderBy("id").collect()
     assert(flags.length == 2)
@@ -346,19 +347,19 @@ class PqSpec extends AnyFunSuite {
     val vecs = randVecs(300, 16, 101)
     val df = vecs.toDF("id", "vec")
     val cb = Pq.train(df, "id", "vec", m = 4, k = 8, sampleN = 300)
-    val cents = vecs.take(4).toDF("cid", "cvec")
+    val cents = Centroids(vecs.take(4).toDF("cid", "cvec"), "cid", "cvec")
     val full = TestDirs.tmp("ivfpq_full").toFile.getAbsolutePath
     val inc = TestDirs.tmp("ivfpq_inc").toFile.getAbsolutePath
-    Pq.ivfPqIndexWrite(df, "id", "vec", cents, "cid", "cvec", cb, full)
+    Pq.ivfPqIndexWrite(df, "id", "vec", cents, cb, full)
     Pq.ivfPqIndexWrite(vecs.filter(_._1 % 5 != 0).toDF("id", "vec"),
-      "id", "vec", cents, "cid", "cvec", cb, inc)
+      "id", "vec", cents, cb, inc)
     for (b <- Seq(0L)) // the held-out 20% appended in one micro-batch
       Pq.ivfPqIndexAppend(vecs.filter(_._1 % 5 == b).toDF("id", "vec"),
-        "id", "vec", inc, cents, "cid", "cvec", cb)
+        "id", "vec", inc, cents, cb)
     val queries = vecs.take(2).toDF("id", "vec")
     def answers(dir: String): Seq[(Long, Long, Double)] =
       Pq.ivfPqSearchBatch(queries, "id", "vec",
-        spark.read.parquet(dir), "id", cents, "cid", "cvec", cb,
+        spark.read.parquet(dir), "id", cents, cb,
         k = 5, nProbe = 4)
         .select(col("qid"), col("id"), col("adc_dist"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -368,7 +369,7 @@ class PqSpec extends AnyFunSuite {
     for (b <- 1L to 4L)
       Pq.ivfPqIndexAppend(vecs.filter(_._1 % 5 == b).toDF("id", "vec")
         .withColumn("id", col("id") + 1000L), // fresh ids, same vectors
-        "id", "vec", inc, cents, "cid", "cvec", cb)
+        "id", "vec", inc, cents, cb)
     val before = answers(inc)
     val compacted = Similarity.compactCells(spark, inc, maxFilesPerCell = 1)
     assert(compacted.nonEmpty, "append loop produced no fragmentation")
@@ -385,14 +386,14 @@ class PqSpec extends AnyFunSuite {
     val vecs = randVecs(80, 8, 113)
     val df = vecs.toDF("id", "vec")
     val cb = Pq.train(df, "id", "vec", m = 2, k = 4, sampleN = 80)
-    val cents = vecs.take(2).toDF("cid", "cvec")
+    val cents = Centroids(vecs.take(2).toDF("cid", "cvec"), "cid", "cvec")
     val dir = TestDirs.tmp("ivfpq_app_stale").toFile.getAbsolutePath
-    Pq.ivfPqIndexWrite(df, "id", "vec", cents, "cid", "cvec", cb, dir)
+    Pq.ivfPqIndexWrite(df, "id", "vec", cents, cb, dir)
     val rowsBefore = spark.read.parquet(dir).count()
     val other = Pq.Codebook(cb.flat.map(_ + 0.25), cb.m, cb.k)
     val e = intercept[IllegalStateException] {
       Pq.ivfPqIndexAppend(vecs.take(5).toDF("id", "vec"), "id", "vec",
-        dir, cents, "cid", "cvec", other)
+        dir, cents, other)
     }
     assert(e.getMessage.contains("different codebook"))
     assert(spark.read.parquet(dir).count() == rowsBefore,
@@ -404,13 +405,13 @@ class PqSpec extends AnyFunSuite {
     val vecs = randVecs(60, 8, 77)
     val df = vecs.toDF("id", "vec")
     val cb = Pq.train(df, "id", "vec", m = 2, k = 4, sampleN = 60)
-    val cents = vecs.take(2).toDF("cid", "cvec")
+    val cents = Centroids(vecs.take(2).toDF("cid", "cvec"), "cid", "cvec")
     val dir = TestDirs.tmp("ivfpq_stale").toFile.getAbsolutePath
-    Pq.ivfPqIndexWrite(df, "id", "vec", cents, "cid", "cvec", cb, dir)
+    Pq.ivfPqIndexWrite(df, "id", "vec", cents, cb, dir)
     val other = Pq.Codebook(cb.flat.map(_ + 0.5), cb.m, cb.k)
     val e = intercept[IllegalStateException] {
       Pq.ivfPqSearchBatch(vecs.take(1).toDF("id", "vec"), "id", "vec",
-        spark.read.parquet(dir), "id", cents, "cid", "cvec", other,
+        spark.read.parquet(dir), "id", cents, other,
         k = 3, nProbe = 2).collect()
     }
     assert(e.getMessage.contains("different codebook"))
@@ -422,9 +423,9 @@ class PqSpec extends AnyFunSuite {
     val vecs = randVecs(200, 16, 131)
     val df = vecs.toDF("id", "vec")
     val cb = Pq.train(df, "id", "vec", m = 4, k = 8, sampleN = 200)
-    val cents = vecs.take(5).toDF("cid", "cvec")
+    val cents = Centroids(vecs.take(5).toDF("cid", "cvec"), "cid", "cvec")
     val dir = TestDirs.tmp("ivfpq_chunk").toFile.getAbsolutePath
-    Pq.ivfPqIndexWrite(df, "id", "vec", cents, "cid", "cvec", cb, dir)
+    Pq.ivfPqIndexWrite(df, "id", "vec", cents, cb, dir)
     val index = spark.read.parquet(dir)
     val queries = vecs.take(5).toDF("id", "vec")
     def rowsOf(d: org.apache.spark.sql.DataFrame) =
@@ -432,11 +433,11 @@ class PqSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sorted.toSeq
     val single = rowsOf(Pq.ivfPqSearchBatch(queries, "id", "vec",
-      index, "id", cents, "cid", "cvec", cb, k = 4, nProbe = 3))
+      index, "id", cents, cb, k = 4, nProbe = 3))
     // maxLutBatch=1 is the extreme split: every query its own probe job
     for (chunk <- Seq(1, 2, 100))
       assert(rowsOf(Pq.ivfPqSearchBatchChunked(queries, "id", "vec",
-        index, "id", cents, "cid", "cvec", cb, k = 4, nProbe = 3,
+        index, "id", cents, cb, k = 4, nProbe = 3,
         maxLutBatch = chunk)) == single, s"maxLutBatch=$chunk diverged")
     // and the SDC escape holds the same parity against ITS single-shot
     def sdcRowsOf(d: org.apache.spark.sql.DataFrame) =
@@ -444,20 +445,20 @@ class PqSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sorted.toSeq
     val sdcSingle = sdcRowsOf(Pq.ivfPqSearchBatchSdc(queries, "id", "vec",
-      index, "id", cents, "cid", "cvec", cb, k = 4, nProbe = 3))
+      index, "id", cents, cb, k = 4, nProbe = 3))
     for (chunk <- Seq(1, 2, 100))
       assert(sdcRowsOf(Pq.ivfPqSearchBatchSdcChunked(queries, "id", "vec",
-        index, "id", cents, "cid", "cvec", cb, k = 4, nProbe = 3,
+        index, "id", cents, cb, k = 4, nProbe = 3,
         maxCodeBatch = chunk)) == sdcSingle,
         s"maxCodeBatch=$chunk diverged")
     // hierarchical probe-cell selection, all groups probed (the exact
     // shape), must be result-identical on BOTH PQ probes too
     assert(rowsOf(Pq.ivfPqSearchBatch(queries, "id", "vec",
-      index, "id", cents, "cid", "cvec", cb, k = 4, nProbe = 3,
+      index, "id", cents, cb, k = 4, nProbe = 3,
       superCells = 2, superProbe = 2)) == single,
       "hier-probe ADC diverged from flat")
     assert(sdcRowsOf(Pq.ivfPqSearchBatchSdc(queries, "id", "vec",
-      index, "id", cents, "cid", "cvec", cb, k = 4, nProbe = 3,
+      index, "id", cents, cb, k = 4, nProbe = 3,
       superCells = 2, superProbe = 2)) == sdcSingle,
       "hier-probe SDC diverged from flat")
   }
@@ -531,17 +532,17 @@ class PqSpec extends AnyFunSuite {
     }
     val corpus = all.filter(_._1 % 10 != 9).toDF("vec_id", "embedding")
     val batch = all.filter(_._1 % 10 == 9).toDF("vec_id", "embedding")
-    val cents = all.filter(_._1 % 100 == 0).take(16)
-      .toDF("cid", "cvec")
+    val cents = Centroids(all.filter(_._1 % 100 == 0).take(16)
+      .toDF("cid", "cvec"), "cid", "cvec")
     val dirV = TestDirs.tmp("calib_ivf").toFile.getAbsolutePath
     Similarity.ivfIndexWrite(corpus, "vec_id", "embedding",
-      cents, "cid", "cvec", dirV)
+      cents, dirV)
     val cosT = 0.95
     def keptOf(flags: org.apache.spark.sql.DataFrame): Long =
       flags.filter(col("keep")).count()
     val keptExact = keptOf(Similarity.semanticDedupFlags(
       batch, "vec_id", "embedding", spark.read.parquet(dirV),
-      "vec_id", "embedding", cents, "cid", "cvec", tau = cosT,
+      "vec_id", "embedding", cents, tau = cosT,
       nProbe = 2))
     val nBatch = batch.count()
     assert(keptExact > 0 && keptExact < nBatch,
@@ -559,10 +560,10 @@ class PqSpec extends AnyFunSuite {
       keptOf(
         if (sdc) Pq.semanticDedupFlagsPqSdc(
           batch, "vec_id", "embedding", spark.read.parquet(dirX),
-          "vec_id", cents, "cid", "cvec", cbX, tauDist = tauD, nProbe = 2)
+          "vec_id", cents, cbX, tauDist = tauD, nProbe = 2)
         else Pq.semanticDedupFlagsPq(
           batch, "vec_id", "embedding", spark.read.parquet(dirX),
-          "vec_id", cents, "cid", "cvec", cbX, tauDist = tauD,
+          "vec_id", cents, cbX, tauDist = tauD,
           nProbe = 2))
     val configs = Seq(("coarse", 4, 64, 0.05), ("fine", 8, 128, 0.02))
     val kept = configs.map { case (label, m, k, tolFrac) =>
@@ -570,7 +571,7 @@ class PqSpec extends AnyFunSuite {
         sampleN = 2000, iters = 5)
       val dirX = TestDirs.tmp(s"calib_ivfpq_$label").toFile.getAbsolutePath
       Pq.ivfPqIndexWrite(corpus, "vec_id", "embedding",
-        cents, "cid", "cvec", cbX, dirX)
+        cents, cbX, dirX)
       val tol = math.max(4L, (tolFrac * nBatch).toLong)
       val tauAdc = Pq.calibrateTauDist(corpus, "vec_id", "embedding",
         cbX, cosT, mode = "adc", sampleN = 2000)
@@ -605,18 +606,18 @@ class PqSpec extends AnyFunSuite {
     val vecs = randVecs(100, 8, 171)
     val df = vecs.toDF("id", "vec")
     val cb = Pq.train(df, "id", "vec", m = 2, k = 4, sampleN = 100)
-    val cents = vecs.take(3).toDF("cid", "cvec")
+    val cents = Centroids(vecs.take(3).toDF("cid", "cvec"), "cid", "cvec")
     val otherCents = vecs.slice(3, 6).toDF("cid", "cvec")
     val dir = TestDirs.tmp("ivfpq_refstale").toFile.getAbsolutePath
     val vecDir = TestDirs.tmp("ivfpq_refstale_v").toFile.getAbsolutePath
-    Pq.ivfPqIndexWrite(df, "id", "vec", cents, "cid", "cvec", cb, dir)
+    Pq.ivfPqIndexWrite(df, "id", "vec", cents, cb, dir)
     // vector tree deliberately built under a DIFFERENT codebook
-    Similarity.ivfIndexWrite(df, "id", "vec", otherCents, "cid", "cvec",
-      vecDir)
+    Similarity.ivfIndexWrite(df, "id", "vec",
+      Centroids(otherCents, "cid", "cvec"), vecDir)
     val e = intercept[IllegalStateException] {
       Pq.ivfPqSearchRefined(vecs.take(1).toDF("id", "vec"), "id", "vec",
         spark.read.parquet(dir), spark.read.parquet(vecDir),
-        "id", "vec", cents, "cid", "cvec", cb, k = 3, nProbe = 2)
+        "id", "vec", cents, cb, k = 3, nProbe = 2)
         .collect()
     }
     assert(e.getMessage.contains("refine vector layout"))
@@ -629,32 +630,32 @@ class PqSpec extends AnyFunSuite {
     val vecs = randVecs(200, 8, 191)
     val df = vecs.toDF("id", "vec")
     val cb = Pq.train(df, "id", "vec", m = 2, k = 4, sampleN = 200)
-    val cents = vecs.take(4).toDF("cid", "cvec")
+    val cents = Centroids(vecs.take(4).toDF("cid", "cvec"), "cid", "cvec")
     val (base, extra) = vecs.partition(_._1 < 150)
     val queries = vecs.take(2).toDF("id", "vec")
     def refine(dir: String, vecDir: String): Seq[(Long, Long, Double)] =
       Pq.ivfPqSearchRefined(queries, "id", "vec",
         spark.read.parquet(dir), spark.read.parquet(vecDir), "id", "vec",
-        cents, "cid", "cvec", cb, k = 3, nProbe = 4)
+        cents, cb, k = 3, nProbe = 4)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sorted.toSeq
 
     val dir = TestDirs.tmp("ivfpq_pair").toFile.getAbsolutePath
     val vecDir = TestDirs.tmp("ivfpq_pair_v").toFile.getAbsolutePath
     Pq.ivfPqIndexWritePair(base.toDF("id", "vec"), "id", "vec", cents,
-      "cid", "cvec", cb, dir, vecDir)
+      cb, dir, vecDir)
     assert(refine(dir, vecDir).nonEmpty) // the synced pair probes green
     // DESYNC: append the code tree ALONE — the codebooks are unchanged
     // so both sidecar stamps still verify, but the appended rows have
     // no vectors to refine against; the pair-sync guard must refuse
     Pq.ivfPqIndexAppend(extra.toDF("id", "vec"), "id", "vec", dir,
-      cents, "cid", "cvec", cb)
+      cents, cb)
     val e = intercept[IllegalStateException] { refine(dir, vecDir) }
     assert(e.getMessage.contains("disagree") &&
       e.getMessage.contains("code tree is ahead"), e.getMessage)
     // repair: bring the vector tree level — the pair probes green again
     Similarity.ivfIndexAppend(extra.toDF("id", "vec"), "id", "vec",
-      vecDir, cents, "cid", "cvec")
+      vecDir, cents)
     val repaired = refine(dir, vecDir)
 
     // the paired append is the ingest path: one call, both trees, and
@@ -663,13 +664,13 @@ class PqSpec extends AnyFunSuite {
     val dir2 = TestDirs.tmp("ivfpq_pair2").toFile.getAbsolutePath
     val vecDir2 = TestDirs.tmp("ivfpq_pair2_v").toFile.getAbsolutePath
     Pq.ivfPqIndexWritePair(base.toDF("id", "vec"), "id", "vec", cents,
-      "cid", "cvec", cb, dir2, vecDir2)
+      cb, dir2, vecDir2)
     Pq.ivfPqIndexAppendPair(extra.toDF("id", "vec"), "id", "vec",
-      dir2, vecDir2, cents, "cid", "cvec", cb)
+      dir2, vecDir2, cents, cb)
     assert(refine(dir2, vecDir2) == repaired)
     val oneDir = TestDirs.tmp("ivfpq_pair_one").toFile.getAbsolutePath
     val oneVec = TestDirs.tmp("ivfpq_pair_one_v").toFile.getAbsolutePath
-    Pq.ivfPqIndexWritePair(df, "id", "vec", cents, "cid", "cvec", cb,
+    Pq.ivfPqIndexWritePair(df, "id", "vec", cents, cb,
       oneDir, oneVec)
     assert(refine(oneDir, oneVec) == repaired,
       "append-built pair diverged from the single-shot pair build")
@@ -681,7 +682,7 @@ class PqSpec extends AnyFunSuite {
     val other = Pq.Codebook(cb.flat.map(_ + 0.25), cb.m, cb.k)
     val e2 = intercept[IllegalStateException] {
       Pq.ivfPqIndexAppendPair(extra.take(3).toDF("id", "vec"), "id",
-        "vec", dir2, vecDir2, cents, "cid", "cvec", other)
+        "vec", dir2, vecDir2, cents, other)
     }
     assert(e2.getMessage.contains("different codebook"))
     assert(spark.read.parquet(dir2).count() == rowsCode &&
@@ -754,10 +755,11 @@ class PqSpec extends AnyFunSuite {
       (i, halves(i.toInt) ++ halves(7 - i.toInt)))
     val cb = Pq.Codebook(
       (halves.flatten ++ halves.flatten).toIndexedSeq, m = 2, k = 8)
-    val cents = Seq((0L, vecs(0)._2), (1L, vecs(7)._2)).toDF("cid", "cvec")
+    val cents = Centroids(Seq((0L, vecs(0)._2), (1L, vecs(7)._2))
+      .toDF("cid", "cvec"), "cid", "cvec")
     val dir = TestDirs.tmp("ivfpq_sdc").toFile.getAbsolutePath
     val df = vecs.toDF("id", "vec")
-    Pq.ivfPqIndexWrite(df, "id", "vec", cents, "cid", "cvec", cb, dir)
+    Pq.ivfPqIndexWrite(df, "id", "vec", cents, cb, dir)
     val index = spark.read.parquet(dir)
     val queries = vecs.take(3).toDF("id", "vec")
     def rowsOf(d: org.apache.spark.sql.DataFrame, score: String) =
@@ -765,9 +767,9 @@ class PqSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(t => (t._1, t._3, t._2)).toSeq
     val adc = rowsOf(Pq.ivfPqSearchBatch(queries, "id", "vec", index,
-      "id", cents, "cid", "cvec", cb, k = 4, nProbe = 2), "adc_dist")
+      "id", cents, cb, k = 4, nProbe = 2), "adc_dist")
     val sdc = rowsOf(Pq.ivfPqSearchBatchSdc(queries, "id", "vec", index,
-      "id", cents, "cid", "cvec", cb, k = 4, nProbe = 2), "sdc_dist")
+      "id", cents, cb, k = 4, nProbe = 2), "sdc_dist")
     assert(sdc === adc,
       "SDC diverged from ADC on a lossless codebook")
     // both equal the exact squared distance
@@ -785,10 +787,10 @@ class PqSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
         .toSet
     val fAdc = flagsOf(Pq.semanticDedupFlagsPq(batch, "id", "vec",
-      index, "id", cents, "cid", "cvec", cb, tauDist = 3.0, nProbe = 2,
+      index, "id", cents, cb, tauDist = 3.0, nProbe = 2,
       excludeSelf = false))
     val fSdc = flagsOf(Pq.semanticDedupFlagsPqSdc(batch, "id", "vec",
-      index, "id", cents, "cid", "cvec", cb, tauDist = 3.0, nProbe = 2,
+      index, "id", cents, cb, tauDist = 3.0, nProbe = 2,
       excludeSelf = false))
     assert(fSdc === fAdc,
       "SDC dedup flags diverged from ADC on a lossless codebook")
@@ -796,7 +798,7 @@ class PqSpec extends AnyFunSuite {
     // disagree with the cheap pass), at any band
     for (band <- Seq(0.0, 1.0, 100.0)) {
       val fHyb = flagsOf(Pq.semanticDedupFlagsPqHybrid(batch, "id",
-        "vec", index, "id", cents, "cid", "cvec", cb, tauSdc = 3.0,
+        "vec", index, "id", cents, cb, tauSdc = 3.0,
         tauAdc = 3.0, band = band, refineK = 4, nProbe = 2,
         excludeSelf = false))
       assert(fHyb === fAdc,
@@ -829,12 +831,13 @@ class PqSpec extends AnyFunSuite {
     }
     val corpus = all.filter(_._1 % 10 != 9).toDF("vec_id", "embedding")
     val batch = all.filter(_._1 % 10 == 9).toDF("vec_id", "embedding")
-    val cents = all.filter(_._1 % 100 == 0).take(8).toDF("cid", "cvec")
+    val cents = Centroids(all.filter(_._1 % 100 == 0).take(8)
+      .toDF("cid", "cvec"), "cid", "cvec")
     val cb = Pq.train(corpus, "vec_id", "embedding", m = 4, k = 32,
       sampleN = 1800, iters = 5)
     val dir = TestDirs.tmp("hybrid_ivfpq").toFile.getAbsolutePath
     Pq.ivfPqIndexWrite(corpus, "vec_id", "embedding",
-      cents, "cid", "cvec", cb, dir)
+      cents, cb, dir)
     val index = spark.read.parquet(dir)
     val cosT = 0.95
     val tauS = Pq.calibrateTauDist(corpus, "vec_id", "embedding", cb,
@@ -846,13 +849,13 @@ class PqSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getBoolean(1))).toMap
     def hybrid(band: Double, refineK: Int = 4) =
       keeps(Pq.semanticDedupFlagsPqHybrid(batch, "vec_id", "embedding",
-        index, "vec_id", cents, "cid", "cvec", cb, tauSdc = tauS,
+        index, "vec_id", cents, cb, tauSdc = tauS,
         tauAdc = tauA, band = band, refineK = refineK, nProbe = 2))
     val pureSdc = keeps(Pq.semanticDedupFlagsPqSdc(batch, "vec_id",
-      "embedding", index, "vec_id", cents, "cid", "cvec", cb,
+      "embedding", index, "vec_id", cents, cb,
       tauDist = tauS, nProbe = 2))
     val pureAdc = keeps(Pq.semanticDedupFlagsPq(batch, "vec_id",
-      "embedding", index, "vec_id", cents, "cid", "cvec", cb,
+      "embedding", index, "vec_id", cents, cb,
       tauDist = tauA, nProbe = 2))
     // band = 0: no query straddles exactly — pure SDC verdicts
     assert(hybrid(0.0) === pureSdc, "band=0 must be pure SDC")

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ops.Similarity
+import graft.ops.{Pq, Similarity}
+import graft.ops.Similarity.Centroids
 
 class SimilaritySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -38,11 +39,12 @@ class SimilaritySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(41)
     val emb = (0L until 200L).map(i =>
       (i, Seq.fill(8)(rnd.nextGaussian()))).toDF("vec_id", "embedding")
-    val centroids = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val centroids = Centroids(emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+      "cid", "cvec")
     val dir = TestDirs.tmp("ivf_index").toFile.getAbsolutePath
     Similarity.ivfIndex(emb, "vec_id", "embedding",
-      centroids, "cid", "cvec")
+      centroids)
       .write.partitionBy("cell").mode("overwrite").parquet(dir)
     val qVec = emb.filter(col("vec_id") === 7L)
       .select(col("embedding")).collect()(0).getSeq[Double](0)
@@ -51,10 +53,10 @@ class SimilaritySpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val indexed = rows(Similarity.ivfSearchIndexed(
       spark.read.parquet(dir), "vec_id", "embedding",
-      centroids, "cid", "cvec", qVec, k = 10, nProbe = 2,
+      centroids, qVec, k = 10, nProbe = 2,
       excludeId = Some(7L)))
     val inline = rows(Similarity.ivfSearch(emb, "vec_id", "embedding",
-      centroids, "cid", "cvec", queryId = 7L, k = 10, nProbe = 2))
+      centroids, queryId = 7L, k = 10, nProbe = 2))
     assert(indexed == inline, "persisted-index probe diverged from the " +
       "inline assignment probe")
   }
@@ -65,22 +67,23 @@ class SimilaritySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(43)
     val emb = (0L until 150L).map(i =>
       (i, Seq.fill(6)(rnd.nextGaussian()))).toDF("vec_id", "embedding")
-    val centroids = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val centroids = Centroids(emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+      "cid", "cvec")
     val dir = TestDirs.tmp("ivf_batch").toFile.getAbsolutePath
     Similarity.ivfIndex(emb, "vec_id", "embedding",
-      centroids, "cid", "cvec")
+      centroids)
       .write.partitionBy("cell").mode("overwrite").parquet(dir)
     val index = spark.read.parquet(dir)
     val qVec = emb.filter(col("vec_id") === 9L)
       .select(col("embedding")).collect()(0).getSeq[Double](0)
     val single = Similarity.ivfSearchIndexed(index, "vec_id", "embedding",
-      centroids, "cid", "cvec", qVec, k = 8, nProbe = 2,
+      centroids, qVec, k = 8, nProbe = 2,
       excludeId = Some(9L))
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     val batch = Similarity.ivfSearchBatch(
       emb.filter(col("vec_id") === 9L), "vec_id", "embedding",
-      index, "vec_id", "embedding", centroids, "cid", "cvec",
+      index, "vec_id", "embedding", centroids,
       k = 8, nProbe = 2)
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
@@ -100,15 +103,15 @@ class SimilaritySpec extends AnyFunSuite {
       (1L, Seq(1.0, 0.0)), (2L, Seq(0.9, 0.1)), (100L, Seq(0.0, 0.0)),
       (3L, Seq(0.0, 1.0)), (4L, Seq(0.1, 0.9)))
       .toDF("vec_id", "embedding")
-    val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
-      .toDF("cid", "cvec")
+    val cents = Centroids(Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
+      .toDF("cid", "cvec"), "cid", "cvec")
     val dir = TestDirs.tmp("ivf_nan").toFile.getAbsolutePath
-    Similarity.ivfIndex(emb, "vec_id", "embedding", cents, "cid", "cvec")
+    Similarity.ivfIndex(emb, "vec_id", "embedding", cents)
       .write.partitionBy("cell").mode("overwrite").parquet(dir)
     val index = spark.read.parquet(dir)
     val q = Seq((50L, Seq(1.0, 0.05))).toDF("vec_id", "embedding")
     def ids(k: Int) = Similarity.ivfSearchBatch(q, "vec_id", "embedding",
-      index, "vec_id", "embedding", cents, "cid", "cvec",
+      index, "vec_id", "embedding", cents,
       k = k, nProbe = 2, excludeSelf = false)
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .select(col("vec_id")).as[Long].collect().toSeq
@@ -124,7 +127,7 @@ class SimilaritySpec extends AnyFunSuite {
     // neighbors → semanticDedupFlags keeps it (the NULL/keep contract)
     val zq = Seq((60L, Seq(0.0, 0.0))).toDF("vec_id", "embedding")
     val kept = Similarity.semanticDedupFlags(zq, "vec_id", "embedding",
-      index, "vec_id", "embedding", cents, "cid", "cvec",
+      index, "vec_id", "embedding", cents,
       tau = 0.5, nProbe = 2, excludeSelf = false)
       .select(col("keep")).as[Boolean].collect().toSeq
     assert(kept === Seq(true),
@@ -142,11 +145,11 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("cid", "cvec")
     val dir = TestDirs.tmp("ivf_stale").toFile.getAbsolutePath
     Similarity.ivfIndex(emb, "vec_id", "embedding",
-      cents1, "cid", "cvec")
+      Centroids(cents1, "cid", "cvec"))
       .write.partitionBy("cell").mode("overwrite").parquet(dir)
     val e = intercept[Exception] {
       Similarity.ivfSearchIndexed(spark.read.parquet(dir),
-        "vec_id", "embedding", cents2, "cid", "cvec",
+        "vec_id", "embedding", Centroids(cents2, "cid", "cvec"),
         Seq(0.0, 0.0), k = 3).collect()
     }
     def messages(t: Throwable): Seq[String] =
@@ -163,11 +166,12 @@ class SimilaritySpec extends AnyFunSuite {
     val corpus = Seq(
       (10L, Seq(1.0, 0.0, 0.0)), (11L, Seq(0.99, 0.01, 0.0)),
       (12L, Seq(0.0, 1.0, 0.0))).toDF("vec_id", "embedding")
-    val cents = Seq((0L, Seq(1.0, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.0)),
-      (2L, Seq(0.0, 0.0, 1.0))).toDF("cid", "cvec")
+    val cents = Centroids(Seq((0L, Seq(1.0, 0.0, 0.0)),
+      (1L, Seq(0.0, 1.0, 0.0)), (2L, Seq(0.0, 0.0, 1.0)))
+      .toDF("cid", "cvec"), "cid", "cvec")
     val dir = TestDirs.tmp("semdedup").toFile.getAbsolutePath
     Similarity.ivfIndex(corpus, "vec_id", "embedding",
-      cents, "cid", "cvec")
+      cents)
       .write.partitionBy("cell").mode("overwrite").parquet(dir)
     val batch = Seq(
       (100L, Seq(0.999, 0.001, 0.0)), // ≈ corpus 10 → cos ≈ 1 → drop
@@ -176,7 +180,7 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val got = Similarity.semanticDedupFlags(batch, "vec_id", "embedding",
       spark.read.parquet(dir), "vec_id", "embedding",
-      cents, "cid", "cvec", tau = 0.95, nProbe = 1)
+      cents, tau = 0.95, nProbe = 1)
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) None else Some(r.getLong(1)),
           r.getBoolean(3))).toMap
@@ -193,21 +197,22 @@ class SimilaritySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(47)
     val emb = (0L until 150L).map(i =>
       (i, Seq.fill(6)(rnd.nextGaussian()))).toDF("vec_id", "embedding")
-    val cents = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val cents = Centroids(emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+      "cid", "cvec")
     val oneShot = TestDirs.tmp("ivf_oneshot").toFile.getAbsolutePath
-    Similarity.ivfIndex(emb, "vec_id", "embedding", cents, "cid", "cvec")
+    Similarity.ivfIndex(emb, "vec_id", "embedding", cents)
       .write.partitionBy("cell").mode("overwrite").parquet(oneShot)
     val appended = TestDirs.tmp("ivf_appended").toFile.getAbsolutePath
     Similarity.ivfIndex(emb.filter(col("vec_id") % 3 =!= 0),
-      "vec_id", "embedding", cents, "cid", "cvec")
+      "vec_id", "embedding", cents)
       .write.partitionBy("cell").mode("overwrite").parquet(appended)
     Similarity.ivfIndexAppend(emb.filter(col("vec_id") % 3 === 0),
-      "vec_id", "embedding", appended, cents, "cid", "cvec")
+      "vec_id", "embedding", appended, cents)
     def probe(dir: String) = Similarity.ivfSearchBatch(
       emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       spark.read.parquet(dir), "vec_id", "embedding",
-      cents, "cid", "cvec", k = 7, nProbe = 2)
+      cents, k = 7, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
       .toSet
     assert(probe(appended) == probe(oneShot),
@@ -220,7 +225,7 @@ class SimilaritySpec extends AnyFunSuite {
       (1L, Seq(-9.0, 9.0, -9.0, 9.0, -9.0, 9.0))).toDF("cid", "cvec")
     val e = intercept[IllegalStateException] {
       Similarity.ivfIndexAppend(emb.limit(5), "vec_id", "embedding",
-        appended, badCents, "cid", "cvec")
+        appended, Centroids(badCents, "cid", "cvec"))
     }
     assert(e.getMessage.contains("different codebook"))
     assert(spark.read.parquet(appended).count() == before,
@@ -235,14 +240,14 @@ class SimilaritySpec extends AnyFunSuite {
       val vecs = (0L until 120L).map(i =>
         (i, Seq.fill(8)(rnd.nextGaussian()))).toMap
       val emb = vecs.toSeq.toDF("vec_id", "embedding")
-      val cents = (0 until 5).map(c =>
-        (c.toLong, vecs(c * 20L))).toDF("cid", "cvec")
+      val cents = Centroids((0 until 5).map(c =>
+        (c.toLong, vecs(c * 20L))).toDF("cid", "cvec"), "cid", "cvec")
       val index = Similarity.ivfIndex(emb, "vec_id", "embedding",
-        cents, "cid", "cvec")
+        cents)
       val qids = Seq(7L, 42L, 99L)
       val got = Similarity.ivfSearchBatch(
         emb.filter(col("vec_id").isin(qids: _*)), "vec_id", "embedding",
-        index, "vec_id", "embedding", cents, "cid", "cvec",
+        index, "vec_id", "embedding", cents,
         k = 10, nProbe = 5) // all 5 cells probed ⇒ exact
         .collect()
         .groupBy(_.getLong(0))
@@ -272,17 +277,17 @@ class SimilaritySpec extends AnyFunSuite {
     import spark.implicits._
     val emb = (0L until 20L).map(i =>
       (i, Seq(i.toDouble, 1.0))).toDF("vec_id", "embedding")
-    val cents = Seq((0L, Seq(0.0, 1.0)), (1L, Seq(19.0, 1.0)))
-      .toDF("cid", "cvec")
+    val cents = Centroids(Seq((0L, Seq(0.0, 1.0)), (1L, Seq(19.0, 1.0)))
+      .toDF("cid", "cvec"), "cid", "cvec")
     val dir = TestDirs.tmp("ivf_zero_rows").toFile.getAbsolutePath
     // a schema-complete but row-free layout — what a truncated or
     // never-populated index looks like to a reader
     Similarity.ivfIndex(emb.filter(col("vec_id") < 0L),
-      "vec_id", "embedding", cents, "cid", "cvec")
+      "vec_id", "embedding", cents)
       .write.mode("overwrite").parquet(dir)
     val e = intercept[IllegalStateException] {
       Similarity.ivfSearchIndexed(spark.read.parquet(dir),
-        "vec_id", "embedding", cents, "cid", "cvec",
+        "vec_id", "embedding", cents,
         Seq(1.0, 1.0), k = 3).collect()
     }
     assert(e.getMessage.contains("zero rows"), s"unexpected: $e")
@@ -300,11 +305,12 @@ class SimilaritySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(53)
     val emb = (0L until 90L).map(i =>
       (i, Seq.fill(5)(rnd.nextGaussian()))).toDF("vec_id", "embedding")
-    val cents = emb.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val cents = Centroids(emb.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+      "cid", "cvec")
     val good = TestDirs.tmp("ivf_sidecar_good").toFile.getAbsolutePath
     Similarity.ivfIndexWrite(emb, "vec_id", "embedding",
-      cents, "cid", "cvec", good)
+      cents, good)
     val sidecarPath = java.nio.file.Paths.get(good, "_graft_ivf_stamp")
     assert(java.nio.file.Files.exists(sidecarPath),
       "ivfIndexWrite left no stamp sidecar")
@@ -319,7 +325,7 @@ class SimilaritySpec extends AnyFunSuite {
     }
     def probe(dir: String) = Similarity.ivfSearchIndexed(
       spark.read.parquet(dir), "vec_id", "embedding",
-      cents, "cid", "cvec",
+      cents,
       Seq.fill(5)(0.3), k = 4, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     val expect = probe(good)
@@ -327,7 +333,7 @@ class SimilaritySpec extends AnyFunSuite {
 
     // bogus _params column + correct sidecar ⇒ works (column unread)
     val bogusCol = TestDirs.tmp("ivf_sidecar_bogus").toFile.getAbsolutePath
-    Similarity.ivfIndex(emb, "vec_id", "embedding", cents, "cid", "cvec")
+    Similarity.ivfIndex(emb, "vec_id", "embedding", cents)
       .withColumn("_params", lit("ivf3/deadbeef0000"))
       .write.partitionBy("cell").mode("overwrite").parquet(bogusCol)
     setSidecar(bogusCol, goodStamp)
@@ -354,15 +360,16 @@ class SimilaritySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(59)
     val emb = (0L until 200L).map(i =>
       (i, Seq.fill(5)(rnd.nextGaussian()))).toDF("vec_id", "embedding")
-    val cents = emb.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val cents = Centroids(emb.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+      "cid", "cvec")
     val dir = TestDirs.tmp("ivf_compact").toFile.getAbsolutePath
     Similarity.ivfIndexWrite(emb.filter(col("vec_id") % 7 === 0),
-      "vec_id", "embedding", cents, "cid", "cvec", dir)
+      "vec_id", "embedding", cents, dir)
     // a micro-batch ingest loop: 6 appends, each lands a file set
     for (b <- 1 to 6)
       Similarity.ivfIndexAppend(emb.filter(col("vec_id") % 7 === b),
-        "vec_id", "embedding", dir, cents, "cid", "cvec")
+        "vec_id", "embedding", dir, cents)
     def filesPerCell: Map[String, Int] =
       new java.io.File(dir).listFiles()
         .filter(_.getName.startsWith("cell="))
@@ -373,7 +380,7 @@ class SimilaritySpec extends AnyFunSuite {
     def probe() = Similarity.ivfSearchBatch(
       emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       spark.read.parquet(dir), "vec_id", "embedding",
-      cents, "cid", "cvec", k = 6, nProbe = 2)
+      cents, k = 6, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
       .toSet
     val before = probe()
@@ -392,7 +399,7 @@ class SimilaritySpec extends AnyFunSuite {
       "second compaction pass found work")
     // and the layout still accepts appends afterwards
     Similarity.ivfIndexAppend(emb.filter(col("vec_id") % 7 === 0),
-      "vec_id", "embedding", dir, cents, "cid", "cvec")
+      "vec_id", "embedding", dir, cents)
   }
 
   test("ivfAssignHierarchical: degenerate superProbe is exactly flat; " +
@@ -409,7 +416,7 @@ class SimilaritySpec extends AnyFunSuite {
       val g = (c / 8).toInt
       (c, groupBase(g).map(_ + rnd.nextGaussian()))
     }
-    val cents = centVecs.toDF("cid", "cvec")
+    val cents = Centroids(centVecs.toDF("cid", "cvec"), "cid", "cvec")
     val emb = (0L until 400L).map { i =>
       val near = centVecs(rnd.nextInt(64))._2
       (i, near.map(_ + rnd.nextGaussian() * 2.0))
@@ -418,17 +425,17 @@ class SimilaritySpec extends AnyFunSuite {
       df.select("vec_id", "cell", "cell_dist2").collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val flat = cellsOf(Similarity.ivfAssign(emb, "vec_id", "embedding",
-      cents, "cid", "cvec"))
+      cents))
     // superProbe ≥ superCells ⇒ bit-identical to the flat fold
     val exact = cellsOf(Similarity.ivfAssignHierarchical(
-      emb, "vec_id", "embedding", cents, "cid", "cvec",
+      emb, "vec_id", "embedding", cents,
       superCells = 8, superProbe = 8))
     assert(exact == flat, "degenerate hierarchical diverged from flat")
     // superCells = superProbe = 2 stays on the GENERAL path (super
     // fold + member map + group concat) but probes every group — must
     // also be exactly flat; this is the q122 gate shape
     val bothGroups = cellsOf(Similarity.ivfAssignHierarchical(
-      emb, "vec_id", "embedding", cents, "cid", "cvec",
+      emb, "vec_id", "embedding", cents,
       superCells = 2, superProbe = 2))
     assert(bothGroups == flat,
       "all-groups-probed hierarchical diverged from flat")
@@ -437,7 +444,7 @@ class SimilaritySpec extends AnyFunSuite {
     // a GREATER-OR-EQUAL distance (it searched a subset), and (c) the
     // overwhelming majority agree
     val hier = cellsOf(Similarity.ivfAssignHierarchical(
-      emb, "vec_id", "embedding", cents, "cid", "cvec",
+      emb, "vec_id", "embedding", cents,
       superCells = 8, superProbe = 2))
     assert(hier.keySet == flat.keySet, "hierarchical lost rows")
     val disagree = hier.filter { case (id, (c, _)) => flat(id)._1 != c }
@@ -451,7 +458,7 @@ class SimilaritySpec extends AnyFunSuite {
         "is routing badly")
     // and the default super-cell count also runs end to end
     val auto = cellsOf(Similarity.ivfAssignHierarchical(
-      emb, "vec_id", "embedding", cents, "cid", "cvec"))
+      emb, "vec_id", "embedding", cents))
     assert(auto.keySet == flat.keySet)
   }
 
@@ -470,14 +477,14 @@ class SimilaritySpec extends AnyFunSuite {
       val g = (c / 8).toInt
       (c, groupBase(g).map(_ + rnd.nextGaussian()))
     }
-    val cents = centVecs.toDF("cid", "cvec")
+    val cents = Centroids(centVecs.toDF("cid", "cvec"), "cid", "cvec")
     val emb = (0L until 500L).map { i =>
       val near = centVecs(rnd.nextInt(64))._2
       (i, near.map(_ + rnd.nextGaussian() * 2.0))
     }.toDF("vec_id", "embedding")
     val dir = TestDirs.tmp("ivf_hier_batch").toFile.getAbsolutePath
     Similarity.ivfIndexWrite(emb, "vec_id", "embedding",
-      cents, "cid", "cvec", dir)
+      cents, dir)
     val index = spark.read.parquet(dir)
     val queries = emb.filter(col("vec_id") < 10)
     def rowsOf(df: org.apache.spark.sql.DataFrame) =
@@ -485,16 +492,16 @@ class SimilaritySpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
     val flat = rowsOf(Similarity.ivfSearchBatch(queries, "vec_id",
-      "embedding", index, "vec_id", "embedding", cents, "cid", "cvec",
+      "embedding", index, "vec_id", "embedding", cents,
       k = 5, nProbe = 3))
     // degenerate (superProbe ≥ superCells ⇒ flat explode) and general
     // (2 groups, both probed) paths must both be EXACTLY flat
     assert(rowsOf(Similarity.ivfSearchBatchHier(queries, "vec_id",
-      "embedding", index, "vec_id", "embedding", cents, "cid", "cvec",
+      "embedding", index, "vec_id", "embedding", cents,
       k = 5, nProbe = 3, superCells = 8, superProbe = 8)) === flat,
       "degenerate hierarchical batch probe diverged from flat")
     assert(rowsOf(Similarity.ivfSearchBatchHier(queries, "vec_id",
-      "embedding", index, "vec_id", "embedding", cents, "cid", "cvec",
+      "embedding", index, "vec_id", "embedding", cents,
       k = 5, nProbe = 3, superCells = 2, superProbe = 2)) === flat,
       "all-groups-probed hierarchical batch probe diverged from flat")
     // coarse probe: cells come from the 2 probed groups' members only —
@@ -503,7 +510,7 @@ class SimilaritySpec extends AnyFunSuite {
     // space (equal scores wherever (qid, id) pairs coincide)
     val q = queries.select(col("vec_id").as("qid"),
       col("embedding").cast("array<double>").as("qvec"))
-    val centsSeq = centVecs.map { case (c, v) => (c, v) }
+    val centsSeq = Centroids(centVecs.map { case (c, v) => (c, v) })
     def probeSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val flatProbe = probeSet(Similarity.probeCellsHierarchical(
@@ -517,7 +524,7 @@ class SimilaritySpec extends AnyFunSuite {
       s"coarse probe agrees on only ${shared.size}/${flatProbe.size} " +
         "cells — super-clustering is routing badly")
     val hier2 = rowsOf(Similarity.ivfSearchBatchHier(queries, "vec_id",
-      "embedding", index, "vec_id", "embedding", cents, "cid", "cvec",
+      "embedding", index, "vec_id", "embedding", cents,
       k = 5, nProbe = 3, superCells = 8, superProbe = 2))
     val flatByKey = flat.map(t => (t._1, t._2) -> t._3).toMap
     hier2.foreach { case (qid, id, score) =>
@@ -584,5 +591,67 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(out(1L) == Seq(50.0, 50.0), "empty cell centroid drifted")
     assert(math.abs(out(0L)(0) - 0.1) < 1e-9)
+  }
+
+  test("Centroids.stamp and Pq.combinedStamp keep their byte format: " +
+    "layouts persisted by earlier builds still verify") {
+    import spark.implicits._
+    // unsorted ids, a negative zero, a subnormal and a tiny exponent;
+    // the expected strings are what the collected-codebook stamp of
+    // the earlier releases computed for this frame
+    val df = Seq(
+      (7L, Seq(1.0, -0.0, 0.5)),
+      (2L, Seq(1e-300, -2.5, 3.141592653589793)),
+      (5L, Seq(-1.0, 4.9e-324, 123456.789))).toDF("cid", "cvec")
+    val cents = Centroids(df, "cid", "cvec")
+    assert(cents.cells.map(_._1) == Seq(2L, 5L, 7L))
+    assert(cents.stamp == "ivf3/8543c45008e6")
+    val cb = Pq.Codebook(IndexedSeq(0.25, -0.0, 1e-310, 2.0), 2, 2)
+    assert(Pq.combinedStamp(cents, cb) ==
+      "ivf3/8543c45008e6+pq2/2/dff15cc5bcbd")
+    // the driver-local frame round-trips to the same codebook
+    val again = Centroids(cents.frame(spark), "cid", "cvec")
+    assert(again == cents && again.stamp == cents.stamp)
+  }
+
+  test("Centroids rejects a null centroid id, naming the column") {
+    import spark.implicits._
+    val df = Seq((Some(0L), Seq(1.0, 0.0)), (None, Seq(0.0, 1.0)))
+      .toDF("cid", "cvec")
+    val e = intercept[IllegalArgumentException](
+      Centroids(df, "cid", "cvec"))
+    assert(e.getMessage.contains("null id in column 'cid'"), e.getMessage)
+  }
+
+  test("Centroids rejects a null centroid vector, naming the column") {
+    import spark.implicits._
+    val df = Seq((0L, Some(Seq(1.0, 0.0))), (1L, None))
+      .toDF("cid", "cvec")
+    val e = intercept[IllegalArgumentException](
+      Centroids(df, "cid", "cvec"))
+    assert(e.getMessage.contains("null vector in column 'cvec'"),
+      e.getMessage)
+  }
+
+  test("Centroids rejects a null centroid element, which could never " +
+    "win a cell yet would count in the stamp") {
+    import spark.implicits._
+    val df = Seq((0L, Seq(Some(1.0), Some(0.0))), (1L, Seq(Some(0.0), None)))
+      .toDF("cid", "cvec")
+    val e = intercept[IllegalArgumentException](
+      Centroids(df, "cid", "cvec"))
+    assert(e.getMessage.contains("null element in column 'cvec'"),
+      e.getMessage)
+  }
+
+  test("Centroids rejects a duplicate centroid id (two centroids under " +
+    "one cell label)") {
+    import spark.implicits._
+    val df = Seq((3L, Seq(1.0, 0.0)), (1L, Seq(1.0, 1.0)),
+      (3L, Seq(0.0, 1.0))).toDF("cid", "cvec")
+    val e = intercept[IllegalArgumentException](
+      Centroids(df, "cid", "cvec"))
+    assert(e.getMessage.contains("duplicate id 3 in column 'cid'"),
+      e.getMessage)
   }
 }

@@ -8,6 +8,7 @@ import graft.streaming.RecognitionState
 import graft.streaming.RecognitionState.RecognitionEvent
 import graft.streaming.ChapterFileStream
 import graft.ops.TranscriptNormalize
+import graft.ops.Similarity.Centroids
 import java.nio.file.Files
 
 class StreamingSpec extends AnyFunSuite {
@@ -323,12 +324,13 @@ class StreamingSpec extends AnyFunSuite {
       (i, Seq.fill(6)(rnd.nextGaussian()))).toDF("vec_id", "embedding")
     val centroids = corpus.filter(col("vec_id") < 4)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val codebook = Centroids(centroids, "cid", "cvec")
     // the persisted index: built once per corpus build, one directory
     // per cell (pruning proven in PlanRegressionSpec), re-read like an
     // ingest job would
     val indexDir = TestDirs.tmp("stream_ivf_index").toFile.getAbsolutePath
     Similarity.ivfIndex(corpus, "vec_id", "embedding",
-      centroids, "cid", "cvec")
+      codebook)
       .coalesce(1) // one file per cell dir ⇒ numFiles == cells scanned
       .write.partitionBy("cell").mode("overwrite").parquet(indexDir)
     val index = spark.read.parquet(indexDir)
@@ -340,7 +342,7 @@ class StreamingSpec extends AnyFunSuite {
       (1001L, (0 until 6).map(j => 1.1 * rnd.nextGaussian())))
     val expected = Similarity.ivfSearchBatch(
       queries.toDF("vec_id", "embedding"), "vec_id", "embedding",
-      index, "vec_id", "embedding", centroids, "cid", "cvec",
+      index, "vec_id", "embedding", codebook,
       k = 3, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(expected.nonEmpty, "fixture degenerate: no neighbors found")
@@ -374,7 +376,7 @@ class StreamingSpec extends AnyFunSuite {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         got.synchronized {
           val res = Similarity.ivfSearchBatch(batch, "vec_id", "embedding",
-            index, "vec_id", "embedding", centroids, "cid", "cvec",
+            index, "vec_id", "embedding", codebook,
             k = 3, nProbe = 2)
           got ++= res.collect().map(r => (r.getLong(0), r.getLong(1)))
           res.queryExecution.executedPlan.collect {
@@ -409,11 +411,12 @@ class StreamingSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(61)
     val corpus = (0L until 120L).map(i =>
       (i, Seq.fill(6)(rnd.nextGaussian()))).toDF("vec_id", "embedding")
-    val centroids = corpus.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val centroids = Centroids(corpus.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+      "cid", "cvec")
     val indexDir = TestDirs.tmp("eo_ivf_index").toFile.getAbsolutePath
     Similarity.ivfIndex(corpus, "vec_id", "embedding",
-      centroids, "cid", "cvec")
+      centroids)
       .write.partitionBy("cell").mode("overwrite").parquet(indexDir)
     val index = spark.read.parquet(indexDir)
 
@@ -423,7 +426,7 @@ class StreamingSpec extends AnyFunSuite {
     // batch over all three queries
     val expected = Similarity.ivfSearchBatch(
       queries.toDF("vec_id", "embedding"), "vec_id", "embedding",
-      index, "vec_id", "embedding", centroids, "cid", "cvec",
+      index, "vec_id", "embedding", centroids,
       k = 3, nProbe = 2)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
     assert(expected.nonEmpty, "fixture degenerate: no neighbors")
@@ -446,7 +449,7 @@ class StreamingSpec extends AnyFunSuite {
             batchId: Long) =>
           graft.streaming.IdempotentSink.parquetByBatch(outDir)(
             Similarity.ivfSearchBatch(batch, "vec_id", "embedding",
-              index, "vec_id", "embedding", centroids, "cid", "cvec",
+              index, "vec_id", "embedding", centroids,
               k = 3, nProbe = 2), batchId)
         }
         .option("checkpointLocation", ckpt)
@@ -567,17 +570,17 @@ class StreamingSpec extends AnyFunSuite {
     val all = vecs.toDF("vec_id", "embedding")
     // 8 cells so the 2 queries' nProbe=2 union stays a strict subset
     // and the pruning assertion below is observable
-    val cents = vecs.take(8).toDF("cid", "cvec")
+    val cents = Centroids(vecs.take(8).toDF("cid", "cvec"), "cid", "cvec")
     val cb = Pq.train(all, "vec_id", "embedding", m = 2, k = 4,
       sampleN = 150)
     // the reference answer: one single-shot build over everything
     val oneShot = TestDirs.tmp("spq_oneshot").toFile.getAbsolutePath
-    Pq.ivfPqIndexWrite(all, "vec_id", "embedding", cents, "cid", "cvec",
+    Pq.ivfPqIndexWrite(all, "vec_id", "embedding", cents,
       cb, oneShot)
     val queries = vecs.take(2).toDF("vec_id", "embedding")
     def probe(dir: String): Set[(Long, Long, Double)] =
       Pq.ivfPqSearchBatch(queries, "vec_id", "embedding",
-        spark.read.parquet(dir), "vec_id", cents, "cid", "cvec", cb,
+        spark.read.parquet(dir), "vec_id", cents, cb,
         k = 5, nProbe = 4)
         .select(col("qid"), col("vec_id"), col("adc_dist"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -605,7 +608,7 @@ class StreamingSpec extends AnyFunSuite {
             batchId: Long) =>
           graft.streaming.IdempotentSink.indexByBatch(idxDir, "cell")(
             Pq.ivfPqIndexFrame(batch, "vec_id", "embedding",
-              cents, "cid", "cvec", cb), batchId)
+              cents, cb), batchId)
         }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
@@ -629,7 +632,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(max(col("_batch").cast("long"))).head().getLong(0)
     graft.streaming.IdempotentSink.indexByBatch(idxDir, "cell")(
       Pq.ivfPqIndexFrame(h2.toDF("vec_id", "embedding"),
-        "vec_id", "embedding", cents, "cid", "cvec", cb), lastBatch)
+        "vec_id", "embedding", cents, cb), lastBatch)
     // the overwrite replaced part files under _batch=<last>; drop the
     // session's cached listing before re-reading the tree
     spark.catalog.refreshByPath(idxDir)
@@ -641,7 +644,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val probed = Pq.ivfPqSearchBatch(queries, "vec_id", "embedding",
-        spark.read.parquet(idxDir), "vec_id", cents, "cid", "cvec", cb,
+        spark.read.parquet(idxDir), "vec_id", cents, cb,
         k = 5, nProbe = 2)
       probed.collect()
       val scan = probed.queryExecution.executedPlan.collectLeaves()
@@ -683,7 +686,7 @@ class StreamingSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val probed2 = Pq.ivfPqSearchBatch(queries, "vec_id", "embedding",
-        spark.read.parquet(idxDir), "vec_id", cents, "cid", "cvec", cb,
+        spark.read.parquet(idxDir), "vec_id", cents, cb,
         k = 5, nProbe = 2)
       probed2.collect()
       val scan2 = probed2.queryExecution.executedPlan.collectLeaves()
@@ -1100,7 +1103,7 @@ class StreamingSpec extends AnyFunSuite {
     val probe = Seq((99L, Seq(math.cos(0.1), math.sin(0.1))))
       .toDF("vec_id", "vec")
     val got = graft.ops.Similarity.semanticDedupFlags(probe, "vec_id",
-      "vec", prior, "vec_id", "vec", cents, "cid", "cvec",
+      "vec", prior, "vec_id", "vec", Centroids(cents, "cid", "cvec"),
       tau = 0.999, nProbe = 2, excludeSelf = false)
       .select(col("neighbor_id")).as[Long].head()
     assert(got === 1L, "post-fold lookup lost the planted neighbor")
@@ -1740,7 +1743,7 @@ class StreamingSpec extends AnyFunSuite {
     val prior = spark.read.parquet(s"$rootF/idx/code").drop("_batch")
     val probe = Seq((99L, pqV3)).toDF("vec_id", "vec")
     val got = graft.ops.Pq.semanticDedupFlagsPq(probe, "vec_id", "vec",
-      prior, "vec_id", cents, "cid", "cvec", cb, tauDist = 0.01,
+      prior, "vec_id", Centroids(cents, "cid", "cvec"), cb, tauDist = 0.01,
       nProbe = 2, excludeSelf = false)
       .select(col("neighbor_id")).as[Long].head()
     assert(got === 1L, "post-fold probe lost the planted neighbor")
