@@ -102,9 +102,21 @@ object IdempotentSink {
       out: String, partitionCol: String, uptoBatch: Long,
       fromBatch: Long = 0L): Seq[Long] =
     compactBatchesWith(spark, out, uptoBatch, (folded, tmp) =>
-      folded.repartition(col(partitionCol))
+      byPartition(folded, partitionCol)
         .write.partitionBy(partitionCol).mode("overwrite").parquet(tmp),
       fromBatch)
+
+  /** `df` hash-partitioned on `partitionCol` into the session's shuffle
+    * partition count, for a `partitionBy(partitionCol)` write: each
+    * value lands in one task, so the tree gets one file per value per
+    * write, and the tasks write their values' files in parallel. The
+    * count is explicit because adaptive execution coalesces a
+    * column-only repartition of a small frame into ONE task, which
+    * then writes every value's file serially.
+    */
+  private def byPartition(df: DataFrame, partitionCol: String): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+      col(partitionCol))
 
   /** [[compactBatches]] for the NON-partitioned `_batch=` trees
     * ([[parquetByBatch]] outputs — [[dedupIngestByBatch]]'s fp/tok
@@ -485,10 +497,9 @@ object IdempotentSink {
     // same rows, and the probe's per-cell listing is exactly what the
     // fold exists to protect. The shuffle is batch-sized (the bounded
     // quantity).
-    val keptAssigned = Similarity.ivfAssign(
+    val keptAssigned = byPartition(Similarity.ivfAssign(
       kept.select(col(idCol), col(vecCol)), idCol, vecCol, cents)
-      .select(col(idCol), col(vecCol), col("cell"))
-      .repartition(col("cell"))
+      .select(col(idCol), col(vecCol), col("cell")), "cell")
     graft.io.ParallelActions.run(Seq(
       () => parquetByBatch(flagsOut)(flags, batchId),
       () => indexByBatch(vecDir, "cell")(keptAssigned, batchId)))
@@ -583,6 +594,15 @@ object IdempotentSink {
     * frame once; a multi-batch caller passes a resolved codebook's
     * [[graft.ops.Similarity.Centroids#frame]] so that collect runs no
     * Spark job.
+    *
+    * REGIME (modes "sdc" and "hybrid"): a micro-batch whose (id,
+    * vector) rows and probed cells' prior codes fit
+    * `spark.sql.autoBroadcastJoinThreshold`, and whose (query,
+    * candidate) pairs fit one per byte of it, is flagged on the driver
+    * ([[graft.ops.DriverFinish]]; the rule is
+    * [[graft.ops.Pq.semanticDedupFlagsPqSdc]]'s), anything larger —
+    * or any batch under a negative threshold — by the distributed
+    * probe. The flags and the code tree are the same either way.
     */
   def semanticIngestPqByBatch(indexRoot: String, flagsOut: String,
       idCol: String, vecCol: String, centroids: DataFrame,
@@ -674,11 +694,10 @@ object IdempotentSink {
     // assign + encode in one batch-sized scan; repartition by cell for
     // one file per TOUCHED cell per batch (same listing math as the
     // plain ingest — the shuffle is batch-sized)
-    val keptCodes = Pq.encode(
+    val keptCodes = byPartition(Pq.encode(
       Similarity.ivfAssign(kept.select(col(idCol), col(vecCol)), idCol,
         vecCol, cents), vecCol, cb)
-      .select(col(idCol), col("pq_code"), col("cell"))
-      .repartition(col("cell"))
+      .select(col(idCol), col("pq_code"), col("cell")), "cell")
     graft.io.ParallelActions.run(Seq(
       () => parquetByBatch(flagsOut)(flags, batchId),
       () => indexByBatch(codeDir, "cell")(keptCodes, batchId)))

@@ -27,12 +27,7 @@ class DedupSpec extends AnyFunSuite {
   // The connected-components loops finish on the driver when the edge
   // list fits the broadcast budget; threshold -1 pins the distributed
   // rounds the loop-shape specs below are about.
-  private def withBroadcastThreshold[T](v: String)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-    try body
-    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
+  import TestConf.withBroadcastThreshold
 
   test("minhash: identical token sets collide regardless of order/dups") {
     import spark.implicits._

@@ -874,4 +874,173 @@ class PqSpec extends AnyFunSuite {
         s"query $id flipped away from the ADC verdict")
     }
   }
+
+  test("SDC and hybrid dedup flags: the driver finish (default broadcast " +
+    "budget) and the distributed plan (threshold -1) give identical rows " +
+    "and schema over seeded fixtures and degenerate inputs") {
+    import spark.implicits._
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.types._
+    import TestConf.withBroadcastThreshold
+    val dim = 8
+    def unit(raw: Array[Double]): Seq[Double] = {
+      val n = math.sqrt(raw.map(x => x * x).sum)
+      raw.map(_ / n).toSeq
+    }
+    // flag rows (sorted), schema, and whether the driver finish answered
+    def flagsIn(regime: Option[String])(f: => DataFrame)
+    : (Seq[Seq[Any]], StructType, Boolean) = {
+      def read = {
+        val df = f
+        (df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|")),
+          df.schema, df.queryExecution.analyzed.collectLeaves()
+            .forall(_.isInstanceOf[LocalRelation]))
+      }
+      regime.fold(read)(withBroadcastThreshold(_)(read))
+    }
+    // returns the driver regime's rows so callers can check coverage
+    def parity(what: String, driverFinish: Boolean)(f: => DataFrame)
+    : Seq[Seq[Any]] = {
+      val (dRows, dSchema, dLocal) = flagsIn(None)(f)
+      val (xRows, xSchema, xLocal) = flagsIn(Some("-1"))(f)
+      assert(dLocal === driverFinish, s"$what: driver finish taken")
+      assert(!xLocal, s"$what: threshold -1 must run the distributed plan")
+      assert(dSchema === xSchema, s"$what: schema")
+      assert(dRows === xRows, s"$what: rows")
+      dRows
+    }
+    for (seed <- Seq(11, 12)) {
+      val rnd = new scala.util.Random(seed)
+      val corpusRows = (0L until 240L).map(i =>
+        (i, unit(Array.fill(dim)(rnd.nextGaussian()))))
+      // near copies at spread noise levels (some keep, some drop, some
+      // straddle); half reuse their source's id so excludeSelf matters
+      val sources = rnd.shuffle(corpusRows).take(40)
+      val batchRows = sources.indices.map { i =>
+        val (src, v) = sources(i)
+        val sigma = Seq(0.02, 0.08, 0.15, 0.3)(i % 4)
+        (if (i % 2 == 0) src else 1000L + i,
+          unit(v.map(_ + sigma * rnd.nextGaussian()).toArray))
+      } ++ (0 until 8).map(i =>
+        (2000L + i, unit(Array.fill(dim)(rnd.nextGaussian()))))
+      val corpus = corpusRows.toDF("id", "vec")
+      val batch = batchRows.toDF("id", "vec")
+      val cents = Centroids(corpusRows.take(6).toDF("cid", "cvec"),
+        "cid", "cvec")
+      val cb = Pq.train(corpus, "id", "vec", m = 4, k = 16, iters = 4)
+      val dir = TestDirs.tmp(s"pq_parity_$seed").toFile.getAbsolutePath
+      Pq.ivfPqIndexWrite(corpus, "id", "vec", cents, cb, dir)
+      val index = spark.read.parquet(dir)
+      val (tauA, tauS) = Pq.calibrateTauDistBoth(corpus, "id", "vec", cb,
+        cosThreshold = 0.95)
+      def hybrid(b: DataFrame, idx: DataFrame, band: Double, refineK: Int,
+          nProbe: Int, excludeSelf: Boolean) =
+        Pq.semanticDedupFlagsPqHybrid(b, "id", "vec", idx, "id", cents,
+          cb, tauSdc = tauS, tauAdc = tauA, band = band, refineK = refineK,
+          nProbe = nProbe, excludeSelf = excludeSelf)
+      def sdc(b: DataFrame, idx: DataFrame, nProbe: Int,
+          excludeSelf: Boolean) =
+        Pq.semanticDedupFlagsPqSdc(b, "id", "vec", idx, "id", cents, cb,
+          tauDist = tauS, nProbe = nProbe, excludeSelf = excludeSelf)
+      // every value of every parameter, each in two combinations
+      val seen = Seq((true, 0.0, 1, 1), (false, 0.3, 4, 2),
+        (true, 1e9, 4, 3), (false, 1e9, 1, 2), (true, 0.3, 1, 2),
+        (false, 0.0, 4, 3)).flatMap { case (ex, band, rk, np) =>
+        parity(s"seed $seed hybrid excludeSelf=$ex band=$band " +
+          s"refineK=$rk nProbe=$np", driverFinish = true)(
+          hybrid(batch, index, band, rk, np, ex))
+      } ++ Seq((true, 1), (false, 2), (true, 3)).flatMap { case (ex, np) =>
+        parity(s"seed $seed sdc excludeSelf=$ex nProbe=$np",
+          driverFinish = true)(sdc(batch, index, np, ex))
+      }
+      assert(seen.map(_(3)).toSet === Set(true, false),
+        s"seed $seed: the sweep must both keep and drop")
+
+      // degenerate inputs, each through both ops (first seed only)
+      if (seed == 11) {
+        def both(what: String, b: DataFrame, idx: DataFrame = index,
+            driverFinish: Boolean = true): Unit = {
+          parity(s"seed $seed $what hybrid", driverFinish)(
+            hybrid(b, idx, 0.3, 4, 2, excludeSelf = true))
+          parity(s"seed $seed $what sdc", driverFinish)(
+            sdc(b, idx, 2, excludeSelf = true))
+        }
+        val nullable = StructType(Seq(StructField("id", LongType),
+          StructField("vec", ArrayType(DoubleType, containsNull = true))))
+        val withNulls = spark.createDataFrame(java.util.Arrays.asList(
+          Row(5000L, null),
+          Row(5001L, Seq[Any](0.5, null, 0.5, 0.5, 0.5, 0.5, 0.5, 0.5)),
+          Row(batchRows(0)._1, batchRows(0)._2),
+          Row(batchRows(1)._1, batchRows(1)._2)), nullable)
+        both("null vector and null element", withNulls)
+        both("duplicate id", batchRows.take(5).toDF("id", "vec")
+          .union(batchRows.take(1).toDF("id", "vec")), driverFinish = false)
+        both("empty batch", batchRows.take(0).toDF("id", "vec"))
+        both("int batch ids", batch.select(col("id").cast("int").as("id"),
+          col("vec")))
+        // an index holding only cells 0-2: probes of cells 3-5 find no rows
+        val sparseDir = TestDirs.tmp(s"pq_parity_sparse_$seed").toFile
+          .getAbsolutePath
+        Pq.ivfPqIndexWrite(Similarity.ivfAssign(corpus, "id", "vec", cents)
+          .filter(col("cell") < 3).select(col("id"), col("vec")),
+          "id", "vec", cents, cb, sparseDir)
+        both("probed cells without prior rows", batch,
+          spark.read.parquet(sparseDir))
+      }
+    }
+  }
+
+  test("SDC and hybrid dedup flags: a batch and probed slice within the " +
+    "byte budget but past the pair cap run the distributed plan, with " +
+    "the same rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import TestConf.withBroadcastThreshold
+    val dim = 8
+    val rnd = new scala.util.Random(21)
+    def unit(): Seq[Double] = {
+      val raw = Array.fill(dim)(rnd.nextGaussian())
+      val n = math.sqrt(raw.map(x => x * x).sum)
+      raw.map(_ / n).toSeq
+    }
+    val corpusRows = (0L until 400L).map(i => (i, unit()))
+    val corpus = corpusRows.toDF("id", "vec")
+    val batch = (0 until 40).map(i => (1000L + i, unit())).toDF("id", "vec")
+    val cb = Pq.train(corpus, "id", "vec", m = 4, k = 16, iters = 4)
+    val (tauA, tauS) = Pq.calibrateTauDistBoth(corpus, "id", "vec", cb,
+      cosThreshold = 0.95)
+    // 40 queries × 400 codes: 40 × (8·8+16) B of batch and 400 × (4+24) B
+    // of slice fit a 12,000 B budget, the 16,000 pairs of two crowded
+    // cells probed twice do not fit its pair cap
+    val threshold = 12000L * Pq.BudgetBytesPerPair
+    def flagsOver(nCells: Int): Seq[() => DataFrame] = {
+      val cents = Centroids(corpusRows.take(nCells).toDF("cid", "cvec"),
+        "cid", "cvec")
+      val dir = TestDirs.tmp(s"pq_pair_cap_$nCells").toFile.getAbsolutePath
+      Pq.ivfPqIndexWrite(corpus, "id", "vec", cents, cb, dir)
+      val index = spark.read.parquet(dir)
+      Seq(() => Pq.semanticDedupFlagsPqHybrid(batch, "id", "vec", index,
+        "id", cents, cb, tauSdc = tauS, tauAdc = tauA, band = 0.3,
+        refineK = 4, nProbe = 2, excludeSelf = false),
+        () => Pq.semanticDedupFlagsPqSdc(batch, "id", "vec", index, "id",
+          cents, cb, tauDist = tauS, nProbe = 2, excludeSelf = false))
+    }
+    def answer(regime: String, f: () => DataFrame) =
+      withBroadcastThreshold(regime) {
+        val df = f()
+        (df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|")),
+          df.queryExecution.analyzed.collectLeaves()
+            .forall(_.isInstanceOf[LocalRelation]))
+      }
+    for ((nCells, driverFinish) <- Seq((2, false), (40, true));
+         f <- flagsOver(nCells)) {
+      val (rows, local) = answer(threshold.toString, f)
+      assert(local === driverFinish,
+        s"$nCells cells: driver finish taken under the $threshold B budget")
+      assert(rows === answer("-1", f)._1, s"$nCells cells: rows")
+      assert(rows.size === 40)
+    }
+  }
 }

@@ -2054,4 +2054,121 @@ class StreamingSpec extends AnyFunSuite {
     assert(pqFlags === Map(1L -> true, 2L -> false),
       "batch 2 must still dedup against batch 1 across the empty batch 0")
   }
+
+  /** Two seeded micro-batches over 6 IVF cells (dim 8, PQ m=4 k=16):
+    * batch 1 holds near copies of batch 0 at spread noise levels, so
+    * its hybrid flags keep, drop and straddle. Returns the batches, the
+    * centroid frame, the codebook and the calibrated (tauAdc, tauSdc).
+    */
+  private def cellFixture(seed: Int) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    def unit(raw: Array[Double]): Seq[Double] = {
+      val n = math.sqrt(raw.map(x => x * x).sum)
+      raw.map(_ / n).toSeq
+    }
+    val b0 = (0L until 120L).map(i =>
+      (i, unit(Array.fill(8)(rnd.nextGaussian()))))
+    val b1 = (0 until 60).map { i =>
+      val sigma = Seq(0.02, 0.08, 0.15, 0.3)(i % 4)
+      (1000L + i, unit(b0(i * 2)._2.map(_ + sigma * rnd.nextGaussian())
+        .toArray))
+    }
+    val cents = b0.take(6).toDF("cid", "cvec")
+    val all = (b0 ++ b1).toDF("vec_id", "vec")
+    val cb = graft.ops.Pq.train(all, "vec_id", "vec", m = 4, k = 16,
+      iters = 4)
+    val taus = graft.ops.Pq.calibrateTauDistBoth(all, "vec_id", "vec", cb,
+      cosThreshold = 0.95)
+    (Seq(b0, b1), cents, cb, taus)
+  }
+
+  private def parquetFilesPerDir(root: String): Map[String, Int] = {
+    val rootPath = java.nio.file.Paths.get(root)
+    val files = java.nio.file.Files.walk(rootPath).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    files.groupBy(f => rootPath.relativize(f.getParent).toString)
+      .view.mapValues(_.size).toMap
+  }
+
+  test("semanticIngestPqByBatch probeMode=hybrid: the driver finish and " +
+    "the distributed probe (threshold -1) grow identical flags and code " +
+    "trees over two batches, and a driver-regime replay of batch 1 is a " +
+    "no-op") {
+    import spark.implicits._
+    import TestConf.withBroadcastThreshold
+    val (batches, cents, cb, (tauA, tauS)) = cellFixture(7)
+    def ingest(root: String, rows: Seq[(Long, Seq[Double])], b: Long) =
+      graft.streaming.IdempotentSink.semanticIngestPqByBatch(
+        s"$root/idx", s"$root/flags", "vec_id", "vec", cents, "cid",
+        "cvec", cb, tauDist = tauS, nProbe = 2, probeMode = "hybrid",
+        tauAdc = tauA, band = 0.3)(rows.toDF("vec_id", "vec"), b)
+    def trees(root: String) = (
+      spark.read.parquet(s"$root/flags")
+        .select(col("_batch").cast("long"), col("vec_id"),
+          col("neighbor_id"), col("sdc_dist"), col("keep"))
+        .as[(Long, Long, Option[Long], Option[Double], Boolean)]
+        .collect().toSet,
+      spark.read.parquet(s"$root/idx/code")
+        .select(col("_batch").cast("long"), col("cell").cast("long"),
+          col("vec_id"), col("pq_code"))
+        .as[(Long, Long, Long, Seq[Int])].collect().toSet)
+    val driver = TestDirs.tmp("hyb_regime_driver").toString
+    batches.zipWithIndex.foreach { case (rows, b) =>
+      ingest(driver, rows, b.toLong) }
+    val distributed = TestDirs.tmp("hyb_regime_dist").toString
+    withBroadcastThreshold("-1") {
+      batches.zipWithIndex.foreach { case (rows, b) =>
+        ingest(distributed, rows, b.toLong) }
+    }
+    val (flagsD, codesD) = trees(driver)
+    assert(flagsD === trees(distributed)._1,
+      "flags differ between the driver and distributed regimes")
+    assert(codesD === trees(distributed)._2,
+      "code trees differ between the driver and distributed regimes")
+    assert(flagsD.filter(_._1 == 1L).map(_._5) === Set(true, false),
+      "batch 1 must both keep and drop")
+    ingest(driver, batches(1), 1L)
+    assert(trees(driver) === ((flagsD, codesD)),
+      "a driver-regime replay of batch 1 changed the trees")
+  }
+
+  test("cell-partitioned streaming writes keep one file per (_batch, " +
+    "cell): the PQ and plain semantic ingests, and compactBatches' " +
+    "folded subtree") {
+    import spark.implicits._
+    val (batches, cents, cb, (tauA, tauS)) = cellFixture(8)
+    val pq = TestDirs.tmp("cell_files_pq").toString
+    val plain = TestDirs.tmp("cell_files_plain").toString
+    batches.zipWithIndex.foreach { case (rows, b) =>
+      val df = rows.toDF("vec_id", "vec")
+      graft.streaming.IdempotentSink.semanticIngestPqByBatch(
+        s"$pq/idx", s"$pq/flags", "vec_id", "vec", cents, "cid", "cvec",
+        cb, tauDist = tauS, nProbe = 2, probeMode = "hybrid",
+        tauAdc = tauA, band = 0.3)(df, b.toLong)
+      graft.streaming.IdempotentSink.semanticIngestByBatch(
+        s"$plain/idx", s"$plain/flags", "vec_id", "vec", cents, "cid",
+        "cvec", tau = 0.95, nProbe = 2)(df, b.toLong)
+    }
+    def assertOnePerCell(root: String, batchIds: Set[String]): Unit = {
+      val perDir = parquetFilesPerDir(root)
+      val leaf = """_batch=(\d+)/cell=\d+""".r
+      assert(perDir.keySet.forall(leaf.matches), s"$root: $perDir")
+      assert(perDir.keySet.map { case leaf(b) => b } === batchIds,
+        s"$root: $perDir")
+      assert(perDir.values.forall(_ == 1), s"$root: $perDir")
+      assert(perDir.size > batchIds.size,
+        s"$root: the fixture must touch several cells per batch")
+    }
+    assertOnePerCell(s"$pq/idx/code", Set("0", "1"))
+    assertOnePerCell(s"$plain/idx/vec", Set("0", "1"))
+    val rowsBefore = spark.read.parquet(s"$pq/idx/code").drop("_batch")
+      .as[(Long, Seq[Int], Int)].collect().toSet
+    assert(graft.streaming.IdempotentSink.compactBatches(spark,
+      s"$pq/idx/code", "cell", uptoBatch = 1L) === Seq(0L, 1L))
+    assertOnePerCell(s"$pq/idx/code", Set("0"))
+    assert(spark.read.parquet(s"$pq/idx/code").drop("_batch")
+      .as[(Long, Seq[Int], Int)].collect().toSet === rowsBefore)
+  }
 }
