@@ -15,7 +15,10 @@ import graft.model._
 object AlignerDataset {
 
   /** ASR-driven strategies ("greedy", "windowed", "verse_fuzzy"):
-    * cogroup verses with transcribed words per chapter.
+    * cogroup verses with transcribed words per chapter. The chapter's
+    * transcript is sorted into an indexed sequence once per chapter, so
+    * the cursor aligners' per-slot lookups are O(1) and each transcript
+    * word is normalized once ([[Aligners.assembleChapter]]).
     */
   def alignChapters(verses: Dataset[Verse], trans: Dataset[TranscribedWord],
       method: String): Dataset[ChapterAlignment] = {
@@ -27,7 +30,7 @@ object AlignerDataset {
           val vSorted = vs.toSeq.sortBy(_.verseNum)
           if (vSorted.isEmpty) Iterator.empty
           else Iterator(Aligners.assembleChapter(book, chapter, method,
-            vSorted, ts.toSeq.sortBy(_.seq), 0.0))
+            vSorted, ts.toVector.sortBy(_.seq), 0.0))
       }
   }
 

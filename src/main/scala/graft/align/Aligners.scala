@@ -34,6 +34,16 @@ object Aligners {
       trans.map(_.end).max)
   }
 
+  /** The transcript as an indexed sequence and its words' match keys,
+    * each normalized once: the cursor aligners index both per verse
+    * word and window slot, which on a `List` would re-walk the list.
+    */
+  private def indexed(trans: Seq[TranscribedWord])
+  : (IndexedSeq[TranscribedWord], Array[String]) = {
+    val words = trans.toIndexedSeq
+    (words, words.iterator.map(t => HebrewNorm.normalize(t.text)).toArray)
+  }
+
   /** Greedy cursor-merge alignment (hebrew_alignment_tool.py:335-397):
     * sequential 1:1, threshold 0.7 on normalized `ratio`, cursor advances
     * only on match; unmatched words get 0.5-s estimated slots at
@@ -43,19 +53,19 @@ object Aligners {
     */
   def alignGreedy(verses: Seq[Verse], trans: Seq[TranscribedWord])
   : Seq[AlignedVerse] = {
+    val (words, norm) = indexed(trans)
     var ti = 0
     verses.map { v =>
       val out = new ArrayBuffer[AlignedWord](v.words.size)
       var vStart: Option[Double] = None
       var vEnd: Option[Double] = None
       v.words.foreach { ref =>
-        val matched = ti < trans.size && {
-          val sim = Fuzzy.ratio(HebrewNorm.normalize(ref),
-            HebrewNorm.normalize(trans(ti).text)) / 100.0
+        val matched = ti < words.size && {
+          val sim = Fuzzy.ratio(HebrewNorm.normalize(ref), norm(ti)) / 100.0
           sim >= 0.7
         }
         if (matched) {
-          val t = trans(ti)
+          val t = words(ti)
           out += AlignedWord(ref, t.start, t.end, t.confidence)
           if (vStart.isEmpty) vStart = Some(t.start)
           vEnd = Some(t.end)
@@ -80,6 +90,7 @@ object Aligners {
     */
   def alignWindowed(verses: Seq[Verse], trans: Seq[TranscribedWord])
   : Seq[AlignedVerse] = {
+    val (words, norm) = indexed(trans)
     var ti = 0
     verses.map { v =>
       val out = new ArrayBuffer[AlignedWord](v.words.size)
@@ -90,13 +101,12 @@ object Aligners {
         var bestSim = 0.0
         var bestIdx = ti
         var bestMatch: Option[TranscribedWord] = None
-        val window = math.min(trans.size, ti + 5)
+        val window = math.min(words.size, ti + 5)
         var i = ti
         while (i < window) {
-          val sim = Fuzzy.bestSimilarity(normRef,
-            HebrewNorm.normalize(trans(i).text))
+          val sim = Fuzzy.bestSimilarity(normRef, norm(i))
           if (sim > bestSim) {
-            bestSim = sim; bestMatch = Some(trans(i)); bestIdx = i
+            bestSim = sim; bestMatch = Some(words(i)); bestIdx = i
           }
           i += 1
         }
@@ -214,29 +224,31 @@ object Aligners {
 
   /** Chapter assembly (hebrew_alignment_tool.py:417-464 output_data):
     * rollup from the transcription for ASR strategies; fixed
-    * low-confidence metadata for the estimation strategies.
+    * low-confidence metadata for the estimation strategies. The
+    * transcript is indexed once here, whatever `Seq` the caller passes.
     */
   def assembleChapter(book: String, chapter: Int, method: String,
       verses: Seq[Verse], trans: Seq[TranscribedWord],
       duration: Double): ChapterAlignment = {
+    val words = trans.toIndexedSeq
     val aligned = method match {
-      case "greedy" => alignGreedy(verses, trans)
-      case "windowed" => alignWindowed(verses, trans)
+      case "greedy" => alignGreedy(verses, words)
+      case "windowed" => alignWindowed(verses, words)
       case "estimated" => alignEstimatedUniform(verses, duration)
       case "density" => alignEstimatedDensity(verses, duration)
-      case "verse_fuzzy" => alignVerseFuzzy(verses, trans)
+      case "verse_fuzzy" => alignVerseFuzzy(verses, words)
       case other =>
         throw new IllegalArgumentException(s"unknown strategy: $other")
     }
     val (conf, dur) = method match {
-      case "greedy" | "windowed" => transcriptionRollup(trans)
+      case "greedy" | "windowed" => transcriptionRollup(words)
       case "verse_fuzzy" =>
         val avg = if (aligned.isEmpty) 0.0
           else aligned.map(_.confidence).sum / aligned.size
-        (round2(avg), round2(if (trans.isEmpty) 0.0 else trans.map(_.end).max))
+        (round2(avg), round2(if (words.isEmpty) 0.0 else words.map(_.end).max))
       case _ => (0.1, round2(duration))
     }
     ChapterAlignment(book, chapter, dur, conf, aligned.size, method,
-      trans.size, aligned)
+      words.size, aligned)
   }
 }

@@ -31,91 +31,141 @@ object Fuzzy {
     // the greedy aligner's common case); larger: bit-parallel wins ~2.6×
     // at verse length and grows with |s|.
     if (n.toLong * l.length <= 512) lcsLengthDp(s, l)
-    else if (n <= 64) lcsBitParallel1(s, l)
-    else lcsBitParallelK(s, l)
+    else if (n <= 64) {
+      val pm = matchMasks(s, l)
+      val top = topMask(n)
+      var r = 0L
+      var p = 0
+      while (p < l.length) { r = step1(r, pm(p), top); p += 1 }
+      java.lang.Long.bitCount(r)
+    } else {
+      val k = new BlockLcs(s, l)
+      var p = 0
+      while (p < l.length) { k.step(k.masks, k.row(p)); p += 1 }
+      k.lcs()
+    }
   }
 
-  /** Single-word bit-parallel LCS: R = x & ~(x − ((R<<1)|1)), x = M|R. */
-  private def lcsBitParallel1(s: CharSequence, l: CharSequence): Int = {
-    val n = s.length
-    val masks = new java.util.HashMap[Character, java.lang.Long](n * 2)
-    var j = 0
-    while (j < n) {
-      val c = s.charAt(j)
-      val prev = masks.get(c)
-      masks.put(c, (if (prev == null) 0L else prev.longValue) | (1L << j))
-      j += 1
-    }
-    var r = 0L
-    var i = 0
-    while (i < l.length) {
-      val m = masks.get(l.charAt(i))
-      if (m != null) {
-        val x = m.longValue | r
-        r = x & ~(x - ((r << 1) | 1L))
-        // mask out bits beyond n (j < 64 shifts never overflow here)
-        if (n < 64) r &= (1L << n) - 1
-      }
-      i += 1
-    }
-    java.lang.Long.bitCount(r)
-  }
-
-  /** Multi-word variant: 64-char blocks with carry (shift) and borrow
-    * (subtract) propagation.
+  /** One single-word step: R' = x & ~(x − ((R<<1)|1)), x = M|R, cut to
+    * the needle's `top` bits.
     */
-  private def lcsBitParallelK(s: CharSequence, l: CharSequence): Int = {
-    val n = s.length
-    val k = (n + 63) >>> 6
-    val masks = new java.util.HashMap[Character, Array[Long]](n * 2)
-    var j = 0
-    while (j < n) {
-      val c = s.charAt(j)
-      var m = masks.get(c)
-      if (m == null) { m = new Array[Long](k); masks.put(c, m) }
-      m(j >>> 6) |= 1L << (j & 63)
-      j += 1
+  private def step1(r: Long, m: Long, top: Long): Long = {
+    val x = m | r
+    (x & ~(x - ((r << 1) | 1L))) & top
+  }
+
+  private def topMask(n: Int): Long =
+    if ((n & 63) == 0) -1L else (1L << (n & 63)) - 1
+
+  /** Ids 1..d for the d distinct chars of `s` (0 = not in `s`) in an
+    * open-addressed table at most half full, probed linearly.
+    */
+  private final class CharIds(s: CharSequence) {
+    private val slots = {
+      var c = 8
+      while (c < 2 * s.length) c <<= 1
+      c
     }
-    val r = new Array[Long](k)
-    val x = new Array[Long](k)
-    val sub = new Array[Long](k)
-    val topMask = if ((n & 63) == 0) -1L else (1L << (n & 63)) - 1
-    var i = 0
-    while (i < l.length) {
-      val m = masks.get(l.charAt(i))
-      if (m != null) {
-        // x = M | R ; y = (R << 1) | 1 with inter-block carry
-        var carry = 1L
-        var borrow = 0L
-        var blk = 0
-        while (blk < k) {
-          x(blk) = m(blk) | r(blk)
-          val shifted = (r(blk) << 1) | carry
-          carry = r(blk) >>> 63
-          // sub = x - shifted - borrow (borrow-propagating)
-          val d1 = x(blk) - shifted
-          val b1 = if (java.lang.Long.compareUnsigned(x(blk), shifted) < 0) 1L
-            else 0L
-          val d2 = d1 - borrow
-          val b2 = if (borrow == 1L &&
-            java.lang.Long.compareUnsigned(d1, borrow) < 0) 1L else 0L
-          sub(blk) = d2
-          borrow = b1 | b2
-          blk += 1
-        }
-        blk = 0
-        while (blk < k) {
-          r(blk) = x(blk) & ~sub(blk)
-          blk += 1
-        }
-        r(k - 1) &= topMask
+    private val keys = new Array[Char](slots)
+    private val ids = new Array[Int](slots)
+    var distinct = 0
+    /** The id of each position of `s`. */
+    val ofNeedle: Array[Int] = {
+      val out = new Array[Int](s.length)
+      var j = 0
+      while (j < s.length) {
+        val c = s.charAt(j)
+        val h = slot(c)
+        if (ids(h) == 0) { distinct += 1; keys(h) = c; ids(h) = distinct }
+        out(j) = ids(h)
+        j += 1
       }
-      i += 1
+      out
     }
-    var total = 0
-    var blk = 0
-    while (blk < k) { total += java.lang.Long.bitCount(r(blk)); blk += 1 }
-    total
+    private def slot(c: Char): Int = {
+      var h = c & (slots - 1)
+      while (ids(h) != 0 && keys(h) != c) h = (h + 1) & (slots - 1)
+      h
+    }
+    /** The id of each position of `text`. */
+    def of(text: CharSequence): Array[Int] = {
+      val out = new Array[Int](text.length)
+      var p = 0
+      while (p < text.length) { out(p) = ids(slot(text.charAt(p))); p += 1 }
+      out
+    }
+  }
+
+  /** |s| ≤ 64: `pm(p)` is the mask of the positions of s holding l(p). */
+  private def matchMasks(s: CharSequence, l: CharSequence): Array[Long] = {
+    val ids = new CharIds(s)
+    val masks = new Array[Long](ids.distinct + 1)
+    var j = 0
+    while (j < s.length) { masks(ids.ofNeedle(j)) |= 1L << j; j += 1 }
+    val lIds = ids.of(l)
+    val pm = new Array[Long](l.length)
+    var p = 0
+    while (p < l.length) { pm(p) = masks(lIds(p)); p += 1 }
+    pm
+  }
+
+  /** |s| > 64: `masks` and `rev` hold ⌈|s|/64⌉ words per char id (id 0
+    * is the all-zero row) for s and for s reversed, `row(p)` is the row
+    * offset of l(p), and `r` the recurrence state, reused by every run.
+    */
+  private final class BlockLcs(s: CharSequence, l: CharSequence) {
+    private val n = s.length
+    private val w = (n + 63) >>> 6
+    private val top = topMask(n)
+    private val ids = new CharIds(s)
+    val masks: Array[Long] = rows(j => j)
+    lazy val rev: Array[Long] = rows(j => n - 1 - j)
+    private def rows(bit: Int => Int): Array[Long] = {
+      val out = new Array[Long]((ids.distinct + 1) * w)
+      var j = 0
+      while (j < n) {
+        val q = bit(j)
+        out(ids.ofNeedle(j) * w + (q >>> 6)) |= 1L << (q & 63)
+        j += 1
+      }
+      out
+    }
+    val row: Array[Int] = {
+      val out = ids.of(l)
+      var p = 0
+      while (p < out.length) { out(p) *= w; p += 1 }
+      out
+    }
+    private val r = new Array[Long](w)
+
+    def reset(): Unit = java.util.Arrays.fill(r, 0L)
+
+    /** One step over all words, the shift carry and the subtraction
+      * borrow chained from the low word up.
+      */
+    def step(m: Array[Long], off: Int): Unit = {
+      var carry = 1L
+      var borrow = 0L
+      var b = 0
+      while (b < w) {
+        val rb = r(b)
+        val x = m(off + b) | rb
+        val y = (rb << 1) | carry
+        carry = rb >>> 63
+        val d = x - y - borrow
+        borrow = ((~x & y) | (~(x ^ y) & d)) >>> 63
+        r(b) = x & ~d
+        b += 1
+      }
+      r(w - 1) &= top
+    }
+
+    def lcs(): Int = {
+      var c = 0
+      var b = 0
+      while (b < w) { c += java.lang.Long.bitCount(r(b)); b += 1 }
+      c
+    }
   }
 
   /** Reference two-row DP — retained as the property-test oracle for the
@@ -163,74 +213,119 @@ object Fuzzy {
     * past both ends (partial_ratio("ab","ba") ≈ 66.7, not 50), so there
     * is no discontinuity between |l| = |s| and |l| = |s|+1.
     *
-    * Shorter string ≤ 64 chars (the common case — words and verses):
-    * match masks build ONCE and every interior window runs the
-    * single-word bit-parallel recurrence with zero allocation; the
-    * per-window cost is |s| word ops, so the whole scan is
-    * O((|l|−|s|)·|s|/64) words. Boundary windows cost O(|s|²/64) total.
+    * One call maps every position of l to the match masks of s once (an
+    * open-addressed char table, no boxing), so the window loops only
+    * index arrays. Each scored interior window restarts the bit-parallel
+    * LCS recurrence: |s| steps of one machine word when |s| ≤ 64, of
+    * ⌈|s|/64⌉ words with carry/borrow chains beyond (one reused state
+    * array). Windows that cannot beat the best one are skipped by an
+    * exact bound ([[maxWindowLcs]]). The boundary windows cost two
+    * sweeps of |s|−1 steps: a prefix sweep of l, read after every step,
+    * and a suffix sweep that reads l backwards against the masks of s
+    * reversed. Allocation is O(|s| + |l|) per call, none per window.
+    * Interior scores are `100·(2·lcs)/(2·|s|)`, boundary scores
+    * `200·lcs/(|s|+k)` — the arithmetic of `ratio` on the same windows,
+    * so the doubles are the ones a window-by-window `ratio` scan gives.
     */
   def partialRatio(a: String, b: String): Double = {
     val (s, l) = if (a.length <= b.length) (a, b) else (b, a)
     if (s.isEmpty) return if (l.isEmpty) 100.0 else 0.0
-    val interior =
-      if (s.length <= 64) partialRatioBitParallel(s, l)
-      else {
-        var best = 0.0
-        var i = 0
-        val last = l.length - s.length
-        while (i <= last && best < 100.0) {
-          val w = l.substring(i, i + s.length)
-          val r = ratio(s, w)
-          if (r > best) best = r
-          i += 1
-        }
-        best
+    if (s.length <= 64) partialRatio1(s, l) else partialRatioK(s, l)
+  }
+
+  /** max of `lcsAt(i)`, the LCS of the needle (length n) and the window
+    * of the haystack at i, over i in [0, last]. Neighbouring windows
+    * share all but one char at each end, so their LCS differ by at most
+    * one, and lcs(i) ≤ lcs(j) + |i − j| for any window j. A coarse pass
+    * every n/2 windows sets the best-so-far B; between two coarse
+    * windows a window is scored only while the nearest scored windows
+    * on both sides could still reach past B. Every skipped window is
+    * bounded by B, so the max is exact; when the needle occurs in the
+    * haystack, B is near n after the coarse pass and the scan scores a
+    * few windows per gap, not every window.
+    */
+  private def maxWindowLcs(last: Int, n: Int, lcsAt: Int => Int): Int = {
+    val stride = math.max(1, n / 2)
+    val at = new Array[Int](last / stride + 2)
+    var q = 0
+    var best = 0
+    while (q * stride < last && best < n) {
+      at(q) = lcsAt(q * stride)
+      best = math.max(best, at(q))
+      q += 1
+    }
+    val coarse = q // windows 0, stride, ..., (coarse − 1)·stride, then last
+    if (best < n) { at(coarse) = lcsAt(last); best = math.max(best, at(coarse)) }
+    q = 0
+    while (q < coarse && best < n) {
+      val right = if (q + 1 == coarse) last else (q + 1) * stride
+      var i = q * stride + (best - at(q)) + 1
+      while (best < n && i < right - (best - at(q + 1))) {
+        val c = lcsAt(i)
+        best = math.max(best, c)
+        i += (best - c) + 1
       }
-    if (interior >= 100.0) return 100.0
-    // truncated boundary alignments: s sliding off either end of l
-    var best = interior
-    var k = 1
-    while (k < s.length) {
-      val pre = ratio(s, l.substring(0, k)) // s overlapping l's start
-      if (pre > best) best = pre
-      val suf = ratio(s, l.substring(l.length - k)) // ... l's end
-      if (suf > best) best = suf
-      k += 1
+      q += 1
     }
     best
   }
 
-  private def partialRatioBitParallel(s: String, l: String): Double = {
+  private def partialRatio1(s: String, l: String): Double = {
     val n = s.length
-    val masks = new java.util.HashMap[Character, java.lang.Long](n * 2)
-    var j = 0
+    val pm = matchMasks(s, l)
+    val top = topMask(n)
+    val best = maxWindowLcs(l.length - n, n, { i =>
+      var r = 0L
+      var p = i
+      while (p < i + n) { r = step1(r, pm(p), top); p += 1 }
+      java.lang.Long.bitCount(r)
+    })
+    if (best == n) return 100.0
+    var out = 100.0 * (2 * best) / (2 * n)
+    // boundary windows: after k steps the prefix sweep holds
+    // LCS(s, l[0, k)) and the suffix sweep, over the masks of s
+    // reversed, LCS(s, l[|l|−k, |l|))
+    var pre = 0L
+    var suf = 0L
+    var k = 1
+    while (k < n) {
+      pre = step1(pre, pm(k - 1), top)
+      suf = step1(suf,
+        java.lang.Long.reverse(pm(l.length - k)) >>> (64 - n), top)
+      out = math.max(out, 200.0 * java.lang.Long.bitCount(pre) / (n + k))
+      out = math.max(out, 200.0 * java.lang.Long.bitCount(suf) / (n + k))
+      k += 1
+    }
+    out
+  }
+
+  private def partialRatioK(s: String, l: String): Double = {
+    val n = s.length
+    val k = new BlockLcs(s, l)
+    val best = maxWindowLcs(l.length - n, n, { i =>
+      k.reset()
+      var p = i
+      while (p < i + n) { k.step(k.masks, k.row(p)); p += 1 }
+      k.lcs()
+    })
+    if (best == n) return 100.0
+    var out = 100.0 * (2 * best) / (2 * n)
+    k.reset()
+    var j = 1
     while (j < n) {
-      val c = s.charAt(j)
-      val prev = masks.get(c)
-      masks.put(c, (if (prev == null) 0L else prev.longValue) | (1L << j))
+      k.step(k.masks, k.row(j - 1))
+      out = math.max(out, 200.0 * k.lcs() / (n + j))
       j += 1
     }
-    val topMask = if (n == 64) -1L else (1L << n) - 1
-    var best = 0
-    var i = 0
-    val last = l.length - n
-    while (i <= last && best < n) {
-      var r = 0L
-      var k = i
-      val end = i + n
-      while (k < end) {
-        val m = masks.get(l.charAt(k))
-        if (m != null) {
-          val x = m.longValue | r
-          r = (x & ~(x - ((r << 1) | 1L))) & topMask
-        }
-        k += 1
-      }
-      val lcs = java.lang.Long.bitCount(r)
-      if (lcs > best) best = lcs
-      i += 1
+    k.reset()
+    val rev = k.rev
+    j = 1
+    while (j < n) {
+      k.step(rev, k.row(l.length - j))
+      out = math.max(out, 200.0 * k.lcs() / (n + j))
+      j += 1
     }
-    100.0 * (2 * best) / (2 * n) // ratio of two n-length windows
+    out
   }
 
   private def sortedTokens(s: String): Array[String] =

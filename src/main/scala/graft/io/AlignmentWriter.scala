@@ -12,8 +12,9 @@ import graft.model.ChapterAlignment
   *
   * Timestamps are caller-provided (deterministic outputs — no wall clock,
   * SURVEY.md §7.4 risk 3). The write is partitioned by book, mirroring the
-  * reference's per-book directories; Spark's FileOutputCommitter provides
-  * the tmp+rename atomicity the reference hand-rolled (S7).
+  * reference's per-book directories, one part file per book; Spark's
+  * FileOutputCommitter provides the tmp+rename atomicity the reference
+  * hand-rolled (S7).
   */
 object AlignmentWriter {
 
@@ -50,9 +51,21 @@ object AlignmentWriter {
 
   /** Write per-book JSON directories (UTF-8 by default in Spark —
     * nikkud survives; the reference's biggest bug class, §7.4 risk 6).
+    *
+    * Layout: ONE part file per `book=` directory. The rows are
+    * hash-clustered by book before the partitioned write, so each book
+    * is written by one task; without it every task that holds a chapter
+    * of a book opens a file in that book's directory (159 part files
+    * for the 39 books of the Tanakh over the aligner's partitions
+    * instead of 39). A created file costs far more than its rows: a
+    * `.crc` sidecar, a task attempt directory to commit, and on a local
+    * file system without Hadoop's native library a forked `chmod`
+    * process per file and directory. The clustering is one shuffle of
+    * the output rows; the rows written are the same.
     */
   def write(ds: Dataset[ChapterAlignment], path: String,
       compat: Boolean = false, processingTimestamp: Long = 0L): Unit =
     toOutputDF(ds, compat, processingTimestamp)
+      .repartition(col("book"))
       .write.mode("overwrite").partitionBy("book").json(path)
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Idempotent `foreachBatch` sink: exactly-once for targets WITHOUT a
@@ -664,7 +665,7 @@ object IdempotentSink {
     // pruning, at zero jobs; the fast path below produces the identical
     // all-keep flags the empty-prior probe would.
     val scoreCol = if (probeMode == "adc") "adc_dist" else "sdc_dist"
-    val flags = (if (graft.io.FsUtil.hasBatchDataBelow(fs, p, batchId)) {
+    val probed = if (graft.io.FsUtil.hasBatchDataBelow(fs, p, batchId)) {
       val prior = spark.read.parquet(codeDir)
         .filter(col("_batch").cast("long") < batchId).drop("_batch")
       probeMode match {
@@ -685,11 +686,16 @@ object IdempotentSink {
       // first batch with data: no prior — everything keeps, no search
       df.select(col(idCol),
         lit(null).cast(df.schema(idCol).dataType).as("neighbor_id"),
-        lit(null).cast("double").as(scoreCol), lit(true).as("keep")))
-      // EAGER batch-sized checkpoint, then the two disjoint-tree writes
-      // overlap — same §2.6 shape and crash analysis as the plain
-      // ingest's
-      .localCheckpoint()
+        lit(null).cast("double").as(scoreCol), lit(true).as("keep"))
+    // EAGER batch-sized checkpoint, then the two disjoint-tree writes
+    // overlap — same §2.6 shape and crash analysis as the plain
+    // ingest's. Flags the driver finish already holds (a plan over
+    // local relations only) are not computed again by either write, so
+    // they skip the checkpoint's job.
+    val flags =
+      if (probed.queryExecution.analyzed.collectLeaves()
+          .forall(_.isInstanceOf[LocalRelation])) probed
+      else probed.localCheckpoint()
     val kept = df.join(flags.filter(col("keep")).select(idCol), Seq(idCol))
     // assign + encode in one batch-sized scan; repartition by cell for
     // one file per TOUCHED cell per batch (same listing math as the

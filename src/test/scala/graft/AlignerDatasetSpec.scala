@@ -78,4 +78,34 @@ class AlignerDatasetSpec extends AnyFunSuite {
       .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
     assert(wordsField.fieldNames.contains("word"))
   }
+
+  test("writer: one part file per book directory, rows read back equal") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.align.Aligners
+    val chapters = for (book <- Seq("Gen", "Exo", "Rut"); c <- 1 to 8)
+      yield Aligners.assembleChapter(book, c, "density",
+        (1 to 3).map(v => Verse.fromWords(book, c, v,
+          Seq("בְּרֵאשִׁית", s"w$c$v"))), Seq.empty, 10.0 + c)
+    // every book's chapters spread over four input partitions
+    val aligned = chapters.toDS().repartition(4, col("chapter"))
+    val dir = TestDirs.tmp("align_books").resolve("out").toString
+    AlignmentWriter.write(aligned, dir)
+    val bookDirs = Files.list(java.nio.file.Paths.get(dir)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("book="))
+    assert(bookDirs.map(_.getFileName.toString).sorted.toSeq ==
+      Seq("book=Exo", "book=Gen", "book=Rut"))
+    bookDirs.foreach { d =>
+      val parts = Files.list(d).toArray.map(_.toString)
+        .filter(_.split('/').last.startsWith("part-"))
+      assert(parts.length == 1, s"$d holds ${parts.mkString(", ")}")
+    }
+    val expected = AlignmentWriter.toOutputDF(aligned)
+    val back = spark.read.schema(expected.schema).json(dir)
+      .select(expected.columns.map(col).toSeq: _*)
+    def sorted(rows: Array[org.apache.spark.sql.Row]) =
+      rows.sortBy(r => (r.getString(0), r.getInt(1))).toSeq
+    assert(sorted(back.collect()) == sorted(expected.collect()))
+  }
 }

@@ -144,4 +144,87 @@ class AlignersSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("assembleChapter: List and Vector transcripts give equal chapters") {
+    val rnd = new scala.util.Random(11)
+    val letters = "אבגדהוזחטיכלמנסעפצקרשת"
+    val marks = "\u05B0\u05B4\u05B7\u05B8\u05BC"
+    def pointedWord() = (1 to (1 + rnd.nextInt(6))).map { _ =>
+      letters(rnd.nextInt(letters.length)).toString +
+        (if (rnd.nextBoolean()) marks(rnd.nextInt(marks.length)) else "")
+    }.mkString
+    (1 to 40).foreach { _ =>
+      val vs = (1 to (1 + rnd.nextInt(6))).map(i =>
+        Verse.fromWords("Gen", 1, i,
+          (1 to (1 + rnd.nextInt(9))).map(_ => pointedWord())))
+      // a noisy transcript: dropped, respelled and inserted words
+      var t = 0.0
+      val ts = vs.flatMap(_.words).flatMap { w =>
+        val drawn = rnd.nextInt(10) match {
+          case 0 => Seq.empty
+          case 1 => Seq(w.dropRight(1), pointedWord())
+          case _ => Seq(w)
+        }
+        drawn.map { text => t += 0.3 + rnd.nextDouble(); text }
+          .map(text => (text, t))
+      }.zipWithIndex.map { case ((text, at), i) =>
+        tw(i + 1, text, at, at + 0.25, 0.5 + rnd.nextDouble() / 2)
+      }
+      for (method <- Seq("windowed", "greedy")) {
+        val fromList = Aligners.assembleChapter("Gen", 1, method, vs,
+          ts.toList, 0.0)
+        assert(fromList == Aligners.assembleChapter("Gen", 1, method, vs,
+          ts.toVector, 0.0), method)
+        assert(fromList.transcribedWordCount == ts.size)
+      }
+    }
+  }
+
+  test("assembleChapter: golden windowed and greedy chapter") {
+    val vs = Seq(
+      Verse.fromWords("Gen", 1, 1, Seq("בְּרֵאשִׁית", "בָּרָא", "אֱלֹהִים",
+        "אֵת", "הַשָּׁמַיִם", "וְאֵת", "הָאָרֶץ")),
+      Verse.fromWords("Gen", 1, 2, Seq("וְהָאָרֶץ", "הָיְתָה", "תֹהוּ",
+        "וָבֹהוּ", "וְחֹשֶׁךְ", "עַל", "פְּנֵי", "תְהוֹם")))
+    val trans = List(
+      tw(1, "בראשית", 0.0, 0.6, 0.91), tw(2, "בראא", 0.62, 1.0, 0.8),
+      tw(3, "אלוהים", 1.05, 1.6, 0.85), tw(4, "רעש", 1.6, 1.8, 0.5),
+      tw(5, "את", 1.8, 2.0, 0.95), tw(6, "הַשָּׁמַיִם", 2.0, 2.7, 0.9),
+      tw(7, "הארץ", 2.8, 3.3, 0.7), tw(8, "והארץ", 3.4, 3.9, 0.88),
+      tw(9, "היתה", 3.9, 4.3, 0.9), tw(10, "תהו", 4.3, 4.7, 0.6),
+      tw(11, "ובהו", 4.7, 5.1, 0.77), tw(12, "וחושך", 5.1, 5.6, 0.83),
+      tw(13, "על", 5.6, 5.8, 0.9), tw(14, "פני", 5.8, 6.1, 0.9),
+      tw(15, "תהום", 6.1, 6.6, 0.92))
+    def words(ch: ChapterAlignment) =
+      ch.verses.map(_.words.map(w => (w.start, w.end, w.confidence)))
+    // pinned from the aligners before they indexed the transcript
+    val windowed = Aligners.assembleChapter("Gen", 1, "windowed", vs,
+      trans, 0.0)
+    assert(windowed.totalDuration == 6.6)
+    assert(windowed.overallConfidence == 0.8206666666666667)
+    assert(windowed.transcribedWordCount == 15 && windowed.verseCount == 2)
+    assert(windowed.verses.map(v => (v.start, v.end)) ==
+      Seq((0.0, 4.3), (4.7, 9.000000000000002)))
+    assert(words(windowed) == Seq(
+      Seq((0.0, 0.6, 0.91), (0.62, 1.0, 0.8),
+        (1.05, 1.6, 0.7727272727272727), (1.8, 2.0, 0.95), (2.0, 2.7, 0.9),
+        (3.4, 3.9, 0.5866666666666668), (3.9, 4.3, 0.1)),
+      Seq((4.7, 5.1, 0.5133333333333334), (6.1, 6.6, 0.6133333333333334),
+        (6.6, 7.0, 0.1), (7.0, 7.4, 0.1), (7.4, 7.800000000000001, 0.1),
+        (7.800000000000001, 8.200000000000001, 0.1),
+        (8.200000000000001, 8.600000000000001, 0.1),
+        (8.600000000000001, 9.000000000000002, 0.1))))
+    val greedy = Aligners.assembleChapter("Gen", 1, "greedy", vs, trans,
+      0.0)
+    assert(greedy.totalDuration == 6.6)
+    assert(greedy.overallConfidence == 0.8206666666666667)
+    assert(greedy.verses.map(v => (v.start, v.end)) ==
+      Seq((0.0, 3.6), (0.0, 4.0)))
+    assert(words(greedy) == Seq(
+      Seq((0.0, 0.6, 0.91), (0.62, 1.0, 0.8), (1.05, 1.6, 0.85),
+        (1.6, 2.1, 0.1), (2.1, 2.6, 0.1), (2.6, 3.1, 0.1), (3.1, 3.6, 0.1)),
+      (0 until 8).map(i => (i * 0.5, i * 0.5 + 0.5, 0.1))))
+    assert(Seq(windowed, greedy).forall(_.verses.map(_.words.map(_.text)) ==
+      vs.map(_.words)))
+  }
 }

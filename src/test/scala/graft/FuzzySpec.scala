@@ -79,17 +79,21 @@ class FuzzySpec extends AnyFunSuite {
     assert(Fuzzy.partialRatio("ab", "ba") == 200.0 * 1 / 3)
   }
 
+  /** partial_ratio by definition: the DP ratio of the shorter string
+    * against every interior and truncated boundary window.
+    */
+  private def naive(a: String, b: String): Double = {
+    val (s, l) = if (a.length <= b.length) (a, b) else (b, a)
+    if (s.isEmpty) return if (l.isEmpty) 100.0 else 0.0
+    val windows =
+      (0 to l.length - s.length).map(i => l.substring(i, i + s.length)) ++
+        (1 until s.length).flatMap(k =>
+          Seq(l.substring(0, k), l.substring(l.length - k)))
+    windows.map(w =>
+      200.0 * Fuzzy.lcsLengthDp(s, w) / (s.length + w.length)).max
+  }
+
   test("bit-parallel partialRatio equals naive windowed-DP oracle") {
-    def naive(a: String, b: String): Double = {
-      val (s, l) = if (a.length <= b.length) (a, b) else (b, a)
-      if (s.isEmpty) return if (l.isEmpty) 100.0 else 0.0
-      val windows =
-        (0 to l.length - s.length).map(i => l.substring(i, i + s.length)) ++
-          (1 until s.length).flatMap(k =>
-            Seq(l.substring(0, k), l.substring(l.length - k)))
-      windows.map(w =>
-        200.0 * Fuzzy.lcsLengthDp(s, w) / (s.length + w.length)).max
-    }
     val rnd = new scala.util.Random(123)
     for (alpha <- Seq("ab", "אבגד", "abcdefgh"); _ <- 1 to 80) {
       val a = (1 to 1 + rnd.nextInt(60))
@@ -107,6 +111,35 @@ class FuzzySpec extends AnyFunSuite {
       val b = (1 to 130 + rnd.nextInt(80)).map(_ => "abcd"(rnd.nextInt(4)))
         .mkString
       assert(Fuzzy.partialRatio(a, b) == naive(a, b))
+    }
+  }
+
+  test("partialRatio equals the oracle at block edges, equal lengths, " +
+    "short haystacks, repeated chars and planted copies") {
+    val rnd = new scala.util.Random(2024)
+    val pointed = "אבגדהוזחטיכלמנסעפצקרשת" + "\u05B0\u05B4\u05B7\u05B8\u05BC" + " "
+    val alphabets = Seq(pointed, "abcdefgh ", "a", "aab")
+    def draw(alpha: String, len: Int) =
+      (1 to len).map(_ => alpha(rnd.nextInt(alpha.length))).mkString
+    for (n <- Seq(1, 2, 63, 64, 65, 130); alpha <- alphabets) {
+      val s = draw(alpha, n)
+      // equal length, shorter than 2n, and longer haystacks
+      for (m <- Seq(n, n + 1, 2 * n - 1, 2 * n + 5, 3 * n + 7)) {
+        val l = draw(alpha, m)
+        assert(Fuzzy.partialRatio(s, l) == naive(s, l),
+          s"n=$n m=$m s=$s l=$l")
+        assert(Fuzzy.partialRatio(l, s) == naive(l, s),
+          s"swapped n=$n m=$m s=$s l=$l")
+      }
+      // a noisy copy of s planted in the haystack: the best window scores
+      // far above the rest, the case the skipped-window bound prunes
+      val noisy = s.map(c =>
+        if (rnd.nextInt(6) == 0) alpha(rnd.nextInt(alpha.length)) else c)
+      for (pre <- Seq(0, n / 3, 2 * n + 1)) {
+        val l = draw(alpha, pre) + noisy + draw(alpha, 2 * n - pre % n)
+        assert(Fuzzy.partialRatio(s, l) == naive(s, l),
+          s"planted n=$n pre=$pre s=$s l=$l")
+      }
     }
   }
 
