@@ -15,10 +15,8 @@ import graft.model._
 object AlignerDataset {
 
   /** ASR-driven strategies ("greedy", "windowed", "verse_fuzzy"):
-    * cogroup verses with transcribed words per chapter. The chapter's
-    * transcript is sorted into an indexed sequence once per chapter, so
-    * the cursor aligners' per-slot lookups are O(1) and each transcript
-    * word is normalized once ([[Aligners.assembleChapter]]).
+    * cogroup verses with transcribed words per chapter. The cursor
+    * aligners index and normalize each chapter's transcript once.
     */
   def alignChapters(verses: Dataset[Verse], trans: Dataset[TranscribedWord],
       method: String): Dataset[ChapterAlignment] = {
@@ -30,7 +28,7 @@ object AlignerDataset {
           val vSorted = vs.toSeq.sortBy(_.verseNum)
           if (vSorted.isEmpty) Iterator.empty
           else Iterator(Aligners.assembleChapter(book, chapter, method,
-            vSorted, ts.toVector.sortBy(_.seq), 0.0))
+            vSorted, ts.toSeq.sortBy(_.seq), 0.0))
       }
   }
 

@@ -224,31 +224,29 @@ object Aligners {
 
   /** Chapter assembly (hebrew_alignment_tool.py:417-464 output_data):
     * rollup from the transcription for ASR strategies; fixed
-    * low-confidence metadata for the estimation strategies. The
-    * transcript is indexed once here, whatever `Seq` the caller passes.
+    * low-confidence metadata for the estimation strategies.
     */
   def assembleChapter(book: String, chapter: Int, method: String,
       verses: Seq[Verse], trans: Seq[TranscribedWord],
       duration: Double): ChapterAlignment = {
-    val words = trans.toIndexedSeq
     val aligned = method match {
-      case "greedy" => alignGreedy(verses, words)
-      case "windowed" => alignWindowed(verses, words)
+      case "greedy" => alignGreedy(verses, trans)
+      case "windowed" => alignWindowed(verses, trans)
       case "estimated" => alignEstimatedUniform(verses, duration)
       case "density" => alignEstimatedDensity(verses, duration)
-      case "verse_fuzzy" => alignVerseFuzzy(verses, words)
+      case "verse_fuzzy" => alignVerseFuzzy(verses, trans)
       case other =>
         throw new IllegalArgumentException(s"unknown strategy: $other")
     }
     val (conf, dur) = method match {
-      case "greedy" | "windowed" => transcriptionRollup(words)
+      case "greedy" | "windowed" => transcriptionRollup(trans)
       case "verse_fuzzy" =>
         val avg = if (aligned.isEmpty) 0.0
           else aligned.map(_.confidence).sum / aligned.size
-        (round2(avg), round2(if (words.isEmpty) 0.0 else words.map(_.end).max))
+        (round2(avg), round2(if (trans.isEmpty) 0.0 else trans.map(_.end).max))
       case _ => (0.1, round2(duration))
     }
     ChapterAlignment(book, chapter, dur, conf, aligned.size, method,
-      words.size, aligned)
+      trans.size, aligned)
   }
 }

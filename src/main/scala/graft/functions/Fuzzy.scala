@@ -32,16 +32,20 @@ object Fuzzy {
     // at verse length and grows with |s|.
     if (n.toLong * l.length <= 512) lcsLengthDp(s, l)
     else if (n <= 64) {
-      val pm = matchMasks(s, l)
+      val ids = new CharIds(s)
+      val masks = needleMasks(s, ids)
       val top = topMask(n)
       var r = 0L
       var p = 0
-      while (p < l.length) { r = step1(r, pm(p), top); p += 1 }
+      while (p < l.length) {
+        r = step1(r, masks(ids.id(l.charAt(p))), top)
+        p += 1
+      }
       java.lang.Long.bitCount(r)
     } else {
-      val k = new BlockLcs(s, l)
+      val k = new BlockLcs(s)
       var p = 0
-      while (p < l.length) { k.step(k.masks, k.row(p)); p += 1 }
+      while (p < l.length) { k.step(k.masks, k.row(l.charAt(p))); p += 1 }
       k.lcs()
     }
   }
@@ -87,33 +91,33 @@ object Fuzzy {
       while (ids(h) != 0 && keys(h) != c) h = (h + 1) & (slots - 1)
       h
     }
-    /** The id of each position of `text`. */
-    def of(text: CharSequence): Array[Int] = {
-      val out = new Array[Int](text.length)
-      var p = 0
-      while (p < text.length) { out(p) = ids(slot(text.charAt(p))); p += 1 }
-      out
-    }
+    /** The id of `c`. */
+    def id(c: Char): Int = ids(slot(c))
+  }
+
+  /** |s| ≤ 64: the mask of the positions of s holding each char id. */
+  private def needleMasks(s: CharSequence, ids: CharIds): Array[Long] = {
+    val masks = new Array[Long](ids.distinct + 1)
+    var j = 0
+    while (j < s.length) { masks(ids.ofNeedle(j)) |= 1L << j; j += 1 }
+    masks
   }
 
   /** |s| ≤ 64: `pm(p)` is the mask of the positions of s holding l(p). */
   private def matchMasks(s: CharSequence, l: CharSequence): Array[Long] = {
     val ids = new CharIds(s)
-    val masks = new Array[Long](ids.distinct + 1)
-    var j = 0
-    while (j < s.length) { masks(ids.ofNeedle(j)) |= 1L << j; j += 1 }
-    val lIds = ids.of(l)
+    val masks = needleMasks(s, ids)
     val pm = new Array[Long](l.length)
     var p = 0
-    while (p < l.length) { pm(p) = masks(lIds(p)); p += 1 }
+    while (p < l.length) { pm(p) = masks(ids.id(l.charAt(p))); p += 1 }
     pm
   }
 
   /** |s| > 64: `masks` and `rev` hold ⌈|s|/64⌉ words per char id (id 0
-    * is the all-zero row) for s and for s reversed, `row(p)` is the row
-    * offset of l(p), and `r` the recurrence state, reused by every run.
+    * is the all-zero row) for s and for s reversed, `row(c)` is the row
+    * offset of char c, and `r` the recurrence state, reused by every run.
     */
-  private final class BlockLcs(s: CharSequence, l: CharSequence) {
+  private final class BlockLcs(s: CharSequence) {
     private val n = s.length
     private val w = (n + 63) >>> 6
     private val top = topMask(n)
@@ -130,10 +134,12 @@ object Fuzzy {
       }
       out
     }
-    val row: Array[Int] = {
-      val out = ids.of(l)
+    def row(c: Char): Int = ids.id(c) * w
+    /** The row offset of each position of `l`. */
+    def rowsOf(l: CharSequence): Array[Int] = {
+      val out = new Array[Int](l.length)
       var p = 0
-      while (p < out.length) { out(p) *= w; p += 1 }
+      while (p < l.length) { out(p) = row(l.charAt(p)); p += 1 }
       out
     }
     private val r = new Array[Long](w)
@@ -218,11 +224,11 @@ object Fuzzy {
     * index arrays. Each scored interior window restarts the bit-parallel
     * LCS recurrence: |s| steps of one machine word when |s| ≤ 64, of
     * ⌈|s|/64⌉ words with carry/borrow chains beyond (one reused state
-    * array). Windows that cannot beat the best one are skipped by an
-    * exact bound ([[maxWindowLcs]]). The boundary windows cost two
-    * sweeps of |s|−1 steps: a prefix sweep of l, read after every step,
-    * and a suffix sweep that reads l backwards against the masks of s
-    * reversed. Allocation is O(|s| + |l|) per call, none per window.
+    * array); the scan stops at the first window that holds all of s.
+    * The boundary windows cost two sweeps of |s|−1 steps: a prefix sweep
+    * of l, read after every step, and a suffix sweep that reads l
+    * backwards against the masks of s reversed. Allocation is
+    * O(|s| + |l|) per call, none per window.
     * Interior scores are `100·(2·lcs)/(2·|s|)`, boundary scores
     * `200·lcs/(|s|+k)` — the arithmetic of `ratio` on the same windows,
     * so the doubles are the ones a window-by-window `ratio` scan gives.
@@ -233,53 +239,19 @@ object Fuzzy {
     if (s.length <= 64) partialRatio1(s, l) else partialRatioK(s, l)
   }
 
-  /** max of `lcsAt(i)`, the LCS of the needle (length n) and the window
-    * of the haystack at i, over i in [0, last]. Neighbouring windows
-    * share all but one char at each end, so their LCS differ by at most
-    * one, and lcs(i) ≤ lcs(j) + |i − j| for any window j. A coarse pass
-    * every n/2 windows sets the best-so-far B; between two coarse
-    * windows a window is scored only while the nearest scored windows
-    * on both sides could still reach past B. Every skipped window is
-    * bounded by B, so the max is exact; when the needle occurs in the
-    * haystack, B is near n after the coarse pass and the scan scores a
-    * few windows per gap, not every window.
-    */
-  private def maxWindowLcs(last: Int, n: Int, lcsAt: Int => Int): Int = {
-    val stride = math.max(1, n / 2)
-    val at = new Array[Int](last / stride + 2)
-    var q = 0
-    var best = 0
-    while (q * stride < last && best < n) {
-      at(q) = lcsAt(q * stride)
-      best = math.max(best, at(q))
-      q += 1
-    }
-    val coarse = q // windows 0, stride, ..., (coarse − 1)·stride, then last
-    if (best < n) { at(coarse) = lcsAt(last); best = math.max(best, at(coarse)) }
-    q = 0
-    while (q < coarse && best < n) {
-      val right = if (q + 1 == coarse) last else (q + 1) * stride
-      var i = q * stride + (best - at(q)) + 1
-      while (best < n && i < right - (best - at(q + 1))) {
-        val c = lcsAt(i)
-        best = math.max(best, c)
-        i += (best - c) + 1
-      }
-      q += 1
-    }
-    best
-  }
-
   private def partialRatio1(s: String, l: String): Double = {
     val n = s.length
     val pm = matchMasks(s, l)
     val top = topMask(n)
-    val best = maxWindowLcs(l.length - n, n, { i =>
+    var best = 0
+    var i = 0
+    while (i <= l.length - n && best < n) {
       var r = 0L
       var p = i
       while (p < i + n) { r = step1(r, pm(p), top); p += 1 }
-      java.lang.Long.bitCount(r)
-    })
+      best = math.max(best, java.lang.Long.bitCount(r))
+      i += 1
+    }
     if (best == n) return 100.0
     var out = 100.0 * (2 * best) / (2 * n)
     // boundary windows: after k steps the prefix sweep holds
@@ -301,19 +273,23 @@ object Fuzzy {
 
   private def partialRatioK(s: String, l: String): Double = {
     val n = s.length
-    val k = new BlockLcs(s, l)
-    val best = maxWindowLcs(l.length - n, n, { i =>
+    val k = new BlockLcs(s)
+    val row = k.rowsOf(l)
+    var best = 0
+    var i = 0
+    while (i <= l.length - n && best < n) {
       k.reset()
       var p = i
-      while (p < i + n) { k.step(k.masks, k.row(p)); p += 1 }
-      k.lcs()
-    })
+      while (p < i + n) { k.step(k.masks, row(p)); p += 1 }
+      best = math.max(best, k.lcs())
+      i += 1
+    }
     if (best == n) return 100.0
     var out = 100.0 * (2 * best) / (2 * n)
     k.reset()
     var j = 1
     while (j < n) {
-      k.step(k.masks, k.row(j - 1))
+      k.step(k.masks, row(j - 1))
       out = math.max(out, 200.0 * k.lcs() / (n + j))
       j += 1
     }
@@ -321,7 +297,7 @@ object Fuzzy {
     val rev = k.rev
     j = 1
     while (j < n) {
-      k.step(rev, k.row(l.length - j))
+      k.step(rev, row(l.length - j))
       out = math.max(out, 200.0 * k.lcs() / (n + j))
       j += 1
     }

@@ -103,7 +103,7 @@ class FuzzySpec extends AnyFunSuite {
       assert(Fuzzy.partialRatio(a, b) == naive(a, b),
         s"partial mismatch a=$a b=$b")
     }
-    // >64-char shorter strings: the substring-window interior path plus
+    // >64-char shorter strings: the multi-word interior path plus
     // boundary windows
     for (_ <- 1 to 20) {
       val a = (1 to 66 + rnd.nextInt(60)).map(_ => "abcd"(rnd.nextInt(4)))
@@ -132,7 +132,7 @@ class FuzzySpec extends AnyFunSuite {
           s"swapped n=$n m=$m s=$s l=$l")
       }
       // a noisy copy of s planted in the haystack: the best window scores
-      // far above the rest, the case the skipped-window bound prunes
+      // far above the rest
       val noisy = s.map(c =>
         if (rnd.nextInt(6) == 0) alpha(rnd.nextInt(alpha.length)) else c)
       for (pre <- Seq(0, n / 3, 2 * n + 1)) {
