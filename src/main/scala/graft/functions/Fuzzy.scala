@@ -312,7 +312,12 @@ object Fuzzy {
     ratio(sortedTokens(a).mkString(" "), sortedTokens(b).mkString(" "))
 
   /** fuzz.token_set_ratio: ratio over (intersection, intersection+restA,
-    * intersection+restB) combinations, max of the three.
+    * intersection+restB) combinations, max of the three. `t1` and `t2`
+    * each begin with the intersection (or equal it), so its LCS with
+    * either is its own length: those two ratios come from lengths, and
+    * only `ratio(t1, t2)` runs the LCS kernel. The arithmetic is
+    * `ratio`'s on the same integers, so the doubles are the ones three
+    * `ratio` calls give.
     */
   def tokenSetRatio(a: String, b: String): Double = {
     val ta = sortedTokens(a).toSet
@@ -324,7 +329,11 @@ object Fuzzy {
       else if (inter.isEmpty) diffA else s"$inter $diffA"
     val t2 = if (diffB.isEmpty) inter
       else if (inter.isEmpty) diffB else s"$inter $diffB"
-    math.max(ratio(inter, t1), math.max(ratio(inter, t2), ratio(t1, t2)))
+    def interRatio(t: String): Double = {
+      val total = inter.length + t.length
+      if (total == 0) 100.0 else 200.0 * inter.length / total
+    }
+    math.max(interRatio(t1), math.max(interRatio(t2), ratio(t1, t2)))
   }
 
   /** max(ratio, partial_ratio) — the windowed aligner's similarity

@@ -283,7 +283,7 @@ object Pq {
       if (wantSdc) checked(1) else Double.NaN)
   }
 
-  /** Per-metric pieces: LUT builder, output score column, rank order.
+  /** Per-metric pieces: LUT builder and output score column.
     * "l2" ranks ascending squared distance (column `adc_dist`); "ip"
     * ranks DESCENDING inner product (column `adc_ip`). MEASURED
     * guidance (PQ_*_r11.json): for cosine over a unit-norm corpus,
@@ -293,82 +293,13 @@ object Pq {
     * over deliberately un-normalized corpora.
     */
   private def metricPieces(metric: String, cb: Codebook,
-      vec: Column): (Column, String, Column => Column) = metric match {
-    // nulls LAST under both orders: a corrupt embedding (null element ⇒
-    // null code ⇒ null ADC, the kernels' documented contract) must
-    // never occupy a top-k rank. Spark's bare .asc is NULLS FIRST —
-    // under it one corrupt corpus row would rank #1 in EVERY query's
-    // l2 top-k (ip's .desc is nulls-last by default; made explicit so
-    // the symmetry is visible).
+      vec: Column): (Column, String) = metric match {
     case "l2" => (GraftFunctions.pq_lut(vec, cbLit(cb), cb.m, cb.k),
-      "adc_dist", c => c.asc_nulls_last)
+      "adc_dist")
     case "ip" => (GraftFunctions.pq_lut_ip(vec, cbLit(cb), cb.m, cb.k),
-      "adc_ip", c => c.desc_nulls_last)
+      "adc_ip")
     case other => throw new IllegalArgumentException(
       s"""PQ metric must be "l2" or "ip" (got "$other")""")
-  }
-
-  /** The shared rank stage of the PQ search surfaces: top-k per `qid`
-    * on (score best-first, id asc) over NULL-FREE scored rows — both
-    * callers filter null ADC scores before ranking, so the bounded
-    * aggregates never see one. Window-free whenever k and the id/cell
-    * types allow, mirroring [[graft.ops.Similarity.ivfSearchBatch]]:
-    * k=1 collapses to a `min_by` partial aggregate, 1<k≤MaxK to the
-    * bounded [[graft.functions.TopKByScore]] buffer (≤ k hits per
-    * query leave each map partition instead of every ADC-scored
-    * candidate — on the brute [[searchBatch]] the window would shuffle
-    * |batch|·|corpus| rows), anything else keeps the rank window.
-    *
-    * `biggerIsBetter` encodes the metric ("ip" ranks descending, "l2"
-    * ascending): internally everything ranks on a bigger-is-better
-    * goodness, built as `0.0 - score` for "l2" so a −0.0 score can't
-    * order-split a tie, and un-negated exactly on the way out
-    * (0−(0−x) ≡ x for every finite x; ADC l2 scores are ≥ 0).
-    * `cellCol` rides through the payload when the caller carries one.
-    */
-  private def rankTopK(scored: DataFrame, idCol: String, scoreCol: String,
-      biggerIsBetter: Boolean, k: Int, cellCol: Option[String])
-  : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.TopKByScore
-    def integral(dt: org.apache.spark.sql.types.DataType) = dt match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    val goodness =
-      if (biggerIsBetter) col(scoreCol) else lit(0.0) - col(scoreCol)
-    val idType = scored.schema(idCol).dataType
-    val cellType = cellCol.map(c => scored.schema(c).dataType)
-    val outCols = Seq(idCol) ++ cellCol ++ Seq(scoreCol)
-    if (k == 1)
-      scored.groupBy(col("qid"))
-        .agg(min_by(struct(outCols.map(col): _*),
-          struct(lit(0.0) - goodness, col(idCol))).as("_t"))
-        .select(col("qid") +: outCols.map(n => col(s"_t.$n")): _*)
-    else if (k <= TopKByScore.MaxK && integral(idType) &&
-        cellType.forall(integral))
-      scored.groupBy(col("qid"))
-        .agg(TopKByScore.topk(k, col(idCol).cast("long"),
-          cellCol.map(col).getOrElse(lit(0L)).cast("long"),
-          goodness).as("_t"))
-        .select(col("qid"), explode(col("_t")).as("_e"))
-        .select(col("qid") +: (
-          Seq(col("_e.id").cast(idType).as(idCol)) ++
-          cellCol.map(c => col("_e.cell").cast(cellType.get).as(c)) ++
-          Seq((if (biggerIsBetter) col("_e.cos_sim")
-            else lit(0.0) - col("_e.cos_sim")).as(scoreCol))): _*)
-    else {
-      val ord = if (biggerIsBetter) col(scoreCol).desc_nulls_last
-        else col(scoreCol).asc_nulls_last
-      scored
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(ord, col(idCol).asc)))
-        .filter(col("_rn") <= k)
-        .drop("_rn")
-    }
   }
 
   /** Append a `pq_code` column (array<int> of length m) — the encode
@@ -395,13 +326,13 @@ object Pq {
     * `adc_dist` ascending under "l2", `adc_ip` descending under "ip".
     * Null-scored rows (corrupt vectors, per the kernel null contract)
     * are excluded, never ranked. `queryIdCol` must be unique within
-    * `queries` (same window contract as [[Similarity.ivfSearchBatch]]).
+    * `queries` (the contract of [[Similarity.ivfSearchBatch]]).
     */
   def searchBatch(queries: DataFrame, queryIdCol: String,
       queryVecCol: String, codes: DataFrame, idCol: String,
       cb: Codebook, k: Int, excludeSelf: Boolean = true,
       metric: String = "l2"): DataFrame = {
-    val (lut, scoreCol, _) = metricPieces(metric, cb, col(queryVecCol))
+    val (lut, scoreCol) = metricPieces(metric, cb, col(queryVecCol))
     val q = queries.select(col(queryIdCol).as("qid"), lut.as("_lut"))
     val cand = codes.crossJoin(broadcast(q))
     val scoped =
@@ -416,8 +347,8 @@ object Pq {
     // window-free rank whenever possible matters MOST here: the brute
     // cross join scores |batch|·|corpus| rows, and a rank window would
     // shuffle every one of them
-    rankTopK(scored, idCol, scoreCol, biggerIsBetter = metric == "ip",
-      k, cellCol = None)
+    Similarity.rankTopK(scored, idCol, scoreCol,
+      biggerIsBetter = metric == "ip", k, cellCol = None)
   }
 
   /** The pair identity of an IVF-PQ layout: both codebooks, one stamp
@@ -647,18 +578,22 @@ object Pq {
       desc = "code tree built under different codebooks")
   }
 
-  /** Batch ANN against a RELOADED IVF-PQ index: probe-cell selection
-    * and static `cell IN (...)` partition pruning exactly as
-    * [[Similarity.ivfSearchBatch]] (the plan shape with the proven
-    * numFiles gate), but candidates are scored by ADC — the probed
-    * cells' scan reads (id, pq_code) only, never a vector column.
+  /** Batch ANN against a RELOADED IVF-PQ index: the one batch probe
+    * ([[Similarity.probeBatch]]: cell selection, static cell pruning
+    * with the proven numFiles gate, candidate joins, rank stage) with
+    * candidates scored by ADC — the probed cells' scan reads
+    * (id, pq_code) only, never a vector column.
     * Returns (qid, `idCol`, cell, score), top `k` per query on the
     * rounded score with id tie-break — the score column is
     * metric-dependent (`adc_dist` asc under "l2", `adc_ip` desc under
-    * "ip"); null-scored rows are excluded, never ranked.
+    * "ip"); null-scored rows are excluded, never ranked. Cells are
+    * picked by L2 against the IVF centroids whatever the metric (cells
+    * ARE L2-nearest regions of that codebook); `superProbe > 0` picks
+    * them through the coarse tier for √n-scale codebooks
+    * ([[Similarity.probeCellsHierarchical]]'s approximation contract).
     *
-    * BATCH-SIZE CONTRACT: besides `queryIdCol` uniqueness (same window
-    * contract as [[Similarity.ivfSearchBatch]]), the query batch must
+    * BATCH-SIZE CONTRACT: besides `queryIdCol` uniqueness (the
+    * contract of [[Similarity.ivfSearchBatch]]), the query batch must
     * be broadcast-sized — the probe ships every query's m·k-double LUT
     * to the executors (m=16, k=256 ⇒ 32 KB/query; 10⁴ queries ⇒
     * ~320 MB, about the practical broadcast ceiling; 10⁵ ⇒ ~3 GB,
@@ -673,48 +608,36 @@ object Pq {
       centroids: Centroids, cb: Codebook, k: Int, nProbe: Int = 2,
       excludeSelf: Boolean = true, metric: String = "l2",
       superCells: Int = 0, superProbe: Int = 0): DataFrame = {
-    val checked = Similarity.verifyStamp(index,
-      combinedStamp(centroids, cb), "ivfPqSearchBatch")
-    // cell selection stays L2 against the IVF centroids regardless of
-    // metric — cells ARE L2-nearest regions of that codebook
-    val (lut, scoreCol, _) = metricPieces(metric, cb, col("qvec"))
-    val codebook = typedLit(centroids.cells)
-    val q = queries.select(col(queryIdCol).as("qid"),
-      col(queryVecCol).cast("array<double>").as("qvec"))
+    val (lut, scoreCol) = metricPieces(metric, cb, col("qvec"))
     // (qid, cell) probe pairs and (qid, LUT) kept SEPARATE: computing
     // the m·k-double LUT on the exploded probe rows would materialize
     // (and broadcast) nProbe copies of every query's table — at m=8,
-    // k=256, nProbe=8 that is 8×16 KB per query instead of 16 KB.
-    // Probe selection itself is the shared window-free bounded-agg
-    // stage (batch × |codebook| rows never cross an exchange whole);
-    // superProbe > 0 opts into the COARSE tier for √n-scale codebooks
-    // (O(s + superProbe·k/s) distance rows per query instead of O(k) —
-    // [[Similarity.probeCellsHierarchical]]'s approximation contract)
-    val qcells = (if (superProbe > 0)
-      Similarity.probeCellsHierarchical(q, centroids, nProbe, superCells,
-        superProbe)
-    else Similarity.probeTopCells(q
-      .select(col("qid"), col("qvec"), explode(codebook).as("c"))
-      .select(col("qid"), col("c._1").as("cell"),
-        GraftFunctions.vec_sqdist(col("qvec"), col("c._2")).as("d")),
-      nProbe))
-      .localCheckpoint(true) // probe side computed once: collect + join
-    val qluts = q.select(col("qid"), lut.as("_lut"))
-    val probedCells = qcells.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val cand = checked.filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(qcells), Seq("cell"))
-      .join(broadcast(qluts), Seq("qid"))
-    val scoped =
-      if (excludeSelf) cand.filter(col(idCol) =!= col("qid")) else cand
-    val scored = scoped
-      .select(col("qid"), col(idCol), col("cell"),
-        round(GraftFunctions.pq_adc(col("_lut"), col("pq_code")), 5)
-          .as(scoreCol))
-      // null score (corrupt row/query) = not a rankable result
-      .filter(col(scoreCol).isNotNull)
-    rankTopK(scored, idCol, scoreCol, biggerIsBetter = metric == "ip",
-      k, cellCol = Some("cell"))
+    // k=256, nProbe=8 that is 8×16 KB per query instead of 16 KB
+    pqProbeBatch(queries, queryIdCol, queryVecCol, index, idCol, centroids,
+      cb, k, nProbe, excludeSelf, superCells, superProbe, "ivfPqSearchBatch",
+      lut.as("_lut"), GraftFunctions.pq_adc(col("_lut"), col("pq_code")),
+      scoreCol, biggerIsBetter = metric == "ip")
+  }
+
+  /** The IVF-PQ batch probe: [[Similarity.probeBatch]] over the
+    * stamp-verified code tree, with `qside` (the query's ADC lookup
+    * table or PQ code, computed once per query from `qvec`) and
+    * `score` over it and the candidate's `pq_code`. A null score (a
+    * corrupt row or query, per the kernel null contract) is not a
+    * rankable result and is dropped before the rank.
+    */
+  private def pqProbeBatch(queries: DataFrame, queryIdCol: String,
+      queryVecCol: String, index: DataFrame, idCol: String,
+      centroids: Centroids, cb: Codebook, k: Int, nProbe: Int,
+      excludeSelf: Boolean, superCells: Int, superProbe: Int,
+      caller: String, qside: Column, score: Column, scoreCol: String,
+      biggerIsBetter: Boolean): DataFrame = {
+    val checked = Similarity.verifyStamp(index,
+      combinedStamp(centroids, cb), caller)
+    val q = Similarity.queryFrame(queries, queryIdCol, queryVecCol)
+    Similarity.probeBatch(checked, q, q.select(col("qid"), qside),
+      centroids, nProbe, superCells, superProbe, idCol, score, scoreCol,
+      _.isNotNull, biggerIsBetter, k, excludeSelf)
   }
 
   /** The SDC code-to-code distance table for `cb`, flattened
@@ -752,12 +675,11 @@ object Pq {
 
   /** [[ivfPqSearchBatch]] with SYMMETRIC distance (SDC): the query
     * side is ENCODED too, and candidates score through the shared
-    * m·k² [[sdcTable]] instead of per-query LUTs. Same probe-cell
-    * selection (L2 against the IVF centroids — exact query vectors,
-    * cells are unaffected), same window-free rank stage, same
-    * determinism (rounded score, id tie-break), same null contract
-    * (a corrupt vector encodes to a null code and is excluded, never
-    * ranked). Returns (qid, `idCol`, cell, sdc_dist) — ascending.
+    * m·k² [[sdcTable]] instead of per-query LUTs; everything else is
+    * the shared batch probe ([[Similarity.probeBatch]]), cells picked
+    * by L2 from the exact query vectors. A corrupt vector encodes to a
+    * null code and is excluded, never ranked. Returns (qid, `idCol`,
+    * cell, sdc_dist) — ascending.
     *
     * REGIME (measured, SDC_1m_r17.json): ADC ships m·k doubles PER
     * QUERY (16 KB at m=8/k=256 — 32× a dim-64 vector; a 10⁴-query
@@ -785,47 +707,20 @@ object Pq {
       queryVecCol: String, index: DataFrame, idCol: String,
       centroids: Centroids, cb: Codebook, k: Int, nProbe: Int = 2,
       excludeSelf: Boolean = true,
-      superCells: Int = 0, superProbe: Int = 0): DataFrame = {
-    val checked = Similarity.verifyStamp(index,
-      combinedStamp(centroids, cb), "ivfPqSearchBatchSdc")
-    val codebook = typedLit(centroids.cells)
-    // the m·k² table rides INSIDE the pq_sdc expression as a primitive
-    // double[] constructor constant — as a typedLit child it converted
-    // to boxed ArrayData and the per-row pointer chases measured 6×
-    // the whole ADC scoring pass (see PqKernels.sdc)
-    val table = sdcTable(cb)
-    val q = queries.select(col(queryIdCol).as("qid"),
-      col(queryVecCol).cast("array<double>").as("qvec"))
-    // probe pairs from the EXACT query (cell selection must not pay
-    // the second quantization); query codes ride a separate tiny
-    // frame; superProbe > 0 opts into the coarse probe tier
-    val qcells = (if (superProbe > 0)
-      Similarity.probeCellsHierarchical(q, centroids, nProbe, superCells,
-        superProbe)
-    else Similarity.probeTopCells(q
-      .select(col("qid"), col("qvec"), explode(codebook).as("c"))
-      .select(col("qid"), col("c._1").as("cell"),
-        GraftFunctions.vec_sqdist(col("qvec"), col("c._2")).as("d")),
-      nProbe))
-      .localCheckpoint(true) // probe side computed once: collect + join
-    val qcodes = q.select(col("qid"),
+      superCells: Int = 0, superProbe: Int = 0): DataFrame =
+    // cells are picked from the EXACT query (cell selection must not pay
+    // the second quantization); the m·k² table rides INSIDE the pq_sdc
+    // expression as a primitive double[] constructor constant — as a
+    // typedLit child it converted to boxed ArrayData and the per-row
+    // pointer chases measured 6× the whole ADC scoring pass (see
+    // PqKernels.sdc)
+    pqProbeBatch(queries, queryIdCol, queryVecCol, index, idCol, centroids,
+      cb, k, nProbe, excludeSelf, superCells, superProbe,
+      "ivfPqSearchBatchSdc",
       GraftFunctions.pq_encode(col("qvec"), cbLit(cb), cb.m, cb.k)
-        .as("_qcode"))
-    val probedCells = qcells.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val cand = checked.filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(qcells), Seq("cell"))
-      .join(broadcast(qcodes), Seq("qid"))
-    val scoped =
-      if (excludeSelf) cand.filter(col(idCol) =!= col("qid")) else cand
-    val scored = scoped
-      .select(col("qid"), col(idCol), col("cell"),
-        round(GraftFunctions.pq_sdc(col("_qcode"), col("pq_code"),
-          table, cb.k), 5).as("sdc_dist"))
-      .filter(col("sdc_dist").isNotNull)
-    rankTopK(scored, idCol, "sdc_dist", biggerIsBetter = false,
-      k, cellCol = Some("cell"))
-  }
+        .as("_qcode"),
+      GraftFunctions.pq_sdc(col("_qcode"), col("pq_code"), sdcTable(cb),
+        cb.k), "sdc_dist", biggerIsBetter = false)
 
   /** [[semanticDedupFlagsPq]] through the SYMMETRIC probe — the
     * LARGE-BATCH dedup regime: the batch side ships codes, not LUTs,
@@ -853,16 +748,12 @@ object Pq {
       nProbe: Int = 2, excludeSelf: Boolean = true): DataFrame =
     flagsOnDriver(batch, batchIdCol, batchVecCol, index, idCol, centroids,
       cb, tauDist, refine = None, topK = 1, nProbe, excludeSelf,
-      "semanticDedupFlagsPqSdc").getOrElse {
-      val top = ivfPqSearchBatchSdcChunked(batch, batchIdCol,
-        batchVecCol, index, idCol, centroids, cb,
-        k = 1, nProbe = nProbe, excludeSelf = excludeSelf)
-        .select(col("qid"), col(idCol).as("neighbor_id"), col("sdc_dist"))
-      batch.select(col(batchIdCol))
-        .join(top, col(batchIdCol) === col("qid"), "left")
-        .select(col(batchIdCol), col("neighbor_id"), col("sdc_dist"),
-          (col("sdc_dist").isNull || col("sdc_dist") > tauDist).as("keep"))
-    }
+      "semanticDedupFlagsPqSdc").getOrElse(
+      Similarity.flagsFromTop(batch, batchIdCol,
+        ivfPqSearchBatchSdcChunked(batch, batchIdCol, batchVecCol, index,
+          idCol, centroids, cb, k = 1, nProbe = nProbe,
+          excludeSelf = excludeSelf),
+        idCol, "sdc_dist", col("sdc_dist") > tauDist))
 
   /** HYBRID semantic dedup — SDC speed with ADC accuracy exactly where
     * accuracy matters: the whole batch probes through the SYMMETRIC
@@ -947,9 +838,7 @@ object Pq {
         combinedStamp(centroids, cb), "semanticDedupFlagsPqHybrid")
       // LUTs ship for the BAND-SIZED query subset only — the bounded
       // form of the cost ADC pays for the whole batch
-      val qluts = batch
-        .select(col(batchIdCol).as("qid"),
-          col(batchVecCol).cast("array<double>").as("qvec"))
+      val qluts = Similarity.queryFrame(batch, batchIdCol, batchVecCol)
         .join(broadcast(bandQids), Seq("qid"))
         .select(col("qid"),
           GraftFunctions.pq_lut(col("qvec"), cbLit(cb), cb.m, cb.k)
@@ -1016,10 +905,7 @@ object Pq {
     import org.apache.spark.sql.types._
     import graft.functions.{PqKernels, TopKByScore, VectorKernels}
     import scala.jdk.CollectionConverters._
-    def integral(dt: DataType) = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
+    import Similarity.integral
     val idField = batch.select(col(batchIdCol)).schema.head
     val neighborType = index.select(col(idCol)).schema.head.dataType
     if (!integral(idField.dataType) || !integral(neighborType) ||
@@ -1181,19 +1067,25 @@ object Pq {
       excludeSelf: Boolean = true,
       maxCodeBatch: Int = 524288): DataFrame = {
     require(maxCodeBatch >= 1, "maxCodeBatch must be ≥ 1")
-    val nQueries = queries.count()
+    hashChunks(queries, queryIdCol, maxCodeBatch)(chunk =>
+      ivfPqSearchBatchSdc(chunk, queryIdCol, queryVecCol, index, idCol,
+        centroids, cb, k, nProbe, excludeSelf))
+  }
+
+  /** `probe` over `queries` split into `ceil(|queries| / maxBatch)`
+    * hash chunks (`pmod(xxhash64(qid), nChunks)`), results unioned;
+    * one chunk is the whole frame. The only driver-side
+    * materialization is one scalar count sizing the chunks.
+    */
+  private def hashChunks(queries: DataFrame, queryIdCol: String,
+      maxBatch: Int)(probe: DataFrame => DataFrame): DataFrame = {
     val nChunks =
-      math.max(1L, (nQueries + maxCodeBatch - 1) / maxCodeBatch).toInt
-    if (nChunks <= 1)
-      ivfPqSearchBatchSdc(queries, queryIdCol, queryVecCol, index,
-        idCol, centroids, cb, k, nProbe, excludeSelf)
+      math.max(1L, (queries.count() + maxBatch - 1) / maxBatch).toInt
+    if (nChunks <= 1) probe(queries)
     else (0 until nChunks).map { chunk =>
       // an unlucky-empty chunk probes nothing and unions empty — safe
-      ivfPqSearchBatchSdc(
-        queries.filter(
-          pmod(xxhash64(col(queryIdCol)), lit(nChunks)) === lit(chunk)),
-        queryIdCol, queryVecCol, index, idCol, centroids, cb, k, nProbe,
-        excludeSelf)
+      probe(queries.filter(
+        pmod(xxhash64(col(queryIdCol)), lit(nChunks)) === lit(chunk)))
     }.reduce(_ union _)
   }
 
@@ -1203,7 +1095,7 @@ object Pq {
     * corpus never touches the ~0.5 TB embedding payload (the plain
     * variant's index stores it per row). Same flag semantics: each
     * batch row gets its single nearest indexed neighbor — ADC-scored
-    * top-1 through the k=1 `min_by` partial aggregate, metric "l2"
+    * top-1 ([[ivfPqSearchBatch]] at k = 1), metric "l2"
     * (ascending squared distance, the measured-better choice for
     * cosine-normalized corpora per [[metricPieces]]) — and
     * `keep = no neighbor within tauDist` (probed-cell misses surface
@@ -1229,16 +1121,12 @@ object Pq {
   def semanticDedupFlagsPq(batch: DataFrame, batchIdCol: String,
       batchVecCol: String, index: DataFrame, idCol: String,
       centroids: Centroids, cb: Codebook, tauDist: Double,
-      nProbe: Int = 2, excludeSelf: Boolean = true): DataFrame = {
-    val top = ivfPqSearchBatchChunked(batch, batchIdCol, batchVecCol,
-      index, idCol, centroids, cb,
-      k = 1, nProbe = nProbe, excludeSelf = excludeSelf, metric = "l2")
-      .select(col("qid"), col(idCol).as("neighbor_id"), col("adc_dist"))
-    batch.select(col(batchIdCol))
-      .join(top, col(batchIdCol) === col("qid"), "left")
-      .select(col(batchIdCol), col("neighbor_id"), col("adc_dist"),
-        (col("adc_dist").isNull || col("adc_dist") > tauDist).as("keep"))
-  }
+      nProbe: Int = 2, excludeSelf: Boolean = true): DataFrame =
+    Similarity.flagsFromTop(batch, batchIdCol,
+      ivfPqSearchBatchChunked(batch, batchIdCol, batchVecCol, index, idCol,
+        centroids, cb, k = 1, nProbe = nProbe, excludeSelf = excludeSelf,
+        metric = "l2"),
+      idCol, "adc_dist", col("adc_dist") > tauDist)
 
   /** [[ivfPqSearchBatch]] for query batches past its broadcast-size
     * contract (~10⁴ queries at m=16/k=256): the batch splits into
@@ -1267,20 +1155,9 @@ object Pq {
       excludeSelf: Boolean = true, metric: String = "l2",
       maxLutBatch: Int = 8192): DataFrame = {
     require(maxLutBatch >= 1, "maxLutBatch must be ≥ 1")
-    val nQueries = queries.count()
-    val nChunks =
-      math.max(1L, (nQueries + maxLutBatch - 1) / maxLutBatch).toInt
-    if (nChunks <= 1)
-      ivfPqSearchBatch(queries, queryIdCol, queryVecCol, index,
-        idCol, centroids, cb, k, nProbe, excludeSelf, metric)
-    else (0 until nChunks).map { chunk =>
-      // an unlucky-empty chunk probes nothing and unions empty — safe
-      ivfPqSearchBatch(
-        queries.filter(
-          pmod(xxhash64(col(queryIdCol)), lit(nChunks)) === lit(chunk)),
-        queryIdCol, queryVecCol, index, idCol, centroids, cb, k, nProbe,
-        excludeSelf, metric)
-    }.reduce(_ union _)
+    hashChunks(queries, queryIdCol, maxLutBatch)(chunk =>
+      ivfPqSearchBatch(chunk, queryIdCol, queryVecCol, index, idCol,
+        centroids, cb, k, nProbe, excludeSelf, metric))
   }
 
   /** IVF-PQ search with an exact re-rank tail: take the top
@@ -1358,8 +1235,7 @@ object Pq {
             "probe is blind to the extra rows. ") +
         "Append with ivfPqIndexAppendPair (or rebuild with " +
         "ivfPqIndexWritePair) so both trees ingest together.")
-    val qv = queries.select(col(queryIdCol).as("qid"),
-      col(queryVecCol).cast("array<double>").as("qvec"))
+    val qv = Similarity.queryFrame(queries, queryIdCol, queryVecCol)
     val wTop = Window.partitionBy(col("qid"))
       .orderBy(col("cos_sim").desc, col(sourceIdCol).asc)
     // static cell pruning on the fetch scan + an EXPLICIT candidate

@@ -207,21 +207,31 @@ object Similarity {
       centroids: Centroids): DataFrame = {
     // array<struct<_1:bigint,_2:array<double>>>
     val codebook = typedLit(centroids.cells)
-    val v = asDouble(col(vecCol))
-    // fold state: struct(cid, d) — strict < keeps the first (smallest
-    // cid, codebook sorted) on ties, matching the old (dist, cid) sort
-    val best = aggregate(codebook,
+    withCell(emb, emb.withColumn("_best",
+      nearestIn(codebook, asDouble(col(vecCol)))))
+  }
+
+  /** The assignment fold: struct(cid, d) of the entry of `book`
+    * (array<struct<_1: cid, _2: centroid>>) nearest `v`. Strict `<`
+    * keeps the first (smallest cid, book sorted) on ties, matching
+    * the old (dist, cid) sort.
+    */
+  private def nearestIn(book: Column, v: Column): Column =
+    aggregate(book,
       struct(lit(-1L).as("cid"), lit(Double.MaxValue).as("d")),
       (acc, c) => {
         val d = GraftFunctions.vec_sqdist(v, c.getField("_2"))
         val cand = struct(c.getField("_1").as("cid"), d.as("d"))
         when(cand.getField("d") < acc.getField("d"), cand).otherwise(acc)
       })
-    emb.withColumn("_best", best)
-      .select(emb.columns.toIndexedSeq.map(col) :+
-        col("_best.cid").as("cell") :+
-        round(col("_best.d"), 5).as("cell_dist2"): _*)
-  }
+
+  /** `emb`'s columns plus the `cell` and `cell_dist2` of the `_best`
+    * fold column of `folded` (`emb` with fold columns added).
+    */
+  private def withCell(emb: DataFrame, folded: DataFrame): DataFrame =
+    folded.select(emb.columns.toIndexedSeq.map(col) :+
+      col("_best.cid").as("cell") :+
+      round(col("_best.d"), 5).as("cell_dist2"): _*)
 
   /** Driver-side Lloyd iterations over a point set already in driver
     * memory — the one driver Lloyd of the engine. It clusters the
@@ -405,19 +415,29 @@ object Similarity {
           element_at(memberMap, col("_sb.s1")),
           coalesce(element_at(memberMap, col("_sb.s2")),
             typedLit(Seq.empty[(Long, Seq[Double])])))
-      val bestCell = aggregate(groups,
-        struct(lit(-1L).as("cid"), lit(Double.MaxValue).as("d")),
-        (acc, c) => {
-          val d = GraftFunctions.vec_sqdist(v, c.getField("_2"))
-          val cand = struct(c.getField("_1").as("cid"), d.as("d"))
-          when(cand.getField("d") < acc.getField("d"), cand).otherwise(acc)
-        })
-      emb.withColumn("_sb", best2)
-        .withColumn("_best", bestCell)
-        .select(emb.columns.toIndexedSeq.map(col) :+
-          col("_best.cid").as("cell") :+
-          round(col("_best.d"), 5).as("cell_dist2"): _*)
+      withCell(emb, emb.withColumn("_sb", best2)
+        .withColumn("_best", nearestIn(groups, v)))
     }
+  }
+
+  /** The single-query IVF probe of [[ivfSearch]] and
+    * [[ivfSearchIndexed]]: the `nProbe` cells whose centroids are
+    * nearest `qVec` by (squared distance, cid), picked on the driver,
+    * filter `assigned` (minus `excludeId`), and the survivors rank by
+    * rounded exact cosine, id tie-break.
+    */
+  private def probeOne(assigned: DataFrame, idCol: String, vecCol: String,
+      centroids: Centroids, qVec: Seq[Double], k: Int, nProbe: Int,
+      excludeId: Option[Long]): DataFrame = {
+    val probes = centroids.cells.map { case (cid, cv) =>
+      (cv.zip(qVec).map { case (x, y) => (x - y) * (x - y) }.sum, cid)
+    }.sorted.take(nProbe).map(_._2)
+    excludeId.foldLeft(assigned.filter(col("cell").isin(probes: _*)))(
+      (df, q) => df.filter(col(idCol) =!= q))
+      .select(col(idCol), col("cell"),
+        round(cosine(asDouble(col(vecCol)), typedLit(qVec)), 5).as("cos_sim"))
+      .orderBy(col("cos_sim").desc, col(idCol))
+      .limit(k)
   }
 
   /** IVF probe search: assign every vector to its cell (zero-shuffle
@@ -432,19 +452,10 @@ object Similarity {
   : DataFrame = {
     // one query-row scan; the query vector ships as a literal — no
     // second source scan, no crossJoin
-    val assigned = ivfAssign(emb, idCol, vecCol, centroids)
     val qVec = emb.filter(col(idCol) === queryId)
       .select(asDouble(col(vecCol))).collect()(0).getSeq[Double](0)
-    val probes = centroids.cells.map { case (cid, cv) =>
-      (cv.zip(qVec).map { case (x, y) => (x - y) * (x - y) }.sum, cid)
-    }.sorted.take(nProbe).map(_._2)
-    val qLit = typedLit(qVec)
-    assigned
-      .filter(col("cell").isin(probes: _*) && col(idCol) =!= queryId)
-      .select(col(idCol), col("cell"),
-        round(cosine(asDouble(col(vecCol)), qLit), 5).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
+    probeOne(ivfAssign(emb, idCol, vecCol, centroids), idCol, vecCol,
+      centroids, qVec, k, nProbe, excludeId = Some(queryId))
   }
 
   /** Sidecar stamp file at an [[ivfIndex]] layout root. Named with a
@@ -802,20 +813,71 @@ object Similarity {
   def ivfSearchIndexed(index: DataFrame, idCol: String, vecCol: String,
       centroids: Centroids, queryVec: Seq[Double], k: Int,
       nProbe: Int = 2, excludeId: Option[Long] = None): DataFrame = {
-    val checked = verifyStamp(index, centroids.stamp, "ivfSearchIndexed")
-    val probes = centroids.cells.map { case (cid, cv) =>
-      (cv.zip(queryVec).map { case (x, y) => (x - y) * (x - y) }.sum, cid)
-    }.sorted.take(nProbe).map(_._2)
-    val qLit = typedLit(queryVec)
-    val scoped = excludeId.foldLeft(
-      checked.filter(col("cell").isin(probes: _*)))(
-      (df, q) => df.filter(col(idCol) =!= q))
-    scoped
-      .select(col(idCol), col("cell"),
-        round(cosine(asDouble(col(vecCol)), qLit), 5).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
+    probeOne(verifyStamp(index, centroids.stamp, "ivfSearchIndexed"),
+      idCol, vecCol, centroids, queryVec, k, nProbe, excludeId)
   }
+
+  /** Probe-cell selection shared by the batch ANN surfaces: each
+    * query's `nProbe` nearest cells by (centroid distance asc, cell
+    * asc) out of the exploded (qid, cell, d) frame — `batch ×
+    * |codebook|` rows, which at 10⁵ queries × 10⁴ cells is a
+    * 10⁹-row stream. A rank window would SHUFFLE all of it just to
+    * keep nProbe rows per query; the bounded TopKByScore aggregate
+    * (goodness = −d, payload = cell) caps each map partition at
+    * nProbe entries per query before the exchange, same as the
+    * candidate rank stage. nProbe past the buffer guard falls back to
+    * the window. Null distances (a corrupt query vector) are dropped
+    * — the window form ranked them FIRST (bare `.asc` is nulls-first),
+    * silently probing arbitrary cells for a garbage query; no probe
+    * and no candidates is the saner contract, and downstream
+    * left-joins already surface empty probes as NULL/keep rows.
+    * Returns (qid, cell).
+    */
+  private def probeTopCells(qdist: DataFrame, nProbe: Int)
+  : DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.TopKByScore
+    if (nProbe <= TopKByScore.MaxK)
+      qdist.filter(col("d").isNotNull)
+        .groupBy(col("qid"))
+        .agg(TopKByScore.topk(nProbe, col("cell").cast("long"), lit(0L),
+          lit(0.0) - col("d")).as("_t"))
+        .select(col("qid"), explode(col("_t")).as("_e"))
+        .select(col("qid"), col("_e.id").as("cell"))
+    else
+      qdist
+        .withColumn("_rn", row_number().over(Window.partitionBy(col("qid"))
+          .orderBy(col("d").asc_nulls_last, col("cell").asc)))
+        .filter(col("_rn") <= nProbe)
+        .select(col("qid"), col("cell"))
+  }
+
+  /** (qid, cell, d): the squared distance from each query of `q`
+    * (qid, qvec) to every entry of `book`, an
+    * array<struct<_1: bigint, _2: array<double>>> plan literal.
+    */
+  private def cellDists(q: DataFrame, book: Column): DataFrame =
+    q.select(col("qid"), col("qvec"), explode(book).as("c"))
+      .select(col("qid"), col("c._1").as("cell"),
+        GraftFunctions.vec_sqdist(col("qvec"), col("c._2")).as("d"))
+
+  /** The cell-selection stage of every batch probe: (qid, cell) for
+    * each query of `q` (qid, qvec). `superProbe ≤ 0` is the flat probe
+    * over the whole codebook; `superProbe ≥ 1` goes through the coarse
+    * tier ([[probeCellsHierarchical]], with its approximation
+    * contract).
+    */
+  private def probeCells(q: DataFrame, centroids: Centroids,
+      nProbe: Int, superCells: Int, superProbe: Int): DataFrame =
+    if (superProbe <= 0)
+      probeTopCells(cellDists(q, typedLit(centroids.cells)), nProbe)
+    else probeCellsHierarchical(q, centroids, nProbe, superCells, superProbe)
+
+  /** The (qid, qvec) frame every batch probe starts from. */
+  private[ops] def queryFrame(queries: DataFrame, queryIdCol: String,
+      queryVecCol: String): DataFrame =
+    queries.select(col(queryIdCol).as("qid"),
+      asDouble(col(queryVecCol)).as("qvec"))
 
   /** Batch ANN against a RELOADED [[ivfIndex]]: every query row probed
     * in ONE job — the shape a curation pipeline runs (dedup or link a
@@ -836,16 +898,18 @@ object Similarity {
     * selectivity heuristics (which decline the window-limited probe
     * side) and no subquery at scan time. The extra driver round-trip is
     * one distinct over the probe side — codebook-bounded, not
-    * batch-bounded. Exact cosine per candidate, rank-limited top-k per
-    * query on the rounded score (ties broken by id, matching the
-    * oracle's determinism).
+    * batch-bounded. Exact cosine per candidate, top-k per query on the
+    * rounded score (ties broken by id, matching the oracle's
+    * determinism) through the shared rank stage ([[rankTopK]]: k=1 a
+    * `min_by` partial aggregate, k ≤ MaxK a bounded partial top-k,
+    * else the rank window).
     *
     * Returns (qid, `idCol`, cell, cos_sim). `excludeSelf` drops
     * candidates whose id equals the query id (the common
     * corpus-queries-corpus case). `queryIdCol` must be unique within
-    * `queries`: the rank windows partition by qid (and the candidate
-    * join re-attaches query vectors by qid), so duplicated ids merge
-    * two queries' candidate pools into one top-k.
+    * `queries`: the rank stage groups by qid (and the candidate join
+    * re-attaches query vectors by qid), so duplicated ids merge two
+    * queries' candidate pools into one top-k.
     *
     * Broadcast sizing (r14): the probe-assignment frame broadcast to
     * the index scan carries ONLY (qid, cell) — the query VECTORS
@@ -856,73 +920,14 @@ object Similarity {
     * brute-force-truth probe: 2k queries × 1k cells × 64 dims ≈ 1 GB);
     * split, it is O(batch × nProbe + batch × dim) — 32 MB + 1 MB for
     * the same probe.
-    *
-    * Top-1 (the semantic-dedup shape, q120) skips the rank window
-    * entirely: a `min_by` aggregate with map-side partial aggregation
-    * reduces each partition's candidates to one row per query BEFORE
-    * the shuffle — the window form shuffles EVERY candidate row
-    * (batch × nProbe × cell size) to sort it, which at corpus-probe
-    * sizes is the job. Same (cos_sim desc, id asc) determinism.
-    *
-    * k>1 (up to [[graft.functions.TopKByScore.MaxK]], integral
-    * id/cell layouts) gets the same treatment through a size-bounded
-    * partial top-k aggregate: ≤ k hits per query leave each map
-    * partition instead of every candidate. Larger k or exotic column
-    * types fall back to the rank window (identical results, plan-gated
-    * in PlanRegressionSpec).
     */
-  /** Probe-cell selection shared by the batch ANN surfaces: each
-    * query's `nProbe` nearest cells by (centroid distance asc, cell
-    * asc) out of the exploded (qid, cell, d) frame — `batch ×
-    * |codebook|` rows, which at 10⁵ queries × 10⁴ cells is a
-    * 10⁹-row stream. A rank window would SHUFFLE all of it just to
-    * keep nProbe rows per query; the bounded TopKByScore aggregate
-    * (goodness = −d, payload = cell) caps each map partition at
-    * nProbe entries per query before the exchange, same as the
-    * candidate rank stage. nProbe past the buffer guard falls back to
-    * the window. Null distances (a corrupt query vector) are dropped
-    * — the window form ranked them FIRST (bare `.asc` is nulls-first),
-    * silently probing arbitrary cells for a garbage query; no probe
-    * and no candidates is the saner contract, and downstream
-    * left-joins already surface empty probes as NULL/keep rows.
-    * Returns (qid, cell).
-    */
-  private[ops] def probeTopCells(qdist: DataFrame, nProbe: Int)
-  : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.TopKByScore
-    if (nProbe <= TopKByScore.MaxK)
-      qdist.filter(col("d").isNotNull)
-        .groupBy(col("qid"))
-        .agg(TopKByScore.topk(nProbe, col("cell").cast("long"), lit(0L),
-          lit(0.0) - col("d")).as("_t"))
-        .select(col("qid"), explode(col("_t")).as("_e"))
-        .select(col("qid"), col("_e.id").as("cell"))
-    else
-      qdist
-        .withColumn("_rn", row_number().over(Window.partitionBy(col("qid"))
-          .orderBy(col("d").asc_nulls_last, col("cell").asc)))
-        .filter(col("_rn") <= nProbe)
-        .select(col("qid"), col("cell"))
-  }
-
   def ivfSearchBatch(queries: DataFrame, queryIdCol: String,
       queryVecCol: String, index: DataFrame, idCol: String, vecCol: String,
       centroids: Centroids, k: Int, nProbe: Int = 2,
-      excludeSelf: Boolean = true): DataFrame = {
-    val checked = verifyStamp(index, centroids.stamp, "ivfSearchBatch")
-    val codebook = typedLit(centroids.cells)
-    val q = queries.select(col(queryIdCol).as("qid"),
-      asDouble(col(queryVecCol)).as("qvec"))
-      .localCheckpoint(true) // one pass feeds probe ranking + vector join
-    val qcells = probeTopCells(q
-      .select(col("qid"), col("qvec"), explode(codebook).as("c"))
-      .select(col("qid"), col("c._1").as("cell"),
-        GraftFunctions.vec_sqdist(col("qvec"), col("c._2")).as("d")),
-      nProbe)
-      .localCheckpoint(true) // probe side computed once: cells collect + join
-    searchFromProbe(checked, q, qcells, idCol, vecCol, k, excludeSelf)
-  }
+      excludeSelf: Boolean = true): DataFrame =
+    cosineBatch(queries, queryIdCol, queryVecCol, index, idCol, vecCol,
+      centroids, k, nProbe, excludeSelf, superCells = 0, superProbe = 0,
+      "ivfSearchBatch")
 
   /** [[ivfSearchBatch]] with HIERARCHICAL probe-cell selection — the
     * coarse-quantizer tier applied to the probe side, for codebooks
@@ -954,14 +959,37 @@ object Similarity {
       centroids: Centroids, k: Int, nProbe: Int = 2,
       excludeSelf: Boolean = true, superCells: Int = 0,
       superProbe: Int = 2): DataFrame = {
-    val checked = verifyStamp(index, centroids.stamp, "ivfSearchBatchHier")
-    val q = queries.select(col(queryIdCol).as("qid"),
-      asDouble(col(queryVecCol)).as("qvec"))
+    // below 1 [[probeCells]] would take the flat probe
+    require(superProbe >= 1, s"superProbe must be ≥ 1 (got $superProbe)")
+    cosineBatch(queries, queryIdCol, queryVecCol, index, idCol, vecCol,
+      centroids, k, nProbe, excludeSelf, superCells, superProbe,
+      "ivfSearchBatchHier")
+  }
+
+  /** The exact-cosine batch probe behind [[ivfSearchBatch]] and
+    * [[ivfSearchBatchHier]].
+    */
+  private def cosineBatch(queries: DataFrame, queryIdCol: String,
+      queryVecCol: String, index: DataFrame, idCol: String, vecCol: String,
+      centroids: Centroids, k: Int, nProbe: Int, excludeSelf: Boolean,
+      superCells: Int, superProbe: Int, caller: String): DataFrame = {
+    val checked = verifyStamp(index, centroids.stamp, caller)
+    val q = queryFrame(queries, queryIdCol, queryVecCol)
       .localCheckpoint(true) // one pass feeds probe ranking + vector join
-    val qcells = probeCellsHierarchical(q, centroids, nProbe, superCells,
-      superProbe)
-      .localCheckpoint(true) // probe side computed once: cells collect + join
-    searchFromProbe(checked, q, qcells, idCol, vecCol, k, excludeSelf)
+    // NaN scores (a zero-norm vector on EITHER side ⇒ cosine 0/0)
+    // are dropped BEFORE the rank stage, making the contract uniform
+    // across all its paths — without this predicate they diverge: the
+    // rank window sorts NaN first under desc (Spark orders NaN above
+    // every value), so a single zero-norm corpus vector would occupy
+    // rank 1 of EVERY query it's a candidate for, while min_by and the
+    // bounded aggregate drop it (NaN loses `>`/struct comparisons).
+    // "No similarity" is the only sane reading of 0/0, and a zero-norm
+    // QUERY (all its scores NaN) surfaces as the no-candidates
+    // NULL/keep row downstream — the same contract probeTopCells
+    // applies to null distances.
+    probeBatch(checked, q, q, centroids, nProbe, superCells, superProbe,
+      idCol, cosine(asDouble(col(vecCol)), col("qvec")), "cos_sim",
+      c => !isnan(c), biggerIsBetter = true, k, excludeSelf)
   }
 
   /** Probe-cell selection through the coarse tier, staged as the SAME
@@ -998,13 +1026,8 @@ object Similarity {
     require(superProbe >= 1,
       s"superProbe must be ≥ 1 (got $superProbe)")
     if (superProbe >= s && s > 2)
-      // degenerate exact form: flat explode, as ivfSearchBatch
-      probeTopCells(q
-        .select(col("qid"), col("qvec"),
-          explode(typedLit(cents)).as("c"))
-        .select(col("qid"), col("c._1").as("cell"),
-          GraftFunctions.vec_sqdist(col("qvec"), col("c._2")).as("d")),
-        nProbe)
+      // degenerate exact form: the flat probe
+      probeTopCells(cellDists(q, typedLit(cents)), nProbe)
     else {
       val spark = q.sparkSession
       import spark.implicits._
@@ -1015,11 +1038,7 @@ object Similarity {
         (sid, superMeans(sid.toInt))))
       // stage 1: each query's superProbe nearest groups — s distance
       // rows per query through the shared bounded aggregate
-      val qsupers = probeTopCells(q
-        .select(col("qid"), col("qvec"), explode(superBook).as("c"))
-        .select(col("qid"), col("c._1").as("cell"),
-          GraftFunctions.vec_sqdist(col("qvec"), col("c._2")).as("d")),
-        superProbe)
+      val qsupers = probeTopCells(cellDists(q, superBook), superProbe)
         .select(col("qid"), col("cell").as("_sid"))
       // stage 2: probed groups' members only — superProbe·k/s distance
       // rows per query; the member table and the query batch both
@@ -1037,98 +1056,129 @@ object Similarity {
     }
   }
 
-  /** The shared candidate/score/rank tail of the batch ANN surfaces:
-    * static cell pruning from the collected probe set, broadcast
-    * (qid, cell) + (qid, qvec) joins, exact cosine, window-free top-k.
-    * `qcells` must be checkpointed by the caller (it feeds the cells
-    * collect AND the join).
+  /** The one batch-probe pipeline behind [[ivfSearchBatch]],
+    * [[ivfSearchBatchHier]], [[Pq.ivfPqSearchBatch]] and
+    * [[Pq.ivfPqSearchBatchSdc]]; the surfaces differ only in the
+    * query side, the score and its rank direction.
+    *
+    *  1. Cells: [[probeCells]] over `q` (qid, qvec), checkpointed — it
+    *     feeds the cells collect AND the candidate join.
+    *  2. Candidates: the DISTINCT probed cell ids (≤ |codebook|, a
+    *     driver-sized quantity by the same argument as the codebook
+    *     literal itself — unlike a qid collect it cannot grow with the
+    *     batch) prune `checked` through a static `cell IN (...)`; the
+    *     (qid, cell) pairs and then `qside` (qid + whatever the score
+    *     reads of the query: its vector, ADC lookup table or PQ code)
+    *     broadcast-join on; `excludeSelf` drops id == qid.
+    *  3. Score: `round(score, 5)` as `scoreCol`; rows failing `valid`
+    *     are dropped before the rank.
+    *  4. Rank: [[rankTopK]] with the cell riding along.
+    *
+    * Returns (qid, `idCol`, cell, `scoreCol`).
     */
-  private def searchFromProbe(checked: DataFrame, q: DataFrame,
-      qcells: DataFrame, idCol: String, vecCol: String, k: Int,
+  private[ops] def probeBatch(checked: DataFrame, q: DataFrame,
+      qside: DataFrame, centroids: Centroids, nProbe: Int, superCells: Int,
+      superProbe: Int, idCol: String, score: Column, scoreCol: String,
+      valid: Column => Column, biggerIsBetter: Boolean, k: Int,
       excludeSelf: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // the one driver-side collect on this path is BOUNDED BY THE
-    // CODEBOOK, not the batch: it collects DISTINCT probed cell ids
-    // (≤ |codebook|, a driver-sized quantity by the same argument as
-    // the codebook literal itself) to build the static partition-
-    // pruning IN-list — unlike a qid collect, it cannot grow with the
-    // query batch
+    val qcells = probeCells(q, centroids, nProbe, superCells, superProbe)
+      .localCheckpoint(true) // probe side computed once: cells collect + join
     val probedCells = qcells.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
     val cand = checked.filter(col("cell").isin(probedCells: _*))
       .join(broadcast(qcells), Seq("cell"))
-      .join(broadcast(q), Seq("qid"))
+      .join(broadcast(qside), Seq("qid"))
     val scoped =
       if (excludeSelf) cand.filter(col(idCol) =!= col("qid")) else cand
     val scored = scoped
       .select(col("qid"), col(idCol), col("cell"),
-        round(cosine(asDouble(col(vecCol)), col("qvec")), 5).as("cos_sim"))
-      // NaN scores (a zero-norm vector on EITHER side ⇒ cosine 0/0)
-      // are dropped BEFORE the rank stage, making the contract uniform
-      // across all four rank paths — without this predicate they
-      // diverge: the rank window sorts NaN first under desc (Spark
-      // orders NaN above every value), so a single zero-norm corpus
-      // vector would occupy rank 1 of EVERY query it's a candidate
-      // for, while min_by and the bounded aggregate drop it (NaN
-      // loses `>`/struct comparisons). "No similarity" is the only
-      // sane reading of 0/0, and a zero-norm QUERY (all its scores
-      // NaN) surfaces as the no-candidates NULL/keep row downstream —
-      // the same contract probeTopCells applies to null distances.
-      .filter(!isnan(col("cos_sim")))
+        round(score, 5).as(scoreCol))
+      .filter(valid(col(scoreCol)))
+    rankTopK(scored, idCol, scoreCol, biggerIsBetter, k,
+      cellCol = Some("cell"))
+  }
+
+  /** Byte, short, int or long: the id/cell types the bounded
+    * aggregates carry as longs.
+    */
+  private[ops] def integral(dt: org.apache.spark.sql.types.DataType)
+  : Boolean = dt match {
+    case org.apache.spark.sql.types.ByteType |
+         org.apache.spark.sql.types.ShortType |
+         org.apache.spark.sql.types.IntegerType |
+         org.apache.spark.sql.types.LongType => true
+    case _ => false
+  }
+
+  /** The rank stage of every ANN batch surface: top-k per `qid` on
+    * (score best-first, id asc) over rows the caller has already
+    * cleared of null/NaN scores, so the aggregates never see one.
+    * Window-free whenever k and the id/cell types allow:
+    *
+    *  - k=1: a `min_by` partial aggregate — map-side partial
+    *    aggregation reduces each partition's candidates to one row per
+    *    query BEFORE the shuffle, where the window form shuffles EVERY
+    *    candidate row (batch × nProbe × cell size, or |batch|·|corpus|
+    *    on the brute [[Pq.searchBatch]]) to sort it. It ranks on
+    *    struct(0.0 − goodness, id): negating the SCORE instead of the
+    *    id keeps the tie-break correct for ANY id domain (a
+    *    max_by(…, struct(score, −id)) silently inverts ties for
+    *    negative ids and overflows at Long.MinValue), and `0.0 − x`
+    *    rather than `−x` so a −0.0 score (round() of a tiny negative
+    *    value) normalizes to +0.0 and can't order-split a tie.
+    *  - 1 < k ≤ [[graft.functions.TopKByScore.MaxK]] with integral
+    *    id/cell types: the size-bounded partial top-k aggregate, ≤ k
+    *    hits per query leave each map partition. Ids/cells travel as
+    *    longs and cast back on the way out (partition-directory
+    *    inference can make `cell` an int), so the output schema is the
+    *    window form's.
+    *  - otherwise the rank window (identical results, plan-gated in
+    *    PlanRegressionSpec and PqSpec).
+    *
+    * `biggerIsBetter` is the rank direction (cosine and ADC "ip"
+    * descending, squared distances ascending): internally everything
+    * ranks on a bigger-is-better goodness, built as `0.0 - score` for
+    * the ascending scores and un-negated exactly on the way out
+    * (0−(0−x) ≡ x for every finite x; the distances are ≥ 0).
+    * `cellCol` rides through the payload when the caller carries one.
+    */
+  private[ops] def rankTopK(scored: DataFrame, idCol: String,
+      scoreCol: String, biggerIsBetter: Boolean, k: Int,
+      cellCol: Option[String]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.TopKByScore
+    val goodness =
+      if (biggerIsBetter) col(scoreCol) else lit(0.0) - col(scoreCol)
+    val idType = scored.schema(idCol).dataType
+    val cellType = cellCol.map(c => scored.schema(c).dataType)
+    val outCols = Seq(idCol) ++ cellCol ++ Seq(scoreCol)
     if (k == 1)
-      // partial-agg top-1: (cos_sim desc, id asc) as a min_by over
-      // struct(-cos_sim, id) — negating the SCORE instead of the id
-      // keeps the tie-break correct for ANY id domain (the former
-      // max_by(…, struct(cos_sim, -id)) silently inverted ties for
-      // caller-supplied negative ids and overflowed at Long.MinValue).
-      // `0.0 - x` rather than `-x` so a -0.0 score (round() of a tiny
-      // negative cosine) normalizes to +0.0 and can't order-split a
-      // tie against a +0.0 score.
-      scored
-        .groupBy(col("qid"))
-        .agg(min_by(
-          struct(col(idCol), col("cell"), col("cos_sim")),
-          struct(lit(0.0) - col("cos_sim"), col(idCol))).as("_t"))
-        .select(col("qid"), col(s"_t.$idCol"), col("_t.cell"),
-          col("_t.cos_sim"))
+      scored.groupBy(col("qid"))
+        .agg(min_by(struct(outCols.map(col): _*),
+          struct(lit(0.0) - goodness, col(idCol))).as("_t"))
+        .select(col("qid") +: outCols.map(n => col(s"_t.$n")): _*)
+    else if (k <= TopKByScore.MaxK && integral(idType) &&
+        cellType.forall(integral))
+      scored.groupBy(col("qid"))
+        .agg(TopKByScore.topk(k, col(idCol).cast("long"),
+          cellCol.map(col).getOrElse(lit(0L)).cast("long"),
+          goodness).as("_t"))
+        .select(col("qid"), explode(col("_t")).as("_e"))
+        .select(col("qid") +: (
+          Seq(col("_e.id").cast(idType).as(idCol)) ++
+          cellCol.map(c => col("_e.cell").cast(cellType.get).as(c)) ++
+          Seq((if (biggerIsBetter) col("_e.cos_sim")
+            else lit(0.0) - col("_e.cos_sim")).as(scoreCol))): _*)
     else {
-      // k>1 mirrors the top-1 shape with a size-bounded partial top-k
-      // aggregate (TopKByScore): each map partition reduces to ≤ k
-      // hits per query before the exchange, where the rank window
-      // shuffles every candidate row. Ids/cells travel as longs inside
-      // the aggregate and cast back to the layout's types on the way
-      // out (partition-directory inference can make `cell` an int),
-      // so the output schema is bit-identical to the window form's.
-      // Non-integral id/cell layouts and k past the buffer guard keep
-      // the window form — correctness first, the agg is an
-      // optimization.
-      import graft.functions.TopKByScore
-      def integral(dt: org.apache.spark.sql.types.DataType) = dt match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      val idType = scored.schema(idCol).dataType
-      val cellType = scored.schema("cell").dataType
-      if (k <= TopKByScore.MaxK && integral(idType) && integral(cellType))
-        scored
-          .groupBy(col("qid"))
-          .agg(TopKByScore.topk(k, col(idCol).cast("long"),
-            col("cell").cast("long"), col("cos_sim")).as("_t"))
-          .select(col("qid"), explode(col("_t")).as("_e"))
-          .select(col("qid"), col("_e.id").cast(idType).as(idCol),
-            col("_e.cell").cast(cellType).as("cell"),
-            col("_e.cos_sim").as("cos_sim"))
-      else {
-        val wTop = Window.partitionBy(col("qid"))
-          .orderBy(col("cos_sim").desc, col(idCol).asc)
-        scored
-          .withColumn("_rn", row_number().over(wTop))
-          .filter(col("_rn") <= k)
-          .drop("_rn")
-      }
+      // nulls last both ways: bare `.asc` is nulls-first, and a null
+      // score must never take rank 1
+      val ord = if (biggerIsBetter) col(scoreCol).desc_nulls_last
+        else col(scoreCol).asc_nulls_last
+      scored
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy(col("qid")).orderBy(ord, col(idCol).asc)))
+        .filter(col("_rn") <= k)
+        .drop("_rn")
     }
   }
 
@@ -1292,14 +1342,27 @@ object Similarity {
     // old row). When the batch's ids are independent of the corpus's,
     // pass false — an id collision would otherwise silently skip a
     // genuine near-duplicate candidate.
-    val top = ivfSearchBatch(batch, batchIdCol, batchVecCol,
-      index, idCol, vecCol, centroids,
-      k = 1, nProbe = nProbe, excludeSelf = excludeSelf)
-      .select(col("qid"), col(idCol).as("neighbor_id"), col("cos_sim"))
+    flagsFromTop(batch, batchIdCol, ivfSearchBatch(batch, batchIdCol,
+      batchVecCol, index, idCol, vecCol, centroids,
+      k = 1, nProbe = nProbe, excludeSelf = excludeSelf),
+      idCol, "cos_sim", col("cos_sim") < tau)
+  }
+
+  /** The tail of the dedup flag surfaces: every `batch` row
+    * left-joined to its top-1 probe hit (`top`: qid, `idCol`,
+    * `scoreCol`) as (`batchIdCol`, neighbor_id, `scoreCol`, keep) —
+    * keep when the probe found no candidate or `notDup` holds for
+    * the hit's score.
+    */
+  private[ops] def flagsFromTop(batch: DataFrame, batchIdCol: String,
+      top: DataFrame, idCol: String, scoreCol: String, notDup: Column)
+  : DataFrame = {
+    val hit = top.select(col("qid"), col(idCol).as("neighbor_id"),
+      col(scoreCol))
     batch.select(col(batchIdCol))
-      .join(top, col(batchIdCol) === col("qid"), "left")
-      .select(col(batchIdCol), col("neighbor_id"), col("cos_sim"),
-        (col("cos_sim").isNull || col("cos_sim") < tau).as("keep"))
+      .join(hit, col(batchIdCol) === col("qid"), "left")
+      .select(col(batchIdCol), col("neighbor_id"), col(scoreCol),
+        (col(scoreCol).isNull || notDup).as("keep"))
   }
 
   /** One Lloyd (k-means) iteration — the offline IVF codebook builder:

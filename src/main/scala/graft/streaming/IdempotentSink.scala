@@ -202,11 +202,25 @@ object IdempotentSink {
     // either way (nothing ≥ batchId−1 is ever touched); the range
     // fold's target id is its smallest folded id, so the time-travel
     // filter is unaffected.
-    val from = if (tailOnly) math.max(0L, batchId - everyN - 1) else 0L
-    if (batchId >= 2 && batchId % everyN == 0)
-      compactIngestTrees(spark, indexRoot, batchId - 2, numFiles, from)
-    else Map.empty
+    foldRange(batchId, everyN, tailOnly).fold(Map.empty[String, Seq[Long]]) {
+      case (upto, from) =>
+        compactIngestTrees(spark, indexRoot, upto, numFiles, from)
+    }
   }
+
+  /** The fold-due rule every ingest shares: batch `batchId` folds
+    * every `everyN`-th id from 2 on, over `_batch` ids
+    * [from, batchId − 2] — from 0 under the full policy, from the tail
+    * start `batchId − everyN − 1` under `tailOnly`. Nothing at or above
+    * batchId − 1 is touched, the replay-safety bound. None when the
+    * batch is not due or `everyN` is not positive (no folding).
+    */
+  private def foldRange(batchId: Long, everyN: Int, tailOnly: Boolean)
+  : Option[(Long, Long)] =
+    if (everyN > 0 && batchId >= 2 && batchId % everyN == 0)
+      Some((batchId - 2,
+        if (tailOnly) math.max(0L, batchId - everyN - 1) else 0L))
+    else None
 
   /** The shared fold core: list `_batch=` subtrees in
     * [`fromBatch`, `uptoBatch`], write the consolidated tree to
@@ -462,11 +476,8 @@ object IdempotentSink {
             "would mis-route the probe. Re-clustering requires a new " +
             "index root.")
     }
-    if (foldEvery > 0 && batchId >= 2 && batchId % foldEvery == 0) {
-      val from =
-        if (foldTail) math.max(0L, batchId - foldEvery - 1) else 0L
-      compactBatches(spark, vecDir, "cell", batchId - 2,
-        fromBatch = from): Unit
+    foldRange(batchId, foldEvery, foldTail).foreach { case (upto, from) =>
+      compactBatches(spark, vecDir, "cell", upto, fromBatch = from): Unit
     }
     val p = new org.apache.hadoop.fs.Path(vecDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -647,11 +658,8 @@ object IdempotentSink {
             "the probe, a drifted PQ codebook mis-scores it. " +
             "Re-clustering/re-training requires a new index root.")
     }
-    if (foldEvery > 0 && batchId >= 2 && batchId % foldEvery == 0) {
-      val from =
-        if (foldTail) math.max(0L, batchId - foldEvery - 1) else 0L
-      compactBatches(spark, codeDir, "cell", batchId - 2,
-        fromBatch = from): Unit
+    foldRange(batchId, foldEvery, foldTail).foreach { case (upto, from) =>
+      compactBatches(spark, codeDir, "cell", upto, fromBatch = from): Unit
     }
     val p = new org.apache.hadoop.fs.Path(codeDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())

@@ -143,6 +143,45 @@ class FuzzySpec extends AnyFunSuite {
     }
   }
 
+  // token_set_ratio as three full `ratio` calls — the reference the
+  // length-derived intersection scores must reproduce exactly
+  private def tokenSetOracle(a: String, b: String): Double = {
+    val ta = a.split("\\s+").filter(_.nonEmpty).toSet
+    val tb = b.split("\\s+").filter(_.nonEmpty).toSet
+    val inter = (ta & tb).toSeq.sorted.mkString(" ")
+    val diffA = (ta -- tb).toSeq.sorted.mkString(" ")
+    val diffB = (tb -- ta).toSeq.sorted.mkString(" ")
+    val t1 = if (diffA.isEmpty) inter
+      else if (inter.isEmpty) diffA else s"$inter $diffA"
+    val t2 = if (diffB.isEmpty) inter
+      else if (inter.isEmpty) diffB else s"$inter $diffB"
+    math.max(Fuzzy.ratio(inter, t1),
+      math.max(Fuzzy.ratio(inter, t2), Fuzzy.ratio(t1, t2)))
+  }
+
+  test("tokenSetRatio equals the three-ratio oracle bit for bit") {
+    val fixed = Seq(
+      ("a b c", "x y z"), // empty intersection
+      ("a b", "a b c"), // empty diffA
+      ("a b c", "b c"), // empty diffB
+      ("", ""), ("", "a b"), ("  ", "a"), // both / one side empty
+      ("a a b b", "b b a"), ("x x x", "x"), // repeated tokens
+      ("בְּרֵאשִׁית בָּרָא אֱלֹהִים", "בָּרָא אֱלֹהִים אֵת"), // pointed Hebrew
+      ("וַיֹּאמֶר אֱלֹהִים יְהִי אוֹר", "ויאמר אלהים יהי אור"))
+    fixed.foreach { case (a, b) =>
+      assert(Fuzzy.tokenSetRatio(a, b) == tokenSetOracle(a, b), s"[$a] [$b]")
+      assert(Fuzzy.tokenSetRatio(b, a) == tokenSetOracle(b, a), s"[$b] [$a]")
+    }
+    val words = Seq("a", "bb", "ccc", "אב", "בְּ", "גדול", "x y")
+    val rnd = new scala.util.Random(7)
+    def phrase() = Seq.fill(rnd.nextInt(7))(words(rnd.nextInt(words.size)))
+      .mkString(" ")
+    (1 to 500).foreach { _ =>
+      val (a, b) = (phrase(), phrase())
+      assert(Fuzzy.tokenSetRatio(a, b) == tokenSetOracle(a, b), s"[$a] [$b]")
+    }
+  }
+
   test("hebrew normalize strips nikkud, keeps letters") {
     assert(HebrewNorm.normalize("בְּרֵא") ==
       "ברא")

@@ -298,6 +298,53 @@ class PqSpec extends AnyFunSuite {
       "ip-metric aggregate top-5 diverged from the window ranking")
   }
 
+  test("SDC rank stage is window-free through the bounded aggregates " +
+    "(k=1 min_by, k<=MaxK topk), falls back to the window past MaxK, " +
+    "and the three paths agree on the (sdc_dist asc, id asc) ranks") {
+    import spark.implicits._
+    val dim = 16
+    val vecs = randVecs(400, dim, 78)
+    val df = vecs.toDF("id", "vec")
+    val cb = Pq.train(df, "id", "vec", m = 4, k = 8, sampleN = 400)
+    val cents = Centroids(vecs.take(4).toDF("cid", "cvec"), "cid", "cvec")
+    val dir = TestDirs.tmp("ivfpq_sdc_plan").toFile.getAbsolutePath
+    Pq.ivfPqIndexWrite(df, "id", "vec", cents, cb, dir)
+    val index = spark.read.parquet(dir)
+    val queries = vecs.take(3).toDF("id", "vec")
+    def probe(k: Int) =
+      Pq.ivfPqSearchBatchSdc(queries, "id", "vec", index, "id",
+        cents, cb, k = k, nProbe = 2)
+    def planOf(df: org.apache.spark.sql.DataFrame): String = {
+      df.collect(); df.queryExecution.executedPlan.toString
+    }
+    val p1 = planOf(probe(1))
+    assert(!p1.contains("Window") && p1.toLowerCase.contains("min_by"),
+      s"k=1 should rank through min_by, not a window:\n${p1.take(1200)}")
+    val p5 = planOf(probe(5))
+    assert(!p5.contains("Window") &&
+      p5.toLowerCase.contains("topkbyscore"),
+      s"k=5 should rank through TopKByScore:\n${p5.take(1200)}")
+    val win = probe(graft.functions.TopKByScore.MaxK + 1)
+    assert(planOf(win).contains("Window"),
+      "k past MaxK should keep the rank window")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("qid", "id", "cell", "sdc_dist").collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          r.get(2).asInstanceOf[Number].longValue, r.getDouble(3)))
+    // quantized distances tie often, so the id tie-break is exercised
+    val ranked = rows(win).groupBy(_._1).view
+      .mapValues(_.sortBy(t => (t._4, t._2)).toSeq).toMap
+    def firstRanks(n: Int) =
+      ranked.values.flatMap(_.take(n)).toSeq.sorted
+    assert(rows(probe(5)).toSeq.sorted == firstRanks(5),
+      "SDC aggregate top-5 diverged from the window ranking")
+    assert(rows(probe(1)).toSeq.sorted == firstRanks(1),
+      "SDC min_by top-1 diverged from the window ranking")
+    assert(ranked.values.exists(r => r.size > 5 &&
+      r.sliding(2).exists(p => p(0)._4 == p(1)._4)),
+      "fixture has no tied distances — the tie-break is untested")
+  }
+
   test("semanticDedupFlagsPq: a planted near-copy is dropped, a far " +
     "vector kept, and flags agree with the k=1 ADC probe") {
     import spark.implicits._
