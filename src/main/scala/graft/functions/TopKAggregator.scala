@@ -100,6 +100,10 @@ class TopKByScore(k: Int)
     ExpressionEncoder[scala.collection.Seq[TopKHit]]()
   override def outputEncoder: Encoder[Seq[TopKHit]] =
     ExpressionEncoder[Seq[TopKHit]]()
+
+  // plans print the aggregator by its toString: the bound, not the JVM
+  // identity hash, so a plan reads the same in every run
+  override def toString: String = s"TopKByScore($k)"
 }
 
 object TopKByScore {

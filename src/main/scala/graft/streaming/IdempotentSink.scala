@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import graft.io.{FsUtil, ParallelActions}
+import graft.ops.{Dedup, Pq, Similarity}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
@@ -27,18 +30,8 @@ object IdempotentSink {
     * a batch id rewrites that partition with the same rows — idempotent
     * by construction (spec'd in StreamingSpec).
     */
-  def parquetByBatch(out: String)(df: DataFrame, batchId: Long): Unit = {
-    require(!df.columns.contains("_batch"),
-      "the micro-batch already carries a _batch column; it would be " +
-        "silently replaced by the sink's batch id")
-    // per-WRITE option, not the session conf: mutating the session-wide
-    // partitionOverwriteMode races with concurrent writers on a shared
-    // SparkSession (the option takes precedence and needs no restore)
-    df.withColumn("_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch").parquet(out)
-  }
+  def parquetByBatch(out: String)(df: DataFrame, batchId: Long): Unit =
+    writeByBatch(out, None, df, batchId)
 
   /** [[parquetByBatch]] for cell-/band-partitioned INDEX layouts — the
     * exactly-once STREAMING BUILD path for the persisted index
@@ -60,14 +53,25 @@ object IdempotentSink {
     * batches being folded.
     */
   def indexByBatch(out: String, partitionCol: String)(
+      df: DataFrame, batchId: Long): Unit =
+    writeByBatch(out, Some(partitionCol), df, batchId)
+
+  /** The batch-keyed write behind [[parquetByBatch]] (no
+    * `partitionCol`) and [[indexByBatch]]: `_batch=<id>/` first, then
+    * the index's own partition level, by dynamic partition overwrite.
+    */
+  private def writeByBatch(out: String, partitionCol: Option[String],
       df: DataFrame, batchId: Long): Unit = {
     require(!df.columns.contains("_batch"),
       "the micro-batch already carries a _batch column; it would be " +
         "silently replaced by the sink's batch id")
+    // per-WRITE option, not the session conf: mutating the session-wide
+    // partitionOverwriteMode races with concurrent writers on a shared
+    // SparkSession (the option takes precedence and needs no restore)
     df.withColumn("_batch", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch", partitionCol).parquet(out)
+      .partitionBy("_batch" +: partitionCol.toSeq: _*).parquet(out)
   }
 
   /** Compaction for an [[indexByBatch]] tree — `Similarity
@@ -99,7 +103,7 @@ object IdempotentSink {
     * yet) and is safely rewritten; `uptoBatch` is ignored while a
     * pending swap exists (the manifest pins that fold).
     */
-  def compactBatches(spark: org.apache.spark.sql.SparkSession,
+  def compactBatches(spark: SparkSession,
       out: String, partitionCol: String, uptoBatch: Long,
       fromBatch: Long = 0L): Seq[Long] =
     compactBatchesWith(spark, out, uptoBatch, (folded, tmp) =>
@@ -133,7 +137,7 @@ object IdempotentSink {
     * smallest folded id, which stays strictly below every batch id
     * that can still replay.
     */
-  def compactBatchesFlat(spark: org.apache.spark.sql.SparkSession,
+  def compactBatchesFlat(spark: SparkSession,
       out: String, uptoBatch: Long, numFiles: Int = 1,
       fromBatch: Long = 0L): Seq[Long] = {
     require(numFiles >= 1, s"numFiles must be ≥1 (got $numFiles)")
@@ -142,6 +146,22 @@ object IdempotentSink {
       fromBatch)
   }
 
+  /** One tree an ingest grows under its index root: the subdirectory
+    * name and, for a cell-/band-partitioned index tree, its partition
+    * column ([[indexByBatch]] layout; `None` is a flat
+    * [[parquetByBatch]] tree, folded by [[compactBatchesFlat]]).
+    */
+  private case class Tree(name: String, partitionCol: Option[String])
+
+  /** [[dedupIngestByBatch]]'s trees, in fold and write order. */
+  private val TextTrees =
+    Seq(Tree("fp", None), Tree("band", Some("band")), Tree("tok", None))
+
+  /** A codebook-identity stamp an ingest's first tree is built under,
+    * and the error for a tree whose sidecar holds another one.
+    */
+  private case class Stamp(value: String, drift: String => String)
+
   /** One maintenance call folding ALL THREE of a [[dedupIngestByBatch]]
     * index root's trees (band via [[compactBatches]], fp/tok via
     * [[compactBatchesFlat]]) under the shared replay-safety contract —
@@ -149,16 +169,21 @@ object IdempotentSink {
     * per tree. Each tree's fold is independently crash-resumable; a
     * re-run after a crash finishes whichever swaps were pending.
     */
-  def compactIngestTrees(spark: org.apache.spark.sql.SparkSession,
-      indexRoot: String, uptoBatch: Long, numFiles: Int = 1,
-      fromBatch: Long = 0L)
-  : Map[String, Seq[Long]] = Map(
-    "fp" -> compactBatchesFlat(spark, s"$indexRoot/fp", uptoBatch, numFiles,
-      fromBatch),
-    "band" -> compactBatches(spark, s"$indexRoot/band", "band", uptoBatch,
-      fromBatch),
-    "tok" -> compactBatchesFlat(spark, s"$indexRoot/tok", uptoBatch,
-      numFiles, fromBatch))
+  def compactIngestTrees(spark: SparkSession, indexRoot: String,
+      uptoBatch: Long, numFiles: Int = 1, fromBatch: Long = 0L)
+  : Map[String, Seq[Long]] =
+    foldTrees(spark, indexRoot, TextTrees, uptoBatch, numFiles, fromBatch)
+
+  /** Folds each of `trees` under `indexRoot` over `_batch` ids
+    * [`fromBatch`, `uptoBatch`], in order; the folded ids per tree.
+    */
+  private def foldTrees(spark: SparkSession, indexRoot: String,
+      trees: Seq[Tree], uptoBatch: Long, numFiles: Int, fromBatch: Long)
+  : Map[String, Seq[Long]] = trees.map { t =>
+    val dir = s"$indexRoot/${t.name}"
+    t.name -> t.partitionCol.fold(compactBatchesFlat(spark, dir, uptoBatch,
+      numFiles, fromBatch))(compactBatches(spark, dir, _, uptoBatch, fromBatch))
+  }.toMap
 
   /** IN-STREAM fold scheduling — [[compactIngestTrees]] driven from
     * inside the foreachBatch body itself, so an ingest stream keeps its
@@ -185,7 +210,7 @@ object IdempotentSink {
     * strictly below every replayable batch id (the `_batch < batchId`
     * time-travel read sees the same logical state).
     */
-  def foldIfDue(spark: org.apache.spark.sql.SparkSession,
+  def foldIfDue(spark: SparkSession,
       indexRoot: String, batchId: Long, everyN: Int, numFiles: Int = 1,
       tailOnly: Boolean = false): Map[String, Seq[Long]] = {
     require(everyN > 0, s"foldIfDue cadence must be positive (got $everyN)")
@@ -238,210 +263,229 @@ object IdempotentSink {
     * rewritten — the property that turns a fixed fold cadence from
     * O(n²/everyN) total rewrite work into O(n).
     */
-  private def compactBatchesWith(spark: org.apache.spark.sql.SparkSession,
-      out: String, uptoBatch: Long,
-      rewrite: (DataFrame, String) => Unit,
-      fromBatch: Long = 0L): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(out)
+  private def compactBatchesWith(spark: SparkSession, out: String,
+      uptoBatch: Long, rewrite: (DataFrame, String) => Unit,
+      fromBatch: Long): Seq[Long] = {
+    val root = new Path(out)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(
-      root.getParent, root.getName + "_compact_tmp")
-    val manifest = new org.apache.hadoop.fs.Path(tmp, FoldManifest)
-    def finishSwap(target: Long, folded: Seq[Long]): Seq[Long] = {
-      folded.foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"_batch=$b"), true)
-      }
-      val dest = new org.apache.hadoop.fs.Path(root, s"_batch=$target")
+    val tmp = new Path(root.getParent, root.getName + "_compact_tmp")
+    val manifest = new Path(tmp, FoldManifest)
+    def finishSwap(fold: (Long, Seq[Long])): Seq[Long] = {
+      val (target, folded) = fold
+      folded.foreach(b => fs.delete(new Path(root, s"_batch=$b"), true))
+      val dest = new Path(root, s"_batch=$target")
       if (!fs.rename(tmp, dest))
         throw new java.io.IOException(
           s"compactBatches: rename $tmp -> $dest failed — the folded " +
             "rows are in the temp tree, not the index; re-run to resume")
       // the manifest rode the rename into the batch dir (underscore-
       // hidden from readers); drop it now that the swap is durable
-      fs.delete(new org.apache.hadoop.fs.Path(dest, FoldManifest), false)
+      fs.delete(new Path(dest, FoldManifest), false)
       // the overwrite replaced listed files; invalidate cached listings
       spark.catalog.refreshByPath(out)
       folded
     }
-    if (fs.exists(manifest)) {
-      val (target, folded) = readFoldManifest(fs, manifest)
-      return finishSwap(target, folded)
-    }
+    if (fs.exists(manifest)) return finishSwap(readFoldManifest(fs, manifest))
     val batchIds = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("_batch="))
       .map(_.getPath.getName.stripPrefix("_batch=").toLong)
       .filter(b => b >= fromBatch && b <= uptoBatch).toSeq.sorted
     if (batchIds.size < 2) return Seq.empty
-    val target = batchIds.head
-    rewrite(
-      spark.read.parquet(out)
-        .filter(col("_batch").cast("long") >= fromBatch &&
-          col("_batch").cast("long") <= uptoBatch)
-        .drop("_batch"),
-      tmp.toString)
-    writeFoldManifest(fs, manifest, target, batchIds)
-    finishSwap(target, batchIds)
+    rewrite(spark.read.parquet(out).filter(col("_batch").cast("long")
+      .between(fromBatch, uptoBatch)).drop("_batch"), tmp.toString)
+    writeFoldManifest(fs, manifest, batchIds.head, batchIds)
+    finishSwap((batchIds.head, batchIds))
   }
 
-  /** Self-growing EXACTLY-ONCE streaming dedup ingest — the text-dedup
-    * analog of [[indexByBatch]]'s ANN build, closing the loop the
-    * batch-side `corpusIndexesAppend` leaves open in a stream (a raw
-    * append is at-least-once; a replayed batch would append its index
-    * rows AGAIN and later lookups would double-count them). Each
-    * micro-batch:
+  /** The per-batch EXACTLY-ONCE protocol of the three self-growing
+    * `foreachBatch` ingests — [[dedupIngestByBatch]] (text),
+    * [[semanticIngestByBatch]] (vectors) and [[semanticIngestPqByBatch]]
+    * (PQ codes). A raw `mode("append")` ingest is at-least-once under
+    * foreachBatch replay: a recovered micro-batch would append its
+    * index rows AGAIN and later lookups would count them twice. The
+    * caller supplies its `trees` under `indexRoot`, an optional codebook
+    * `stamp`, `flagsOf` (the batch's flags from one prior per tree,
+    * `None` where no earlier batch holds data), the `keep` predicate
+    * over those flags and `indexRows` (the kept rows' index frame per
+    * tree). Each micro-batch runs, in this order:
     *
-    *  1. is flagged against the index rows of every EARLIER batch
-    *     ([[graft.ops.Dedup.crossDedupFlagsFromIndexes]] over the
-    *     accumulated batch-keyed (fp, band, tok) trees under
-    *     `indexRoot`) — zero passes over earlier batches' text;
-    *  2. writes its flags `(id, exact_dup, near_dup)` batch-keyed to
-    *     `flagsOut` (the stream's product);
-    *  3. appends the index rows of its KEPT (non-dup) docs under
-    *     `_batch=<id>` in all three trees — so later batches dedup
-    *     against everything kept so far and the corpus stays deduped
-    *     as it grows.
+    *  1. Drift: a `stamp` that differs from the first tree's sidecar is
+    *     refused before ANY tree mutation — a fold-due batch under a
+    *     drifted codebook must not compact the tree it is about to
+    *     refuse to write into (r16 ADVICE). The codebook is the stream's
+    *     invariant (cells assigned under another one mis-route the
+    *     probe), so re-clustering needs a new index root.
+    *  2. Fold: every `foldEvery`-th batch folds each tree in-stream over
+    *     `_batch` ids up to `batchId − 2` — the derived replay-safe
+    *     bound, crash analysis and full-vs-tail (`foldTail`) trade of
+    *     [[foldIfDue]] — BEFORE the prior read, so that read already
+    *     lists the consolidated trees and sees the same rows either way.
+    *     0 leaves folding to an outside-the-stream [[compactBatches]] /
+    *     [[compactBatchesFlat]] pass run after the checkpoint commits
+    *     past the folded ids; a negative cadence is refused before any
+    *     tree is touched. The folded target id is the smallest folded
+    *     id, strictly below any batch that can still replay, so folds
+    *     keep the time-travel contract. Without folds each tree grows
+    *     one `_batch=` subtree per micro-batch forever, and at 10⁵
+    *     micro-batches the prior read's file LISTING is the job
+    *     (STREAM_*_r14).
+    *  3. Prior read: each tree is read at `_batch < batchId`, a
+    *     partition-pruned TIME-TRAVEL filter, and only when a `_batch=`
+    *     subtree below `batchId` holds data files. Bare existence is not
+    *     enough: an EMPTY micro-batch leaves only `_SUCCESS`, and reading
+    *     that throws "Unable to infer schema" (r16 ADVICE); a tree whose
+    *     data all sits at `_batch ≥ batchId` — every replay of the
+    *     earliest data-carrying batch — prunes the read to statically
+    *     empty, where a probe would still cost ~15 empty-stage Spark
+    *     jobs (JobProf r19). The file-system check is that pruning, at
+    *     zero jobs.
+    *  4. Checkpoint: the flags materialize once, EAGERLY, so the
+    *     overlapped writes below do not each recompute them (a lazy
+    *     checkpoint would race them into it) — unless every leaf of
+    *     their plan is a local relation (a driver finish already holds
+    *     the rows), which the writes read without computing anything.
+    *  5. Kept join: the batch's rows whose flags pass `keep`.
+    *  6. Writes: the flags batch-keyed under `flagsOut` (the stream's
+    *     product) and each tree's kept index rows under `_batch=<id>`,
+    *     overlapped from the driver pool (guide §2.6): disjoint trees,
+    *     no ordering contract between them.
+    *  7. Stamp: after the first write, so the sidecar never outlives a
+    *     crashed pre-write batch; a replay re-stamps identically.
     *
-    * EXACTLY-ONCE under foreachBatch's at-least-once replay: a
-    * replayed batch can find its OWN rows already in the trees, and
-    * flagging a doc against itself would flip its flags (kept →
+    * EXACTLY-ONCE: a replayed batch can find its OWN rows already in
+    * the trees, and flagging a row against itself would flip it (kept →
     * self-dup), rewrite a different subtree than the first run, and
-    * poison every later batch. The lookup therefore reads
-    * `_batch < batchId` — a PARTITION-pruned time-travel filter — so a
-    * replay sees exactly the index state the first run saw, recomputes
-    * byte-identical flags, and each dynamic-partition overwrite of
-    * `_batch=<id>` is a no-op rewrite. The four writes are not atomic
-    * as a group, but any partial state a crash leaves is healed by the
-    * same property: the replay overwrites each `_batch=<id>` partition
-    * from flags that depend only on `_batch < id` state
-    * (crash+replay ≡ uninterrupted, spec'd in StreamingSpec).
-    * Downstream consumers of `flagsOut` get the flag-sink contract of
-    * every foreachBatch side output: a batch's subtree can exist
-    * before its checkpoint commits (and before its index rows land) —
-    * gate consumption on the stream's committed offsets, or tolerate
-    * the last batch being rewritten in place.
+    * poison every later batch. The time-travel read gives a replay
+    * exactly the state its first run saw, so it recomputes
+    * byte-identical flags and each dynamic-partition overwrite of
+    * `_batch=<id>` is a no-op rewrite. The writes are not atomic as a
+    * group, but any partial state a crash leaves is healed by the same
+    * property: the replay overwrites each `_batch=<id>` partition from
+    * flags that depend only on `_batch < id` state (crash+replay ≡
+    * uninterrupted, spec'd in StreamingSpec). Consumers of `flagsOut`
+    * get the contract of every foreachBatch side output: a batch's
+    * subtree can exist before its checkpoint commits (and before its
+    * index rows land) — gate consumption on the stream's committed
+    * offsets, or tolerate the last batch being rewritten in place.
     *
     * WITHIN-batch dups are out of contract (the corpus-lookup shape
     * flags batch vs corpus): a micro-batch carrying internal copies
     * keeps them all this round and dedups against them from the next
     * batch on; pre-collapse the batch (`exactDedupFlags` /
     * `componentDedupFlags`) when that matters.
+    */
+  private def ingestBatch(df: DataFrame, batchId: Long, indexRoot: String,
+      flagsOut: String, idCol: String, trees: Seq[Tree],
+      stamp: Option[Stamp], foldEvery: Int, foldTail: Boolean)(
+      flagsOf: Seq[Option[DataFrame]] => DataFrame, keep: Column,
+      indexRows: DataFrame => Seq[DataFrame]): Unit = {
+    require(foldEvery >= 0,
+      s"foldEvery must be ≥ 0, 0 = no in-stream fold (got $foldEvery)")
+    val spark = df.sparkSession
+    val dirs = trees.map(t => s"$indexRoot/${t.name}")
+    val sidecar =
+      stamp.flatMap(_ => Similarity.readStampSidecar(spark, dirs.head))
+    for (s <- stamp; found <- sidecar if found != s.value)
+      throw new IllegalStateException(s.drift(found))
+    for ((upto, from) <- foldRange(batchId, foldEvery, foldTail))
+      foldTrees(spark, indexRoot, trees, upto, numFiles = 1, from): Unit
+    val fs =
+      new Path(indexRoot).getFileSystem(spark.sessionState.newHadoopConf())
+    val priors = dirs.map(dir =>
+      Option.when(FsUtil.hasBatchDataBelow(fs, new Path(dir), batchId))(
+        spark.read.parquet(dir)
+          .filter(col("_batch").cast("long") < batchId).drop("_batch")))
+    val probed = flagsOf(priors)
+    val flags = if (probed.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[LocalRelation])) probed
+      else probed.localCheckpoint()
+    val kept = df.join(flags.filter(keep).select(idCol), Seq(idCol))
+    val indexWrites = dirs.lazyZip(trees).lazyZip(indexRows(kept)).map {
+      (dir, t, rows) => () => writeByBatch(dir, t.partitionCol, rows, batchId)
+    }
+    ParallelActions.run(
+      (() => parquetByBatch(flagsOut)(flags, batchId)) +: indexWrites)
+    if (sidecar.isEmpty) stamp.foreach(s =>
+      Similarity.writeStampSidecar(spark, dirs.head, s.value))
+  }
+
+  /** Self-growing exactly-once streaming TEXT dedup ingest — the
+    * text-dedup analog of [[indexByBatch]]'s ANN build, closing the
+    * loop the batch-side `corpusIndexesAppend` leaves open in a stream.
+    * Each micro-batch is flagged against the index rows of every
+    * EARLIER batch ([[graft.ops.Dedup.crossDedupFlagsFromIndexes]] over
+    * the accumulated batch-keyed (fp, band, tok) trees under
+    * `indexRoot` — zero passes over earlier batches' text; a tree with
+    * no earlier data reads as an empty frame of the batch's own shape),
+    * writes its flags `(id, exact_dup, near_dup)` to `flagsOut`, and
+    * indexes its KEPT (non-dup) docs in all three trees, so later
+    * batches dedup against everything kept so far. Protocol, replay
+    * and crash analysis: [[ingestBatch]].
     *
-    * Compaction — all four trees this ingest grows have a resumable
-    * fold: without one they accumulate one `_batch=` subtree per
-    * micro-batch forever, and at 10⁵ micro-batches the `prior()`
-    * lookup's file LISTING is the job (growth measured pre/post fold
-    * in STREAM_*_r14). `foldEvery = N` schedules it IN-STREAM via
-    * [[foldIfDue]] (fires at the top of every Nth batch's body with
-    * `uptoBatch = batchId - 2`, the derived replay-safe bound — see
-    * foldIfDue for the crash analysis), so a long-running ingest needs
-    * no external maintenance job; the default 0 leaves folding to an
-    * OUTSIDE-the-stream [[compactIngestTrees]] pass run after the
-    * checkpoint commits past the folded ids (the band tree is
-    * [[compactBatches]]-shaped, partitionCol "band"; the fp/tok trees
-    * — and the flags tree, if its consumers want it — fold with
-    * [[compactBatchesFlat]]). Either way the folded target id is the
-    * smallest folded id, strictly below any batch that can still
-    * replay, so the `_batch < id` time-travel contract is preserved
-    * across folds.
+    * `foldEvery = N` folds all three trees in-stream
+    * ([[foldIfDue]]'s rule; `foldTail` picks the tail policy); the
+    * default 0 leaves folding to an outside-the-stream
+    * [[compactIngestTrees]] pass (the band tree is
+    * [[compactBatches]]-shaped, partitionCol "band"; the fp/tok trees —
+    * and the flags tree, if its consumers want it — fold with
+    * [[compactBatchesFlat]]).
     */
   def dedupIngestByBatch(indexRoot: String, flagsOut: String,
       textCol: String, idCol: String, numHashes: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.3, foldEvery: Int = 0,
-      foldTail: Boolean = false)(
-      df: DataFrame, batchId: Long): Unit = {
-    import graft.ops.Dedup
-    val spark = df.sparkSession
-    // fold FIRST so the current batch's prior() lookup already reads
-    // the consolidated listings — the fold only touches _batch ≤
-    // batchId-2, which the lookup sees identically either way.
-    // foldTail picks the O(n)-total-work tail policy over the
-    // constant-listing full policy (trade documented on foldIfDue)
-    if (foldEvery > 0)
-      foldIfDue(spark, indexRoot, batchId, foldEvery,
-        tailOnly = foldTail): Unit
-    val (fpDir, bandDir, tokDir) =
-      (s"$indexRoot/fp", s"$indexRoot/band", s"$indexRoot/tok")
-    // shape frames for the first-batch case (no tree yet): the batch's
-    // own triple, emptied — same schema the accumulated trees carry
-    val (fpShape, bandShape, tokShape) = Dedup.corpusIndexesFromProfile(
-      Dedup.corpusProfile(df, textCol, idCol), numHashes, bands)
-    def prior(dir: String, shape: DataFrame): DataFrame = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      // hasBatchDataBelow, not hasDataFiles/fs.exists: bare existence is
-      // the empty-first-batch wedge (an EMPTY micro-batch leaves only
-      // _SUCCESS and reading it throws "Unable to infer schema" — r16
-      // ADVICE), and a tree whose data all sits at `_batch ≥ batchId`
-      // (a replayed earliest batch) partition-prunes the time-travel
-      // read to statically empty anyway — the empty-shape frame is the
-      // same prior state with no scan to plan (r19)
-      if (graft.io.FsUtil.hasBatchDataBelow(fs, p, batchId))
-        spark.read.parquet(dir)
-          .filter(col("_batch").cast("long") < batchId).drop("_batch")
-      else shape.filter(lit(false))
+      foldTail: Boolean = false)(df: DataFrame, batchId: Long): Unit = {
+    def indexes(profile: DataFrame): Seq[DataFrame] = {
+      val (f, b, t) = Dedup.corpusIndexesFromProfile(profile, numHashes, bands)
+      Seq(f, b, t)
     }
-    // EAGER batch-sized checkpoints: the flags probe and the kept-rows
-    // profile each materialize ONCE, then the four writes they feed
-    // (flags + fp/band/tok — disjoint trees, no ordering contract
-    // between them; replay rewrites each byte-identically) overlap from
-    // the driver pool (guide §2.6). Lazy checkpoints here would race
-    // the overlapped writes into re-computing the shared frame.
-    val flags = Dedup.crossDedupFlagsFromIndexes(df, textCol, idCol,
-      prior(fpDir, fpShape), prior(bandDir, bandShape),
-      prior(tokDir, tokShape), numHashes, bands, minJaccard)
-      .localCheckpoint()
-    val kept = df.join(
-      flags.filter(!col("exact_dup") && !col("near_dup")).select(idCol),
-      Seq(idCol))
-    // ONE text pass (fingerprint + shingles) feeds all three index
-    // writes — the corpusIndexesAppend convention; without it each
-    // write re-runs the join + profile
-    val keptProf = Dedup.corpusProfile(kept, textCol, idCol)
-      .localCheckpoint()
-    val (fpK, bandK, tokK) = Dedup.corpusIndexesFromProfile(
-      keptProf, numHashes, bands)
-    graft.io.ParallelActions.run(Seq(
-      () => parquetByBatch(flagsOut)(flags, batchId),
-      () => parquetByBatch(fpDir)(fpK, batchId),
-      () => indexByBatch(bandDir, "band")(bandK, batchId),
-      () => parquetByBatch(tokDir)(tokK, batchId)))
+    ingestBatch(df, batchId, indexRoot, flagsOut, idCol, TextTrees, None,
+      foldEvery, foldTail)(
+      priors => {
+        val shapes = indexes(Dedup.corpusProfile(df, textCol, idCol))
+        val Seq(fp, band, tok) = priors.lazyZip(shapes)
+          .map((prior, shape) => prior.getOrElse(shape.filter(lit(false))))
+        Dedup.crossDedupFlagsFromIndexes(df, textCol, idCol, fp, band, tok,
+          numHashes, bands, minJaccard)
+      },
+      !col("exact_dup") && !col("near_dup"),
+      // ONE text pass (fingerprint + shingles), checkpointed, feeds all
+      // three index writes — the corpusIndexesAppend convention; without
+      // it each write re-runs the join + profile
+      kept => indexes(Dedup.corpusProfile(kept, textCol, idCol)
+        .localCheckpoint()))
   }
+
+  /** Flags for a batch no earlier batch precedes with data: every row
+    * keeps, no search job runs. The semantic ingests' flags schema
+    * (id, neighbor_id, `score`, keep) with null neighbors.
+    */
+  private def allKeep(df: DataFrame, idCol: String, score: String): DataFrame =
+    df.select(col(idCol),
+      lit(null).cast(df.schema(idCol).dataType).as("neighbor_id"),
+      lit(null).cast("double").as(score), lit(true).as("keep"))
 
   /** The EMBEDDING-family twin of [[dedupIngestByBatch]]: a
     * self-growing exactly-once streaming SEMANTIC dedup ingest. Each
     * micro-batch of (id, vector) rows is flagged against the vectors
     * every EARLIER batch kept (keep iff best cosine under the IVF
     * probe < `tau` — [[graft.ops.Similarity.semanticDedupFlags]]'s
-    * contract, nProbe cells probed per query), then appends only its
-    * KEPT rows' (id, vec, cell) index rows under `_batch=<id>/cell=<c>`
-    * — the same batch-keyed dynamic-partition-overwrite tree the band
-    * index uses, so the `_batch < id` time-travel read gives a replayed
-    * batch exactly the state its first run saw (self-matches are
-    * impossible; replays rewrite byte-identically) and the probe prunes
-    * at BOTH levels (batch subtrees by the time-travel bound, cells by
-    * the static probe predicate).
+    * contract, nProbe cells probed per query), writes flags (id,
+    * neighbor_id, cos_sim, keep) to `flagsOut`, then appends only its
+    * KEPT rows' (id, vec, cell) index rows under
+    * `vec/_batch=<id>/cell=<c>`, so the probe prunes at BOTH levels
+    * (batch subtrees by the time-travel bound, cells by the static
+    * probe predicate). The first batch stamps the tree with the
+    * codebook's identity sidecar, the same O(1) mechanism the persisted
+    * IVF index uses, and a later batch under a drifted codebook is
+    * refused. Protocol, replay and crash analysis: [[ingestBatch]].
     *
-    * The codebook is the stream's INVARIANT: cell assignments must come
-    * from one codebook across every batch or the probe mis-routes, so
-    * the first batch stamps the tree with a codebook-identity sidecar
-    * ([[graft.ops.Similarity.writeStampSidecar]] — the same O(1)
-    * mechanism the persisted IVF index uses) and every later batch
-    * REFUSES a drifted codebook before writing anything. Re-clustering
-    * mid-stream therefore requires a new index root (by design — the
-    * accumulated cell layout is meaningless under new centroids).
-    *
-    * WITHIN-batch dups are out of contract, as in the text ingest: the
-    * corpus-lookup shape flags batch vs corpus. `excludeSelf` defaults
-    * false here (a streaming ingest's ids are new by construction);
-    * pass true for the corpus-refresh case where a re-embedded id must
-    * not match its own old row.
-    *
-    * `foldEvery = N` folds the vec tree in-stream every Nth batch with
-    * `uptoBatch = batchId - 2` — the same derived replay-safety bound,
-    * crash analysis, and full-vs-tail policy trade as [[foldIfDue]]
-    * (the fold here is ONE [[compactBatches]] call, partitionCol
-    * "cell"); the flags tree is the caller's to fold
-    * ([[compactBatchesFlat]]) if its consumers want it.
+    * `excludeSelf` defaults false here (a streaming ingest's ids are
+    * new by construction); pass true for the corpus-refresh case where
+    * a re-embedded id must not match its own old row. `foldEvery = N`
+    * folds the vec tree in-stream ([[compactBatches]], partitionCol
+    * "cell"; policy trade on [[foldIfDue]]); the flags tree is the
+    * caller's to fold ([[compactBatchesFlat]]) if its consumers want
+    * it.
     *
     * The centroid frame is collected once per micro-batch (one Spark
     * job per batch on a plan-backed frame). A caller that feeds many
@@ -455,70 +499,26 @@ object IdempotentSink {
       centroidIdCol: String, centroidVecCol: String, tau: Double,
       nProbe: Int = 2, excludeSelf: Boolean = false, foldEvery: Int = 0,
       foldTail: Boolean = false)(df: DataFrame, batchId: Long): Unit = {
-    import graft.ops.Similarity
-    val cents = Similarity.Centroids(centroids, centroidIdCol,
-      centroidVecCol)
-    val spark = df.sparkSession
-    val vecDir = s"$indexRoot/vec"
-    // drift check BEFORE the fold: the fold rewrites/deletes _batch
-    // subtrees, and the documented contract is that a drifted codebook
-    // is refused before ANY tree mutation — a fold-due batch with a
-    // drifted codebook must not compact the tree it is about to refuse
-    // to write into (r16 ADVICE)
-    val stamp = cents.stamp
-    val sidecar = Similarity.readStampSidecar(spark, vecDir)
-    sidecar.foreach { s =>
-      if (s != stamp)
-        throw new IllegalStateException(
-          "semanticIngestByBatch: this call's codebook (stamp " +
-            s"$stamp) is not the one the index tree at $vecDir was " +
-            s"built under ($s) — the accumulated cell assignments " +
-            "would mis-route the probe. Re-clustering requires a new " +
-            "index root.")
-    }
-    foldRange(batchId, foldEvery, foldTail).foreach { case (upto, from) =>
-      compactBatches(spark, vecDir, "cell", upto, fromBatch = from): Unit
-    }
-    val p = new org.apache.hadoop.fs.Path(vecDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // hasBatchDataBelow, not hasDataFiles/fs.exists: the FS-metadata
-    // form of the `_batch < batchId` partition pruning — a replayed
-    // earliest batch takes the all-keep fast path instead of planning
-    // a probe over a statically-empty prior (see the PQ ingest)
-    val flags = (if (graft.io.FsUtil.hasBatchDataBelow(fs, p, batchId)) {
-      val prior = spark.read.parquet(vecDir)
-        .filter(col("_batch").cast("long") < batchId).drop("_batch")
-      Similarity.semanticDedupFlags(df, idCol, vecCol, prior, idCol,
-        vecCol, cents, tau, nProbe, excludeSelf)
-    } else
-      // first batch: no prior tree — everything keeps, no search job
-      // (and no empty-frame stamp ambiguity to warn about)
-      df.select(col(idCol),
-        lit(null).cast(df.schema(idCol).dataType).as("neighbor_id"),
-        lit(null).cast("double").as("cos_sim"), lit(true).as("keep")))
-      // EAGER batch-sized checkpoint: the probe materializes once, then
-      // the flags write and the kept-index write — disjoint trees, no
-      // ordering contract, each replay-idempotent — overlap from the
-      // driver pool (guide §2.6); a lazy checkpoint would race the two
-      // overlapped consumers into re-computing the probe
-      .localCheckpoint()
-    val kept = df.join(flags.filter(col("keep")).select(idCol), Seq(idCol))
-    // repartition by cell before the write: one file per TOUCHED cell
-    // per batch instead of one per (cell × input partition) — at 32
-    // cores the un-repartitioned tree lists ~32× more files for the
-    // same rows, and the probe's per-cell listing is exactly what the
-    // fold exists to protect. The shuffle is batch-sized (the bounded
-    // quantity).
-    val keptAssigned = byPartition(Similarity.ivfAssign(
-      kept.select(col(idCol), col(vecCol)), idCol, vecCol, cents)
-      .select(col(idCol), col(vecCol), col("cell")), "cell")
-    graft.io.ParallelActions.run(Seq(
-      () => parquetByBatch(flagsOut)(flags, batchId),
-      () => indexByBatch(vecDir, "cell")(keptAssigned, batchId)))
-    // stamp AFTER the first write so the sidecar never outlives a
-    // crashed pre-write batch; a replay re-stamps identically
-    if (sidecar.isEmpty)
-      Similarity.writeStampSidecar(spark, vecDir, stamp)
+    val cents = Similarity.Centroids(centroids, centroidIdCol, centroidVecCol)
+    val stamp = Stamp(cents.stamp, s => "semanticIngestByBatch: this " +
+      s"call's codebook (stamp ${cents.stamp}) is not the one the index " +
+      s"tree at $indexRoot/vec was built under ($s) — the accumulated " +
+      "cell assignments would mis-route the probe. Re-clustering " +
+      "requires a new index root.")
+    ingestBatch(df, batchId, indexRoot, flagsOut, idCol,
+      Seq(Tree("vec", Some("cell"))), Some(stamp), foldEvery, foldTail)(
+      _.head.fold(allKeep(df, idCol, "cos_sim"))(prior =>
+        Similarity.semanticDedupFlags(df, idCol, vecCol, prior, idCol,
+          vecCol, cents, tau, nProbe, excludeSelf)),
+      col("keep"),
+      // repartition by cell before the write: one file per TOUCHED cell
+      // per batch instead of one per (cell × input partition) — at 32
+      // cores the un-repartitioned tree lists ~32× more files for the
+      // same rows, and the probe's per-cell listing is exactly what the
+      // fold exists to protect. The shuffle is batch-sized.
+      kept => Seq(byPartition(Similarity.ivfAssign(
+        kept.select(col(idCol), col(vecCol)), idCol, vecCol, cents)
+        .select(col(idCol), col(vecCol), col("cell")), "cell")))
   }
 
   /** The NO-FULL-VECTOR regime of [[semanticIngestByBatch]] — the
@@ -527,36 +527,31 @@ object IdempotentSink {
     * tree stores the FULL vector per kept row (~0.5 TB at 10⁹ 64-dim
     * vectors — the payload the IVF-PQ index exists to avoid), and its
     * in-stream folds REWRITE that payload every due point. Here each
-    * micro-batch is flagged by ADC top-1 against the earlier batches'
-    * accumulated (id, pq_code, cell) tree — the probe reads m bytes
-    * per candidate, never a vector — and appends only its KEPT rows'
-    * codes, so the tree the stream grows (and the folds rewrite) is
-    * ~(8·dim)/m× smaller than the plain ingest's (64× at dim=64, m=8;
-    * measured in SEMINGEST_PQ_1m_r16).
+    * micro-batch is flagged by top-1 against the earlier batches'
+    * accumulated (id, pq_code, cell) tree under `code/` — the probe
+    * reads m bytes per candidate, never a vector — and appends only its
+    * KEPT rows' codes, so the tree the stream grows (and the folds
+    * rewrite) is ~(8·dim)/m× smaller than the plain ingest's (64× at
+    * dim=64, m=8; measured in SEMINGEST_PQ_1m_r16). Protocol, replay
+    * and crash analysis: [[ingestBatch]]; `foldEvery`/`foldTail` as in
+    * the plain ingest.
     *
-    * Same exactly-once protocol as the plain ingest, point for point:
-    * `_batch=<id>/cell=<c>` dynamic-partition-overwrite keying, the
-    * `_batch < id` time-travel prior read (a replayed batch can never
-    * self-match; replays rewrite byte-identically), `batchId − 2` as
-    * the derived replay-safe fold bound, and the same full-vs-tail
-    * fold policy trade ([[foldIfDue]]). The stream invariant widens to
-    * BOTH codebooks: the sidecar carries the combined IVF+PQ stamp
-    * ([[graft.ops.Pq.combinedStamp]]), and a drift in EITHER refuses
-    * before any tree mutation — a drifted IVF codebook mis-routes the
-    * probe, a drifted PQ codebook mis-SCORES it (silently, which is
-    * worse). Re-clustering or re-training requires a new index root;
-    * [[graft.ops.Similarity.rebuildUnderCodebook]]-family migration
-    * ops are the managed path out.
+    * The stream invariant widens to BOTH codebooks: the sidecar carries
+    * the combined IVF+PQ stamp ([[graft.ops.Pq.combinedStamp]]), and a
+    * drift in EITHER is refused before any tree mutation — a drifted
+    * IVF codebook mis-routes the probe, a drifted PQ codebook mis-SCORES
+    * it (silently, which is worse). Re-clustering or re-training
+    * requires a new index root;
+    * [[graft.ops.Similarity.rebuildUnderCodebook]]-family migration ops
+    * are the managed path out.
     *
     * Flag semantics are [[graft.ops.Pq.semanticDedupFlagsPq]]'s:
     * `keep = no indexed neighbor within tauDist` (probed-cell misses
     * surface as NULL neighbors ⇒ keep). The trade vs the plain ingest
     * is quantization error in the SCORE — a true near-dup straddling
     * tauDist by less than the probe error can flip (the recall/τ study
-    * in SEMDEDUP artifacts); the protocol (time-travel, kept-only
-    * indexing, replay surface) is identical and spec'd in
-    * StreamingSpec. Flags are (id, neighbor_id, <score>, keep),
-    * batch-keyed under `flagsOut`.
+    * in SEMDEDUP artifacts). Flags are (id, neighbor_id, <score>,
+    * keep), batch-keyed under `flagsOut`.
     *
     * `probeMode` picks the probe kernel — the score column name and
     * the τ recipe follow it:
@@ -614,111 +609,54 @@ object IdempotentSink {
     * ([[graft.ops.DriverFinish]]; the rule is
     * [[graft.ops.Pq.semanticDedupFlagsPqSdc]]'s), anything larger —
     * or any batch under a negative threshold — by the distributed
-    * probe. The flags and the code tree are the same either way.
+    * probe. The flags and the code tree are the same either way; flags
+    * the driver holds skip the checkpoint.
     */
   def semanticIngestPqByBatch(indexRoot: String, flagsOut: String,
       idCol: String, vecCol: String, centroids: DataFrame,
-      centroidIdCol: String, centroidVecCol: String,
-      cb: graft.ops.Pq.Codebook, tauDist: Double, nProbe: Int = 2,
-      excludeSelf: Boolean = false, foldEvery: Int = 0,
-      foldTail: Boolean = false, probeMode: String = "adc",
+      centroidIdCol: String, centroidVecCol: String, cb: Pq.Codebook,
+      tauDist: Double, nProbe: Int = 2, excludeSelf: Boolean = false,
+      foldEvery: Int = 0, foldTail: Boolean = false, probeMode: String = "adc",
       tauAdc: Double = Double.NaN, band: Double = Double.NaN,
-      refineK: Int = 4)(
-      df: DataFrame, batchId: Long): Unit = {
-    require(probeMode == "adc" || probeMode == "sdc" ||
-      probeMode == "hybrid",
+      refineK: Int = 4)(df: DataFrame, batchId: Long): Unit = {
+    require(Seq("adc", "sdc", "hybrid").contains(probeMode),
       "semanticIngestPqByBatch: probeMode must be \"adc\", \"sdc\" or " +
         s""""hybrid" (got "$probeMode")""")
-    if (probeMode == "hybrid")
-      require(!tauAdc.isNaN && !band.isNaN,
-        "semanticIngestPqByBatch: probeMode=hybrid needs tauAdc AND " +
-          "band (tauDist is the SDC threshold; calibrate tauAdc with " +
-          "Pq.calibrateTauDist mode=\"adc\", band ≈ the boundary " +
-          "spread — 0 degenerates to pure sdc)")
-    else
-      require(tauAdc.isNaN && band.isNaN,
-        s"semanticIngestPqByBatch: tauAdc/band are hybrid-only " +
-          s"parameters (probeMode=$probeMode) — a silently-ignored " +
-          "threshold is a mis-calibration waiting to happen")
-    import graft.ops.{Pq, Similarity}
-    val cents = Similarity.Centroids(centroids, centroidIdCol,
-      centroidVecCol)
-    val spark = df.sparkSession
-    val codeDir = s"$indexRoot/code"
-    // drift (either codebook) refused BEFORE any tree mutation,
-    // including a due fold — same ordering contract as the plain ingest
-    val stamp = Pq.combinedStamp(cents, cb)
-    val sidecar = Similarity.readStampSidecar(spark, codeDir)
-    sidecar.foreach { s =>
-      if (s != stamp)
-        throw new IllegalStateException(
-          "semanticIngestPqByBatch: this call's codebooks (combined " +
-            s"stamp $stamp) are not the ones the code tree at $codeDir " +
-            s"was built under ($s) — a drifted IVF codebook mis-routes " +
-            "the probe, a drifted PQ codebook mis-scores it. " +
-            "Re-clustering/re-training requires a new index root.")
-    }
-    foldRange(batchId, foldEvery, foldTail).foreach { case (upto, from) =>
-      compactBatches(spark, codeDir, "cell", upto, fromBatch = from): Unit
-    }
-    val p = new org.apache.hadoop.fs.Path(codeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // hasBatchDataBelow, not hasDataFiles/fs.exists: (a) bare existence
-    // is the empty-first-batch wedge (see dedupIngestByBatch's prior());
-    // (b) a tree whose only data sits at `_batch ≥ batchId` — every
-    // REPLAY of the earliest data-carrying batch — partition-prunes the
-    // `_batch < batchId` prior read to statically empty, so the probe
-    // is a no-op that still costs ~15 empty-stage Spark jobs per
-    // invocation (JobProf r19). The FS-metadata check IS that partition
-    // pruning, at zero jobs; the fast path below produces the identical
-    // all-keep flags the empty-prior probe would.
+    val hybrid = probeMode == "hybrid"
+    require(tauAdc.isNaN != hybrid && band.isNaN != hybrid,
+      if (hybrid) "semanticIngestPqByBatch: probeMode=hybrid needs " +
+        "tauAdc AND band (tauDist is the SDC threshold; calibrate tauAdc " +
+        "with Pq.calibrateTauDist mode=\"adc\", band ≈ the boundary " +
+        "spread — 0 degenerates to pure sdc)"
+      else s"semanticIngestPqByBatch: tauAdc/band are hybrid-only " +
+        s"parameters (probeMode=$probeMode) — a silently-ignored " +
+        "threshold is a mis-calibration waiting to happen")
+    val cents = Similarity.Centroids(centroids, centroidIdCol, centroidVecCol)
+    val combined = Pq.combinedStamp(cents, cb)
+    val stamp = Stamp(combined, s => "semanticIngestPqByBatch: this " +
+      s"call's codebooks (combined stamp $combined) are not the ones the " +
+      s"code tree at $indexRoot/code was built under ($s) — a drifted IVF " +
+      "codebook mis-routes the probe, a drifted PQ codebook mis-scores " +
+      "it. Re-clustering/re-training requires a new index root.")
     val scoreCol = if (probeMode == "adc") "adc_dist" else "sdc_dist"
-    val probed = if (graft.io.FsUtil.hasBatchDataBelow(fs, p, batchId)) {
-      val prior = spark.read.parquet(codeDir)
-        .filter(col("_batch").cast("long") < batchId).drop("_batch")
-      probeMode match {
-        case "sdc" =>
-          Pq.semanticDedupFlagsPqSdc(df, idCol, vecCol, prior,
-            idCol, cents, cb, tauDist, nProbe, excludeSelf)
-        case "hybrid" =>
-          Pq.semanticDedupFlagsPqHybrid(df, idCol, vecCol, prior,
-            idCol, cents, cb,
-            tauSdc = tauDist, tauAdc = tauAdc, band = band,
-            refineK = refineK, nProbe = nProbe,
-            excludeSelf = excludeSelf)
-        case _ =>
-          Pq.semanticDedupFlagsPq(df, idCol, vecCol, prior, idCol,
-            cents, cb, tauDist, nProbe, excludeSelf)
-      }
-    } else
-      // first batch with data: no prior — everything keeps, no search
-      df.select(col(idCol),
-        lit(null).cast(df.schema(idCol).dataType).as("neighbor_id"),
-        lit(null).cast("double").as(scoreCol), lit(true).as("keep"))
-    // EAGER batch-sized checkpoint, then the two disjoint-tree writes
-    // overlap — same §2.6 shape and crash analysis as the plain
-    // ingest's. Flags the driver finish already holds (a plan over
-    // local relations only) are not computed again by either write, so
-    // they skip the checkpoint's job.
-    val flags =
-      if (probed.queryExecution.analyzed.collectLeaves()
-          .forall(_.isInstanceOf[LocalRelation])) probed
-      else probed.localCheckpoint()
-    val kept = df.join(flags.filter(col("keep")).select(idCol), Seq(idCol))
-    // assign + encode in one batch-sized scan; repartition by cell for
-    // one file per TOUCHED cell per batch (same listing math as the
-    // plain ingest — the shuffle is batch-sized)
-    val keptCodes = byPartition(Pq.encode(
-      Similarity.ivfAssign(kept.select(col(idCol), col(vecCol)), idCol,
-        vecCol, cents), vecCol, cb)
-      .select(col(idCol), col("pq_code"), col("cell")), "cell")
-    graft.io.ParallelActions.run(Seq(
-      () => parquetByBatch(flagsOut)(flags, batchId),
-      () => indexByBatch(codeDir, "cell")(keptCodes, batchId)))
-    // stamp AFTER the first write so the sidecar never outlives a
-    // crashed pre-write batch; a replay re-stamps identically
-    if (sidecar.isEmpty)
-      Similarity.writeStampSidecar(spark, codeDir, stamp)
+    ingestBatch(df, batchId, indexRoot, flagsOut, idCol,
+      Seq(Tree("code", Some("cell"))), Some(stamp), foldEvery, foldTail)(
+      _.head.fold(allKeep(df, idCol, scoreCol))(prior => probeMode match {
+        case "sdc" => Pq.semanticDedupFlagsPqSdc(df, idCol, vecCol, prior,
+          idCol, cents, cb, tauDist, nProbe, excludeSelf)
+        case "hybrid" => Pq.semanticDedupFlagsPqHybrid(df, idCol, vecCol,
+          prior, idCol, cents, cb, tauDist, tauAdc, band, refineK, nProbe,
+          excludeSelf)
+        case _ => Pq.semanticDedupFlagsPq(df, idCol, vecCol, prior, idCol,
+          cents, cb, tauDist, nProbe, excludeSelf)
+      }),
+      col("keep"),
+      // assign + encode in one batch-sized scan, repartitioned by cell
+      // as in the plain ingest
+      kept => Seq(byPartition(Pq.encode(Similarity.ivfAssign(
+        kept.select(col(idCol), col(vecCol)), idCol, vecCol, cents),
+        vecCol, cb).select(col(idCol), col("pq_code"), col("cell")),
+        "cell")))
   }
 
   /** The resumable-swap commit record: its presence inside a temp tree
@@ -731,17 +669,16 @@ object IdempotentSink {
     */
   private[graft] val FoldManifest = "_graft_fold"
 
-  private[graft] def writeFoldManifest(fs: org.apache.hadoop.fs.FileSystem,
-      manifest: org.apache.hadoop.fs.Path, target: Long,
-      folded: Seq[Long]): Unit = {
+  private[graft] def writeFoldManifest(fs: FileSystem, manifest: Path,
+      target: Long, folded: Seq[Long]): Unit = {
     val outS = fs.create(manifest, true)
     try outS.write(s"$target\n${folded.mkString(",")}\n".getBytes("UTF-8"))
     finally outS.close()
   }
 
-  private[graft] def readFoldManifest(fs: org.apache.hadoop.fs.FileSystem,
-      manifest: org.apache.hadoop.fs.Path): (Long, Seq[Long]) = {
-    val lines = graft.io.FsUtil.readFullyUtf8(fs, manifest)
+  private[graft] def readFoldManifest(fs: FileSystem,
+      manifest: Path): (Long, Seq[Long]) = {
+    val lines = FsUtil.readFullyUtf8(fs, manifest)
       .getOrElse(throw new java.io.FileNotFoundException(
         s"fold manifest $manifest vanished mid-read"))
       .split("\n")

@@ -2171,4 +2171,106 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$pq/idx/code").drop("_batch")
       .as[(Long, Seq[Int], Int)].collect().toSet === rowsBefore)
   }
+
+  /** Every file under `dir`, relative path and length, sorted. */
+  private def fileListing(dir: String): Seq[(String, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!Files.exists(root)) Seq.empty
+    else {
+      val walk = Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(f => (root.relativize(f).toString, Files.size(f)))
+          .toSeq.sorted
+      } finally walk.close()
+    }
+  }
+
+  test("every streaming ingest refuses a negative foldEvery before any " +
+    "tree is touched (0 stays \"no in-stream fold\")") {
+    import spark.implicits._
+    import graft.streaming.IdempotentSink
+    val cents = Seq((0L, Seq(1.0, 0.0, 0.0, 0.0)),
+      (1L, Seq(0.0, 1.0, 0.0, 0.0))).toDF("cid", "cvec")
+    val docs = Seq((1L, "one two three four five six seven"))
+      .toDF("doc_id", "text")
+    val vecs = Seq((1L, pqV1)).toDF("vec_id", "vec")
+    type Ingest = (String, String, Int, Long) => Unit
+    val ingests: Seq[(String, Ingest)] = Seq(
+      "dedupIngestByBatch" -> ((root, flags, every, b) =>
+        IdempotentSink.dedupIngestByBatch(root, flags, "text", "doc_id",
+          foldEvery = every)(docs, b)),
+      "semanticIngestByBatch" -> ((root, flags, every, b) =>
+        IdempotentSink.semanticIngestByBatch(root, flags, "vec_id", "vec",
+          cents, "cid", "cvec", tau = 0.9, foldEvery = every)(vecs, b)),
+      "semanticIngestPqByBatch" -> ((root, flags, every, b) =>
+        IdempotentSink.semanticIngestPqByBatch(root, flags, "vec_id",
+          "vec", cents, "cid", "cvec", pqTestCodebook, tauDist = 0.01,
+          foldEvery = every)(vecs, b)))
+    for ((name, ingest) <- ingests) {
+      val root = TestDirs.tmp(s"negfold_idx_$name").toString
+      val flags = TestDirs.tmp(s"negfold_flags_$name").toString
+      // batches 0 and 1 under foldEvery = 0; batch 2 would be due at
+      // any positive cadence that divides it
+      ingest(root, flags, 0, 0L)
+      ingest(root, flags, 0, 1L)
+      val before = (fileListing(root), fileListing(flags))
+      assert(before._1.nonEmpty && before._2.nonEmpty, name)
+      val e = intercept[IllegalArgumentException] {
+        ingest(root, flags, -1, 2L)
+      }
+      assert(e.getMessage.contains("foldEvery"), s"$name: ${e.getMessage}")
+      assert((fileListing(root), fileListing(flags)) === before,
+        s"$name: the refused batch touched the index root or the flags")
+    }
+  }
+
+  test("a fold-due batch under a drifted codebook is refused before " +
+    "the fold: both semantic ingests leave their tree unfolded") {
+    import spark.implicits._
+    import graft.streaming.IdempotentSink
+    val cents = Seq((0L, Seq(1.0, 0.0, 0.0, 0.0)),
+      (1L, Seq(0.0, 1.0, 0.0, 0.0))).toDF("cid", "cvec")
+    val drifted = Seq((0L, Seq(0.9, 0.0, 0.1, 0.0)),
+      (1L, Seq(0.0, 1.0, 0.0, 0.0))).toDF("cid", "cvec")
+    // one novel vector per batch (pairwise cosine ≤ 0.55, and far
+    // apart at tauDist 0.01 after quantization), so every batch keeps
+    // its row and writes its own _batch= subtree
+    val vecs = Seq(pqV1, pqV2, pqV4, Seq(9.0, 9.0, 9.0, 9.0))
+    type Ingest = (String, String, org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame, Long) => Unit
+    val ingests: Seq[(String, String, Ingest)] = Seq(
+      ("semanticIngestByBatch", "vec", (root, flags, cs, rows, b) =>
+        IdempotentSink.semanticIngestByBatch(root, flags, "vec_id", "vec",
+          cs, "cid", "cvec", tau = 0.9, foldEvery = 2)(rows, b)),
+      ("semanticIngestPqByBatch", "code", (root, flags, cs, rows, b) =>
+        IdempotentSink.semanticIngestPqByBatch(root, flags, "vec_id", "vec",
+          cs, "cid", "cvec", pqTestCodebook, tauDist = 0.01,
+          foldEvery = 2)(rows, b)))
+    for ((name, tree, ingest) <- ingests) {
+      val root = TestDirs.tmp(s"driftfold_idx_$name").toString
+      val flags = TestDirs.tmp(s"driftfold_flags_$name").toString
+      vecs.zipWithIndex.foreach { case (v, b) =>
+        ingest(root, flags, cents, Seq((b.toLong + 1L, v))
+          .toDF("vec_id", "vec"), b.toLong)
+      }
+      def batchDirs: Set[String] =
+        Option(new java.io.File(s"$root/$tree").listFiles()).toSeq.flatten
+          .filter(f => f.isDirectory && f.getName.startsWith("_batch="))
+          .map(_.getName).toSet
+      // batch 2's due point folds _batch ≤ 0, a single subtree: no-op
+      assert(batchDirs === (0 to 3).map(b => s"_batch=$b").toSet, name)
+      // batch 4 is due (folds _batch ≤ 2) but its codebook drifted
+      val e = intercept[IllegalStateException] {
+        ingest(root, flags, drifted,
+          Seq((9L, pqV3)).toDF("vec_id", "vec"), 4L)
+      }
+      assert(e.getMessage.contains(name), e.getMessage)
+      assert(batchDirs === (0 to 3).map(b => s"_batch=$b").toSet,
+        s"$name: the refused batch folded the tree")
+      assert(!new java.io.File(s"${root}/${tree}_compact_tmp").exists(),
+        s"$name: the refused batch started a fold")
+    }
+  }
 }

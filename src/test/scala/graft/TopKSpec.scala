@@ -58,6 +58,23 @@ class TopKSpec extends AnyFunSuite {
     assert(viaAgg === viaWin)
   }
 
+  test("TopKByScore prints its bound, not an identity hash, in plans") {
+    import spark.implicits._
+    val rows = Seq((1L, 10L, 0L, 0.9), (1L, 20L, 1L, 0.8))
+      .toDF("qid", "id", "cell", "cos_sim")
+    // two separately built aggregates: two aggregator instances
+    def plan(): String = rows.groupBy("qid")
+      .agg(TopKByScore.topk(3, col("id"), col("cell"),
+        col("cos_sim")).as("t"))
+      .queryExecution.explainString(
+        org.apache.spark.sql.execution.SimpleMode)
+      .replaceAll("#[0-9]+L?", "#").replaceAll("plan_id=[0-9]+", "plan_id=")
+    val (first, second) = (plan(), plan())
+    assert(first.contains("TopKByScore(3)"), first)
+    assert(!first.contains("TopKByScore@"), first)
+    assert(first === second)
+  }
+
   test("TopKByScore refuses k past the buffer guard") {
     val e = intercept[IllegalArgumentException] {
       new TopKByScore(TopKByScore.MaxK + 1)
