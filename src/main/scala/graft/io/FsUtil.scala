@@ -1,12 +1,24 @@
 package graft.io
 
 /** Shared IO for the engine's tiny protocol files — stamp sidecars,
-  * boundary pins, fold manifests. One read-fully primitive instead of a
-  * per-module copy, so stream-semantics fixes (short reads, charset)
-  * propagate everywhere at once. These files are bytes-to-low-KBs by
-  * contract; this is NOT a data-file reader.
+  * boundary pins, fold manifests — and the layout-existence probes.
+  * One read-fully primitive instead of a per-module copy, so
+  * stream-semantics fixes (short reads, charset) propagate everywhere
+  * at once. These files are bytes-to-low-KBs by contract; this is NOT a
+  * data-file reader. The stamped-layout protocol built on them (stamp
+  * sidecar, compaction swap, migration preflight) is [[StampedLayout]].
   */
 object FsUtil {
+
+  /** The file system `dir` lives on, under the session's Hadoop conf,
+    * with `dir` as a Path.
+    */
+  private[graft] def fsOf(spark: org.apache.spark.sql.SparkSession,
+      dir: String)
+  : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+  }
 
   /** The file's full content as trimmed UTF-8 text; None when absent. */
   def readFullyUtf8(fs: org.apache.hadoop.fs.FileSystem,

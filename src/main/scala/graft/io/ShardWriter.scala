@@ -183,17 +183,12 @@ object ShardWriter {
     */
   private[graft] val BoundsSidecar = "_graft_shard_bounds"
 
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
   private def sidecarPath(p: org.apache.hadoop.fs.Path) =
     p.suffix("." + BoundsSidecar)
 
   def writeBoundsSidecar(spark: org.apache.spark.sql.SparkSession,
       outDir: String, boundaries: Seq[Long]): Unit = {
-    val (fs, p) = fsOf(spark, outDir)
+    val (fs, p) = FsUtil.fsOf(spark, outDir)
     val dest = sidecarPath(p)
     val payload = boundaries.mkString(",") + "\n"
     // idempotent re-pin of the same snapshot: nothing to do, and
@@ -223,7 +218,7 @@ object ShardWriter {
 
   def readBoundsSidecar(spark: org.apache.spark.sql.SparkSession,
       outDir: String): Option[Seq[Long]] = {
-    val (fs, p) = fsOf(spark, outDir)
+    val (fs, p) = FsUtil.fsOf(spark, outDir)
     readSidecarFile(fs, sidecarPath(p)).orElse(
       // legacy in-dir location (pre-sibling builds)
       readSidecarFile(fs, new org.apache.hadoop.fs.Path(p, BoundsSidecar)))
@@ -269,7 +264,7 @@ object ShardWriter {
     // survives it — silently re-pinning the DELETED snapshot's
     // boundaries over a grown corpus would pile every new high key into
     // the last shard. Discard the orphan and re-derive.
-    val (fs, p) = fsOf(spark, outDir)
+    val (fs, p) = FsUtil.fsOf(spark, outDir)
     if (!fs.exists(p)) fs.delete(sidecarPath(p), false): Unit
     // an EMPTY pin (a snapshot with < 2 distinct keys — including one
     // whose sampling stage transiently selected nothing) must not

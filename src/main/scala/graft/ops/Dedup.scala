@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.TextFunctions._
+import graft.io.StampedLayout
 
 /** Corpus deduplication operators: exact (hash-groupBy), MinHash
   * signatures + banded grouping, SimHash, and token-set Jaccard.
@@ -495,14 +496,6 @@ object Dedup {
         col("bb.band").as("band"), col("bb.bits").as("bits"))
   }
 
-  /** Shared tail of the banded Hamming search: bucket-occupancy window,
-    * hot-bucket guard, popcount verify, cross-band dedup. `bandRows`
-    * must carry (id, code: long, band, bits); one shuffle on
-    * (band, bits) — the bucket-size window rides it, and both guard
-    * branches reuse the same exchange. Every row ships the code as 8
-    * bytes, so the verify is `bit_count(xor)` — one codegen'd
-    * instruction per pair.
-    */
   /** 128-bit SimHash neighbor pairs — the band-domain lever that does
     * NOT shrink the pigeonhole guarantee: 64-bit codes offer either
     * 16-bit bands (4 bands, H ≤ 2 guaranteed, 2¹⁶ occupancy domain —
@@ -587,6 +580,14 @@ object Dedup {
       codeCols = Seq("hi", "lo"))
   }
 
+  /** Shared tail of the banded Hamming search: bucket-occupancy window,
+    * hot-bucket guard, popcount verify, cross-band dedup. `bandRowsIn`
+    * must carry (id, the `codeCols` longs, band, bits); one shuffle on
+    * (band, bits) — the bucket-size window rides it, and both guard
+    * branches reuse the same exchange. Every row ships its code as 8
+    * bytes per long, so the verify is a sum of `bit_count(xor)` — one
+    * codegen'd instruction per long per pair.
+    */
   private def bandedHammingPairs(bandRowsIn: DataFrame, maxHamming: Int,
       maxBucket: Int, codeCols: Seq[String] = Seq("code")): DataFrame = {
     val bandRows = bandRowsIn
@@ -645,6 +646,16 @@ object Dedup {
       .distinct()
   }
 
+  /** Auto-regime boundary for [[crossDedupFlags]]: estimated batch
+    * shingle-frame bytes above this pick the shuffle regime. 256 MiB
+    * against the measured failure boundary — ~600 MB of shingle frames
+    * (4M-doc corpus, 400k-doc batch) killed the broadcast build twice
+    * (DOCS_4m_r13/r14) — with 2× headroom for the driver holding up to
+    * three batch-derived broadcasts concurrently and for per-executor
+    * copies on a real cluster's 8-16 GB executors.
+    */
+  val BroadcastShingleMaxBytes: Long = 256L << 20
+
   /** Incremental-ingest dedup: flag each BATCH document as an exact
     * and/or near duplicate of the existing CORPUS — the daily-ingest
     * decision ("is this new document already in the training set?")
@@ -686,16 +697,6 @@ object Dedup {
     * means an executor loss fails the ingest job instead of
     * recomputing (rerun the batch; flags are deterministic).
     */
-  /** Auto-regime boundary for [[crossDedupFlags]]: estimated batch
-    * shingle-frame bytes above this pick the shuffle regime. 256 MiB
-    * against the measured failure boundary — ~600 MB of shingle frames
-    * (4M-doc corpus, 400k-doc batch) killed the broadcast build twice
-    * (DOCS_4m_r13/r14) — with 2× headroom for the driver holding up to
-    * three batch-derived broadcasts concurrently and for per-executor
-    * copies on a real cluster's 8-16 GB executors.
-    */
-  val BroadcastShingleMaxBytes: Long = 256L << 20
-
   def crossDedupFlags(batch: DataFrame, corpus: DataFrame,
       textCol: String, idCol: String, numHashes: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.3,
@@ -903,12 +904,9 @@ object Dedup {
       () => bandI.write.partitionBy("band").mode("overwrite")
         .parquet(s"$dir/band"),
       () => tokI.write.mode("overwrite").parquet(s"$dir/tok")))
-    Similarity.writeStampSidecar(spark, s"$dir/band",
+    StampedLayout.writeStampSidecar(spark, s"$dir/band",
       bandParams(numHashes, bands, tokensTag))
-    val (fs, p) = {
-      val pp = new org.apache.hadoop.fs.Path(profDir)
-      (pp.getFileSystem(spark.sessionState.newHadoopConf()), pp)
-    }
+    val (fs, p) = graft.io.FsUtil.fsOf(spark, profDir)
     fs.delete(p, true): Unit
   }
 
@@ -959,7 +957,7 @@ object Dedup {
     // accepted under the default tag — [[acceptedBandParams]]): verify
     // against and stamp the new rows with the layout's OWN stamp, so
     // the tree stays stamp-homogeneous instead of mixing formats
-    val layoutStamp = Similarity.readStampSidecar(
+    val layoutStamp = StampedLayout.readStampSidecar(
       newDocs.sparkSession, s"$dir/band")
       .filter(acceptedBandParams(numHashes, bands, tokensTag).contains)
       .getOrElse(bandParams(numHashes, bands, tokensTag))
@@ -1023,76 +1021,23 @@ object Dedup {
         "design (every band row changes) — pass a fresh newRoot and " +
         "cut over after this returns")
     val newStamp = bandParams(numHashes, bands, tokensTag)
-    val conf = spark.sessionState.newHadoopConf()
-    // pending compaction swaps at ANY old tree refuse: mid-swap, the
-    // temp tree holds some partitions' only copy
-    Seq("fp", "band", "tok").foreach { tree =>
-      val p = new org.apache.hadoop.fs.Path(s"$oldRoot/$tree")
-      val fs = p.getFileSystem(conf)
-      val pending = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(
-          p.getParent, p.getName + "_compact_tmp"),
-        graft.streaming.IdempotentSink.FoldManifest)
-      if (fs.exists(pending))
-        throw new IllegalStateException(
-          s"rebuildUnderBandParams: $oldRoot/$tree has a pending " +
-            "compaction swap — finish it first (some partitions' only " +
-            "copy is in the temp tree; rebuilding now would drop " +
-            "their rows)")
-      if (tree != "band") // band may legitimately be absent mid-crash
-        require(graft.io.FsUtil.hasDataFiles(fs, p),
-          s"rebuildUnderBandParams: no data files under $oldRoot/$tree " +
-            "— migrating a never-built or truncated layout must fail, " +
-            "not produce an empty index that matches nothing")
-    }
-    // the old layout's tokenizer identity: sidecar, else the in-data
-    // _params distinct (streaming roots write no sidecar)
-    val oldStamp = Similarity.readStampSidecar(spark, s"$oldRoot/band")
-      .orElse {
-        val bandP = new org.apache.hadoop.fs.Path(s"$oldRoot/band")
-        val bandFs = bandP.getFileSystem(conf)
-        if (!graft.io.FsUtil.hasDataFiles(bandFs, bandP)) None
-        else {
-          val old = spark.read.parquet(s"$oldRoot/band")
-          if (!old.columns.contains("_params")) None
-          else {
-            val stamps = old.select(col("_params")).distinct().collect()
-              .map(r => Option(r.getString(0)).getOrElse("<null>"))
-              .toSeq.sorted
-            if (stamps.size > 1) throw new IllegalStateException(
-              "rebuildUnderBandParams: the old band tree mixes stamps " +
-                s"(${stamps.mkString(", ")}) — repair it before " +
-                "migrating")
-            stamps.headOption
-          }
-        }
-      }
-    oldStamp match {
-      case Some(s) =>
-        val oldTag = s.split("/").lift(2).getOrElse("ws3")
-        if (oldTag != tokensTag) throw new IllegalStateException(
-          "rebuildUnderBandParams: the old layout's token sets were " +
-            s"built under tokenizer '$oldTag', this migration targets " +
-            s"'$tokensTag' — re-banding re-derives from PERSISTED token " +
-            "sets, and a tokenizer change invalidates them. Rebuild " +
-            "from corpus text with corpusIndexesWrite.")
-      case None =>
-        System.err.println(
-          "[graft] rebuildUnderBandParams: old layout carries no band " +
-            s"stamp — cannot verify its tokenizer matches '$tokensTag'; " +
-            "a mismatch silently bands foreign token sets.")
-    }
-    Similarity.readStampSidecar(spark, s"$newRoot/band").foreach { s =>
-      if (s == newStamp) {
-        System.err.println(s"[graft] rebuildUnderBandParams: $newRoot " +
-          s"already carries stamp $newStamp — nothing to do")
-        return newStamp
-      }
-      throw new IllegalStateException(
-        s"rebuildUnderBandParams: $newRoot already holds a COMPLETE " +
-          s"layout under different banding params (sidecar $s, this " +
-          s"migration targets $newStamp) — refusing to overwrite it; " +
-          "pick a fresh root")
+    val caller = "rebuildUnderBandParams"
+    // the band tree may legitimately be absent mid-crash
+    if (StampedLayout.migrationDone(spark, caller,
+        Seq("fp", "band", "tok").map(t => s"$oldRoot/$t"),
+        Seq(s"$newRoot/band" -> newStamp),
+        mayBeEmpty = Set(s"$oldRoot/band"))) return newStamp
+    // the old layout's tokenizer identity (streaming roots carry it in
+    // the data only)
+    for (old <- StampedLayout.layoutStamp(spark, s"$oldRoot/band", caller,
+        s"tokenizer '$tokensTag'")) {
+      val oldTag = old.split("/").lift(2).getOrElse("ws3")
+      if (oldTag != tokensTag) throw new IllegalStateException(
+        s"$caller: the old layout's token sets were " +
+          s"built under tokenizer '$oldTag', this migration targets " +
+          s"'$tokensTag' — re-banding re-derives from PERSISTED token " +
+          "sets, and a tokenizer change invalidates them. Rebuild " +
+          "from corpus text with corpusIndexesWrite.")
     }
     // tok first (one projected pass over the old tree — `_batch` and
     // friends dropped), then band from the PERSISTED new tok tree;
@@ -1114,7 +1059,7 @@ object Dedup {
       () => spark.read.parquet(s"$oldRoot/fp")
         .select(col("id"), col("fp"))
         .write.mode("overwrite").parquet(s"$newRoot/fp")))
-    Similarity.writeStampSidecar(spark, s"$newRoot/band", newStamp)
+    StampedLayout.writeStampSidecar(spark, s"$newRoot/band", newStamp)
     newStamp
   }
 
@@ -1141,46 +1086,29 @@ object Dedup {
       .join(broadcast(bToks.select(col("id"), col("fp"))), Seq("fp"))
       .select(col("id")).distinct()
     // a lookup banded differently than the stored index silently finds
-    // nothing (band_sig strings never collide). Fast path: a
-    // corpusIndexesWrite layout carries an O(1) sidecar stamp — one
-    // driver-side read verifies the whole layout regardless of how
-    // many append batches it accumulated (mismatch throws BEFORE any
-    // plan is built). Otherwise, if the index carries its in-data
-    // build stamp, force-verify it per row; a stampless index
-    // (hand-built or bandRowsOf-era) can't be verified, so flag it
-    // loudly rather than reintroducing the silent-empty failure mode
+    // nothing (band_sig strings never collide). A corpusIndexesWrite
+    // layout carries an O(1) sidecar stamp, and a stampless index
+    // (hand-built or bandRowsOf-era) can't be verified: both go through
+    // the shared driver-side check (mismatch throws BEFORE any plan is
+    // built; stampless is flagged loudly). A sidecar-less tree that
+    // carries its in-data stamp — the streaming ingest's, and the
+    // empty-shape priors it passes — is verified per row instead: a
+    // driver-side `_params` distinct would cost a Spark job per
+    // micro-batch and throw on an empty prior
     val accepted = acceptedBandParams(numHashes, bands, tokensTag)
-    val sidecar = Similarity.singleRootOf(bandIdx)
-      .flatMap(root => Similarity.readStampSidecar(
-        bandIdx.sparkSession, root))
-    sidecar.foreach { s =>
-      if (!accepted.contains(s)) throw new IllegalStateException(
-        "crossDedupFlagsFromIndexes: band index built under different " +
-          s"banding params than this lookup (expected one of " +
-          s"${accepted.mkString(" | ")}, sidecar has $s)")
-    }
     val checkedIdx =
-      if (sidecar.isDefined) {
-        if (bandIdx.columns.contains("_params")) bandIdx.drop("_params")
-        else bandIdx
-      }
-      else if (!bandIdx.columns.contains("_params")) {
-        System.err.println(
-          "[graft] crossDedupFlagsFromIndexes: band index has no _params " +
-            s"build stamp — cannot verify it was built with " +
-            s"${bandParams(numHashes, bands, tokensTag)}; a mismatched " +
-            "banding/tokenizer " +
-            "silently matches nothing. Build indexes with " +
-            "buildDedupIndexes to get the stamp.")
-        bandIdx
-      }
-      else bandIdx
+      if (bandIdx.columns.contains("_params") &&
+          StampedLayout.sidecarOf(bandIdx).isEmpty) bandIdx
         .filter(assert_true(
           col("_params").isin(accepted: _*),
           concat(lit("band index built with different params than this " +
             s"lookup (expected one of ${accepted.mkString(" | ")},"
             + " index has "), col("_params"), lit(")"))).isNull)
         .drop("_params")
+      else StampedLayout.verifyStamp(bandIdx, accepted,
+        "crossDedupFlagsFromIndexes",
+        desc = "band index built under different banding params",
+        builder = "corpusIndexesWrite")
     val bBands = bandRowsOf(bToks, col("toks"), "id", numHashes, bands)
     val cands = checkedIdx
       .join(broadcast(bBands.withColumnRenamed("id", "bid")),

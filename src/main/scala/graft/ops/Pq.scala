@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
+import graft.io.StampedLayout
 import graft.ops.Similarity.Centroids
 
 /** Product quantization — the MEMORY tier of the ANN family
@@ -375,7 +376,7 @@ object Pq {
       centroids: Centroids, cb: Codebook, indexDir: String): Unit = {
     ivfPqIndexFrame(emb, idCol, vecCol, centroids, cb)
       .write.partitionBy("cell").mode("overwrite").parquet(indexDir)
-    Similarity.writeStampSidecar(emb.sparkSession, indexDir,
+    StampedLayout.writeStampSidecar(emb.sparkSession, indexDir,
       combinedStamp(centroids, cb))
   }
 
@@ -415,7 +416,7 @@ object Pq {
       .select(col(idCol), col("pq_code"), col("cell"))
       .withColumn("_params", lit(stamp))
       .write.partitionBy("cell").mode("overwrite").parquet(indexDir)
-    Similarity.writeStampSidecar(spark, indexDir, stamp)
+    StampedLayout.writeStampSidecar(spark, indexDir, stamp)
   }
 
   /** [[Similarity.rebuildUnderCodebook]] for an IVF-PQ refine PAIR:
@@ -450,41 +451,13 @@ object Pq {
       newVectorsDir != oldVectorsRoot && newIndexDir != newVectorsDir,
       "rebuildPairUnderCodebooks: the three roots must be distinct — " +
         "in-place migration is impossible by design")
-    val ivfStamp = newCentroids.stamp
     val pairStamp = combinedStamp(newCentroids, cb)
-    val root = new org.apache.hadoop.fs.Path(oldVectorsRoot)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val pendingManifest = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(
-        root.getParent, root.getName + "_compact_tmp"),
-      graft.streaming.IdempotentSink.FoldManifest)
-    if (fs.exists(pendingManifest))
-      throw new IllegalStateException(
-        s"rebuildPairUnderCodebooks: $oldVectorsRoot has a pending " +
-          "compaction swap — finish it first (some cells' only copy " +
-          "is in the temp tree; rebuilding now would drop their rows)")
-    require(graft.io.FsUtil.hasDataFiles(fs, root),
-      s"rebuildPairUnderCodebooks: no data files under $oldVectorsRoot")
-    val sidecars = (Similarity.readStampSidecar(spark, newVectorsDir),
-      Similarity.readStampSidecar(spark, newIndexDir))
-    if (sidecars == ((Some(ivfStamp), Some(pairStamp)))) {
-      System.err.println("[graft] rebuildPairUnderCodebooks: both new " +
-        s"roots already carry this migration's stamps ($pairStamp) — " +
-        "nothing to do")
-      return pairStamp
-    }
-    Seq(newVectorsDir -> sidecars._1 -> ivfStamp,
-      newIndexDir -> sidecars._2 -> pairStamp).foreach {
-      case ((dir, Some(s)), expect) if s != expect =>
-        throw new IllegalStateException(
-          s"rebuildPairUnderCodebooks: $dir already holds a COMPLETE " +
-            s"layout under different codebooks (sidecar $s, this " +
-            s"migration targets $expect) — refusing to overwrite it")
-      case _ => // absent (fresh or crashed-partial: overwrite) or match
-    }
-    ivfPqIndexWritePair(
-      spark.read.parquet(oldVectorsRoot).select(col(idCol), col(vecCol)),
-      idCol, vecCol, newCentroids, cb, newIndexDir, newVectorsDir)
+    if (!StampedLayout.migrationDone(spark, "rebuildPairUnderCodebooks",
+        Seq(oldVectorsRoot),
+        Seq(newVectorsDir -> newCentroids.stamp, newIndexDir -> pairStamp)))
+      ivfPqIndexWritePair(
+        spark.read.parquet(oldVectorsRoot).select(col(idCol), col(vecCol)),
+        idCol, vecCol, newCentroids, cb, newIndexDir, newVectorsDir)
     pairStamp
   }
 
@@ -555,10 +528,10 @@ object Pq {
     // verify BOTH trees before either write: failing the second append
     // after the first committed would manufacture the very desync this
     // call exists to prevent
-    Similarity.verifyStamp(spark.read.parquet(vectorsDir), ivfStamp,
+    StampedLayout.verifyStamp(spark.read.parquet(vectorsDir), Seq(ivfStamp),
       "ivfPqIndexAppendPair",
       desc = "vector tree assigned under a different codebook"): Unit
-    Similarity.verifyStamp(spark.read.parquet(indexDir), pairStamp,
+    StampedLayout.verifyStamp(spark.read.parquet(indexDir), Seq(pairStamp),
       "ivfPqIndexAppendPair",
       desc = "code tree built under different codebooks"): Unit
     // one assignment for both trees — batch-sized, checkpointed so the
@@ -632,8 +605,8 @@ object Pq {
       excludeSelf: Boolean, superCells: Int, superProbe: Int,
       caller: String, qside: Column, score: Column, scoreCol: String,
       biggerIsBetter: Boolean): DataFrame = {
-    val checked = Similarity.verifyStamp(index,
-      combinedStamp(centroids, cb), caller)
+    val checked = StampedLayout.verifyStamp(index,
+      Seq(combinedStamp(centroids, cb)), caller)
     val q = Similarity.queryFrame(queries, queryIdCol, queryVecCol)
     Similarity.probeBatch(checked, q, q.select(col("qid"), qside),
       centroids, nProbe, superCells, superProbe, idCol, score, scoreCol,
@@ -834,8 +807,8 @@ object Pq {
       best.select(col("qid"), lit(null).cast("double").as("_amin"))
         .filter(lit(false))
     } else {
-      val checked = Similarity.verifyStamp(index,
-        combinedStamp(centroids, cb), "semanticDedupFlagsPqHybrid")
+      val checked = StampedLayout.verifyStamp(index,
+        Seq(combinedStamp(centroids, cb)), "semanticDedupFlagsPqHybrid")
       // LUTs ship for the BAND-SIZED query subset only — the bounded
       // form of the cost ADC pays for the whole batch
       val qluts = Similarity.queryFrame(batch, batchIdCol, batchVecCol)
@@ -942,8 +915,8 @@ object Pq {
     val qcodes = qvecs.map(qvec =>
       if (qvec == null) null else PqKernels.encode(qvec, cbFlat, cb.m, cb.k))
     val probed = probes.flatten.distinct.sorted.toSeq
-    val checked = Similarity.verifyStamp(index, combinedStamp(centroids, cb),
-      caller)
+    val checked = StampedLayout.verifyStamp(index,
+      Seq(combinedStamp(centroids, cb)), caller)
     val slice =
       if (probed.isEmpty) Array.empty[Row]
       else DriverFinish.collectWithin(
@@ -1193,8 +1166,8 @@ object Pq {
       metric: String = "l2"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(refineFactor >= 1, "refineFactor must be ≥ 1")
-    val checkedVecs = Similarity.verifyStamp(vectors,
-      centroids.stamp, "ivfPqSearchRefined",
+    val checkedVecs = StampedLayout.verifyStamp(vectors,
+      Seq(centroids.stamp), "ivfPqSearchRefined",
       desc = "refine vector layout assigned under a different codebook")
     // candidate-sized by construction (k·refineFactor·|batch| rows);
     // checkpointed because it feeds TWO consumers — the cell collect

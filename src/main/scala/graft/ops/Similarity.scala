@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
+import graft.io.StampedLayout
 
 /** Embedding similarity search over `ARRAY<FLOAT>` columns.
   *
@@ -458,119 +459,6 @@ object Similarity {
       centroids, qVec, k, nProbe, excludeId = Some(queryId))
   }
 
-  /** Sidecar stamp file at an [[ivfIndex]] layout root. Named with a
-    * leading underscore so parquet readers treat it as hidden metadata
-    * (the `_SUCCESS` convention). The sidecar makes stamp verification
-    * O(1) — one tiny file read — where the in-data `_params` column
-    * scan grows with the layout's file count (every [[ivfIndexAppend]]
-    * adds a file set whose footers the per-call distinct must visit).
-    * The data column stays as the fallback for hand-assembled layouts
-    * and as the consistency anchor: both are written at the same
-    * commit, so they cannot diverge except by hand-tampering.
-    */
-  private val StampSidecar = "_graft_ivf_stamp"
-
-  private def fsOf(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
-  private[graft] def writeStampSidecar(spark: SparkSession, indexDir: String,
-      stamp: String): Unit = {
-    val (fs, p) = fsOf(spark, indexDir)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(p, StampSidecar), true)
-    try out.write((stamp + "\n").getBytes("UTF-8")) finally out.close()
-  }
-
-  private[graft] def readStampSidecar(spark: SparkSession, indexDir: String)
-  : Option[String] = {
-    val (fs, p) = fsOf(spark, indexDir)
-    graft.io.FsUtil.readFullyUtf8(fs,
-      new org.apache.hadoop.fs.Path(p, StampSidecar))
-  }
-
-  /** The single root directory a reloaded file-source frame scans, when
-    * it has exactly one — the hook that lets [[verifyStamp]] find the
-    * sidecar without changing the probe APIs (they take the reloaded
-    * DataFrame, not a path). Frames not backed by one file-source root
-    * (unions, in-memory test frames) return None and fall back to the
-    * data-column check.
-    */
-  private[ops] def singleRootOf(index: DataFrame): Option[String] =
-    scala.util.Try {
-      val roots = index.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          l.relation match {
-            case h: org.apache.spark.sql.execution.datasources
-                .HadoopFsRelation => h.location.rootPaths
-            case _ => Seq.empty[org.apache.hadoop.fs.Path]
-          }
-      }.flatten
-      if (roots.size == 1) Some(roots.head.toString) else None
-    }.toOption.flatten
-
-  /** Verify a reloaded index's `_params` codebook stamp ONCE,
-    * driver-side, before any probe plan is built. The previous per-row
-    * `assert_true` filter only fired when a probed cell actually
-    * produced rows, so a stale index whose probed cells happened to be
-    * empty skipped verification and silently returned an empty result
-    * (r9 ADVICE). A zero-ROW index is likewise an error here, not an
-    * empty answer: there is no stamp to verify, and probing a
-    * truncated layout as if it were the corpus is the same silent
-    * wrong-empty-result failure. NULL stamps (a layout mixing stamped
-    * and hand-appended stampless files) fail with the diagnostic, not
-    * an NPE.
-    *
-    * Cost: O(1) when the layout carries the [[StampSidecar]] file
-    * (every [[ivfIndexWrite]]/[[ivfIndexAppend]] commit writes it) —
-    * one tiny metadata read, independent of how many append batches
-    * the layout accumulated. Without a sidecar (hand-built layout, or
-    * a frame that isn't one file-source root) it falls back to the
-    * column-pruned `_params` distinct scan, whose cost grows with the
-    * layout's file count. A stampless index (no sidecar AND no
-    * `_params` column) is flagged on stderr rather than silently
-    * trusted, preserving the hand-built escape hatch.
-    */
-  private[ops] def verifyStamp(index: DataFrame, stamp: String,
-      caller: String,
-      desc: String = "IVF index assigned under a different codebook")
-  : DataFrame = {
-    val sidecar = singleRootOf(index)
-      .flatMap(root => readStampSidecar(index.sparkSession, root))
-    sidecar.foreach { s =>
-      if (s != stamp)
-        throw new IllegalStateException(
-          s"$caller: $desc " +
-            s"than this probe (expected $stamp, sidecar has $s)")
-    }
-    if (sidecar.isDefined) {
-      if (index.columns.contains("_params")) index.drop("_params")
-      else index
-    } else if (!index.columns.contains("_params")) {
-      System.err.println(
-        s"[graft] $caller: index has no _params stamp — " +
-          s"cannot verify it was built under this probe's params " +
-          s"($stamp); a stale index silently mis-routes lookups.")
-      index
-    } else {
-      val stamps = index.select(col("_params")).distinct()
-        .collect().map(r => Option(r.getString(0)).getOrElse("<null>"))
-        .toSeq.sorted
-      if (stamps.isEmpty)
-        throw new IllegalStateException(
-          s"$caller: index has zero rows — nothing to verify the " +
-            s"stamp against (expected $stamp). A truncated or " +
-            "never-built layout must fail the probe, not answer empty.")
-      if (!stamps.forall(_ == stamp))
-        throw new IllegalStateException(
-          s"$caller: $desc " +
-            s"than this probe (expected $stamp, index has " +
-            s"${stamps.mkString(", ")})")
-      index.drop("_params")
-    }
-  }
-
   /** Persistable IVF index: [[ivfAssign]] output stamped with the
     * codebook identity — the ANN analog of
     * [[graft.ops.Dedup.bandIndex]]. Write it `partitionBy("cell")`;
@@ -587,13 +475,13 @@ object Similarity {
       .withColumn("_params", lit(centroids.stamp))
 
   /** Build AND persist an [[ivfIndex]] layout: the cell-partitioned
-    * parquet tree plus the [[StampSidecar]] stamp file, so every later
-    * probe/append verifies the codebook in O(1) instead of scanning
-    * the `_params` column of a layout whose file count grows with
-    * every append (the in-data column is still written — it is the
-    * fallback for frames that lose their path, and the consistency
-    * anchor for the sidecar). Use this over hand-writing the frame
-    * unless the write must be embedded in a larger job.
+    * parquet tree plus the [[StampedLayout.StampSidecar]] stamp file,
+    * so every later probe/append verifies the codebook in O(1) instead
+    * of scanning the `_params` column of a layout whose file count
+    * grows with every append (the in-data column is still written — it
+    * is the fallback for frames that lose their path, and the
+    * consistency anchor for the sidecar). Use this over hand-writing
+    * the frame unless the write must be embedded in a larger job.
     */
   def ivfIndexWrite(emb: DataFrame, idCol: String, vecCol: String,
       centroids: Centroids, indexDir: String): Unit = {
@@ -601,7 +489,8 @@ object Similarity {
       .write.partitionBy("cell").mode("overwrite").parquet(indexDir)
     // after the data commit: a crash between the two leaves a layout
     // that still verifies (slow path), never one that lies
-    writeStampSidecar(emb.sparkSession, indexDir, centroids.stamp)
+    StampedLayout.writeStampSidecar(emb.sparkSession, indexDir,
+      centroids.stamp)
   }
 
   /** Managed codebook MIGRATION — the path out of the refusal every
@@ -634,12 +523,13 @@ object Similarity {
     * DIFFERENT stamp refuses — that is a complete foreign layout, not
     * a resume. Don't cut readers over to `newRoot` before this call
     * returns (equivalently: before the sidecar exists) — a partial
-    * no-sidecar tree would pass [[verifyStamp]]'s `_params` fallback
-    * while holding a fraction of the corpus. A PENDING COMPACTION swap
-    * at the old root refuses: mid-swap, some cells' only copy lives in
-    * the temp tree, and rebuilding from the main tree alone would
-    * silently drop them — finish it ([[compactCells]] /
-    * `compactBatches` re-run) first.
+    * no-sidecar tree would pass the `_params` fallback of
+    * [[StampedLayout.verifyStamp]] while holding a fraction of the
+    * corpus. A PENDING COMPACTION swap at the old root refuses:
+    * mid-swap, some cells' only copy lives in the temp tree, and
+    * rebuilding from the main tree alone would silently drop them —
+    * finish it ([[compactCells]] / `compactBatches` re-run) first.
+    * These checks are [[StampedLayout.migrationDone]].
     *
     * Cost: one full read of the old tree's (id, vec) + the zero-shuffle
     * broadcast assignment fold + one cell-partitioned write — the same
@@ -654,38 +544,11 @@ object Similarity {
         "design (every row changes cell) — pass a fresh newRoot and " +
         "cut over after this returns")
     val stamp = newCentroids.stamp
-    val (fs, oldPath) = fsOf(spark, oldRoot)
-    val pendingManifest = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(
-        oldPath.getParent, oldPath.getName + "_compact_tmp"),
-      graft.streaming.IdempotentSink.FoldManifest)
-    if (fs.exists(pendingManifest))
-      throw new IllegalStateException(
-        s"rebuildUnderCodebook: $oldRoot has a pending compaction swap " +
-          s"($pendingManifest) — some cells' only copy is in the temp " +
-          "tree, and rebuilding from the main tree alone would silently " +
-          "drop their rows. Finish the swap (re-run the compaction), " +
-          "then migrate.")
-    require(graft.io.FsUtil.hasDataFiles(fs, oldPath),
-      s"rebuildUnderCodebook: no data files under $oldRoot — migrating " +
-        "a never-built or truncated layout must fail, not produce an " +
-        "empty index that answers every probe with nothing")
-    readStampSidecar(spark, newRoot).foreach { s =>
-      if (s == stamp) {
-        // a finished migration to this codebook — idempotent resume
-        System.err.println(s"[graft] rebuildUnderCodebook: $newRoot " +
-          s"already carries stamp $stamp — nothing to do")
-        return stamp
-      }
-      throw new IllegalStateException(
-        s"rebuildUnderCodebook: $newRoot already holds a COMPLETE " +
-          s"layout under a different codebook (sidecar $s, this " +
-          s"migration targets $stamp) — refusing to overwrite it; pick " +
-          "a fresh root")
-    }
-    ivfIndexWrite(
-      spark.read.parquet(oldRoot).select(col(idCol), col(vecCol)),
-      idCol, vecCol, newCentroids, newRoot)
+    if (!StampedLayout.migrationDone(spark, "rebuildUnderCodebook",
+        Seq(oldRoot), Seq(newRoot -> stamp)))
+      ivfIndexWrite(
+        spark.read.parquet(oldRoot).select(col(idCol), col(vecCol)),
+        idCol, vecCol, newCentroids, newRoot)
     stamp
   }
 
@@ -709,15 +572,15 @@ object Similarity {
     * reassigns them.
     *
     * CRASH RECOVERY: the swap is RESUMABLE via the same
-    * [[graft.streaming.IdempotentSink.FoldManifest]] protocol as
-    * `compactBatches`. The temp tree is fully written, then the
-    * manifest (the compacted cell ids) commits INSIDE it — only after
-    * that does any cell directory delete. A re-run that finds the
-    * manifest FINISHES the pending per-cell swaps (a cell present in
-    * the temp tree is renamed in — including one whose source dir a
-    * crash already deleted; a cell absent from the temp tree was
-    * already swapped) instead of rewriting the temp tree, which would
-    * destroy the only copy of a deleted cell's rows. A temp tree
+    * [[StampedLayout.Swap]] protocol as `compactBatches`. The temp
+    * tree is fully written, then the manifest (the compacted cell ids)
+    * commits INSIDE it — only after that does any cell directory
+    * delete. A re-run that finds the manifest FINISHES the pending
+    * per-cell swaps (a cell present in the temp tree is renamed in —
+    * including one whose source dir a crash already deleted; a cell
+    * absent from the temp tree was already swapped) instead of
+    * rewriting the temp tree, which would destroy the only copy of a
+    * deleted cell's rows. A temp tree
     * WITHOUT a manifest is an incomplete write (no source was touched
     * yet) and is safely rewritten; `maxFilesPerCell` is ignored while
     * a pending swap exists (the manifest pins that compaction).
@@ -732,13 +595,9 @@ object Similarity {
   : Seq[Long] = {
     require(maxFilesPerCell >= 1,
       s"maxFilesPerCell must be ≥1 (got $maxFilesPerCell)")
-    import graft.streaming.IdempotentSink
-    val (fs, root) = fsOf(spark, indexDir)
+    val swap = StampedLayout.swapOf(spark, indexDir)
+    import swap.{fs, root, tmp, manifest}
     val prefix = partitionCol + "="
-    val tmp = new org.apache.hadoop.fs.Path(
-      root.getParent, root.getName + "_compact_tmp")
-    val manifest = new org.apache.hadoop.fs.Path(
-      tmp, IdempotentSink.FoldManifest)
     def finishSwap(cells: Seq[Long]): Seq[Long] = {
       cells.foreach { cid =>
         val oldDir = new org.apache.hadoop.fs.Path(root, s"$prefix$cid")
@@ -763,7 +622,7 @@ object Similarity {
       spark.catalog.refreshByPath(indexDir)
       cells
     }
-    if (fs.exists(manifest)) {
+    if (swap.pending) {
       // a pending swap whose LAYOUT was deleted is an orphan: resuming
       // would rename the deleted snapshot's cells into a fresh rebuild
       // (two corpora silently mixed) — discard it instead, the same
@@ -778,7 +637,7 @@ object Similarity {
       // sidecar this family already writes is a natural one) before
       // trusting prefix existence as liveness.
       if (!fs.exists(root)) { fs.delete(tmp, true); return Seq.empty }
-      return finishSwap(IdempotentSink.readFoldManifest(fs, manifest)._2)
+      return finishSwap(StampedLayout.readFoldManifest(fs, manifest)._2)
     }
     val cellDirs = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
@@ -796,7 +655,7 @@ object Similarity {
       .repartition(fragmented.size, col(partitionCol))
       .write.partitionBy(partitionCol).mode("overwrite")
       .parquet(tmp.toString)
-    IdempotentSink.writeFoldManifest(fs, manifest, fragmented.head,
+    StampedLayout.writeFoldManifest(fs, manifest, fragmented.head,
       fragmented)
     finishSwap(fragmented)
   }
@@ -813,7 +672,8 @@ object Similarity {
   def ivfSearchIndexed(index: DataFrame, idCol: String, vecCol: String,
       centroids: Centroids, queryVec: Seq[Double], k: Int,
       nProbe: Int = 2, excludeId: Option[Long] = None): DataFrame = {
-    probeOne(verifyStamp(index, centroids.stamp, "ivfSearchIndexed"),
+    probeOne(StampedLayout.verifyStamp(index, Seq(centroids.stamp),
+      "ivfSearchIndexed"),
       idCol, vecCol, centroids, queryVec, k, nProbe, excludeId)
   }
 
@@ -973,7 +833,8 @@ object Similarity {
       queryVecCol: String, index: DataFrame, idCol: String, vecCol: String,
       centroids: Centroids, k: Int, nProbe: Int, excludeSelf: Boolean,
       superCells: Int, superProbe: Int, caller: String): DataFrame = {
-    val checked = verifyStamp(index, centroids.stamp, caller)
+    val checked = StampedLayout.verifyStamp(index, Seq(centroids.stamp),
+      caller)
     val q = queryFrame(queries, queryIdCol, queryVecCol)
       .localCheckpoint(true) // one pass feeds probe ranking + vector join
     // NaN scores (a zero-norm vector on EITHER side ⇒ cosine 0/0)
@@ -1205,7 +1066,7 @@ object Similarity {
     * idempotent-sink pattern StreamingSpec proves for the band index.
     *
     * Per-call overhead: O(1) against a sidecar-stamped layout (every
-    * [[ivfIndexWrite]]/append commit leaves the [[StampSidecar]]; the
+    * [[ivfIndexWrite]]/append commit leaves the stamp sidecar; the
     * schema check reads footer metadata, not data). Only a legacy
     * stampless layout pays the `_params` column scan, once — this call
     * writes the sidecar after a successful append. A long-running
@@ -1245,22 +1106,18 @@ object Similarity {
       desc: String = "IVF index assigned under a different codebook")
   : Unit = {
     val spark = assigned.sparkSession
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val swap = StampedLayout.swapOf(spark, indexDir)
+    import swap.fs
     // a PENDING compaction swap must finish before any append: a crash
     // mid-swap leaves some cell dirs still awaiting their rename from
     // the temp tree, and the resume's delete+rename would destroy any
     // files appended to those dirs in between — refuse loudly instead
     // of silently losing the batch on the next compactCells run
-    val pendingTmp = new org.apache.hadoop.fs.Path( // compactCells naming
-      path.getParent, path.getName + "_compact_tmp")
-    val pendingManifest = new org.apache.hadoop.fs.Path(
-      pendingTmp, graft.streaming.IdempotentSink.FoldManifest)
-    if (fs.exists(pendingManifest)) {
-      if (fs.exists(path))
+    if (swap.pending) {
+      if (fs.exists(swap.root))
         throw new IllegalArgumentException(
           s"$caller: $indexDir has a pending compaction swap " +
-            s"($pendingManifest) — run Similarity.compactCells($indexDir) " +
+            s"(${swap.manifest}) — run Similarity.compactCells($indexDir) " +
             "to finish the swap, then retry the append (appending now " +
             "would race the resume's per-cell delete+rename and lose rows)")
       // layout deleted out from under a pending swap: the temp tree is
@@ -1272,11 +1129,11 @@ object Similarity {
       // deleted-on-purpose signal assumes directory-native FS semantics
       // (HDFS/local); on an object store, gate this on an explicit
       // layout sentinel instead of prefix existence.
-      fs.delete(pendingTmp, true): Unit
+      fs.delete(swap.tmp, true): Unit
     }
-    if (fs.exists(path)) {
+    if (fs.exists(swap.root)) {
       val existing = spark.read.parquet(indexDir)
-      verifyStamp(existing, stamp, caller, desc): Unit
+      StampedLayout.verifyStamp(existing, Seq(stamp), caller, desc): Unit
       require(existing.columns.toSet == assigned.columns.toSet,
         s"$caller: appended schema would diverge from the existing " +
           s"layout (existing: ${existing.columns.sorted.mkString(", ")}; " +
@@ -1293,8 +1150,8 @@ object Similarity {
             s"$c (existing ${et(c)}, appending ${at(c)})").mkString("; "))
     }
     assigned.write.partitionBy(partitionCol).mode("append").parquet(indexDir)
-    if (readStampSidecar(spark, indexDir).isEmpty)
-      writeStampSidecar(spark, indexDir, stamp)
+    if (StampedLayout.readStampSidecar(spark, indexDir).isEmpty)
+      StampedLayout.writeStampSidecar(spark, indexDir, stamp)
   }
 
   /** SemDeDup-style embedding near-dup flags against a (reloaded)

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.io.{FsUtil, ParallelActions}
+import graft.io.{FsUtil, ParallelActions, StampedLayout}
 import graft.ops.{Dedup, Pq, Similarity}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
@@ -93,15 +93,16 @@ object IdempotentSink {
     *
     * CRASH RECOVERY: the swap is RESUMABLE, making the re-run-on-crash
     * contract real. The consolidated subtree is fully written to a
-    * temp tree, then a `_graft_fold` manifest (target id + folded ids)
-    * commits INSIDE it — only after that do the source `_batch=`
-    * subtrees delete and the temp tree rename in. A re-run that finds
-    * the manifest finishes the pending swap (delete survivors, rename)
-    * instead of rewriting the temp tree — rewriting would destroy the
-    * only copy of rows whose sources were already deleted. A temp tree
-    * WITHOUT a manifest is an incomplete write (no source was deleted
-    * yet) and is safely rewritten; `uptoBatch` is ignored while a
-    * pending swap exists (the manifest pins that fold).
+    * temp tree, then a [[StampedLayout.FoldManifest]] (target id +
+    * folded ids) commits INSIDE it — only after that do the source
+    * `_batch=` subtrees delete and the temp tree rename in. A re-run
+    * that finds the manifest finishes the pending swap (delete
+    * survivors, rename) instead of rewriting the temp tree — rewriting
+    * would destroy the only copy of rows whose sources were already
+    * deleted. A temp tree WITHOUT a manifest is an incomplete write
+    * (no source was deleted yet) and is safely rewritten; `uptoBatch`
+    * is ignored while a pending swap exists (the manifest pins that
+    * fold).
     */
   def compactBatches(spark: SparkSession,
       out: String, partitionCol: String, uptoBatch: Long,
@@ -130,7 +131,7 @@ object IdempotentSink {
     * subtree of exactly `numFiles` files (coalesce, no shuffle), so a
     * lookup's file LISTING stops growing with stream age — at 10⁵
     * micro-batches the un-folded trees' listing is the lookup job
-    * itself. Same resumable `_graft_fold` swap, same REPLAY-SAFETY
+    * itself. Same resumable [[StampedLayout.Swap]], same REPLAY-SAFETY
     * CONTRACT as [[compactBatches]]: only fold `uptoBatch` < the
     * stream's latest committed batch id. The ingest's time-travel
     * filter (`_batch < id`) is unaffected — folded rows keep the
@@ -248,9 +249,9 @@ object IdempotentSink {
     else None
 
   /** The shared fold core: list `_batch=` subtrees in
-    * [`fromBatch`, `uptoBatch`], write the consolidated tree to
-    * `<out>_compact_tmp` via `rewrite` (which receives the folded rows
-    * WITHOUT `_batch` and the temp path), commit the `_graft_fold`
+    * [`fromBatch`, `uptoBatch`], write the consolidated tree to the
+    * [[StampedLayout.Swap]] temp tree via `rewrite` (which receives the
+    * folded rows WITHOUT `_batch` and the temp path), commit the fold
     * manifest inside it, then swap — per the crash-recovery contract
     * documented on [[compactBatches]].
     *
@@ -266,10 +267,8 @@ object IdempotentSink {
   private def compactBatchesWith(spark: SparkSession, out: String,
       uptoBatch: Long, rewrite: (DataFrame, String) => Unit,
       fromBatch: Long): Seq[Long] = {
-    val root = new Path(out)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new Path(root.getParent, root.getName + "_compact_tmp")
-    val manifest = new Path(tmp, FoldManifest)
+    val swap = StampedLayout.swapOf(spark, out)
+    import swap.{fs, root, tmp, manifest}
     def finishSwap(fold: (Long, Seq[Long])): Seq[Long] = {
       val (target, folded) = fold
       folded.foreach(b => fs.delete(new Path(root, s"_batch=$b"), true))
@@ -280,12 +279,13 @@ object IdempotentSink {
             "rows are in the temp tree, not the index; re-run to resume")
       // the manifest rode the rename into the batch dir (underscore-
       // hidden from readers); drop it now that the swap is durable
-      fs.delete(new Path(dest, FoldManifest), false)
+      fs.delete(new Path(dest, StampedLayout.FoldManifest), false)
       // the overwrite replaced listed files; invalidate cached listings
       spark.catalog.refreshByPath(out)
       folded
     }
-    if (fs.exists(manifest)) return finishSwap(readFoldManifest(fs, manifest))
+    if (swap.pending)
+      return finishSwap(StampedLayout.readFoldManifest(fs, manifest))
     val batchIds = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("_batch="))
       .map(_.getPath.getName.stripPrefix("_batch=").toLong)
@@ -293,7 +293,7 @@ object IdempotentSink {
     if (batchIds.size < 2) return Seq.empty
     rewrite(spark.read.parquet(out).filter(col("_batch").cast("long")
       .between(fromBatch, uptoBatch)).drop("_batch"), tmp.toString)
-    writeFoldManifest(fs, manifest, batchIds.head, batchIds)
+    StampedLayout.writeFoldManifest(fs, manifest, batchIds.head, batchIds)
     finishSwap((batchIds.head, batchIds))
   }
 
@@ -384,13 +384,12 @@ object IdempotentSink {
     val spark = df.sparkSession
     val dirs = trees.map(t => s"$indexRoot/${t.name}")
     val sidecar =
-      stamp.flatMap(_ => Similarity.readStampSidecar(spark, dirs.head))
+      stamp.flatMap(_ => StampedLayout.readStampSidecar(spark, dirs.head))
     for (s <- stamp; found <- sidecar if found != s.value)
       throw new IllegalStateException(s.drift(found))
     for ((upto, from) <- foldRange(batchId, foldEvery, foldTail))
       foldTrees(spark, indexRoot, trees, upto, numFiles = 1, from): Unit
-    val fs =
-      new Path(indexRoot).getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, _) = FsUtil.fsOf(spark, indexRoot)
     val priors = dirs.map(dir =>
       Option.when(FsUtil.hasBatchDataBelow(fs, new Path(dir), batchId))(
         spark.read.parquet(dir)
@@ -406,7 +405,7 @@ object IdempotentSink {
     ParallelActions.run(
       (() => parquetByBatch(flagsOut)(flags, batchId)) +: indexWrites)
     if (sidecar.isEmpty) stamp.foreach(s =>
-      Similarity.writeStampSidecar(spark, dirs.head, s.value))
+      StampedLayout.writeStampSidecar(spark, dirs.head, s.value))
   }
 
   /** Self-growing exactly-once streaming TEXT dedup ingest — the
@@ -657,31 +656,5 @@ object IdempotentSink {
         kept.select(col(idCol), col(vecCol)), idCol, vecCol, cents),
         vecCol, cb).select(col(idCol), col("pq_code"), col("cell")),
         "cell")))
-  }
-
-  /** The resumable-swap commit record: its presence inside a temp tree
-    * means the consolidated rows are COMPLETE and the source-dir
-    * deletes may have begun — a re-run must finish the swap, never
-    * rewrite the tree. Shared by [[compactBatches]] (payload: target
-    * batch id + folded batch ids) and
-    * [[graft.ops.Similarity.compactCells]] (payload: the compacted
-    * cell ids), each crash-injection-spec'd in StreamingSpec.
-    */
-  private[graft] val FoldManifest = "_graft_fold"
-
-  private[graft] def writeFoldManifest(fs: FileSystem, manifest: Path,
-      target: Long, folded: Seq[Long]): Unit = {
-    val outS = fs.create(manifest, true)
-    try outS.write(s"$target\n${folded.mkString(",")}\n".getBytes("UTF-8"))
-    finally outS.close()
-  }
-
-  private[graft] def readFoldManifest(fs: FileSystem,
-      manifest: Path): (Long, Seq[Long]) = {
-    val lines = FsUtil.readFullyUtf8(fs, manifest)
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"fold manifest $manifest vanished mid-read"))
-      .split("\n")
-    (lines(0).toLong, lines(1).split(",").map(_.toLong).toSeq)
   }
 }

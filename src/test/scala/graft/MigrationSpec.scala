@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.io.StampedLayout
 import graft.ops.{Pq, Similarity}
 import graft.ops.Similarity.Centroids
 
@@ -59,7 +60,7 @@ class MigrationSpec extends AnyFunSuite {
       codebookB, freshRoot)
     assert(rowsOf(newRoot) === rowsOf(freshRoot),
       "migrated assignment diverged from a fresh build")
-    assert(Similarity.readStampSidecar(spark, newRoot) === Some(stamp))
+    assert(StampedLayout.readStampSidecar(spark, newRoot) === Some(stamp))
     // probe parity between migrated and fresh
     def probe(dir: String) = Similarity.ivfSearchBatch(
       emb.filter(col("vec_id") < 3), "vec_id", "vec",
@@ -125,9 +126,9 @@ class MigrationSpec extends AnyFunSuite {
       .getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new org.apache.hadoop.fs.Path(oldRoot + "_compact_tmp")
     fs.mkdirs(tmp)
-    graft.streaming.IdempotentSink.writeFoldManifest(fs,
+    StampedLayout.writeFoldManifest(fs,
       new org.apache.hadoop.fs.Path(tmp,
-        graft.streaming.IdempotentSink.FoldManifest), 0L, Seq(0L))
+        StampedLayout.FoldManifest), 0L, Seq(0L))
     val newRoot = TestDirs.tmp("mig_pend_new").toString + "/idx"
     val e = intercept[IllegalStateException] {
       Similarity.rebuildUnderCodebook(spark, oldRoot, newRoot,
@@ -197,7 +198,7 @@ class MigrationSpec extends AnyFunSuite {
     assert(tokOf(newRoot) === tokOf(freshRoot))
     assert(bandOf(newRoot) === bandOf(freshRoot),
       "re-banded band rows diverged from a fresh build")
-    assert(Similarity.readStampSidecar(spark, s"$newRoot/band")
+    assert(StampedLayout.readStampSidecar(spark, s"$newRoot/band")
       === Some(stamp))
     // flag parity through the production lookup
     def flagsOf(root: String) = {
@@ -272,9 +273,9 @@ class MigrationSpec extends AnyFunSuite {
       .getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new org.apache.hadoop.fs.Path(s"$root/idx/band_compact_tmp")
     fs.mkdirs(tmp)
-    graft.streaming.IdempotentSink.writeFoldManifest(fs,
+    StampedLayout.writeFoldManifest(fs,
       new org.apache.hadoop.fs.Path(tmp,
-        graft.streaming.IdempotentSink.FoldManifest), 0L, Seq(0L))
+        StampedLayout.FoldManifest), 0L, Seq(0L))
     val e = intercept[IllegalStateException] {
       Dedup.rebuildUnderBandParams(spark, s"$root/idx",
         TestDirs.tmp("reband_pend_new").toString + "/idx")
@@ -333,5 +334,65 @@ class MigrationSpec extends AnyFunSuite {
         s"$newOut/codes", s"$newOut/vecs")
     }
     assert(e.getMessage.contains("refusing to overwrite"))
+  }
+
+  private def codesOf(dir: String) = spark.read.parquet(dir)
+    .select(col("vec_id"), col("cell").cast("long"),
+      col("pq_code").cast("array<int>"))
+    .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2)))
+    .toSet
+
+  test("rebuildPairUnderCodebooks refuses a pending compaction swap at " +
+    "the old vector root and a never-built old root") {
+    val emb = vecsDf(40, 43)
+    val cb = Pq.train(emb, "vec_id", "vec", m = 2, k = 4, sampleN = 40)
+    val oldOut = TestDirs.tmp("mig_pair_pend").toString
+    Pq.ivfPqIndexWritePair(emb, "vec_id", "vec", codebookA, cb,
+      s"$oldOut/codes", s"$oldOut/vecs")
+    val fs = new org.apache.hadoop.fs.Path(oldOut)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val tmp = new org.apache.hadoop.fs.Path(s"$oldOut/vecs_compact_tmp")
+    fs.mkdirs(tmp)
+    StampedLayout.writeFoldManifest(fs,
+      new org.apache.hadoop.fs.Path(tmp, StampedLayout.FoldManifest),
+      0L, Seq(0L))
+    val newOut = TestDirs.tmp("mig_pair_pend_new").toString
+    def migrate(oldVecs: String) = Pq.rebuildPairUnderCodebooks(spark,
+      oldVecs, "vec_id", "vec", codebookB, cb,
+      s"$newOut/codes", s"$newOut/vecs")
+    val e = intercept[IllegalStateException] { migrate(s"$oldOut/vecs") }
+    assert(e.getMessage.contains("pending"), e.getMessage)
+    assert(!new java.io.File(s"$newOut/vecs").exists(),
+      "a refused migration wrote the new vector tree")
+    fs.delete(tmp, true)
+    val e2 = intercept[IllegalArgumentException] {
+      migrate(TestDirs.tmp("mig_pair_bare").toString)
+    }
+    assert(e2.getMessage.contains("no data files"), e2.getMessage)
+  }
+
+  test("rebuildPairUnderCodebooks resumes a crash between the two " +
+    "writes: the new vector tree's sidecar matches, the code tree is " +
+    "missing, and the re-run completes the pair") {
+    val emb = vecsDf(60, 47)
+    val cb = Pq.train(emb, "vec_id", "vec", m = 2, k = 4, sampleN = 60)
+    val oldOut = TestDirs.tmp("mig_pair_crash_old").toString
+    Pq.ivfPqIndexWritePair(emb, "vec_id", "vec", codebookA, cb,
+      s"$oldOut/codes", s"$oldOut/vecs")
+    // what the pair build leaves when it dies after its first write
+    val newOut = TestDirs.tmp("mig_pair_crash_new").toString
+    Similarity.ivfIndexWrite(emb, "vec_id", "vec", codebookB,
+      s"$newOut/vecs")
+    assert(!new java.io.File(s"$newOut/codes").exists())
+    val stamp = Pq.rebuildPairUnderCodebooks(spark, s"$oldOut/vecs",
+      "vec_id", "vec", codebookB, cb, s"$newOut/codes", s"$newOut/vecs")
+    assert(StampedLayout.readStampSidecar(spark, s"$newOut/codes")
+      === Some(stamp), "the re-run did not complete the code tree")
+    val freshOut = TestDirs.tmp("mig_pair_crash_fresh").toString
+    Pq.ivfPqIndexWritePair(emb, "vec_id", "vec", codebookB, cb,
+      s"$freshOut/codes", s"$freshOut/vecs")
+    assert(codesOf(s"$newOut/codes") === codesOf(s"$freshOut/codes"),
+      "resumed codes diverged from a fresh pair build")
+    assert(rowsOf(s"$newOut/vecs") === rowsOf(s"$freshOut/vecs"))
   }
 }

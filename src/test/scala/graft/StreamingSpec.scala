@@ -10,6 +10,7 @@ import graft.streaming.ChapterFileStream
 import graft.ops.TranscriptNormalize
 import graft.ops.Similarity.Centroids
 import java.nio.file.Files
+import graft.io.StampedLayout
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -1142,8 +1143,8 @@ class StreamingSpec extends AnyFunSuite {
     val tmpA = new org.apache.hadoop.fs.Path(dirA + "_compact_tmp")
     spark.read.parquet(dirA).repartition(2, col("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(tmpA.toString)
-    IdempotentSink.writeFoldManifest(fs,
-      new org.apache.hadoop.fs.Path(tmpA, IdempotentSink.FoldManifest),
+    StampedLayout.writeFoldManifest(fs,
+      new org.apache.hadoop.fs.Path(tmpA, StampedLayout.FoldManifest),
       0L, Seq(0L, 1L))
     fs.delete(new org.apache.hadoop.fs.Path(dirA, "cell=0"), true)
     // while the swap is pending, every stamped append path REFUSES:
@@ -1177,8 +1178,8 @@ class StreamingSpec extends AnyFunSuite {
     val tmpC = new org.apache.hadoop.fs.Path(dirC + "_compact_tmp")
     spark.read.parquet(dirC).repartition(2, col("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(tmpC.toString)
-    IdempotentSink.writeFoldManifest(fs,
-      new org.apache.hadoop.fs.Path(tmpC, IdempotentSink.FoldManifest),
+    StampedLayout.writeFoldManifest(fs,
+      new org.apache.hadoop.fs.Path(tmpC, StampedLayout.FoldManifest),
       0L, Seq(0L, 1L))
     fs.delete(new org.apache.hadoop.fs.Path(dirC), true)
     // fresh write to the rebuilt location proceeds (guard discards the
@@ -1194,8 +1195,8 @@ class StreamingSpec extends AnyFunSuite {
     val tmpD = new org.apache.hadoop.fs.Path(dirD + "_compact_tmp")
     spark.read.parquet(dirD).repartition(2, col("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(tmpD.toString)
-    IdempotentSink.writeFoldManifest(fs,
-      new org.apache.hadoop.fs.Path(tmpD, IdempotentSink.FoldManifest),
+    StampedLayout.writeFoldManifest(fs,
+      new org.apache.hadoop.fs.Path(tmpD, StampedLayout.FoldManifest),
       0L, Seq(0L, 1L))
     fs.delete(new org.apache.hadoop.fs.Path(dirD), true)
     assert(graft.ops.Similarity.compactCells(spark, dirD).isEmpty)
@@ -1245,8 +1246,8 @@ class StreamingSpec extends AnyFunSuite {
     val tmpA = new org.apache.hadoop.fs.Path(outA + "_compact_tmp")
     spark.read.parquet(outA).drop("_batch").repartition(col("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(tmpA.toString)
-    IdempotentSink.writeFoldManifest(fs,
-      new org.apache.hadoop.fs.Path(tmpA, IdempotentSink.FoldManifest),
+    StampedLayout.writeFoldManifest(fs,
+      new org.apache.hadoop.fs.Path(tmpA, StampedLayout.FoldManifest),
       0L, Seq(0L, 1L, 2L))
     fs.delete(new org.apache.hadoop.fs.Path(outA, "_batch=0"), true)
     // uptoBatch is deliberately vacuous: the manifest pins the fold
@@ -1331,8 +1332,8 @@ class StreamingSpec extends AnyFunSuite {
     val tmpA = new org.apache.hadoop.fs.Path(outA + "_compact_tmp")
     spark.read.parquet(outA).drop("_batch").coalesce(1)
       .write.mode("overwrite").parquet(tmpA.toString)
-    IdempotentSink.writeFoldManifest(fs,
-      new org.apache.hadoop.fs.Path(tmpA, IdempotentSink.FoldManifest),
+    StampedLayout.writeFoldManifest(fs,
+      new org.apache.hadoop.fs.Path(tmpA, StampedLayout.FoldManifest),
       0L, Seq(0L, 1L, 2L))
     fs.delete(new org.apache.hadoop.fs.Path(outA, "_batch=0"), true)
     // uptoBatch is deliberately vacuous: the manifest pins the fold
