@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -26,56 +25,24 @@ import graft.ops.Similarity
 object AssignBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val n = args.lift(0).map(_.toInt).getOrElse(200000)
     val outDir = args.lift(1).getOrElse("/tmp/assign_bench")
     val dim = 64
-    val seeds = 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-assign-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
-    val seedRnd = new scala.util.Random(7)
-    val cents0 = Array.fill(seeds)(Array.fill(dim)(seedRnd.nextGaussian()))
-    val bc = spark.sparkContext.broadcast(cents0)
-    val corpus = spark.range(n).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val r = new scala.util.Random(id * 1000003L + 17L)
-        val a = r.nextInt(seeds)
-        val b0 = r.nextInt(seeds)
-        val b = if (b0 == a) (b0 + 1) % seeds else b0
-        val t = r.nextDouble()
-        val raw = Array.tabulate(dim)(j =>
-          (1 - t) * bc.value(a)(j) + t * bc.value(b)(j) +
-            0.05 * r.nextGaussian())
-        val nrm = math.sqrt(raw.map(x => x * x).sum)
-        (id, raw.map(_ / nrm).toSeq)
-      }
-    }.toDF("vec_id", "embedding")
-    corpus.write.mode("overwrite").parquet(s"$outDir/corpus")
+    BenchProto.interpolated(spark, 0L, n, dim)
+      .write.mode("overwrite").parquet(s"$outDir/corpus")
     val emb = spark.read.parquet(s"$outDir/corpus")
-
-    def timeNoop(df: org.apache.spark.sql.DataFrame): Double = {
-      df.write.format("noop").mode("overwrite").save() // warm
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
 
     val lines = Seq(128, 447, 1000, 4000).map { k =>
       val stride = math.max(1, n / k)
       val cb = Similarity.Centroids(emb.filter(col("vec_id") % stride === 0)
         .orderBy("vec_id").limit(k), "vec_id", "embedding")
-      val flatSec = timeNoop(Similarity.ivfAssign(
-        emb, "vec_id", "embedding", cb))
-      val hierSec = timeNoop(Similarity.ivfAssignHierarchical(
-        emb, "vec_id", "embedding", cb))
+      val flatSec = BenchProto.timeNoop(Similarity.ivfAssign(
+        emb, "vec_id", "embedding", cb), runs = 1).sec
+      val hierSec = BenchProto.timeNoop(Similarity.ivfAssignHierarchical(
+        emb, "vec_id", "embedding", cb), runs = 1).sec
       val agree = Similarity.ivfAssign(
         emb, "vec_id", "embedding", cb)
         .select(col("vec_id"), col("cell").as("flat_cell"))
@@ -92,16 +59,8 @@ object AssignBench {
       println(line)
       line
     }
-    val json = s"""{"n":$n,"dim":$dim,"points":[${lines.mkString(",")}]}"""
-    println(json)
-    try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/assign.json"), json + "\n"): Unit
-    } catch {
-      case e: java.io.IOException =>
-        System.err.println(
-          s"[graft] AssignBench: failed to write $outDir/assign.json ($e)")
-    }
+    BenchProto.writeArtifact(outDir, "assign.json",
+      s"""{"n":$n,"dim":$dim,"points":[${lines.mkString(",")}]}""")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 import graft.functions.TextFunctions.{fingerprint, wordShingles}
@@ -29,16 +28,9 @@ import graft.functions.TextFunctions.{fingerprint, wordShingles}
 object BandBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args.lift(0).getOrElse("/tmp/sf20docs")
     val outDir = args.lift(1).getOrElse("/tmp/band_bench")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-band-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.documents(spark, dir)
@@ -49,13 +41,10 @@ object BandBench {
       maxHamming = 2, collapseExactOn = Some(fingerprint(col("text"))),
       allowPartialRecall = true)
 
-    def run(bandBits: Int): (Set[(Long, Long)], Double) = {
-      pairsAt(bandBits).write.format("noop").mode("overwrite").save()
-      val t0 = System.nanoTime()
-      pairsAt(bandBits).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val set = pairsAt(bandBits)
-        .select(col("id1"), col("id2")).collect()
+    def run(pairs: => org.apache.spark.sql.DataFrame)
+    : (Set[(Long, Long)], Double) = {
+      val sec = BenchProto.timeNoop(pairs, runs = 1).sec
+      val set = pairs.select(col("id1"), col("id2")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       (set, sec)
     }
@@ -70,26 +59,15 @@ object BandBench {
       docs, wordShingles(col("text"), 3), "doc_id", bandBits = 32,
       maxHamming = maxH, collapseExactOn = Some(fingerprint(col("text"))),
       allowPartialRecall = true)
-    def run128(maxH: Int): (Set[(Long, Long)], Double) = {
-      pairs128(maxH).write.format("noop").mode("overwrite").save()
-      val t0 = System.nanoTime()
-      pairs128(maxH).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val set = pairs128(maxH).select(col("id1"), col("id2")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      (set, sec)
-    }
 
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
     val results = Seq(16, 32).map { bb =>
-      val (set, sec) = run(bb)
+      val (set, sec) = run(pairsAt(bb))
       println(f"bandBits=$bb: ${set.size} pairs, $sec%.1f s")
       bb -> (set, sec)
     }.toMap
-    val (p128h3, sec128h3) = run128(3)
+    val (p128h3, sec128h3) = run(pairs128(3))
     println(f"128/32 H≤3: ${p128h3.size} pairs, $sec128h3%.1f s")
-    val (p128, sec128) = run128(4)
+    val (p128, sec128) = run(pairs128(4))
     println(f"128/32 H≤4: ${p128.size} pairs, $sec128%.1f s")
     val (p16, sec16) = results(16)
     val (p32, sec32) = results(32)
@@ -183,15 +161,7 @@ object BandBench {
         f""""only_16":${(p16 -- p128).size},""" +
         f""""cands_16":$cands16,"cands_32":$cands32,""" +
         f""""cands_128_32":$cands128}"""
-    println(json)
-    try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/band.json"), json + "\n"): Unit
-    } catch {
-      case e: java.io.IOException =>
-        System.err.println(
-          s"[graft] BandBench: failed to write $outDir/band.json ($e)")
-    }
+    BenchProto.writeArtifact(outDir, "band.json", json)
     spark.stop()
   }
 }

@@ -51,11 +51,6 @@ package graft
   */
 object Bench {
 
-  // host-window evidence — shared with the other bench mains so every
-  // artifact's load1/calib fields adjudicate identically
-  private def load1(): Double = BenchProto.load1()
-  private def calibSec(): Double = BenchProto.calibSec()
-
   /** Headline set: one per operator family (scan/agg, broadcast join,
     * fact join, banded range join, windows, sessionization, dedup
     * families, vector search, alignment kernel).
@@ -110,11 +105,7 @@ object Bench {
     "q147_span_dedup") // cross-doc repeated-span removal
 
   def main(args: Array[String]): Unit = {
-    // the f interpolator renders %f under the JVM default locale; a
-    // comma-decimal locale would emit invalid JSON (same bug class as
-    // the codebook stamp) — pin ROOT for the whole process
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val calibCold = calibSec() // before any Spark threads exist
+    val calibCold = BenchProto.calibSec() // before any Spark threads exist
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
@@ -131,7 +122,7 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val names = headline.filter(qs.contains)
       .filter(n => only.forall(_.contains(n)))
-    val loadStart = load1()
+    val loadStart = BenchProto.load1()
 
     // warm pass: codegen + file index + JIT; a query that fails here is
     // excluded from the timed passes and recorded as -1
@@ -153,7 +144,7 @@ object Bench {
       scala.collection.mutable.ListBuffer.empty[(Double, Double)])
     val calibs = scala.collection.mutable.ListBuffer[Double]()
     def timeOne(name: String): Unit = {
-      val l = load1()
+      val l = BenchProto.load1()
       val t0 = System.nanoTime()
       try {
         materialize(qs(name)(spark, sfDir))
@@ -170,16 +161,16 @@ object Bench {
       grouped.zipWithIndex.foreach { case (name, i) =>
         // calib thrice across the sweep, not per query (0.4 s each)
         if (i % math.max(1, (grouped.size + 2) / 3) == 0)
-          calibs += calibSec()
+          calibs += BenchProto.calibSec()
         (1 to 3).foreach(_ => timeOne(name))
       }
     }
     else
       for (_ <- 1 to 3) {
-        calibs += calibSec()
+        calibs += BenchProto.calibSec()
         alive.toSeq.foreach(timeOne)
       }
-    val loadEnd = load1()
+    val loadEnd = BenchProto.load1()
 
     val results: Seq[(String, Seq[(Double, Double)])] =
       names.map(n => n -> samples(n).toSeq)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.CurationOps
 
@@ -47,18 +46,11 @@ import graft.ops.CurationOps
 object BloomBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args.lift(0).getOrElse("/tmp/sf20docs")
     val outDir = args.lift(1).getOrElse("/tmp/bloom_bench")
     val fpp = args.lift(2).map(_.toDouble).getOrElse(0.03)
     val benchMod = args.lift(3).map(_.toInt).getOrElse(76)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bloom-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs =
@@ -67,7 +59,7 @@ object BloomBench {
         val n = dir.stripPrefix("synth:").toLong
         val docWords = 120
         val path = s"/tmp/bloom_synth_$n"
-        spark.range(n).repartition(cpus.toInt).as[Long].map { id =>
+        spark.range(n).repartition(BenchProto.cpus).as[Long].map { id =>
           val family = id / 4
           val words =
             if (family % 19 == 0)
@@ -122,14 +114,8 @@ object BloomBench {
     def bloomPath() = CurationOps.decontaminateBloom(
       docs, "text", "doc_id", benchPred, expectedBenchGrams = benchGrams,
       fpp = fpp)
-    def time(f: () => org.apache.spark.sql.DataFrame): Double = {
-      f().write.format("noop").mode("overwrite").save()
-      val t0 = System.nanoTime()
-      f().write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val secBroadcast = time(broadcastPath)
-    val secBloom = time(bloomPath)
+    val secBroadcast = BenchProto.timeNoop(broadcastPath(), runs = 1).sec
+    val secBloom = BenchProto.timeNoop(bloomPath(), runs = 1).sec
 
     // --- the AUTO path: the regime decontaminateAuto's estimator picks
     // at THIS point (same estimator code — benchGramEstimate is
@@ -142,7 +128,7 @@ object BloomBench {
       else "bloom"
     def autoPath() = CurationOps.decontaminateAuto(
       docs, "text", "doc_id", benchPred, fpp = fpp)
-    val secAuto = time(autoPath)
+    val secAuto = BenchProto.timeNoop(autoPath(), runs = 1).sec
 
     // result identity (the exact-verify contract), not just timings —
     // compared DISTRIBUTED (exceptAll both directions): on the dense
@@ -165,14 +151,9 @@ object BloomBench {
         f""""est_set_bytes":$estSetBytes,"auto_regime":"$autoRegime",""" +
         f""""sec_broadcast":$secBroadcast%.3f,"sec_bloom":$secBloom%.3f,""" +
         f""""sec_auto":$secAuto%.3f}"""
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir,
-        s"bloom_${if (dir.startsWith("synth:")) "synth_" else ""}" +
-          s"${nDocs}_m$benchMod.json"),
-      (json + "\n").getBytes("UTF-8")): Unit
+    BenchProto.writeArtifact(outDir,
+      s"bloom_${if (dir.startsWith("synth:")) "synth_" else ""}" +
+        s"${nDocs}_m$benchMod.json", json)
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale artifact for the bucketed-table layout
@@ -32,19 +32,11 @@ import org.apache.spark.sql.functions._
 object BucketBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = args.lift(0).getOrElse("/tmp/sf1")
     val outDir = args.lift(1).getOrElse("/tmp/bucket_bench")
     val nBuckets = args.lift(2).map(_.toInt).getOrElse(32)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bucket-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", s"$outDir/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session(
+      "spark.sql.warehouse.dir" -> s"$outDir/warehouse")
     spark.sparkContext.setLogLevel("WARN")
 
     def revenue(o: DataFrame, l: DataFrame): DataFrame = {
@@ -60,30 +52,11 @@ object BucketBench {
         .orderBy("o_orderpriority")
     }
 
-    def point(mk: () => DataFrame)
-    : (Double, Seq[(Double, Double)], Long, Long) = {
-      mk().write.format("noop").mode("overwrite").save() // warm
-      val samples = (1 to 3).map { _ =>
-        val l = BenchProto.load1()
-        val t0 = System.nanoTime()
-        mk().write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9, l)
-      }
-      // metered AQE-off run: exchanges visible to a plain plan collect
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val (nOut, shuffleBytes) =
-        try {
-          val metered = mk()
-          val rows = metered.collect().length.toLong
-          val bytes = metered.queryExecution.executedPlan.collect {
-            case e: org.apache.spark.sql.execution.exchange
-              .ShuffleExchangeExec => e.metrics.get("dataSize")
-              .map(_.value).getOrElse(0L)
-          }.sum
-          (rows, bytes)
-        } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      (samples.map(_._1).min, samples, nOut, shuffleBytes)
+    // timed legs, then a metered AQE-off run for rows and exchange bytes
+    def point(mk: () => DataFrame): (BenchProto.Leg, Long, Long) = {
+      val leg = BenchProto.timeNoop(mk())
+      val (nOut, shuffleBytes) = BenchProto.meteredShuffle(spark, mk())
+      (leg, nOut, shuffleBytes)
     }
 
     val nOrders = Tables.orders(spark, sfDir).count()
@@ -91,9 +64,9 @@ object BucketBench {
     println(s"orders=$nOrders lineitem=$nLines nBuckets=$nBuckets")
 
     val calibPlain = BenchProto.calibSec()
-    val (plainSec, plainSamples, plainRows, plainBytes) = point(() =>
+    val (plainLeg, plainRows, plainBytes) = point(() =>
       revenue(Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir)))
-    println(f"plain: $plainSec%.2f s, " +
+    println(f"plain: ${plainLeg.sec}%.2f s, " +
       f"shuffle ${plainBytes / 1048576.0}%.1f MiB")
 
     // the one-time layout cost: repartition to nBuckets first so each
@@ -115,10 +88,10 @@ object BucketBench {
     println(f"bucketed write (both tables): $writeSec%.2f s")
 
     val calibBucketed = BenchProto.calibSec()
-    val (buckSec, buckSamples, buckRows, buckBytes) = point(() =>
+    val (buckLeg, buckRows, buckBytes) = point(() =>
       revenue(spark.table("graft_bench_orders"),
         spark.table("graft_bench_lineitem")))
-    println(f"bucketed: $buckSec%.2f s, " +
+    println(f"bucketed: ${buckLeg.sec}%.2f s, " +
       f"shuffle ${buckBytes / 1048576.0}%.1f MiB")
 
     // layout-invariance: the rollup must agree row-for-row
@@ -131,24 +104,17 @@ object BucketBench {
       "bucketed rollup diverged from the plain layout's")
     require(plainRows == buckRows, "metered row counts diverged")
 
-    def leg(sec: Double, samples: Seq[(Double, Double)], bytes: Long) =
-      f"""{"sec":$sec%.2f,"samples":${samples.map(s => f"${s._1}%.2f")
-        .mkString("[", ",", "]")},"load1":${samples.map(s => f"${s._2}%.2f")
-        .mkString("[", ",", "]")},"shuffle_mb":${bytes / 1048576.0}%.1f}"""
+    def leg(l: BenchProto.Leg, bytes: Long) =
+      l.json(f""""shuffle_mb":${bytes / 1048576.0}%.1f""")
     val json =
       f"""{"metric":"bucket_exchange","orders":$nOrders,""" +
         f""""lineitem":$nLines,"n_buckets":$nBuckets,""" +
         f""""stat":"min_of_3","result_equal":true,""" +
         f""""calib":[$calibPlain%.3f,$calibWrite%.3f,$calibBucketed%.3f],""" +
-        f""""plain":${leg(plainSec, plainSamples, plainBytes)},""" +
-        f""""bucketed":${leg(buckSec, buckSamples, buckBytes)},""" +
+        f""""plain":${leg(plainLeg, plainBytes)},""" +
+        f""""bucketed":${leg(buckLeg, buckBytes)},""" +
         f""""write_sec":$writeSec%.2f,"sf":"$sfDir"}"""
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, s"bucket_${nLines}.json"),
-      (json + "\n").getBytes("UTF-8")): Unit
+    BenchProto.writeArtifact(outDir, s"bucket_${nLines}.json", json)
     spark.stop()
   }
 }

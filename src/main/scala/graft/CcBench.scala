@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.ops.Dedup
@@ -39,18 +38,11 @@ import graft.ops.Dedup
 object CcBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args.lift(0).getOrElse("/tmp/grown1m_chain")
     val outDir = args.lift(1).getOrElse("/tmp/cc_bench")
     val maxPlain = args.lift(2).map(_.toInt).getOrElse(200)
     val maxFast = args.lift(3).map(_.toInt).getOrElse(40)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cc-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
@@ -114,12 +106,7 @@ object CcBench {
         f""""rounds":$autoRounds,"sec":$autoSec%.1f},""" +
         f""""label_mismatches":$mismatches,""" +
         f""""auto_label_mismatches":$autoMismatches}"""
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, s"cc_${nDocs}.json"),
-      (json + "\n").getBytes("UTF-8")): Unit
+    BenchProto.writeArtifact(outDir, s"cc_${nDocs}.json", json)
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Times the REGISTERED documents-family flagships on an arbitrary
   * documents dir (a [[GrowDocs]] corpus) — the driver's gate runs them
@@ -30,7 +29,6 @@ import org.apache.spark.sql.SparkSession
 object DocsBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args.lift(0).getOrElse("/tmp/grown1m")
     val outDir = args.lift(1).getOrElse("/tmp/docs_bench")
     val names =
@@ -38,13 +36,7 @@ object DocsBench {
       else Seq("q113_simhash64_neighbors", "q92_neardup_removal",
         "q104_incremental_dedup", "q130_cross_dedup_shuffled",
         "q119_curation_capstone")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-docs-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val nDocs = Tables.documents(spark, dir).count()
@@ -60,22 +52,14 @@ object DocsBench {
     // calib array skipped warm-failed queries, silently shifting the
     // positional query↔calib attribution the artifact exists to make
     // machine-decidable.
-    val timings: Seq[(String, Either[String,
-        (Double, Seq[(Double, Double)])])] =
+    val timings: Seq[(String, Either[String, BenchProto.Leg])] =
       names.map { name =>
         val q = SparkEntry.queries(name)
         try {
-          q(spark, dir).write.format("noop").mode("overwrite").save() // warm
-          val calib = BenchProto.calibSec()
-          val samples = (1 to 3).map { _ =>
-            val l = BenchProto.load1()
-            val t0 = System.nanoTime()
-            q(spark, dir).write.format("noop").mode("overwrite").save()
-            ((System.nanoTime() - t0) / 1e9, l)
-          }
-          println(f"$name: ${samples.map(_._1).min}%.1f s (min of " +
-            samples.map(s => f"${s._1}%.1f").mkString("[", ",", "]") + ")")
-          name -> Right((calib, samples))
+          val leg = BenchProto.timeNoop(q(spark, dir), calib = true)
+          println(f"$name: ${leg.sec}%.1f s (min of " +
+            leg.samples.map(s => f"$s%.1f").mkString("[", ",", "]") + ")")
+          name -> Right(leg)
         } catch {
           case e: Exception =>
             // message may be null (bare NPE) or empty — never let the
@@ -93,25 +77,15 @@ object DocsBench {
       case c if c < ' ' => " " // control chars (Spark plans embed tabs)
       case c => c.toString
     }
-    def seq(xs: Seq[Double]) =
-      xs.map(x => f"$x%.3f").mkString("[", ",", "]")
     val json = s"""{"metric":"docs_bench","docs":$nDocs,""" +
       s""""stat":"min_of_3","queries":{""" +
       timings.map {
-        case (n, Right((calib, ss))) =>
-          val ts = ss.map(_._1)
-          f""""$n":{"sec":${ts.min}%.3f,""" +
-            f""""median":${ts.sorted.apply(ts.size / 2)}%.3f,""" +
-            f""""calib":$calib%.3f,""" +
-            s""""samples":${seq(ts)},"load1":${seq(ss.map(_._2))}}"""
+        case (n, Right(leg)) =>
+          val median = leg.samples.sorted.apply(leg.samples.size / 2)
+          s""""$n":""" + leg.json(f""""median":$median%.3f""")
         case (n, Left(m)) => s""""$n":{"failed":"${jsonStr(m)}"}"""
       }.mkString(",") + "}}"
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, s"docs_${nDocs}.json"),
-      (json + "\n").getBytes("UTF-8")): Unit
+    BenchProto.writeArtifact(outDir, s"docs_${nDocs}.json", json)
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Grows a template-heavy near-dup corpus from the sf documents table
   * — the fixture SCALE_r11 §2 conceded BandBench lacked: its
@@ -64,13 +63,7 @@ object GrowDocs {
     val mode = args.lift(5).getOrElse("pool")
     require(mode == "pool" || mode == "unique" || mode == "chain",
       s"unknown mode $mode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-grow-docs")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -81,7 +74,7 @@ object GrowDocs {
       .map(_.getString(0).split("\\s+").filter(_.nonEmpty))
     val bc = spark.sparkContext.broadcast(src)
 
-    spark.range(n).repartition(cpus.toInt).as[Long].mapPartitions { it =>
+    spark.range(n).repartition(BenchProto.cpus).as[Long].mapPartitions { it =>
       val pool = bc.value
       it.map { id =>
         val f = id / familySize

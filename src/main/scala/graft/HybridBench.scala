@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Pq, Similarity}
 
@@ -25,7 +24,6 @@ import graft.ops.{Pq, Similarity}
 object HybridBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val n = args.lift(0).map(_.toInt).getOrElse(1000000)
     val outDir = args.lift(1).getOrElse("/tmp/hybrid_bench")
     val band1 = args.lift(2).map(_.toDouble).getOrElse(0.15)
@@ -35,13 +33,7 @@ object HybridBench {
     val (m, k) = (8, 256)
     val cosT = 0.95
     val nProbe = 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-hybrid-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -53,21 +45,11 @@ object HybridBench {
     // SemIngestBench's generator: batch ids ≡ 9 (mod 10); EVEN
     // families are σ-noised copies of base (id/10)·10 (a corpus row),
     // odd families independent uniques
-    def unitVec(seed: Long, noiseOf: Long = -1L): Seq[Double] = {
-      val r = new scala.util.Random(seed * 1000003L + 17L)
-      val raw = Array.fill(dim)(r.nextGaussian())
-      if (noiseOf >= 0L) {
-        val rn = new scala.util.Random(noiseOf * 999983L + 5L)
-        for (j <- 0 until dim) raw(j) += 0.02 * rn.nextGaussian() * 8.0
-      }
-      val nrm = math.sqrt(raw.map(x => x * x).sum)
-      raw.map(_ / nrm).toSeq
-    }
     spark.range(n).as[Long].mapPartitions { it =>
       it.map { id =>
         if (id % 10 == 9 && (id / 10) % 2 == 0)
-          (id, unitVec((id / 10) * 10, noiseOf = id))
-        else (id, unitVec(id))
+          (id, BenchProto.unitVec(dim, (id / 10) * 10, noiseOf = id))
+        else (id, BenchProto.unitVec(dim, id))
       }
     }.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$work/all")
@@ -126,28 +108,17 @@ object HybridBench {
     val keptExact = exactKeeps.filter(col("keep")).count()
 
     def leg(kind: String, band: Double): String = {
-      val calib = BenchProto.calibSec()
-      flagsOf(kind, band).write.format("noop").mode("overwrite").save()
-      val samples = (1 to 3).map { _ =>
-        val l = BenchProto.load1()
-        val t0 = System.nanoTime()
-        flagsOf(kind, band).write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9, l)
-      }
+      val timed = BenchProto.timeNoop(flagsOf(kind, band), calib = true)
       val f = flagsOf(kind, band).select(col("vec_id"),
         col("keep").as("_k"))
       val agg = f.join(exactKeeps, Seq("vec_id"))
         .agg(sum(when(col("_k"), 1L).otherwise(0L)),
           sum(when(col("_k") === col("keep"), 1L).otherwise(0L))).head
       val (kept, agree) = (agg.getLong(0), agg.getLong(1))
-      val sec = samples.map(_._1).min
-      println(f"$kind band=$band: $sec%.2f s, kept=$kept, " +
+      println(f"$kind band=$band: ${timed.sec}%.2f s, kept=$kept, " +
         f"flag-agreement with exact $agree/$nBatch")
       f""""${kind}${if (kind == "hybrid") f"_b$band%.2f" else ""}":""" +
-        f"""{"sec":$sec%.2f,"samples":${samples.map(x => f"${x._1}%.2f")
-          .mkString("[", ",", "]")},"load1":${samples.map(x =>
-          f"${x._2}%.2f").mkString("[", ",", "]")},"calib":$calib%.3f,""" +
-        f""""kept":$kept,"agree_exact":$agree}"""
+        timed.json(s""""kept":$kept""", s""""agree_exact":$agree""")
     }
     val legs = Seq(leg("adc", 0.0), leg("sdc", 0.0),
       leg("hybrid", band1), leg("hybrid", band2))
@@ -157,12 +128,7 @@ object HybridBench {
       f""""n_probe":$nProbe,"stat":"min_of_3",""" +
       f""""kept_exact":$keptExact,""" +
       legs.mkString(",") + "}"
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, s"hybrid_$n.json"),
-      (json + "\n").getBytes("UTF-8")): Unit
+    BenchProto.writeArtifact(outDir, s"hybrid_$n.json", json)
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.IdempotentSink
 
@@ -44,7 +43,6 @@ import graft.streaming.IdempotentSink
 object IngestBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args.lift(0).getOrElse("/tmp/grown1m_uniq")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(100)
     val outDir = args.lift(2).getOrElse("/tmp/ingest_bench")
@@ -53,13 +51,7 @@ object IngestBench {
     val foldMode = args.lift(5).getOrElse("all")
     require(foldMode == "all" || foldMode == "tail",
       s"foldMode must be all|tail (got $foldMode)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ingest-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val work = s"$outDir/work"
@@ -81,14 +73,8 @@ object IngestBench {
         .write.partitionBy("_arr").mode("overwrite").parquet(arrivals)
     val nDocs = docs.count()
 
-    def parquetFiles(path: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles()).fold(0L)(_.map(walk).sum)
-        else if (f.getName.endsWith(".parquet")) 1L else 0L
-      walk(new java.io.File(path))
-    }
-    def treeFiles(): Map[String, Long] =
-      Seq("fp", "band", "tok").map(t => t -> parquetFiles(s"$root/$t")).toMap
+    def treeFiles(): Map[String, Long] = Seq("fp", "band", "tok").map(t =>
+      t -> BenchProto.filesUnder(s"$root/$t", ".parquet").size.toLong).toMap
 
     val ingest = IdempotentSink.dedupIngestByBatch(
       root, flagsOut, "text", "doc_id", foldEvery = foldEvery,
@@ -137,14 +123,8 @@ object IngestBench {
     // headline number and single samples flapped ±80% in host windows;
     // ALL samples ride into the JSON so the headline needs no
     // sibling-file forensics
-    def lookupSamples(): Seq[Double] = {
-      lookupFlags().write.format("noop").mode("overwrite").save() // warm
-      (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        lookupFlags().write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-    }
+    def lookupSamples(): Seq[Double] =
+      BenchProto.timeNoop(lookupFlags()).samples
     def samplesJson(xs: Seq[Double]): String =
       xs.map(x => f"$x%.2f").mkString("[", ",", "]")
     if (mode == "lookup") {
@@ -210,15 +190,10 @@ object IngestBench {
         f""""fold_sec":$foldSec%.2f,""" +
         f""""lookup_pre_sec":$lookupPre%.2f,""" +
         f""""lookup_post_sec":$lookupPost%.2f}"""
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
     val suffix = (if (foldEvery > 0) s"_f$foldEvery" else "") +
       (if (foldEvery > 0 && foldMode == "tail") "t" else "")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir,
-        s"ingest_${nDocs}_b$nBatches$suffix.json"),
-      (json + "\n").getBytes("UTF-8")): Unit
+    BenchProto.writeArtifact(outDir,
+      s"ingest_${nDocs}_b$nBatches$suffix.json", json)
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
@@ -27,17 +26,10 @@ import graft.ops.PrefixSum
 object PackBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args.lift(0).getOrElse("/tmp/sf20docs")
     val outDir = args.lift(1).getOrElse("/tmp/pack_bench")
     val skewPct = args.lift(2).map(_.toInt).getOrElse(90)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pack-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
 
     // synthesized stratum at the target skew over REAL docs + tokens
@@ -62,13 +54,6 @@ object PackBench {
       PrefixSum.exclusive(base(withText), "lang", "doc_id", "n_tok",
         "prefix")
 
-    def timeNoop(mk: => org.apache.spark.sql.DataFrame): Double = {
-      mk.write.format("noop").mode("overwrite").save() // warm
-      val t0 = System.nanoTime()
-      mk.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-
     val nDocs = Tables.documents(spark, dir).count()
     val mismatch = chunked(false).select("doc_id", "prefix")
       .exceptAll(windowed(false).select("doc_id", "prefix")).count()
@@ -76,25 +61,15 @@ object PackBench {
       s"chunked prefix sum diverged from the window form on $mismatch " +
         "rows — the decomposition is broken")
     val rows = Seq(false, true).map { withText =>
-      val wSec = timeNoop(windowed(withText))
-      val cSec = timeNoop(chunked(withText))
+      val wSec = BenchProto.timeNoop(windowed(withText), runs = 1).sec
+      val cSec = BenchProto.timeNoop(chunked(withText), runs = 1).sec
       val tag = if (withText) "with_text" else "narrow"
       println(f"$tag: window $wSec%.1f s, chunked $cSec%.1f s")
       f""""$tag":{"window_sec":$wSec%.1f,"chunked_sec":$cSec%.1f}"""
     }
     val json = s"""{"docs":$nDocs,"skew_pct":$skewPct,""" +
       s""""parity_mismatches":$mismatch,${rows.mkString(",")}}"""
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
-    try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/pack.json"), json + "\n"): Unit
-    } catch {
-      case e: java.io.IOException =>
-        System.err.println(
-          s"[graft] PackBench: failed to write $outDir/pack.json ($e)")
-    }
+    BenchProto.writeArtifact(outDir, "pack.json", json)
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Pq, Similarity}
 
@@ -28,7 +27,6 @@ import graft.ops.{Pq, Similarity}
 object PqBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val n = args.lift(0).map(_.toInt).getOrElse(200000)
     val outDir = args.lift(1).getOrElse("/tmp/pq_bench")
     val m = args.lift(2).map(_.toInt).getOrElse(8) // bytes/vector knob
@@ -42,41 +40,17 @@ object PqBench {
     val mode = args.lift(4).getOrElse("full")
     val reuse = mode == "fetch-reuse"
     val dim = 64
-    val seeds = 32
     val kSub = 256
     val kTop = 10
     val nQueries = 100
     val kCells = math.sqrt(n.toDouble).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pq")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    // --- fixture: RecallBench's interpolated corpus, verbatim ---------
-    val seedRnd = new scala.util.Random(7)
-    val cents = Array.fill(seeds)(Array.fill(dim)(seedRnd.nextGaussian()))
-    val bc = spark.sparkContext.broadcast(cents)
-    val corpus = spark.range(n).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val r = new scala.util.Random(id * 1000003L + 17L)
-        val a = r.nextInt(seeds)
-        val b0 = r.nextInt(seeds)
-        val b = if (b0 == a) (b0 + 1) % seeds else b0
-        val t = r.nextDouble()
-        val raw = Array.tabulate(dim)(j =>
-          (1 - t) * bc.value(a)(j) + t * bc.value(b)(j) +
-            0.05 * r.nextGaussian())
-        val nrm = math.sqrt(raw.map(x => x * x).sum)
-        (id, raw.map(_ / nrm).toSeq)
-      }
-    }.toDF("vec_id", "embedding")
-    if (!reuse) corpus.write.mode("overwrite").parquet(s"$outDir/corpus")
+    // --- fixture: RecallBench's interpolated corpus ------------------
+    if (!reuse) BenchProto.interpolated(spark, 0L, n, dim)
+      .write.mode("overwrite").parquet(s"$outDir/corpus")
     val emb = spark.read.parquet(s"$outDir/corpus")
     val queries = emb.filter(col("vec_id") < nQueries)
 
@@ -91,12 +65,8 @@ object PqBench {
       .write.mode("overwrite").parquet(s"$outDir/codes")
     val encodeSec = (System.nanoTime() - t1) / 1e9
     lazy val codes = spark.read.parquet(s"$outDir/codes")
-    def bytesOf(dir: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isFile) f.length()
-        else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      walk(new java.io.File(dir))
-    }
+    def bytesOf(dir: String): Long =
+      BenchProto.filesUnder(dir).map(_.length).sum
     val corpusBytes = bytesOf(s"$outDir/corpus")
     val codesBytes = bytesOf(s"$outDir/codes")
 
@@ -334,16 +304,7 @@ object PqBench {
         f""""pruned_rows":$fetchPrunedRows,"pruned_bytes":$fetchPrunedBytes,""" +
         f""""unpruned_rows":$fetchUnprunedRows,"unpruned_bytes":$fetchUnprunedBytes},""" +
         f""""probes":$rowsJson}"""
-    println(json)
-    try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/pq.json"), json + "\n"): Unit
-    } catch {
-      case e: java.io.IOException =>
-        System.err.println(
-          s"[graft] PqBench: failed to write $outDir/pq.json — " +
-            s"stdout line above is the only record ($e)")
-    }
+    BenchProto.writeArtifact(outDir, "pq.json", json)
     spark.stop()
   }
 }

@@ -27,7 +27,6 @@ import graft.ops.{Pq, Similarity}
 object ProbeFinishBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val shapes = args.lift(0).getOrElse(
       "1000:1000:45,1000:10000:100,5000:50000:100,5000:100000:20")
       .split(",").map(_.split(":").map(_.toInt)).toSeq
@@ -38,16 +37,6 @@ object ProbeFinishBench {
     import spark.implicits._
     val defaultBudget = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
 
-    def unitVec(seed: Long, noiseOf: Long = -1L): Seq[Double] = {
-      val r = new scala.util.Random(seed * 1000003L + 17L)
-      val raw = Array.fill(dim)(r.nextGaussian())
-      if (noiseOf >= 0L) {
-        val rn = new scala.util.Random(noiseOf * 999983L + 5L)
-        for (j <- 0 until dim) raw(j) += 0.02 * rn.nextGaussian() * 8.0
-      }
-      val nrm = math.sqrt(raw.map(x => x * x).sum)
-      raw.map(_ / nrm).toSeq
-    }
     def write(df: org.apache.spark.sql.DataFrame, path: String) = {
       df.write.mode("overwrite").parquet(path)
       spark.read.parquet(path)
@@ -59,11 +48,13 @@ object ProbeFinishBench {
       // index ids 0 until nIndex; batch ids from 10⁹, even ones are
       // near-copies of index row (i mod nIndex)
       val index0 = write(spark.range(nIndex).as[Long].map(id =>
-        (id, unitVec(id))).toDF("vec_id", "embedding"), s"$work/emb")
+        (id, BenchProto.unitVec(dim, id))).toDF("vec_id", "embedding"),
+        s"$work/emb")
       val batch = write(spark.range(nBatch).as[Long].map { i =>
         val id = 1000000000L + i
-        (id, if (i % 2 == 0) unitVec(i % nIndex, noiseOf = id)
-          else unitVec(id))
+        (id,
+          if (i % 2 == 0) BenchProto.unitVec(dim, i % nIndex, noiseOf = id)
+          else BenchProto.unitVec(dim, id))
       }.toDF("vec_id", "embedding"), s"$work/batch")
       val (cb, tauSdc, tauAdc) = codebook.getOrElse {
         val cb = Pq.train(index0, "vec_id", "embedding", m, k,
@@ -89,20 +80,12 @@ object ProbeFinishBench {
       def leg(regime: String, threshold: String): (String, Long) = {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
         val kept = flags().filter(col("keep")).count()
-        val samples = (1 to 3).map { _ =>
-          val l = BenchProto.load1()
-          val t0 = System.nanoTime()
-          flags().write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t0) / 1e9, l)
-        }
+        val timed = BenchProto.timeNoop(flags())
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
           defaultBudget)
-        val sec = samples.map(_._1).min
-        println(f"$nBatch:$nIndex:$nCells $regime: $sec%.3f s, kept=$kept")
-        (f""""$regime":{"sec":$sec%.3f,"samples":${samples.map(x =>
-          f"${x._1}%.3f").mkString("[", ",", "]")},"load1":${samples.map(
-          x => f"${x._2}%.2f").mkString("[", ",", "]")},"kept":$kept}""",
-          kept)
+        println(f"$nBatch:$nIndex:$nCells $regime: ${timed.sec}%.3f s, " +
+          f"kept=$kept")
+        (s""""$regime":""" + timed.json(s""""kept":$kept"""), kept)
       }
       val legs = Seq(leg("driver", "1000000000000"),
         leg("distributed", "-1"), leg("default", defaultBudget))
@@ -117,12 +100,7 @@ object ProbeFinishBench {
       f""""budget":${spark.sessionState.conf.autoBroadcastJoinThreshold},""" +
       f""""calib":${BenchProto.calibSec()}%.3f,""" +
       f""""stat":"min_of_3","shapes":[${lines.mkString(",")}]}"""
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, "probe_finish.json"),
-      (json + "\n").getBytes("UTF-8")): Unit
+    BenchProto.writeArtifact(outDir, "probe_finish.json", json)
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.io.ShardWriter
 
@@ -29,18 +29,11 @@ import graft.io.ShardWriter
 object RangeBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args.lift(0).getOrElse("/tmp/grown4m")
     val numShards = args.lift(1).map(_.toInt).getOrElse(64)
     val outDir = args.lift(2).getOrElse("/tmp/range_bench")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-range-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("WARN")
 
     val layout = s"$outDir/layout"
@@ -86,12 +79,7 @@ object RangeBench {
       spark.read.parquet(layout).filter(col("doc_id").between(lo, hi)))
     require(rowsPruned == rowsFull,
       s"pruned read returned $rowsPruned rows, full-scan $rowsFull")
-    val filesTotal = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles()).fold(0L)(_.map(walk).sum)
-        else if (f.getName.endsWith(".parquet")) 1L else 0L
-      walk(new java.io.File(layout))
-    }
+    val filesTotal = BenchProto.filesUnder(layout, ".parquet").size
 
     val json =
       f"""{"metric":"shard_range","docs":$nDocs,"shards":${bounds.size + 1},""" +
@@ -100,12 +88,7 @@ object RangeBench {
         f""""files_unpruned":$filesFull,""" +
         f""""sec_pruned":$secPruned%.3f,"sec_unpruned":$secFull%.3f,""" +
         f""""write_sec":$writeSec%.1f}"""
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, s"range_${nDocs}_s$numShards.json"),
-      (json + "\n").getBytes("UTF-8")): Unit
+    BenchProto.writeArtifact(outDir, s"range_${nDocs}_s$numShards.json", json)
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -39,10 +38,6 @@ import graft.ops.Similarity
 object RecallBench {
 
   def main(args: Array[String]): Unit = {
-    // the f interpolator renders %f under the JVM default locale; a
-    // comma-decimal locale would emit invalid JSON (same bug class as
-    // the codebook stamp) — pin ROOT for the whole process
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val n = args.lift(0).map(_.toInt).getOrElse(200000)
     val outDir = args.lift(1).getOrElse("/tmp/recall_ivf")
     val dim = 64
@@ -50,36 +45,13 @@ object RecallBench {
     val kCells = math.sqrt(n.toDouble).toInt // √n sizing
     val kTop = 10
     val nQueries = 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-recall")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     // --- fixture: boundary-straddling interpolated corpus ------------
-    val seedRnd = new scala.util.Random(7)
-    val cents = Array.fill(seeds)(Array.fill(dim)(seedRnd.nextGaussian()))
-    val bc = spark.sparkContext.broadcast(cents)
-    val corpus = spark.range(n).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val r = new scala.util.Random(id * 1000003L + 17L)
-        val a = r.nextInt(seeds)
-        val b0 = r.nextInt(seeds)
-        val b = if (b0 == a) (b0 + 1) % seeds else b0
-        val t = r.nextDouble()
-        val raw = Array.tabulate(dim)(j =>
-          (1 - t) * bc.value(a)(j) + t * bc.value(b)(j) +
-            0.05 * r.nextGaussian())
-        val nrm = math.sqrt(raw.map(x => x * x).sum)
-        (id, raw.map(_ / nrm).toSeq)
-      }
-    }.toDF("vec_id", "embedding")
-    corpus.write.mode("overwrite").parquet(s"$outDir/corpus")
+    BenchProto.interpolated(spark, 0L, n, dim, seeds)
+      .write.mode("overwrite").parquet(s"$outDir/corpus")
     val emb = spark.read.parquet(s"$outDir/corpus")
 
     // --- √n codebook: kmeansIterate on a 10% sample -------------------
@@ -140,19 +112,7 @@ object RecallBench {
     }.mkString("[", ",", "]")
     val json =
       f"""{"n":$n,"dim":$dim,"seeds":$seeds,"cells":$nCells,"occupied_cells":$occupied,"queries":$nQueries,"k":$kTop,"kmeans_sec":$kmeansSec%.1f,"index_build_sec":$buildSec%.1f,"exact_batch_sec":$truthSec%.3f,"probes":$rowsJson}"""
-    println(json)
-    // stdout already carried the JSON; the file is the durable record
-    // the scaledocs cite, so a failed write must be VISIBLE (a blanket
-    // Throwable catch here once silently swallowed even fatal errors)
-    try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/recall.json"), json + "\n"): Unit
-    } catch {
-      case e: java.io.IOException =>
-        System.err.println(
-          s"[graft] RecallBench: failed to write $outDir/recall.json — " +
-            s"stdout line above is the only record ($e)")
-    }
+    BenchProto.writeArtifact(outDir, "recall.json", json)
     spark.stop()
   }
 }

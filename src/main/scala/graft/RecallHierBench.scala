@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -33,51 +32,23 @@ import graft.ops.Similarity
 object RecallHierBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val n = args.lift(0).map(_.toInt).getOrElse(200000)
     val kCells = args.lift(1).map(_.toInt).getOrElse(8192)
     val nQueries = args.lift(2).map(_.toInt).getOrElse(1000)
     val outDir = args.lift(3).getOrElse("/tmp/recall_hier")
     val dim = 64
-    val seeds = 32
     val kTop = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-recall-hier")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    val seedRnd = new scala.util.Random(7)
-    val cents0 = Array.fill(seeds)(Array.fill(dim)(seedRnd.nextGaussian()))
-    val bc = spark.sparkContext.broadcast(cents0)
-    def mkVecs(m: Int, salt: Long) = spark.range(m.toLong).as[Long]
-      .mapPartitions { it =>
-        it.map { id0 =>
-          val id = id0 + salt
-          val r = new scala.util.Random(id * 1000003L + 17L)
-          val a = r.nextInt(seeds)
-          val b0 = r.nextInt(seeds)
-          val b = if (b0 == a) (b0 + 1) % seeds else b0
-          val t = r.nextDouble()
-          val raw = Array.tabulate(dim)(j =>
-            (1 - t) * bc.value(a)(j) + t * bc.value(b)(j) +
-              0.05 * r.nextGaussian())
-          val nrm = math.sqrt(raw.map(x => x * x).sum)
-          (id, raw.map(_ / nrm).toSeq)
-        }
-      }.toDF("vec_id", "embedding")
-
-    val corpus = mkVecs(n, 0L)
-    corpus.write.mode("overwrite").parquet(s"$outDir/corpus")
+    BenchProto.interpolated(spark, 0L, n, dim)
+      .write.mode("overwrite").parquet(s"$outDir/corpus")
     val emb = spark.read.parquet(s"$outDir/corpus")
     // codebook: deterministic sample of the family, salted away from
     // both corpus and query ids
-    val cbDf = mkVecs(kCells, 90000000L)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+    val cbDf = BenchProto.interpolated(spark, 90000000L, 90000000L + kCells,
+      dim).select(col("vec_id").as("cid"), col("embedding").as("cvec"))
     cbDf.write.mode("overwrite").parquet(s"$outDir/codebook")
     val cents = Similarity.Centroids(spark.read.parquet(s"$outDir/codebook"),
       "cid", "cvec")
@@ -165,12 +136,7 @@ object RecallHierBench {
         f""""stat":"min_of_3","calib":$calib%.3f,""" +
         f""""index_build_sec":$buildSec%.1f,"exact_batch_sec":$truthSec%.2f,""" +
         f""""points":[${points.mkString(",")}]}"""
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, s"recall_hier_$kCells.json"),
-      (json + "\n").getBytes("UTF-8")): Unit
+    BenchProto.writeArtifact(outDir, s"recall_hier_$kCells.json", json)
     spark.stop()
   }
 }

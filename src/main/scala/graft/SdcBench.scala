@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Pq, Similarity}
 
@@ -21,7 +20,6 @@ import graft.ops.{Pq, Similarity}
 object SdcBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val n = args.lift(0).map(_.toInt).getOrElse(1000000)
     val outDir = args.lift(1).getOrElse("/tmp/sdc_bench")
     val bigBatch = args.lift(2).map(_.toInt).getOrElse(10000)
@@ -29,13 +27,7 @@ object SdcBench {
     val (m, k) = (8, 256)
     val kCells = math.sqrt(n.toDouble).toInt
     val nProbe = 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-sdc-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -46,13 +38,8 @@ object SdcBench {
 
     // random unit vectors (SemIngestBench's generator — PQ's worst
     // case, so the agreement number is a floor, not a showcase)
-    def unitVec(seed: Long): Seq[Double] = {
-      val r = new scala.util.Random(seed * 1000003L + 17L)
-      val raw = Array.fill(dim)(r.nextGaussian())
-      val nrm = math.sqrt(raw.map(x => x * x).sum)
-      raw.map(_ / nrm).toSeq
-    }
-    spark.range(n).as[Long].mapPartitions(_.map(id => (id, unitVec(id))))
+    spark.range(n).as[Long]
+      .mapPartitions(_.map(id => (id, BenchProto.unitVec(dim, id))))
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$work/corpus")
     val emb = spark.read.parquet(s"$work/corpus")
@@ -70,7 +57,8 @@ object SdcBench {
     val index = spark.read.parquet(s"$work/ivfpq")
 
     def queriesOf(batchN: Int) = spark.range(batchN.toLong).as[Long]
-      .mapPartitions(_.map(i => (10000000L + i, unitVec(7777777L + i))))
+      .mapPartitions(_.map(i =>
+        (10000000L + i, BenchProto.unitVec(dim, 7777777L + i))))
       .toDF("vec_id", "embedding").localCheckpoint(true)
 
     // the ADC leg is the PRODUCTION ADC path at each batch size: the
@@ -89,23 +77,11 @@ object SdcBench {
           centroids, cb, k = 1, nProbe = nProbe,
           excludeSelf = false)
 
-    def point(kind: String, q: org.apache.spark.sql.DataFrame)
-    : (Double, Seq[(Double, Double)]) = {
-      probe(kind, q).write.format("noop").mode("overwrite").save() // warm
-      val samples = (1 to 3).map { _ =>
-        val l = BenchProto.load1()
-        val t0 = System.nanoTime()
-        probe(kind, q).write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9, l)
-      }
-      (samples.map(_._1).min, samples)
-    }
-
     val legs = Seq(100, bigBatch, 5 * bigBatch).flatMap { batchN =>
       val q = queriesOf(batchN)
       val calib = BenchProto.calibSec()
-      val (adcSec, adcS) = point("adc", q)
-      val (sdcSec, sdcS) = point("sdc", q)
+      val adc = BenchProto.timeNoop(probe("adc", q))
+      val sdc = BenchProto.timeNoop(probe("sdc", q))
       // top-1 agreement: same neighbor id per qid (distributed compare)
       val a = probe("adc", q).select(col("qid"),
         col("vec_id").as("n_adc"))
@@ -116,26 +92,17 @@ object SdcBench {
           sum(when(col("n_adc") === col("n_sdc"), 1L).otherwise(0L)))
         .head
       val (tot, agree) = (joined.getLong(0), joined.getLong(1))
-      println(f"batch=$batchN: adc $adcSec%.2f s, sdc $sdcSec%.2f s, " +
+      println(f"batch=$batchN: adc ${adc.sec}%.2f s, sdc ${sdc.sec}%.2f s, " +
         f"top1 agreement $agree/$tot")
-      def leg(sec: Double, ss: Seq[(Double, Double)]) =
-        f"""{"sec":$sec%.2f,"samples":${ss.map(x => f"${x._1}%.2f")
-          .mkString("[", ",", "]")},"load1":${ss.map(x => f"${x._2}%.2f")
-          .mkString("[", ",", "]")}}"""
       Seq(f""""batch$batchN":{"calib":$calib%.3f,""" +
-        f""""adc":${leg(adcSec, adcS)},"sdc":${leg(sdcSec, sdcS)},""" +
+        f""""adc":${adc.json()},"sdc":${sdc.json()},""" +
         f""""top1_agree":$agree,"queries":$tot}""")
     }
 
     val json = f"""{"metric":"sdc_probe","n":$n,"dim":$dim,"m":$m,""" +
       f""""k":$k,"cells":$kCells,"n_probe":$nProbe,"stat":"min_of_3",""" +
       legs.mkString(",") + "}"
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, s"sdc_$n.json"),
-      (json + "\n").getBytes("UTF-8")): Unit
+    BenchProto.writeArtifact(outDir, s"sdc_$n.json", json)
     spark.stop()
   }
 }

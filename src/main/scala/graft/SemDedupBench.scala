@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -29,44 +28,15 @@ import graft.ops.Similarity
 object SemDedupBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val n = args.lift(0).map(_.toInt).getOrElse(200000)
     val batchN = args.lift(1).map(_.toInt).getOrElse(2000)
     val outDir = args.lift(2).getOrElse("/tmp/semdedup_bench")
     val dim = 64
-    val seeds = 32
     val kCells = math.sqrt(n.toDouble).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-semdedup-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
-    val seedRnd = new scala.util.Random(7)
-    val cents = Array.fill(seeds)(Array.fill(dim)(seedRnd.nextGaussian()))
-    val bc = spark.sparkContext.broadcast(cents)
-    def interpolated(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-        saltBase: Long) =
-      ids.as[Long].mapPartitions { it =>
-        it.map { id =>
-          val r = new scala.util.Random(id * 1000003L + saltBase)
-          val a = r.nextInt(seeds)
-          val b0 = r.nextInt(seeds)
-          val b = if (b0 == a) (b0 + 1) % seeds else b0
-          val t = r.nextDouble()
-          val raw = Array.tabulate(dim)(j =>
-            (1 - t) * bc.value(a)(j) + t * bc.value(b)(j) +
-              0.05 * r.nextGaussian())
-          val nrm = math.sqrt(raw.map(x => x * x).sum)
-          (id, raw.map(_ / nrm).toSeq)
-        }
-      }.toDF("vec_id", "embedding")
-
-    interpolated(spark.range(n).as[java.lang.Long], 17L)
+    BenchProto.interpolated(spark, 0L, n, dim)
       .write.mode("overwrite").parquet(s"$outDir/corpus")
     val emb = spark.read.parquet(s"$outDir/corpus")
 
@@ -93,22 +63,9 @@ object SemDedupBench {
     // batch (the corpus-salt fixture) makes every τ degenerate:
     // true_dups = batch and recall@1 ≈ 1 because a near-copy shares
     // its neighbor's cell almost surely
-    val batch = spark.range(1000000L, 1000000L + batchN).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val r = new scala.util.Random(id * 1000003L + 91L)
-          val a = r.nextInt(seeds)
-          val b0 = r.nextInt(seeds)
-          val b = if (b0 == a) (b0 + 1) % seeds else b0
-          val t = r.nextDouble()
-          val amp = 0.05 + 0.6 * ((id % 97).toDouble / 96.0)
-          val raw = Array.tabulate(dim)(j =>
-            (1 - t) * bc.value(a)(j) + t * bc.value(b)(j) +
-              amp * r.nextGaussian())
-          val nrm = math.sqrt(raw.map(x => x * x).sum)
-          (id, raw.map(_ / nrm).toSeq)
-        }
-      }.toDF("vec_id", "embedding")
+    val batch = BenchProto.interpolated(spark, 1000000L, 1000000L + batchN,
+      dim, saltBase = 91L,
+      amp = id => 0.05 + 0.6 * ((id % 97).toDouble / 96.0))
       .cache()
     batch.count(): Unit
 
@@ -117,10 +74,7 @@ object SemDedupBench {
         batch, "vec_id", "embedding", index, "vec_id", "embedding",
         cb, tau = 2.0 /* keep-all: we want cos only */,
         nProbe = nProbe, excludeSelf = false)
-      mk().write.format("noop").mode("overwrite").save() // warm
-      val t0 = System.nanoTime()
-      mk().write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = BenchProto.timeNoop(mk(), runs = 1).sec
       val m = mk().select(col("vec_id"), col("cos_sim")).collect()
         .map(r => r.getLong(0) ->
           (if (r.isNullAt(1)) -1.0 else r.getDouble(1))).toMap
@@ -148,15 +102,7 @@ object SemDedupBench {
     }
     val json = s"""{"n":$n,"cells":$nCells,"batch":$batchN,""" +
       s""""points":[${lines.mkString(",")}]}"""
-    println(json)
-    try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/semdedup.json"), json + "\n"): Unit
-    } catch {
-      case e: java.io.IOException =>
-        System.err.println(
-          s"[graft] SemDedupBench: failed to write semdedup.json ($e)")
-    }
+    BenchProto.writeArtifact(outDir, "semdedup.json", json)
     spark.stop()
   }
 }

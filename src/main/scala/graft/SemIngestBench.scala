@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 import graft.streaming.IdempotentSink
@@ -66,7 +65,6 @@ import graft.streaming.IdempotentSink
 object SemIngestBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val n = args.lift(0).map(_.toInt).getOrElse(200000)
     val nBatches = args.lift(1).map(_.toInt).getOrElse(50)
     val outDir = args.lift(2).getOrElse("/tmp/semingest_bench")
@@ -90,13 +88,7 @@ object SemIngestBench {
     val kCells = math.sqrt(n.toDouble).toInt
     val tau = 0.95
     val nProbe = 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-semingest-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -118,20 +110,11 @@ object SemIngestBench {
     // ingest exists for is CROSS-batch (bases whose id % nBatches ≥
     // nBatches-9 wrap: the copy arrives first and the BASE drops —
     // deterministic either way).
-    def unitVec(seed: Long, noiseOf: Long = -1L): Seq[Double] = {
-      val r = new scala.util.Random(seed * 1000003L + 17L)
-      val raw = Array.fill(dim)(r.nextGaussian())
-      if (noiseOf >= 0L) {
-        val rn = new scala.util.Random(noiseOf * 999983L + 5L)
-        for (j <- 0 until dim) raw(j) += 0.02 * rn.nextGaussian() * 8.0
-      }
-      val nrm = math.sqrt(raw.map(x => x * x).sum)
-      raw.map(_ / nrm).toSeq
-    }
     spark.range(n).as[Long].mapPartitions { it =>
       it.map { id =>
-        if (id % 10 == 9) (id, unitVec((id / 10) * 10, noiseOf = id))
-        else (id, unitVec(id))
+        if (id % 10 == 9)
+          (id, BenchProto.unitVec(dim, (id / 10) * 10, noiseOf = id))
+        else (id, BenchProto.unitVec(dim, id))
       }
     }.toDF("vec_id", "embedding")
       // vec_id % nBatches spreads each seed pair's interpolations
@@ -184,18 +167,10 @@ object SemIngestBench {
     // recorded alongside: how far calibration moved τ off the raw map
     lazy val tauMargin = tauDist - (2.0 - 2.0 * tau)
 
-    def parquetFiles(path: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles()).fold(0L)(_.map(walk).sum)
-        else if (f.getName.endsWith(".parquet")) 1L else 0L
-      walk(new java.io.File(path))
-    }
-    def parquetBytes(path: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles()).fold(0L)(_.map(walk).sum)
-        else if (f.getName.endsWith(".parquet")) f.length() else 0L
-      walk(new java.io.File(path))
-    }
+    def parquetFiles(path: String): Long =
+      BenchProto.filesUnder(path, ".parquet").size.toLong
+    def parquetBytes(path: String): Long =
+      BenchProto.filesUnder(path, ".parquet").map(_.length).sum
 
     val ingest: (org.apache.spark.sql.DataFrame, Long) => Unit =
       if (mode == "pq")
@@ -263,14 +238,8 @@ object SemIngestBench {
         probe, "vec_id", "embedding", prior(), "vec_id", "embedding",
         cents, tau = tau, nProbe = nProbe,
         excludeSelf = true)
-    def lookupSamples(): Seq[Double] = {
-      lookupFlags().write.format("noop").mode("overwrite").save() // warm
-      (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        lookupFlags().write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-    }
+    def lookupSamples(): Seq[Double] =
+      BenchProto.timeNoop(lookupFlags()).samples
     def samplesJson(xs: Seq[Double]): String =
       xs.map(x => f"$x%.2f").mkString("[", ",", "]")
     val filesPre = parquetFiles(treeDir)
@@ -323,17 +292,12 @@ object SemIngestBench {
         f""""lookup_post_samples":${samplesJson(lookupPostSamples)},""" +
         f""""lookup_pre_sec":${lookupPreSamples.min}%.2f,""" +
         f""""lookup_post_sec":${lookupPostSamples.min}%.2f}"""
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
     val suffix = (if (foldEvery > 0) s"_f$foldEvery" else "") +
       (if (foldEvery > 0 && foldMode == "tail") "t" else "") +
       (if (mode == "pq") "_pq" else "") +
       (if (mode == "pq" && probe0 != "adc") s"_$probe0" else "")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir,
-        s"semingest_${n}_b$nBatches$suffix.json"),
-      (json + "\n").getBytes("UTF-8")): Unit
+    BenchProto.writeArtifact(outDir,
+      s"semingest_${n}_b$nBatches$suffix.json", json)
     spark.stop()
   }
 }

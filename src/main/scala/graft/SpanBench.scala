@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Times [[graft.ops.CurationOps.spanDedup]] on a synthetic LONG-document
@@ -20,14 +19,10 @@ import org.apache.spark.sql.functions._
   */
 object SpanBench {
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val nDocs = args.lift(0).map(_.toInt).getOrElse(400)
     val docTokens = args.lift(1).map(_.toInt).getOrElse(4000)
     val runLen = args.lift(2).map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
     // token j of doc i: boilerplate runs use the GLOBAL template token
     // ("b<j>"), unique runs salt with the doc id ("u<i>_<j>")
@@ -39,13 +34,8 @@ object SpanBench {
             lit("_"), j.cast("string")))))
         .as("text"))
       .localCheckpoint() // time the operator, not the synthesis
-    def run(): Unit = graft.ops.CurationOps
-      .spanDedup(docs, "doc_id", "text", k = 5)
-      .write.format("noop").mode("overwrite").save()
-    run() // warm
-    val samples = (1 to 3).map { _ =>
-      val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-    }
+    val samples = BenchProto.timeNoop(graft.ops.CurationOps
+      .spanDedup(docs, "doc_id", "text", k = 5)).samples
     println(f"""{"bench": "span_dedup", "n_docs": $nDocs, """ +
       f""""doc_tokens": $docTokens, "run_len": $runLen, """ +
       f""""samples_sec": [${samples.map(s => f"$s%.3f").mkString(", ")}], """ +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -29,45 +28,16 @@ import graft.ops.Similarity
 object TopKBench {
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val n = args.lift(0).map(_.toInt).getOrElse(1000000)
     val batchN = args.lift(1).map(_.toInt).getOrElse(2000)
     val nProbe = args.lift(2).map(_.toInt).getOrElse(8)
     val outDir = args.lift(3).getOrElse("/tmp/topk_bench")
     val dim = 32
-    val seeds = 32
     val kCells = math.max(8, math.sqrt(n.toDouble).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-topk-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
-    val seedRnd = new scala.util.Random(7)
-    val cents = Array.fill(seeds)(Array.fill(dim)(seedRnd.nextGaussian()))
-    val bc = spark.sparkContext.broadcast(cents)
-    def interpolated(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-        saltBase: Long) =
-      ids.as[Long].mapPartitions { it =>
-        it.map { id =>
-          val r = new scala.util.Random(id * 1000003L + saltBase)
-          val a = r.nextInt(seeds)
-          val b0 = r.nextInt(seeds)
-          val b = if (b0 == a) (b0 + 1) % seeds else b0
-          val t = r.nextDouble()
-          val raw = Array.tabulate(dim)(j =>
-            (1 - t) * bc.value(a)(j) + t * bc.value(b)(j) +
-              0.05 * r.nextGaussian())
-          val nrm = math.sqrt(raw.map(x => x * x).sum)
-          (id, raw.map(_ / nrm).toSeq)
-        }
-      }.toDF("vec_id", "embedding")
-
-    interpolated(spark.range(n.toLong).as[java.lang.Long], 17L)
+    BenchProto.interpolated(spark, 0L, n, dim)
       .write.mode("overwrite").parquet(s"$outDir/corpus")
     val emb = spark.read.parquet(s"$outDir/corpus")
     val stride = math.max(1, n / kCells)
@@ -77,43 +47,18 @@ object TopKBench {
     Similarity.ivfIndexWrite(emb, "vec_id", "embedding", codebook,
       s"$outDir/ivf")
     val index = spark.read.parquet(s"$outDir/ivf")
-    val batch = interpolated(
-      spark.range(10000000L, 10000000L + batchN).as[java.lang.Long], 91L)
-      .localCheckpoint(true)
+    val batch = BenchProto.interpolated(spark, 10000000L,
+      10000000L + batchN, dim, saltBase = 91L).localCheckpoint(true)
 
     def search(k: Int) = Similarity.ivfSearchBatch(batch, "vec_id",
       "embedding", index, "vec_id", "embedding", codebook,
       k = k, nProbe = nProbe, excludeSelf = false)
-    def point(k: Int): (Double, Seq[Double], Long, Long) = {
-      search(k).write.format("noop").mode("overwrite").save() // warm
-      val samples = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        search(k).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      // metered run: metrics live on THE executed df's QueryExecution,
-      // so collect() this one (noop executes through its own QE); AQE
-      // is pinned off for the metered run only — its query stages hide
-      // ShuffleExchangeExec from a plain plan collect (the timed
-      // samples above keep the production default)
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val (nOut, shuffleBytes) =
-        try {
-          val metered = search(k)
-          val rows = metered.collect().length.toLong
-          val bytes = metered.queryExecution.executedPlan.collect {
-            case e: org.apache.spark.sql.execution.exchange
-              .ShuffleExchangeExec => e.metrics.get("dataSize")
-              .map(_.value).getOrElse(0L)
-          }.sum
-          (rows, bytes)
-        } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      (samples.min, samples, nOut, shuffleBytes)
-    }
-
     val points = Seq(100, 101, 10).map { k =>
-      val (minSec, samples, rows, bytes) = point(k)
+      // the timed samples keep the production AQE default; the metered
+      // run pins it off
+      val samples = BenchProto.timeNoop(search(k)).samples
+      val minSec = samples.min
+      val (rows, bytes) = BenchProto.meteredShuffle(spark, search(k))
       val kind = if (k > 100) "window" else "topk_agg"
       println(f"k=$k ($kind): $minSec%.2f s, $rows rows, " +
         f"shuffle ${bytes / 1048576.0}%.1f MiB")
@@ -124,12 +69,7 @@ object TopKBench {
     val json = f"""{"metric":"topk_exchange","n":$n,"batch":$batchN,""" +
       f""""cells":$kCells,"nprobe":$nProbe,"stat":"min_of_3",""" +
       points.mkString(",") + "}"
-    println(json)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(outDir)): Unit
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, s"topk_$n.json"),
-      (json + "\n").getBytes("UTF-8")): Unit
+    BenchProto.writeArtifact(outDir, s"topk_$n.json", json)
     spark.stop()
   }
 }

@@ -881,20 +881,24 @@ object Dedup {
     * index family gets the same managed lifecycle the ANN family has
     * (write → append → compact) instead of leaving persistence
     * conventions to each caller. One text pass: the shared profile is
-    * staged to `dir/_profile_tmp` and deleted after the three
-    * projections commit (the in-memory alternative caches corpus-scale
-    * text on executors).
+    * staged to the sibling `<dir>_profile_tmp` and deleted after the
+    * three projections commit (the in-memory alternative caches
+    * corpus-scale text on executors). The staging root sits outside
+    * every tree a reader lists, and its name does not start with `_`
+    * or `.`, which Spark would hide from its own read-back.
     */
   def corpusIndexesWrite(corpus: DataFrame, textCol: String,
       idCol: String, dir: String, numHashes: Int = 16, bands: Int = 4,
       tokensOf: Column => Column = wordShingles(_, 3),
       tokensTag: String = "ws3"): Unit = {
     val spark = corpus.sparkSession
-    val profDir = s"$dir/_profile_tmp"
+    val (fs, root) = graft.io.FsUtil.fsOf(spark, dir)
+    val prof = new org.apache.hadoop.fs.Path(root.getParent,
+      root.getName + "_profile_tmp")
     corpusProfile(corpus, textCol, idCol, tokensOf)
-      .write.mode("overwrite").parquet(profDir)
+      .write.mode("overwrite").parquet(prof.toString)
     val (fpI, bandI, tokI) = corpusIndexesFromProfile(
-      spark.read.parquet(profDir), numHashes, bands, tokensTag)
+      spark.read.parquet(prof.toString), numHashes, bands, tokensTag)
     // the three projections read the SAME staged profile and write
     // DISJOINT trees — overlapped so each write's task tail and commit
     // back-fill the others (guide §2.6); the sidecar stays strictly
@@ -906,8 +910,7 @@ object Dedup {
       () => tokI.write.mode("overwrite").parquet(s"$dir/tok")))
     StampedLayout.writeStampSidecar(spark, s"$dir/band",
       bandParams(numHashes, bands, tokensTag))
-    val (fs, p) = graft.io.FsUtil.fsOf(spark, profDir)
-    fs.delete(p, true): Unit
+    fs.delete(prof, true): Unit
   }
 
   /** Reload a [[corpusIndexesWrite]] layout as the

@@ -1016,7 +1016,7 @@ class DedupSpec extends AnyFunSuite {
     val inc = TestDirs.tmp("cidx_inc").toFile.getAbsolutePath
     graft.ops.Dedup.corpusIndexesWrite(corpus, "text", "doc_id", full)
     // staging tree must not survive the build
-    assert(!new java.io.File(full, "_profile_tmp").exists())
+    assert(!new java.io.File(full + "_profile_tmp").exists())
     graft.ops.Dedup.corpusIndexesWrite(
       corpus.filter(col("doc_id") % 3 =!= 0), "text", "doc_id", inc)
     graft.ops.Dedup.corpusIndexesAppend(
