@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.TextFunctions._
@@ -127,17 +128,28 @@ object Dedup {
     * the persisted layout.
     */
   def bandIndex(df: DataFrame, tokensExpr: Column, idCol: String,
-      numHashes: Int = 16, bands: Int = 4): DataFrame = {
+      numHashes: Int = 16, bands: Int = 4): DataFrame =
+    stampedBandRows(df, tokensExpr, idCol, numHashes, bands)
+
+  /** [[bandRowsOf]] plus the constant `_params` build stamp (numHashes,
+    * bands, tokenizer tag) — the band derivation of every PERSISTABLE
+    * band frame: a lookup banded differently than the stored index
+    * silently finds nothing, and [[crossDedupFlagsFromIndexes]] turns
+    * the stamp into a loud error; the internal bandRowsOf paths stay
+    * stampless (the column would ride every candidate shuffle for
+    * nothing).
+    */
+  private def stampedBandRows(df: DataFrame, tokensExpr: Column,
+      idCol: String, numHashes: Int, bands: Int, tokensTag: String = "ws3")
+  : DataFrame = {
+    requireBands(numHashes, bands)
+    bandRowsOf(df, tokensExpr, idCol, numHashes, bands)
+      .withColumn("_params", lit(bandParams(numHashes, bands, tokensTag)))
+  }
+
+  private def requireBands(numHashes: Int, bands: Int): Unit =
     require(numHashes > 0 && numHashes % bands == 0,
       s"numHashes ($numHashes) must split evenly into $bands bands")
-    // every PERSISTABLE band frame carries its build stamp — a lookup
-    // banded differently than the stored index silently finds nothing,
-    // and [[crossDedupFlagsFromIndexes]] turns the stamp into a loud
-    // error; the internal bandRowsOf paths stay stampless (the column
-    // would ride every candidate shuffle for nothing)
-    bandRowsOf(df, tokensExpr, idCol, numHashes, bands)
-      .withColumn("_params", lit(bandParams(numHashes, bands)))
-  }
 
   /** (id, _sigs) — md5 + all k xor-min signatures in ONE native pass
     * over the token array ([[graft.functions.MinhashSigs]]; the Column
@@ -212,8 +224,7 @@ object Dedup {
       idCol: String, numHashes: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.5, collapseExactOn: Option[Column] = None)
   : DataFrame = {
-    require(numHashes > 0 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must split evenly into $bands bands")
+    requireBands(numHashes, bands)
     val source = collapseExactOn.fold(df)(keepersByKey(df, _, idCol))
     // ONE text scan + ONE pre-collapse window for the whole pair build:
     // the narrow (id, sigs) frame (~numHashes longs/doc) is lazily
@@ -290,15 +301,45 @@ object Dedup {
     column(graft.functions.SimhashCode(expression(tokensExpr), nBits))
   }
 
-  /** Generalized SimHash per document. Empty token sets emit no row
-    * (parity with the historical explode shape: a doc with no tokens has
-    * no meaningful code).
+  /** The packed 64-bit code ([[graft.functions.Simhash64Code]]), or its
+    * salted twin when `salt` is set.
     */
+  private def simhash64Code(tokensExpr: Column, salt: Option[String] = None)
+  : Column = {
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    import graft.functions.{Simhash64Code, Simhash64CodeSalted}
+    val t = expression(tokensExpr)
+    column(salt.fold[Expression](Simhash64Code(t))(
+      Simhash64CodeSalted(t, _)))
+  }
+
+  /** The SimHash coding step every SimHash entry point shares: `(id,
+    * <code words>)` per document, `codeOf` mapping the token array to
+    * the code columns. Empty token sets emit no row (parity with the
+    * historical explode shape: a doc with no tokens has no meaningful
+    * code). With `collapseExactOn`, code AND collapse key materialize
+    * in-scan (both are pure projections), and the collapse window then
+    * shuffles only the narrow (id, key, code) rows — the document text
+    * never moves — keeping the smallest id per key.
+    */
+  private def simhashCodes(df: DataFrame, id: Column, tokensExpr: Column,
+      collapseExactOn: Option[Column] = None)(codeOf: Column => Seq[Column])
+  : DataFrame = {
+    val key = collapseExactOn.map(_.as("_ck")).toSeq
+    val toks = df.select(id +: tokensExpr.as("_toks") +: key: _*)
+      .filter(size(col("_toks")) > 0)
+    val idName = toks.columns.head
+    val coded = toks.select(col(idName) +: codeOf(col("_toks")) ++:
+      key.map(_ => col("_ck")): _*)
+    if (collapseExactOn.isEmpty) coded
+    else keepersByKey(coded, col("_ck"), idName)
+  }
+
+  /** Generalized SimHash per document. Empty token sets emit no row. */
   def simhashOver(df: DataFrame, tokensExpr: Column, idCol: String,
       nBits: Int = 32): DataFrame =
-    df.select(col(idCol), tokensExpr.as("_toks"))
-      .filter(size(col("_toks")) > 0)
-      .select(col(idCol), simhashCode(col("_toks"), nBits).as("simhash"))
+    simhashCodes(df, col(idCol), tokensExpr)(t =>
+      Seq(simhashCode(t, nBits).as("simhash")))
 
   /** SimHash Hamming-neighbor pairs — the lookup the codes exist for:
     * split the code into `bands` bit-ranges; by pigeonhole any pair
@@ -337,14 +378,9 @@ object Dedup {
       maxHamming = maxHamming,
       collapseExactOn = Some(fingerprint(col(textCol))))
 
-  /** `maxBucket` is the hot-bucket guard: band bits are NOT uniformly
-    * distributed (template-heavy corpora skew the sign sums), so a
-    * single bucket can approach corpus size. Buckets at or under the
-    * threshold expand to pairs via the grouped array pass; buckets OVER
-    * it are routed to a streamed equi-join on the bucket key instead —
-    * same pairs, but never a corpus-sized `collect_list` row on one
-    * executor. Both branches consume the same (band, bits)-partitioned
-    * window output, so the guard costs no extra shuffle.
+  /** `maxBucket` is the hot-bucket guard of [[bandedHammingPairs]]:
+    * buckets over it stream through an equi-join instead of one
+    * grouped row — same pairs, no extra shuffle.
     */
   @deprecated("32-bit codes cap bands at 8 bits (n²/2⁹ candidate " +
     "growth, measured OOM at 500k docs — SCALE_r09.md §4); use " +
@@ -363,50 +399,24 @@ object Dedup {
     require(nBits >= 1 && nBits <= 32,
       s"nBits ($nBits) must be in [1, 32]: simhash bits come from md5's " +
         "32 hex digits")
-    require(maxHamming < bands,
-      s"pigeonhole: $bands bands only guarantee recall for distance < $bands")
-    val r = nBits / bands
-    // Code AND collapse key materialize in-scan (simhashCode is a pure
-    // projection); the collapse window then shuffles only the narrow
-    // (id, key, code) rows — the document text never moves.
-    val coded = df
-      .select(col(idCol).as("id") +: tokensExpr.as("_toks") +:
-        collapseExactOn.map(_.as("_ck")).toSeq: _*)
-      .filter(size(col("_toks")) > 0)
-      .select(col("id") +: simhashCode(col("_toks"), nBits).as("simhash") +:
-        collapseExactOn.map(_ => col("_ck")).toSeq: _*)
-    val codes =
-      if (collapseExactOn.isEmpty) coded
-      else keepersByKey(coded, col("_ck"), "id")
-    val bandStructs = (0 until bands).map(b =>
-      struct(lit(b).as("band"),
-        substring(col("simhash"), b * r + 1, r).as("bits")))
-    // One shuffle on (band, bits); the bucket-size window rides it, and
-    // both guard branches below reuse the same exchange. The bit-string
-    // code collapses to ONE long before the shuffle: the verify is then
-    // `bit_count(xor)` — a single codegen'd instruction per pair — and
-    // every downstream row ships 8 bytes instead of nBits chars.
-    val bandRows = codes
-      .select(col("id"),
-        conv(col("simhash"), 2, 10).cast("long").as("code"),
-        explode(array(bandStructs: _*)).as("bb"))
-      .select(col("id"), col("code"),
-        col("bb.band").as("band"), col("bb.bits").as("bits"))
-    bandedHammingPairs(bandRows, maxHamming, maxBucket)
+    requirePigeonhole(maxHamming, bands)
+    // the bit-string code collapses to ONE long in the scan: the band
+    // keys are then shift+mask reads and the verify is `bit_count(xor)`,
+    // and every downstream row ships 8 bytes instead of nBits chars
+    val codes = simhashCodes(df, col(idCol).as("id"), tokensExpr,
+      collapseExactOn)(t =>
+      Seq(conv(simhashCode(t, nBits), 2, 10).cast("long").as("code")))
+    bandedHammingPairs(codes, Seq("code"), nBits, nBits / bands,
+      maxHamming, maxBucket)
   }
 
   /** Packed 64-bit SimHash per document (LONG column `simhash64`).
     * Empty token sets emit no row, matching [[simhashOver]].
     */
   def simhash64Over(df: DataFrame, tokensExpr: Column, idCol: String)
-  : DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
-    df.select(col(idCol), tokensExpr.as("_toks"))
-      .filter(size(col("_toks")) > 0)
-      .select(col(idCol),
-        column(graft.functions.Simhash64Code(expression(col("_toks"))))
-          .as("simhash64"))
-  }
+  : DataFrame =
+    simhashCodes(df, col(idCol), tokensExpr)(t =>
+      Seq(simhash64Code(t).as("simhash64")))
 
   /** 64-bit banded Hamming-neighbor pairs over 3-word shingles — '''the
     * default SimHash neighbor entry point'''. Same b×r pigeonhole
@@ -430,13 +440,13 @@ object Dedup {
       collapseExactOn = Some(fingerprint(col(textCol))))
 
   /** Long-code variant of [[simhashNeighborsOver]]: bands are bit
-    * ranges of the packed 64-bit code, extracted MSB-first with
-    * shift+mask (no string ever materializes). `bandBits` must divide
-    * 64; recall is guaranteed for `maxHamming < 64/bandBits` by
-    * pigeonhole, and the call refuses settings that void the
-    * guarantee unless `allowPartialRecall` opts in EXPLICITLY —
-    * bandBits = 32 with maxHamming = 2 finds a distance-2 pair only
-    * when both flipped bits land in the same 32-bit band.
+    * ranges of the packed 64-bit code (no string ever materializes).
+    * `bandBits` must divide 64; recall is guaranteed for
+    * `maxHamming < 64/bandBits` by pigeonhole, and the call refuses
+    * settings that void the guarantee unless `allowPartialRecall` opts
+    * in EXPLICITLY — bandBits = 32 with maxHamming = 2 finds a
+    * distance-2 pair only when both flipped bits land in the same
+    * 32-bit band.
     *
     * MEASURED (graft.BandBench, 1M docs, BAND_1m_r11.json): the
     * 16-bit default's candidate occupancy is the knee past ~10⁷ docs
@@ -452,48 +462,11 @@ object Dedup {
   : DataFrame = {
     require(64 % bandBits == 0 && bandBits >= 1 && bandBits <= 32,
       s"bandBits ($bandBits) must divide 64 and leave ≥2 bands")
-    val bands = 64 / bandBits
-    require(maxHamming < bands || allowPartialRecall,
-      s"pigeonhole: $bands bands only guarantee recall for distance < " +
-        s"$bands — pass allowPartialRecall=true to accept probabilistic " +
-        "recall at this bandBits (trade measured in SCALE_r11)")
-    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
-    val coded = df
-      .select(col(idCol).as("id") +: tokensExpr.as("_toks") +:
-        collapseExactOn.map(_.as("_ck")).toSeq: _*)
-      .filter(size(col("_toks")) > 0)
-      .select(col("id") +:
-        column(graft.functions.Simhash64Code(expression(col("_toks"))))
-          .as("code") +:
-        collapseExactOn.map(_ => col("_ck")).toSeq: _*)
-    val codes =
-      if (collapseExactOn.isEmpty) coded
-      else keepersByKey(coded, col("_ck"), "id")
-    bandedHammingPairs(simhash64BandRows(codes, bandBits), maxHamming,
+    requirePigeonhole(maxHamming, 64 / bandBits, Some(allowPartialRecall))
+    val codes = simhashCodes(df, col(idCol).as("id"), tokensExpr,
+      collapseExactOn)(t => Seq(simhash64Code(t).as("code")))
+    bandedHammingPairs(codes, Seq("code"), 64, bandBits, maxHamming,
       maxBucket)
-  }
-
-  /** (id, code, band, bits) rows for the 64-bit banded Hamming join:
-    * band b covers code bits [64−bandBits·(b+1), 64−bandBits·b) —
-    * MSB-first, matching the hex-prefix reading order of the oracle's
-    * bit-string rendering; shiftrightunsigned keeps the top band exact
-    * on negative codes (MSB set). ONE definition shared by the
-    * neighbor search and the fused flag chain so the band layout can
-    * never silently drift between them.
-    */
-  private def simhash64BandRows(codes: DataFrame, bandBits: Int)
-  : DataFrame = {
-    val bands = 64 / bandBits
-    val mask = (1L << bandBits) - 1 // bandBits ≤ 32 by callers' require
-    val bandStructs = (0 until bands).map(b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("code"), 64 - bandBits * (b + 1))
-          .bitwiseAND(lit(mask)).as("bits")))
-    codes
-      .select(col("id"), col("code"),
-        explode(array(bandStructs: _*)).as("bb"))
-      .select(col("id"), col("code"),
-        col("bb.band").as("band"), col("bb.bits").as("bits"))
   }
 
   /** 128-bit SimHash neighbor pairs — the band-domain lever that does
@@ -541,56 +514,65 @@ object Dedup {
       allowPartialRecall: Boolean = false): DataFrame = {
     require(64 % bandBits == 0 && bandBits >= 8 && bandBits <= 32,
       s"bandBits ($bandBits) must divide 64 (each band inside one long)")
-    val bands = 128 / bandBits
-    require(maxHamming < bands || allowPartialRecall,
-      s"pigeonhole: $bands bands only guarantee recall for distance < " +
-        s"$bands — pass allowPartialRecall=true to accept probabilistic " +
-        "recall at this bandBits")
-    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
-    val coded = df
-      .select(col(idCol).as("id") +: tokensExpr.as("_toks") +:
-        collapseExactOn.map(_.as("_ck")).toSeq: _*)
-      .filter(size(col("_toks")) > 0)
-      .select(col("id") +:
-        column(graft.functions.Simhash64Code(expression(col("_toks"))))
-          .as("hi") +:
-        column(graft.functions.Simhash64CodeSalted(
-          expression(col("_toks")), "#2")).as("lo") +:
-        collapseExactOn.map(_ => col("_ck")).toSeq: _*)
-    val codes =
-      if (collapseExactOn.isEmpty) coded
-      else keepersByKey(coded, col("_ck"), "id")
-    // MSB-first across the 128-bit concat hi‖lo, matching the oracle's
-    // bit-string rendering (chars 1–64 = hi, 65–128 = lo)
-    val perLong = 64 / bandBits
-    val mask = (1L << bandBits) - 1
-    val bandStructs = (0 until bands).map { b =>
-      val src = if (b < perLong) col("hi") else col("lo")
-      val off = if (b < perLong) b else b - perLong
-      struct(lit(b).as("band"),
-        shiftrightunsigned(src, 64 - bandBits * (off + 1))
-          .bitwiseAND(lit(mask)).as("bits"))
-    }
-    val bandRows = codes
-      .select(col("id"), col("hi"), col("lo"),
-        explode(array(bandStructs: _*)).as("bb"))
-      .select(col("id"), col("hi"), col("lo"),
-        col("bb.band").as("band"), col("bb.bits").as("bits"))
-    bandedHammingPairs(bandRows, maxHamming, maxBucket,
-      codeCols = Seq("hi", "lo"))
+    requirePigeonhole(maxHamming, 128 / bandBits, Some(allowPartialRecall))
+    val codes = simhashCodes(df, col(idCol).as("id"), tokensExpr,
+      collapseExactOn)(t => Seq(simhash64Code(t).as("hi"),
+      simhash64Code(t, Some("#2")).as("lo")))
+    bandedHammingPairs(codes, Seq("hi", "lo"), 64, bandBits, maxHamming,
+      maxBucket)
   }
 
-  /** Shared tail of the banded Hamming search: bucket-occupancy window,
-    * hot-bucket guard, popcount verify, cross-band dedup. `bandRowsIn`
-    * must carry (id, the `codeCols` longs, band, bits); one shuffle on
-    * (band, bits) — the bucket-size window rides it, and both guard
-    * branches reuse the same exchange. Every row ships its code as 8
-    * bytes per long, so the verify is a sum of `bit_count(xor)` — one
-    * codegen'd instruction per long per pair.
+  /** The pigeonhole guard of every banded Hamming search: `bands` bands
+    * guarantee recall only for distances < `bands`. `allowPartial` is
+    * the caller's `allowPartialRecall` opt-in, where it has one.
     */
-  private def bandedHammingPairs(bandRowsIn: DataFrame, maxHamming: Int,
-      maxBucket: Int, codeCols: Seq[String] = Seq("code")): DataFrame = {
-    val bandRows = bandRowsIn
+  private def requirePigeonhole(maxHamming: Int, bands: Int,
+      allowPartial: Option[Boolean] = None): Unit =
+    require(maxHamming < bands || allowPartial.contains(true),
+      s"pigeonhole: $bands bands only guarantee recall for distance < " +
+        s"$bands" + allowPartial.fold("")(_ => " — pass " +
+          "allowPartialRecall=true to accept probabilistic recall at " +
+          "this bandBits (trade measured in SCALE_r11)"))
+
+  /** The banded Hamming search every SimHash width shares: band rows,
+    * bucket-occupancy window, hot-bucket guard, popcount verify,
+    * cross-band dedup → (id1, id2, hamming) at `maxHamming`.
+    *
+    * `codes` carries (id, `words`): the code as long columns of
+    * `wordBits` bits each, read as one bit string, word 0 first. Band b
+    * is the b-th `bandBits`-wide slice of it, MSB-first — matching the
+    * hex-prefix reading order of the oracles' bit-string rendering —
+    * extracted with shift+mask; shiftrightunsigned keeps the top band
+    * exact on negative codes (MSB set). `bandBits` must divide
+    * `wordBits` (each band inside one word) and be ≤ 32.
+    *
+    * One shuffle on (band, bits) — the bucket-size window rides it, and
+    * both guard branches reuse the same exchange. Every row ships its
+    * code as 8 bytes per word, so the verify is a sum of
+    * `bit_count(xor)` — one codegen'd instruction per word per pair.
+    * `maxBucket` is the hot-bucket guard: band bits are NOT uniformly
+    * distributed (template-heavy corpora skew the sign sums), so a
+    * single bucket can approach corpus size. Buckets at or under the
+    * threshold expand to pairs via the grouped array pass; buckets OVER
+    * it are routed to a streamed equi-join on the bucket key instead —
+    * same pairs, but never a corpus-sized `collect_list` row on one
+    * executor.
+    */
+  private def bandedHammingPairs(codes: DataFrame, words: Seq[String],
+      wordBits: Int, bandBits: Int, maxHamming: Int, maxBucket: Int)
+  : DataFrame = {
+    val perWord = wordBits / bandBits
+    val mask = (1L << bandBits) - 1
+    val bandStructs = (0 until words.size * perWord).map(b =>
+      struct(lit(b).as("band"),
+        shiftrightunsigned(col(words(b / perWord)),
+          wordBits - bandBits * (b % perWord + 1))
+          .bitwiseAND(lit(mask)).as("bits")))
+    val keyed = col("id") +: words.map(col)
+    val bandRows = codes
+      .select(keyed :+ explode(array(bandStructs: _*)).as("bb"): _*)
+      .select(keyed :+ col("bb.band").as("band") :+
+        col("bb.bits").as("bits"): _*)
       .withColumn("_g", count(lit(1))
         .over(Window.partitionBy(col("band"), col("bits"))))
       .filter(col("_g") > 1)
@@ -606,37 +588,31 @@ object Dedup {
     // the explode (measured ~4× less interpreted work per pair).
     val buckets = bandRows.filter(col("_g") <= maxBucket)
       .groupBy(col("band"), col("bits"))
-      .agg(collect_list(struct(col("id") +: codeCols.map(col): _*))
-        .as("ms"))
+      .agg(collect_list(struct(keyed: _*)).as("ms"))
     val pairArr = flatten(transform(col("ms"), (m, i) =>
       transform(slice(col("ms"), i + lit(2), size(col("ms"))), n =>
         struct(m.as("a"), n.as("b")))))
+    def pairCols(a: String, b: String): Seq[Column] =
+      col(s"$a.id").as("xid") +: col(s"$b.id").as("yid") +:
+        (words.indices.map(i => col(s"$a.${words(i)}").as(s"ac$i")) ++
+          words.indices.map(i => col(s"$b.${words(i)}").as(s"bc$i")))
     val smallCands = buckets.select(explode(pairArr).as("p"))
-      .select(col("p.a.id").as("xid") +: col("p.b.id").as("yid") +:
-        (codeCols.zipWithIndex.map { case (cc, i) =>
-          col(s"p.a.$cc").as(s"ac$i") } ++
-          codeCols.zipWithIndex.map { case (cc, i) =>
-            col(s"p.b.$cc").as(s"bc$i") }): _*)
+      .select(pairCols("p.a", "p.b"): _*)
     // Hot buckets: equi-join on the bucket key streams the g² pair
     // enumeration through the shuffle machinery (spillable) instead of
     // collecting g members into one aggregation row.
     val hot = bandRows.filter(col("_g") > maxBucket)
-      .select(col("id") +: col("band") +: col("bits") +:
-        codeCols.map(col): _*)
+      .select(col("id") +: col("band") +: col("bits") +: words.map(col): _*)
     val hotCands = hot.as("x").join(hot.as("y"), Seq("band", "bits"))
       .filter(col("x.id") < col("y.id"))
-      .select(col("x.id").as("xid") +: col("y.id").as("yid") +:
-        (codeCols.zipWithIndex.map { case (cc, i) =>
-          col(s"x.$cc").as(s"ac$i") } ++
-          codeCols.zipWithIndex.map { case (cc, i) =>
-            col(s"y.$cc").as(s"bc$i") }): _*)
+      .select(pairCols("x", "y"): _*)
     // Verify BEFORE the cross-band dedup: hamming is a pure function of
     // the pair, so the distinct shuffles (id1, id2, hamming) — two longs
     // and an int — and only for pairs that already passed the distance
     // cut. A pair caught by ≤`bands` bands recomputes the popcount that
     // many times; one xor+popcount beats shipping codes through a
     // shuffle.
-    val ham = codeCols.indices.map(i =>
+    val ham = words.indices.map(i =>
       bit_count(col(s"ac$i").bitwiseXOR(col(s"bc$i"))).cast("int"))
       .reduce(_ + _)
     smallCands.unionByName(hotCands)
@@ -682,20 +658,6 @@ object Dedup {
     * variants there is no `tokensTag` here: the inline path derives
     * every artifact from `tokensOf` within one call and persists
     * nothing, so there is no stored stamp for a tag to name.
-    *
-    * The narrow batch frame (id, fingerprint, token set) materializes
-    * ONCE via a (lazy) local checkpoint: it feeds three broadcasts
-    * (exact fingerprints, band rows, verify token sets) that would
-    * otherwise EACH re-run the batch scan + md5 + shingle pipeline —
-    * subplans don't reuse across consumers, only exchanges do. A
-    * localCheckpoint rather than persist() on purpose: an internal
-    * persist has no unpersist hook, and CacheManager holds cached
-    * frames until session end — one leaked ingest-batch cache per call
-    * in a long-lived ingest loop — while checkpoint blocks are
-    * reference-tracked and reclaimed by the ContextCleaner once the
-    * returned flags frame is dropped. Trade-off: lineage truncation
-    * means an executor loss fails the ingest job instead of
-    * recomputing (rerun the batch; flags are deterministic).
     */
   def crossDedupFlags(batch: DataFrame, corpus: DataFrame,
       textCol: String, idCol: String, numHashes: Int = 16, bands: Int = 4,
@@ -703,8 +665,7 @@ object Dedup {
       tokensOf: Column => Column = wordShingles(_, 3),
       broadcastBatch: Option[Boolean] = None,
       broadcastMaxBytes: Long = BroadcastShingleMaxBytes): DataFrame = {
-    require(numHashes > 0 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must split evenly into $bands bands")
+    requireBands(numHashes, bands)
     // The broadcast regime BOUNDS the batch: its (id, fp, toks) frame
     // must fit in the driver and every executor — the production ingest
     // shape (a bounded arrival batch vs an unbounded corpus). A batch
@@ -737,62 +698,74 @@ object Dedup {
         s"$rows batch rows -> ${if (pick) "broadcast" else "shuffle"}")
       pick
     }
-    val maybeBc: DataFrame => DataFrame =
-      if (useBroadcast) broadcast else identity
-    val bToks = batch.select(col(idCol).as("id"),
-      fingerprint(col(textCol)).as("fp"), tokensOf(col(textCol)).as("toks"))
-      .localCheckpoint(false)
-    // exact: corpus scan, broadcast batch fingerprints, semi-join
-    val exactIds = corpus
-      .select(fingerprint(col(textCol)).as("fp"))
-      .join(maybeBc(bToks.select(col("id"), col("fp"))), Seq("fp"))
-      .select(col("id")).distinct()
-    // near: corpus band rows ⋈ broadcast batch band rows
-    val cBands = bandRowsOf(corpus, tokensOf(col(textCol)), idCol,
-      numHashes, bands)
-    val bBands = bandRowsOf(bToks, col("toks"), "id", numHashes, bands)
-    val cands = cBands
-      .join(maybeBc(bBands.withColumnRenamed("id", "bid")),
-        Seq("band", "band_sig"))
-      .select(col("bid"), col("id").as("cid")).distinct()
-    // verify: corpus token sets stay map-side (broadcast the candidate
-    // ids to prune the scan, then the batch token sets to score). The
-    // candidate join runs BEFORE the shingle projection — Catalyst has
-    // no rule to push a join below a projection, so ordering it here is
-    // what keeps the shingle+md5 work off the non-candidate rows.
-    val verified = corpus
-      .select(col(idCol).as("cid"), col(textCol))
-      .join(maybeBc(cands), Seq("cid"))
-      .select(col("cid"), col("bid"), tokensOf(col(textCol)).as("ctoks"))
-      .join(maybeBc(bToks.select(col("id").as("bid"),
-        col("toks").as("btoks"))), Seq("bid"))
-    assembleFlags(batch, idCol, exactIds, jaccardNearIds(verified,
-      minJaccard))
+    // the candidate join runs BEFORE the shingle projection of the
+    // corpus verify side — Catalyst has no rule to push a join below a
+    // projection, so ordering it here is what keeps the shingle+md5
+    // work off the non-candidate rows
+    batchVsCorpusFlags(batch, textCol, idCol, numHashes, bands,
+      minJaccard, tokensOf, if (useBroadcast) broadcast else identity,
+      corpus.select(fingerprint(col(textCol)).as("fp")),
+      bandRowsOf(corpus, tokensOf(col(textCol)), idCol, numHashes, bands),
+      cands => corpus.select(col(idCol).as("cid"), col(textCol))
+        .join(cands, Seq("cid"))
+        .select(col("cid"), col("bid"), tokensOf(col(textCol)).as("ctoks")))
   }
 
-  /** Exact-Jaccard verification over candidate pairs carrying both
-    * token sets as (bid, btoks, cid, ctoks) rows → batch ids that have
-    * at least one corpus neighbor at `minJaccard`.
+  /** The batch-vs-corpus flag body [[crossDedupFlags]] and
+    * [[crossDedupFlagsFromIndexes]] share: the corpus side comes in as
+    * its fingerprints `(fp)`, its band rows `(id, band, band_sig)`
+    * (by name: the index path's stamp check runs where the inline path
+    * derived them) and `candToks`, which turns the candidate
+    * `(bid, cid)` rows into `(cid, bid, ctoks)` rows. `wrap` is the
+    * batch-side join hint — `broadcast`, or `identity` for the shuffle
+    * regime. Exact: fingerprint semi-join. Near: band equi-join, then
+    * exact Jaccard of the candidate pairs at `minJaccard`.
+    *
+    * The narrow batch frame (id, fingerprint, token set) materializes
+    * ONCE via a (lazy) local checkpoint: it feeds three joins (exact
+    * fingerprints, band rows, verify token sets) that would otherwise
+    * EACH re-run the batch scan + md5 + shingle pipeline — subplans
+    * don't reuse across consumers, only exchanges do. A
+    * localCheckpoint rather than persist() on purpose: an internal
+    * persist has no unpersist hook, and CacheManager holds cached
+    * frames until session end — one leaked ingest-batch cache per call
+    * in a long-lived ingest loop — while checkpoint blocks are
+    * reference-tracked and reclaimed by the ContextCleaner once the
+    * returned flags frame is dropped. Trade-off: lineage truncation
+    * means an executor loss fails the ingest job instead of
+    * recomputing (rerun the batch; flags are deterministic).
     */
-  private def jaccardNearIds(verified: DataFrame, minJaccard: Double)
-  : DataFrame = {
+  private def batchVsCorpusFlags(batch: DataFrame, textCol: String,
+      idCol: String, numHashes: Int, bands: Int, minJaccard: Double,
+      tokensOf: Column => Column, wrap: DataFrame => DataFrame,
+      corpusFps: DataFrame, corpusBands: => DataFrame,
+      candToks: DataFrame => DataFrame): DataFrame = {
+    val bToks = corpusProfile(batch, textCol, idCol, tokensOf)
+      .localCheckpoint(false)
+    val exactIds = corpusFps
+      .join(wrap(bToks.select(col("id"), col("fp"))), Seq("fp"))
+      .select(col("id")).distinct()
+    val bBands = bandRowsOf(bToks, col("toks"), "id", numHashes, bands)
+    val cands = corpusBands
+      .join(wrap(bBands.withColumnRenamed("id", "bid")),
+        Seq("band", "band_sig"))
+      .select(col("bid"), col("id").as("cid")).distinct()
     val inter = size(array_intersect(col("btoks"), col("ctoks")))
-    verified
+    val nearIds = candToks(wrap(cands))
+      .join(wrap(bToks.select(col("id").as("bid"),
+        col("toks").as("btoks"))), Seq("bid"))
       .select(col("bid"),
         (inter / (size(col("btoks")) + size(col("ctoks")) - inter)
           .cast("double")).as("j"))
       .filter(round(col("j"), 4) >= minJaccard)
       .select(col("bid").as("id")).distinct()
-  }
-
-  private def assembleFlags(batch: DataFrame, idCol: String,
-      exactIds: DataFrame, nearIds: DataFrame): DataFrame =
     batch.select(col(idCol).as("id"))
       .join(exactIds.withColumn("exact_dup", lit(true)), Seq("id"), "left")
       .join(nearIds.withColumn("near_dup", lit(true)), Seq("id"), "left")
       .select(col("id").as(idCol),
         coalesce(col("exact_dup"), lit(false)).as("exact_dup"),
         coalesce(col("near_dup"), lit(false)).as("near_dup"))
+  }
 
   /** The narrow per-document corpus profile `(id, fp, toks)` every
     * index derives from — ONE text scan + shingle pipeline. For big
@@ -828,15 +801,11 @@ object Dedup {
     */
   def corpusIndexesFromProfile(profile: DataFrame, numHashes: Int = 16,
       bands: Int = 4, tokensTag: String = "ws3")
-  : (DataFrame, DataFrame, DataFrame) = {
-    require(numHashes > 0 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must split evenly into $bands bands")
+  : (DataFrame, DataFrame, DataFrame) =
     (profile.select(col("id"), col("fp")),
-      bandRowsOf(profile, col("toks"), "id", numHashes, bands)
-        .withColumn("_params",
-          lit(bandParams(numHashes, bands, tokensTag))),
+      stampedBandRows(profile, col("toks"), "id", numHashes, bands,
+        tokensTag),
       profile.select(col("id"), col("toks")))
-  }
 
   /** [[corpusIndexesFromProfile]] over raw corpus text. Each returned
     * frame re-derives the profile when materialized (three text scans
@@ -853,8 +822,8 @@ object Dedup {
     corpusIndexesFromProfile(corpusProfile(corpus, textCol, idCol,
       tokensOf), numHashes, bands, tokensTag)
 
-  private def bandParams(numHashes: Int, bands: Int,
-      tokensTag: String = "ws3"): String =
+  private def bandParams(numHashes: Int, bands: Int, tokensTag: String)
+  : String =
     s"mh$numHashes/b$bands/$tokensTag"
 
   /** Stamps a lookup/append under (numHashes, bands, tokensTag)
@@ -1017,8 +986,7 @@ object Dedup {
   def rebuildUnderBandParams(spark: org.apache.spark.sql.SparkSession,
       oldRoot: String, newRoot: String, numHashes: Int = 16,
       bands: Int = 4, tokensTag: String = "ws3"): String = {
-    require(numHashes > 0 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must split evenly into $bands bands")
+    requireBands(numHashes, bands)
     require(newRoot != oldRoot,
       "rebuildUnderBandParams: in-place migration is impossible by " +
         "design (every band row changes) — pass a fresh newRoot and " +
@@ -1053,9 +1021,8 @@ object Dedup {
         spark.read.parquet(s"$oldRoot/tok")
           .select(col("id"), col("toks"))
           .write.mode("overwrite").parquet(s"$newRoot/tok")
-        bandRowsOf(spark.read.parquet(s"$newRoot/tok"), col("toks"),
-          "id", numHashes, bands)
-          .withColumn("_params", lit(newStamp))
+        stampedBandRows(spark.read.parquet(s"$newRoot/tok"), col("toks"),
+          "id", numHashes, bands, tokensTag)
           .write.partitionBy("band").mode("overwrite")
           .parquet(s"$newRoot/band")
       },
@@ -1080,26 +1047,21 @@ object Dedup {
       minJaccard: Double = 0.3,
       tokensOf: Column => Column = wordShingles(_, 3),
       tokensTag: String = "ws3"): DataFrame = {
-    require(numHashes > 0 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must split evenly into $bands bands")
-    val bToks = batch.select(col(idCol).as("id"),
-      fingerprint(col(textCol)).as("fp"), tokensOf(col(textCol)).as("toks"))
-      .localCheckpoint(false)
-    val exactIds = fpIndex.select(col("fp"))
-      .join(broadcast(bToks.select(col("id"), col("fp"))), Seq("fp"))
-      .select(col("id")).distinct()
-    // a lookup banded differently than the stored index silently finds
-    // nothing (band_sig strings never collide). A corpusIndexesWrite
-    // layout carries an O(1) sidecar stamp, and a stampless index
-    // (hand-built or bandRowsOf-era) can't be verified: both go through
-    // the shared driver-side check (mismatch throws BEFORE any plan is
-    // built; stampless is flagged loudly). A sidecar-less tree that
-    // carries its in-data stamp — the streaming ingest's, and the
-    // empty-shape priors it passes — is verified per row instead: a
-    // driver-side `_params` distinct would cost a Spark job per
-    // micro-batch and throw on an empty prior
+    requireBands(numHashes, bands)
     val accepted = acceptedBandParams(numHashes, bands, tokensTag)
-    val checkedIdx =
+    batchVsCorpusFlags(batch, textCol, idCol, numHashes, bands,
+      minJaccard, tokensOf, broadcast, fpIndex.select(col("fp")),
+      // a lookup banded differently than the stored index silently
+      // finds nothing (band_sig strings never collide). A
+      // corpusIndexesWrite layout carries an O(1) sidecar stamp, and a
+      // stampless index (hand-built or bandRowsOf-era) can't be
+      // verified: both go through the shared driver-side check
+      // (mismatch throws BEFORE any plan is built; stampless is flagged
+      // loudly). A sidecar-less tree that carries its in-data stamp —
+      // the streaming ingest's, and the empty-shape priors it passes —
+      // is verified per row instead: a driver-side `_params` distinct
+      // would cost a Spark job per micro-batch and throw on an empty
+      // prior
       if (bandIdx.columns.contains("_params") &&
           StampedLayout.sidecarOf(bandIdx).isEmpty) bandIdx
         .filter(assert_true(
@@ -1111,19 +1073,10 @@ object Dedup {
       else StampedLayout.verifyStamp(bandIdx, accepted,
         "crossDedupFlagsFromIndexes",
         desc = "band index built under different banding params",
-        builder = "corpusIndexesWrite")
-    val bBands = bandRowsOf(bToks, col("toks"), "id", numHashes, bands)
-    val cands = checkedIdx
-      .join(broadcast(bBands.withColumnRenamed("id", "bid")),
-        Seq("band", "band_sig"))
-      .select(col("bid"), col("id").as("cid")).distinct()
-    val verified = tokenIndex
-      .select(col("id").as("cid"), col("toks").as("ctoks"))
-      .join(broadcast(cands), Seq("cid"))
-      .join(broadcast(bToks.select(col("id").as("bid"),
-        col("toks").as("btoks"))), Seq("bid"))
-    assembleFlags(batch, idCol, exactIds, jaccardNearIds(verified,
-      minJaccard))
+        builder = "corpusIndexesWrite"),
+      cands => tokenIndex
+        .select(col("id").as("cid"), col("toks").as("ctoks"))
+        .join(cands, Seq("cid")))
   }
 
   /** Connected components over a near-dup pair graph by min-label
@@ -1499,17 +1452,12 @@ object Dedup {
       maxBucket: Int = 4096, maxIters: Int = 20): DataFrame = {
     require(64 % bandBits == 0 && bandBits >= 1 && bandBits <= 32,
       s"bandBits ($bandBits) must divide 64 and leave ≥2 bands")
-    val bands = 64 / bandBits
-    require(maxHamming < bands,
-      s"pigeonhole: $bands bands only guarantee recall for distance < $bands")
-    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    requirePigeonhole(maxHamming, 64 / bandBits)
     // ONE text pass: fingerprint + shingle code together
     val toks = wordShingles(col(textCol), 3)
     val coded = df.select(col(idCol).as("id"),
       fingerprint(col(textCol)).as("_fp"),
-      when(size(toks) > 0,
-        column(graft.functions.Simhash64Code(expression(toks))))
-        .as("code"))
+      when(size(toks) > 0, simhash64Code(toks)).as("code"))
     // ONE fingerprint window: exact flags for every row; its min-id IS
     // the banding pre-collapse (keepersByKey's predicate)
     val flagged = coded
@@ -1517,11 +1465,9 @@ object Dedup {
         min(col("id")).over(Window.partitionBy(col("_fp"))))
       .drop("_fp")
       .localCheckpoint(true)
-    val bandRows = simhash64BandRows(
+    val comps = connectedComponents(bandedHammingPairs(
       flagged.filter(col("_exact_keep") && col("code").isNotNull),
-      bandBits)
-    val comps = connectedComponents(
-      bandedHammingPairs(bandRows, maxHamming, maxBucket), maxIters)
+      Seq("code"), 64, bandBits, maxHamming, maxBucket), maxIters)
       .withColumnRenamed("id", "_cid")
     flagged.select(col("id").as(idCol), col("_exact_keep"))
       .join(comps, col(idCol) === col("_cid"), "left")

@@ -181,17 +181,22 @@ class DedupSpec extends AnyFunSuite {
       (id, mutated.mkString(" "))
     }.toDF("doc_id", "text")
     val sh = graft.functions.TextFunctions.wordShingles(col("text"), 3)
-    val got = neighbors32Over(docs, sh, "doc_id", maxHamming = 3)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2)))
-      .toMap
-    val codes = Dedup.simhashOver(docs, sh, "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val naive = (for {
-      i <- codes.keys; j <- codes.keys if i < j
-      d = codes(i).zip(codes(j)).count { case (a, b) => a != b }
-      if d <= 3 // pigeonhole guarantee: 4 bands cover d < 4 exactly
-    } yield ((i, j), d)).toMap
-    assert(got == naive)
+    // 4 bands of 4, 6 and 8 bits: the band keys are shift+mask reads of
+    // codes narrower than the 32-bit word width too
+    for (nBits <- Seq(16, 24, 32)) {
+      val got = neighbors32Over(docs, sh, "doc_id", nBits = nBits,
+        maxHamming = 3)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2)))
+        .toMap
+      val codes = Dedup.simhashOver(docs, sh, "doc_id", nBits)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val naive = (for {
+        i <- codes.keys; j <- codes.keys if i < j
+        d = codes(i).zip(codes(j)).count { case (a, b) => a != b }
+        if d <= 3 // pigeonhole guarantee: 4 bands cover d < 4 exactly
+      } yield ((i, j), d)).toMap
+      assert(got == naive, s"nBits = $nBits")
+    }
   }
 
   test("simhashNeighborsOver rejects nBits outside [1, 32] at the API " +
@@ -437,6 +442,44 @@ class DedupSpec extends AnyFunSuite {
         column(graft.functions.Simhash64CodeSalted(expression(sh), "")))
         .as("eq")).collect().map(_.getBoolean(0))
     assert(same.forall(identity))
+  }
+
+  test("simhashNeighbors128Over verify matches a brute-force Hamming " +
+    "scan over (hi, lo), and the hot-bucket guard path returns the " +
+    "identical pair set") {
+    import spark.implicits._
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    // the 16-/32-bit layout test's fixture: some pairs within Hamming 3
+    val rnd = new scala.util.Random(67)
+    val base = (1 to 40).map(i => s"w$i")
+    val docs = (1L to 30L).map { id =>
+      val mutated = base.map(w =>
+        if (rnd.nextInt(12) == 0) w + "m" + (id % 3) else w)
+      (id, mutated.mkString(" "))
+    }.toDF("doc_id", "text")
+    val sh = TextFunctions.wordShingles(col("text"), 3)
+    def pairs(maxBucket: Int) =
+      Dedup.simhashNeighbors128Over(docs, sh, "doc_id", maxHamming = 3,
+        maxBucket = maxBucket)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2)))
+        .toMap
+    val got = pairs(4096)
+    val codes = docs.select(col("doc_id"),
+      column(graft.functions.Simhash64Code(expression(sh))).as("hi"),
+      column(graft.functions.Simhash64CodeSalted(expression(sh), "#2"))
+        .as("lo"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
+      .toMap
+    val naive = (for {
+      i <- codes.keys; j <- codes.keys if i < j
+      d = java.lang.Long.bitCount(codes(i)._1 ^ codes(j)._1) +
+        java.lang.Long.bitCount(codes(i)._2 ^ codes(j)._2)
+      if d <= 3 // pigeonhole: 4 bands of 32 bits cover d < 4 exactly
+    } yield ((i, j), d)).toMap
+    assert(naive.nonEmpty, "fixture produced no close pairs — vacuous")
+    assert(got == naive)
+    // maxBucket=1 forces EVERY bucket through the equi-join branch
+    assert(pairs(1) == got)
   }
 
   test("simhash64ComponentFlags: the fused one-scan form matches the " +
