@@ -387,7 +387,13 @@ object Pq {
     */
   def ivfPqIndexFrame(emb: DataFrame, idCol: String, vecCol: String,
       centroids: Centroids, cb: Codebook): DataFrame =
-    encode(Similarity.ivfAssign(emb, idCol, vecCol, centroids), vecCol, cb)
+    codeRows(Similarity.ivfAssign(emb, idCol, vecCol, centroids), idCol,
+      vecCol, centroids, cb)
+
+  /** `assigned`'s stamped code-tree rows (id, pq_code, cell, _params). */
+  private def codeRows(assigned: DataFrame, idCol: String, vecCol: String,
+      centroids: Centroids, cb: Codebook): DataFrame =
+    encode(assigned, vecCol, cb)
       .select(col(idCol), col("pq_code"), col("cell"))
       .withColumn("_params", lit(combinedStamp(centroids, cb)))
 
@@ -405,18 +411,21 @@ object Pq {
     * This is the storage contract of the memory tier spelled out: the
     * small hot code tree serves every probe; the big cold vector tree
     * is touched only by the refine tail's cell-pruned fetch.
+    *
+    * The code rows are clustered by cell and sorted by id before the
+    * write: one part file per cell, whatever the vector tree's scan
+    * packing (unclustered, `PqBench 5000` wrote 164, 160 and 158 files).
     */
   def ivfPqIndexWritePair(emb: DataFrame, idCol: String, vecCol: String,
       centroids: Centroids, cb: Codebook, indexDir: String,
       vectorsDir: String): Unit = {
     val spark = emb.sparkSession
     Similarity.ivfIndexWrite(emb, idCol, vecCol, centroids, vectorsDir)
-    val stamp = combinedStamp(centroids, cb)
-    encode(spark.read.parquet(vectorsDir), vecCol, cb)
-      .select(col(idCol), col("pq_code"), col("cell"))
-      .withColumn("_params", lit(stamp))
+    codeRows(spark.read.parquet(vectorsDir), idCol, vecCol, centroids, cb)
+      .repartition(col("cell")).sortWithinPartitions(col("cell"), col(idCol))
       .write.partitionBy("cell").mode("overwrite").parquet(indexDir)
-    StampedLayout.writeStampSidecar(spark, indexDir, stamp)
+    StampedLayout.writeStampSidecar(spark, indexDir,
+      combinedStamp(centroids, cb))
   }
 
   /** [[Similarity.rebuildUnderCodebook]] for an IVF-PQ refine PAIR:
@@ -544,10 +553,8 @@ object Pq {
       vectorsDir, ivfStamp, "ivfPqIndexAppendPair",
       desc = "vector tree assigned under a different codebook")
     Similarity.appendToStampedLayout(
-      encode(assigned, vecCol, cb)
-        .select(col(idCol), col("pq_code"), col("cell"))
-        .withColumn("_params", lit(pairStamp)),
-      indexDir, pairStamp, "ivfPqIndexAppendPair",
+      codeRows(assigned, idCol, vecCol, centroids, cb), indexDir,
+      pairStamp, "ivfPqIndexAppendPair",
       desc = "code tree built under different codebooks")
   }
 
@@ -779,63 +786,36 @@ object Pq {
       band: Double, refineK: Int, nProbe: Int, excludeSelf: Boolean)
   : DataFrame = {
     // one symmetric probe, top-refineK per query — candidate-sized
-    // (refineK·|batch| rows), checkpointed: it feeds the best-agg, the
-    // straddler join, and (through it) the cell collect
+    // (refineK·|batch| rows), checkpointed: it feeds the top-1 and the
+    // straddler candidates
     val top = ivfPqSearchBatchSdcChunked(batch, batchIdCol,
       batchVecCol, index, idCol, centroids, cb,
       k = refineK, nProbe = nProbe, excludeSelf = excludeSelf)
       .localCheckpoint(true)
     // SDC top-1 = rank 1 of the top-K (same (dist asc, id asc) order)
-    val best = top.groupBy(col("qid"))
-      .agg(min_by(struct(col(idCol), col("sdc_dist")),
-        struct(col("sdc_dist"), col(idCol))).as("_t"))
-      .select(col("qid"), col(s"_t.$idCol").as("neighbor_id"),
-        col("_t.sdc_dist").as("sdc_dist"))
+    val best = Similarity.rankTopK(top, idCol, "sdc_dist",
+      biggerIsBetter = false, k = 1, cellCol = None)
       .localCheckpoint(true) // feeds the band filter AND the final join
-    val bandQids = best
-      .filter(abs(col("sdc_dist") - lit(tauSdc)) <= lit(band))
-      .select(col("qid"))
-    // straddler candidate pairs, with the probe's cell riding along so
-    // the code fetch prunes to exactly their cells' directories
-    val straddlers = top.join(broadcast(bandQids), Seq("qid"))
-      .select(col("qid"), col(idCol), col("cell"))
-      .localCheckpoint(true) // feeds the cell collect + the code join
-    val cells = straddlers.select(col("cell").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val rescored = if (cells.isEmpty) {
-      // no straddlers: nothing to refine (still produce the schema)
-      best.select(col("qid"), lit(null).cast("double").as("_amin"))
-        .filter(lit(false))
-    } else {
-      val checked = StampedLayout.verifyStamp(index,
-        Seq(combinedStamp(centroids, cb)), "semanticDedupFlagsPqHybrid")
-      // LUTs ship for the BAND-SIZED query subset only — the bounded
-      // form of the cost ADC pays for the whole batch
-      val qluts = Similarity.queryFrame(batch, batchIdCol, batchVecCol)
+    val inBand = abs(col("sdc_dist") - lit(tauSdc)) <= lit(band)
+    val bandQids = best.filter(inBand).select(col("qid"))
+    // the straddlers' candidates rescored by ADC over their own cells'
+    // codes (the probe above verified the index stamp); LUTs ship for
+    // the BAND-SIZED query subset only — the bounded form of the cost
+    // ADC pays for the whole batch
+    val (_, adcBest) = Similarity.rescoreBatch(
+      top.join(broadcast(bandQids), Seq("qid")), index,
+      Similarity.queryFrame(batch, batchIdCol, batchVecCol)
         .join(broadcast(bandQids), Seq("qid"))
         .select(col("qid"),
           GraftFunctions.pq_lut(col("qvec"), cbLit(cb), cb.m, cb.k)
-            .as("_lut"))
-      checked.filter(col("cell").cast("long").isin(cells: _*))
-        .select(col(idCol), col("pq_code"))
-        .join(broadcast(straddlers.select(col("qid"), col(idCol))),
-          Seq(idCol))
-        .join(broadcast(qluts), Seq("qid"))
-        .select(col("qid"),
-          round(GraftFunctions.pq_adc(col("_lut"), col("pq_code")), 5)
-            .as("_adc"))
-        .filter(col("_adc").isNotNull)
-        .groupBy(col("qid")).agg(min(col("_adc")).as("_amin"))
-    }
-    val sdcKeep = col("sdc_dist").isNull || col("sdc_dist") > tauSdc
-    val refinedKeep = col("_amin").isNull || col("_amin") > tauAdc
-    batch.select(col(batchIdCol))
-      .join(best, col(batchIdCol) === col("qid"), "left")
-      .join(rescored, Seq("qid"), "left")
-      .select(col(batchIdCol), col("neighbor_id"), col("sdc_dist"),
-        when(col("sdc_dist").isNotNull &&
-          abs(col("sdc_dist") - lit(tauSdc)) <= lit(band), refinedKeep)
-          .otherwise(sdcKeep).as("keep"))
+            .as("_lut")),
+      idCol, GraftFunctions.pq_adc(col("_lut"), col("pq_code")), "_adc",
+      _.isNotNull, biggerIsBetter = false, k = 1)
+    Similarity.flagsFromTop(batch, batchIdCol,
+      best.join(adcBest.select(col("qid"), col("_adc")), Seq("qid"), "left"),
+      idCol, "sdc_dist",
+      when(inBand, col("_adc").isNull || col("_adc") > tauAdc)
+        .otherwise(col("sdc_dist") > tauSdc))
   }
 
   /** The driver finish of [[semanticDedupFlagsPqSdc]] (`refine` None,
@@ -1142,18 +1122,14 @@ object Pq {
     * The standard IVFADC+refine shape: ADC error only matters when it
     * reorders across the refine boundary, measured in PQ_*_r11.json.
     *
-    * The fetch is CELL-PRUNED, not an id join against the raw corpus:
-    * candidates keep the `cell` the probe found them in, and since the
-    * vector layout is assigned under the same (stamp-verified) IVF
-    * codebook, each candidate's vector lives in exactly that cell's
-    * directory — so a static `cell IN (candidate cells)` filter prunes
-    * the fetch scan to ≤ nProbe·|batch| cells' files (numFiles-gated
-    * in PlanRegressionSpec). Without this, the fetch would broadcast-
-    * join without shuffling but still READ every corpus row's vector
-    * payload — at 10⁹ vectors the ~0.5 TB scan per refine batch this
-    * tier exists to avoid. Both sidecar stamps are verified before any
-    * plan is built: a vector tree assigned under a different codebook
-    * would place candidates in other cells and silently drop them.
+    * The fetch is [[Similarity.rescoreBatch]]'s CELL-PRUNED one, not an
+    * id join against the raw corpus: each candidate's vector lives in
+    * the cell the probe found it in, so the scan reads ≤ nProbe·|batch|
+    * cells' files (numFiles-gated in PlanRegressionSpec), never the
+    * ~0.5 TB payload of a 10⁹-vector corpus. Both sidecar stamps are
+    * verified before any plan is built: a vector tree assigned under a
+    * different codebook would place candidates in other cells and
+    * silently drop them. A NaN cosine (a zero-norm vector) is dropped.
     *
     * Returns (qid, `idCol`, cos_sim) — top `k` per query by rounded
     * cosine descending, id tie-break.
@@ -1164,25 +1140,20 @@ object Pq {
       centroids: Centroids, cb: Codebook, k: Int, nProbe: Int = 2,
       refineFactor: Int = 4, excludeSelf: Boolean = true,
       metric: String = "l2"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(refineFactor >= 1, "refineFactor must be ≥ 1")
     val checkedVecs = StampedLayout.verifyStamp(vectors,
       Seq(centroids.stamp), "ivfPqSearchRefined",
       desc = "refine vector layout assigned under a different codebook")
-    // candidate-sized by construction (k·refineFactor·|batch| rows);
-    // checkpointed because it feeds TWO consumers — the cell collect
-    // and the fetch join — and re-running the ADC probe per consumer
-    // would double the probe cost
     val cand = ivfPqSearchBatch(queries, queryIdCol, queryVecCol,
       index, sourceIdCol, centroids, cb,
       k = k * refineFactor, nProbe = nProbe, excludeSelf = excludeSelf,
       metric = metric)
-      .select(col("qid"), col(sourceIdCol), col("cell"))
-      .localCheckpoint(true)
-    // the reloaded layout's partition column may infer as int — cast
-    // before collecting so the IN-list is type-stable
-    val candCells = cand.select(col("cell").cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
+    val (candCells, top) = Similarity.rescoreBatch(cand,
+      checkedVecs.select(col(sourceIdCol), col("cell"),
+        col(sourceVecCol).cast("array<double>").as("_sv")),
+      Similarity.queryFrame(queries, queryIdCol, queryVecCol), sourceIdCol,
+      Similarity.cosine(col("_sv"), col("qvec")), "cos_sim",
+      c => !isnan(c), biggerIsBetter = true, k)
     // PAIR-SYNC GUARD: the code tree and the vector tree agree
     // row-for-row when built/appended as a pair ([[ivfPqIndexWritePair]]
     // / [[ivfPqIndexAppendPair]]); an append to ONE tree keeps both
@@ -1191,11 +1162,15 @@ object Pq {
     // candidates from the refine results. Count the candidate cells on
     // both sides — partition-pruned, column-pruned scans (row counts
     // come from footer metadata; no code or vector payload is read) —
-    // and refuse a desynced pair loudly.
-    val codeRows = index
-      .filter(col("cell").cast("long").isin(candCells: _*)).count()
-    val vecRows = checkedVecs
-      .filter(col("cell").cast("long").isin(candCells: _*)).count()
+    // and refuse a desynced pair loudly, before the fetch runs. One
+    // aggregate over both trees' pruned scans counts them together.
+    def rowsIn(tree: DataFrame, name: String) =
+      tree.filter(col("cell").cast("long").isin(candCells: _*))
+        .select(lit(name).as("_tree"))
+    val counts = rowsIn(index, "code").union(rowsIn(checkedVecs, "vector"))
+      .groupBy(col("_tree")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
+    val (codeRows, vecRows) = (counts("code"), counts("vector"))
     if (codeRows != vecRows) throw new IllegalStateException(
       "ivfPqSearchRefined: code tree and vector tree disagree in the " +
         s"candidate cells (${candCells.mkString(",")}): $codeRows code " +
@@ -1208,26 +1183,6 @@ object Pq {
             "probe is blind to the extra rows. ") +
         "Append with ivfPqIndexAppendPair (or rebuild with " +
         "ivfPqIndexWritePair) so both trees ingest together.")
-    val qv = Similarity.queryFrame(queries, queryIdCol, queryVecCol)
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col(sourceIdCol).asc)
-    // static cell pruning on the fetch scan + an EXPLICIT candidate
-    // broadcast: the pruned vector read is still the big side (a cell
-    // holds corpus/|codebook| rows), and relying on AQE stats for the
-    // join side risks a sort-merge plan that shuffles it on id —
-    // plan-gated (join strategy AND numFiles) in PlanRegressionSpec
-    checkedVecs
-      .filter(col("cell").isin(candCells: _*))
-      .select(col(sourceIdCol),
-        col(sourceVecCol).cast("array<double>").as("_sv"))
-      .join(broadcast(cand.select(col("qid"), col(sourceIdCol))),
-        Seq(sourceIdCol))
-      .join(broadcast(qv), Seq("qid"))
-      .select(col("qid"), col(sourceIdCol),
-        round(GraftFunctions.cosine_sim(col("_sv"), col("qvec")), 5)
-          .as("cos_sim"))
-      .withColumn("_rn", row_number().over(wTop))
-      .filter(col("_rn") <= k)
-      .drop("_rn")
+    top
   }
 }

@@ -143,13 +143,24 @@ object Similarity {
       queryId: Long, k: Int): DataFrame = {
     val q = broadcast(emb.filter(col(idCol) === queryId)
       .select(asDouble(col(vecCol)).as("qvec")))
-    emb.filter(col(idCol) =!= queryId)
+    topCosine(emb.filter(col(idCol) =!= queryId)
       .crossJoin(q)
       .select(col(idCol),
-        round(cosine(asDouble(col(vecCol)), col("qvec")), 5).as("cos_sim"))
+        round(cosine(asDouble(col(vecCol)), col("qvec")), 5).as("cos_sim")),
+      idCol, k)
+  }
+
+  /** The rank of the single-query surfaces ([[knnCosine]], [[lshAnn]],
+    * [[ivfSearch]], [[ivfSearchIndexed]]): top `k` by `cos_sim` desc,
+    * id asc, a TakeOrdered. NaN scores (a zero-norm vector: 0/0) are
+    * dropped first — Spark sorts NaN above every value, so a zero-norm
+    * corpus vector would otherwise rank 1 for every query.
+    */
+  private def topCosine(scored: DataFrame, idCol: String, k: Int)
+  : DataFrame =
+    scored.filter(!isnan(col("cos_sim")))
       .orderBy(col("cos_sim").desc, col(idCol))
       .limit(k)
-  }
 
   /** Sign-LSH bucket id from `nBits` vector components starting at
     * `offset`: bucket = Σ 2^i · [v_(offset+i) > 0]. A cheap, portable
@@ -425,7 +436,7 @@ object Similarity {
     * [[ivfSearchIndexed]]: the `nProbe` cells whose centroids are
     * nearest `qVec` by (squared distance, cid), picked on the driver,
     * filter `assigned` (minus `excludeId`), and the survivors rank by
-    * rounded exact cosine, id tie-break.
+    * rounded exact cosine ([[topCosine]]).
     */
   private def probeOne(assigned: DataFrame, idCol: String, vecCol: String,
       centroids: Centroids, qVec: Seq[Double], k: Int, nProbe: Int,
@@ -433,12 +444,13 @@ object Similarity {
     val probes = centroids.cells.map { case (cid, cv) =>
       (cv.zip(qVec).map { case (x, y) => (x - y) * (x - y) }.sum, cid)
     }.sorted.take(nProbe).map(_._2)
-    excludeId.foldLeft(assigned.filter(col("cell").isin(probes: _*)))(
-      (df, q) => df.filter(col(idCol) =!= q))
-      .select(col(idCol), col("cell"),
-        round(cosine(asDouble(col(vecCol)), typedLit(qVec)), 5).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
+    topCosine(
+      excludeId.foldLeft(assigned.filter(col("cell").isin(probes: _*)))(
+        (df, q) => df.filter(col(idCol) =!= q))
+        .select(col(idCol), col("cell"),
+          round(cosine(asDouble(col(vecCol)), typedLit(qVec)), 5)
+            .as("cos_sim")),
+      idCol, k)
   }
 
   /** IVF probe search: assign every vector to its cell (zero-shuffle
@@ -837,17 +849,10 @@ object Similarity {
       caller)
     val q = queryFrame(queries, queryIdCol, queryVecCol)
       .localCheckpoint(true) // one pass feeds probe ranking + vector join
-    // NaN scores (a zero-norm vector on EITHER side ⇒ cosine 0/0)
-    // are dropped BEFORE the rank stage, making the contract uniform
-    // across all its paths — without this predicate they diverge: the
-    // rank window sorts NaN first under desc (Spark orders NaN above
-    // every value), so a single zero-norm corpus vector would occupy
-    // rank 1 of EVERY query it's a candidate for, while min_by and the
-    // bounded aggregate drop it (NaN loses `>`/struct comparisons).
-    // "No similarity" is the only sane reading of 0/0, and a zero-norm
-    // QUERY (all its scores NaN) surfaces as the no-candidates
-    // NULL/keep row downstream — the same contract probeTopCells
-    // applies to null distances.
+    // NaN scores (a zero-norm vector on EITHER side ⇒ cosine 0/0) are
+    // dropped before the rank, as in [[topCosine]]: left in, the rank
+    // window would sort them first under desc while min_by and the
+    // bounded aggregate drop them. A zero-norm QUERY keeps (NULL row).
     probeBatch(checked, q, q, centroids, nProbe, superCells, superProbe,
       idCol, cosine(asDouble(col(vecCol)), col("qvec")), "cos_sim",
       c => !isnan(c), biggerIsBetter = true, k, excludeSelf)
@@ -924,16 +929,11 @@ object Similarity {
     *
     *  1. Cells: [[probeCells]] over `q` (qid, qvec), checkpointed — it
     *     feeds the cells collect AND the candidate join.
-    *  2. Candidates: the DISTINCT probed cell ids (≤ |codebook|, a
-    *     driver-sized quantity by the same argument as the codebook
-    *     literal itself — unlike a qid collect it cannot grow with the
-    *     batch) prune `checked` through a static `cell IN (...)`; the
-    *     (qid, cell) pairs and then `qside` (qid + whatever the score
-    *     reads of the query: its vector, ADC lookup table or PQ code)
-    *     broadcast-join on; `excludeSelf` drops id == qid.
-    *  3. Score: `round(score, 5)` as `scoreCol`; rows failing `valid`
-    *     are dropped before the rank.
-    *  4. Rank: [[rankTopK]] with the cell riding along.
+    *  2. Candidates, score and rank: [[rankCandidates]] over the
+    *     DISTINCT probed cell ids (≤ |codebook|, a driver-sized
+    *     quantity by the same argument as the codebook literal itself —
+    *     unlike a qid collect it cannot grow with the batch), joining
+    *     the (qid, cell) pairs on cell, with the cell riding along.
     *
     * Returns (qid, `idCol`, cell, `scoreCol`).
     */
@@ -944,19 +944,65 @@ object Similarity {
       excludeSelf: Boolean): DataFrame = {
     val qcells = probeCells(q, centroids, nProbe, superCells, superProbe)
       .localCheckpoint(true) // probe side computed once: cells collect + join
-    val probedCells = qcells.select(col("cell")).distinct()
+    rankCandidates(checked, cellsOf(qcells), qcells, "cell", qside, idCol,
+      score, scoreCol, valid, biggerIsBetter, k, excludeSelf,
+      cellCol = Some("cell"))
+  }
+
+  /** The rescore stage of [[Pq.ivfPqSearchRefined]] (exact re-rank)
+    * and [[Pq.semanticDedupFlagsPqHybrid]] (straddler ADC): `cand`'s
+    * (qid, `idCol`, cell) pairs, checkpointed (cells collect + join),
+    * rescored by [[rankCandidates]] against `tree`, a stamp-verified
+    * layout under the same IVF codebook, so each row lives in the cell
+    * it was found in. No cells: an empty result, no job. Returns
+    * the cells (a guard may run before the lazy result reads anything)
+    * and (qid, `idCol`, `scoreCol`).
+    */
+  private[ops] def rescoreBatch(cand: DataFrame, tree: DataFrame,
+      qside: DataFrame, idCol: String, score: Column, scoreCol: String,
+      valid: Column => Column, biggerIsBetter: Boolean, k: Int)
+  : (Seq[Long], DataFrame) = {
+    val pairs = cand.select(col("qid"), col(idCol), col("cell"))
+      .localCheckpoint(true)
+    val cells = cellsOf(pairs)
+    val top =
+      if (cells.isEmpty)
+        pairs.select(col("qid"), col(idCol),
+          lit(null).cast("double").as(scoreCol)).filter(lit(false))
+      else rankCandidates(tree, cells, pairs.select(col("qid"), col(idCol)),
+        idCol, qside, idCol, score, scoreCol, valid, biggerIsBetter, k,
+        excludeSelf = false, cellCol = None)
+    (cells, top)
+  }
+
+  /** `df`'s distinct cells, sorted (a reloaded `cell` may be an int). */
+  private def cellsOf(df: DataFrame): Seq[Long] =
+    df.select(col("cell").cast("long")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
-    val cand = checked.filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(qcells), Seq("cell"))
+
+  /** The candidate stage of [[probeBatch]] and [[rescoreBatch]]: a
+    * static `cell IN (cells)` prunes `checked` to those cells' files;
+    * `pairs` (qid, `key`) and `qside` (qid + what the score reads of
+    * the query: vector, ADC table or PQ code) broadcast-join on, the
+    * pruned tree being the big side; `excludeSelf` drops id == qid;
+    * `round(score, 5)` as `scoreCol`, rows failing `valid` dropped,
+    * [[rankTopK]] with `cellCol` riding along.
+    */
+  private def rankCandidates(checked: DataFrame, cells: Seq[Long],
+      pairs: DataFrame, key: String, qside: DataFrame, idCol: String,
+      score: Column, scoreCol: String, valid: Column => Column,
+      biggerIsBetter: Boolean, k: Int, excludeSelf: Boolean,
+      cellCol: Option[String]): DataFrame = {
+    val cand = checked.filter(col("cell").isin(cells: _*))
+      .join(broadcast(pairs), Seq(key))
       .join(broadcast(qside), Seq("qid"))
     val scoped =
       if (excludeSelf) cand.filter(col(idCol) =!= col("qid")) else cand
     val scored = scoped
-      .select(col("qid"), col(idCol), col("cell"),
-        round(score, 5).as(scoreCol))
+      .select((Seq(col("qid"), col(idCol)) ++ cellCol.map(col)) :+
+        round(score, 5).as(scoreCol): _*)
       .filter(valid(col(scoreCol)))
-    rankTopK(scored, idCol, scoreCol, biggerIsBetter, k,
-      cellCol = Some("cell"))
+    rankTopK(scored, idCol, scoreCol, biggerIsBetter, k, cellCol)
   }
 
   /** Byte, short, int or long: the id/cell types the bounded
@@ -971,7 +1017,8 @@ object Similarity {
     case _ => false
   }
 
-  /** The rank stage of every ANN batch surface: top-k per `qid` on
+  /** The rank stage of every ANN batch surface, of [[rescoreBatch]] and
+    * of the hybrid dedup's SDC top-1: top-k per `qid` on
     * (score best-first, id asc) over rows the caller has already
     * cleared of null/NaN scores, so the aggregates never see one.
     * Window-free whenever k and the id/cell types allow:
@@ -1181,9 +1228,9 @@ object Similarity {
     * cos_sim NULL when no candidate survives in the probed cells.
     *
     * CONTRACT: `batchIdCol` must be unique within `batch`. The id
-    * threads through [[ivfSearchBatch]]'s per-qid top-1 window and the
+    * threads through [[ivfSearchBatch]]'s per-qid top-1 rank and the
     * final left join — a duplicated id would collapse two distinct
-    * vectors' candidate pools into one window group (one vector's
+    * vectors' candidate pools into one rank group (one vector's
     * genuine neighbor silently evicted by the other's higher score)
     * and then fan the merged verdict back out to BOTH rows. The same
     * uniqueness contract as [[ivfSearchBatch]]'s qid, stated here
@@ -1207,15 +1254,14 @@ object Similarity {
 
   /** The tail of the dedup flag surfaces: every `batch` row
     * left-joined to its top-1 probe hit (`top`: qid, `idCol`,
-    * `scoreCol`) as (`batchIdCol`, neighbor_id, `scoreCol`, keep) —
-    * keep when the probe found no candidate or `notDup` holds for
-    * the hit's score.
+    * `scoreCol`, and any columns `notDup` reads) as (`batchIdCol`,
+    * neighbor_id, `scoreCol`, keep) — keep when the probe found no
+    * candidate or `notDup` holds for the hit.
     */
   private[ops] def flagsFromTop(batch: DataFrame, batchIdCol: String,
       top: DataFrame, idCol: String, scoreCol: String, notDup: Column)
   : DataFrame = {
-    val hit = top.select(col("qid"), col(idCol).as("neighbor_id"),
-      col(scoreCol))
+    val hit = top.withColumnRenamed(idCol, "neighbor_id")
     batch.select(col(batchIdCol))
       .join(hit, col(batchIdCol) === col("qid"), "left")
       .select(col(batchIdCol), col("neighbor_id"), col(scoreCol),
@@ -1330,11 +1376,10 @@ object Similarity {
     val withBucket = emb.withColumn("bucket", signBucket(col(vecCol)))
     val q = broadcast(withBucket.filter(col(idCol) === queryId)
       .select(asDouble(col(vecCol)).as("qvec"), col("bucket").as("qbucket")))
-    withBucket.filter(col(idCol) =!= queryId)
+    topCosine(withBucket.filter(col(idCol) =!= queryId)
       .join(q, col("bucket") === col("qbucket"))
       .select(col(idCol), col("bucket"),
-        round(cosine(asDouble(col(vecCol)), col("qvec")), 5).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
+        round(cosine(asDouble(col(vecCol)), col("qvec")), 5).as("cos_sim")),
+      idCol, k)
   }
 }

@@ -205,7 +205,9 @@ class PqSpec extends AnyFunSuite {
     "refined with a corpus-wide factor == exact knn") {
     import spark.implicits._
     val dim = 16
-    val vecs = randVecs(400, dim, 55)
+    // id 400 is a zero vector: its cosine to any query is 0/0, so the
+    // refine must drop it, never rank it first
+    val vecs = randVecs(400, dim, 55) :+ ((400L, Seq.fill(dim)(0.0)))
     val df = vecs.toDF("id", "vec")
     val cb = Pq.train(df, "id", "vec", m = 4, k = 8, sampleN = 400)
     val cents = Centroids(vecs.take(6).map { case (i, v) => (i, v) }
@@ -238,10 +240,11 @@ class PqSpec extends AnyFunSuite {
       d / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
     }
     vecs.take(2).foreach { case (qid, qv) =>
-      val want = vecs.filter(_._1 != qid).map { case (i, v) =>
-        (i, BigDecimal(cos(qv, v))
-          .setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      }.sortBy { case (i, c) => (-c, i) }.take(3)
+      val want = vecs.filter(t => t._1 != qid && !cos(qv, t._2).isNaN)
+        .map { case (i, v) =>
+          (i, BigDecimal(cos(qv, v))
+            .setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        }.sortBy { case (i, c) => (-c, i) }.take(3)
       assert(refined(qid).sortBy { case (i, c) => (-c, i) } == want,
         s"refined query $qid")
     }
@@ -259,6 +262,8 @@ class PqSpec extends AnyFunSuite {
     val dir = TestDirs.tmp("ivfpq_plan").toFile.getAbsolutePath
     Pq.ivfPqIndexWrite(df, "id", "vec", cents, cb, dir)
     val index = spark.read.parquet(dir)
+    val vecDir = TestDirs.tmp("ivfpq_plan_v").toFile.getAbsolutePath
+    Similarity.ivfIndexWrite(df, "id", "vec", cents, vecDir)
     val queries = vecs.take(3).toDF("id", "vec")
     def probe(k: Int, metric: String = "l2") =
       Pq.ivfPqSearchBatch(queries, "id", "vec", index, "id",
@@ -275,6 +280,12 @@ class PqSpec extends AnyFunSuite {
       s"k=5 should rank through TopKByScore:\n${p5.take(1200)}")
     assert(planOf(probe(graft.functions.TopKByScore.MaxK + 1))
       .contains("Window"), "k past MaxK should keep the rank window")
+    val pRefined = planOf(Pq.ivfPqSearchRefined(queries, "id", "vec", index,
+      spark.read.parquet(vecDir), "id", "vec", cents, cb, k = 5,
+      nProbe = 2))
+    assert(!pRefined.contains("Window") &&
+      pRefined.toLowerCase.contains("topkbyscore"),
+      s"refine k=5 should rank through TopKByScore:\n${pRefined.take(1200)}")
     val codes = Pq.encode(df, "vec", cb).select(col("id"), col("pq_code"))
     val pBrute = planOf(Pq.searchBatch(queries, "id", "vec", codes,
       "id", cb, k = 5))
@@ -644,6 +655,39 @@ class PqSpec extends AnyFunSuite {
     assert(keptRaw > keptExact + 4 * coarseTol,
       s"expected the raw cos→L2 tau to under-dedup far past the " +
         s"agreement tolerance (raw kept $keptRaw, exact $keptExact)")
+  }
+
+  test("ivfPqIndexWritePair clusters the code tree by cell: one part " +
+    "file per cell directory, rows in id order, and the same file sizes " +
+    "on a second write of the same input") {
+    import spark.implicits._
+    val vecs = randVecs(300, 8, 173)
+    // six input partitions: each writes a file to every cell of the
+    // vector tree, so a code tree read straight from it spans several
+    // read tasks per cell
+    val df = vecs.toDF("id", "vec").repartition(6)
+    val cb = Pq.train(df, "id", "vec", m = 2, k = 4, sampleN = 300)
+    val cents = Centroids(vecs.take(5).toDF("cid", "cvec"), "cid", "cvec")
+    def layout(run: Int): Map[String, Seq[java.io.File]] = {
+      val dir = TestDirs.tmp(s"ivfpq_layout_$run").toFile.getAbsolutePath
+      val vecDir = TestDirs.tmp(s"ivfpq_layout_v_$run").toFile
+        .getAbsolutePath
+      Pq.ivfPqIndexWritePair(df, "id", "vec", cents, cb, dir, vecDir)
+      new java.io.File(dir).listFiles().filter(_.getName.startsWith("cell="))
+        .map(d => d.getName ->
+          d.listFiles().filter(_.getName.endsWith(".parquet")).toSeq).toMap
+    }
+    val first = layout(1)
+    assert(first.size === 5 && first.values.forall(_.size == 1),
+      s"files per cell: ${first.view.mapValues(_.size).toMap}")
+    first.values.flatten.foreach { f =>
+      val ids = spark.read.parquet(f.getAbsolutePath).select(col("id"))
+        .as[Long].collect().toSeq
+      assert(ids === ids.sorted, s"${f.getName}: rows not in id order")
+    }
+    def sizes(l: Map[String, Seq[java.io.File]]) =
+      l.view.mapValues(_.map(_.length)).toMap
+    assert(sizes(layout(2)) === sizes(first))
   }
 
   test("a refine fetch against a vector tree assigned under a " +

@@ -123,6 +123,13 @@ class SimilaritySpec extends AnyFunSuite {
     // would have put the NaN row first without the pre-rank drop
     assert(ids(graft.functions.TopKByScore.MaxK + 1) ===
       Seq(1L, 2L, 4L, 3L))
+    // the single-query surfaces (ordered TakeOrdered rank) drop it too
+    assert(Similarity.ivfSearchIndexed(index, "vec_id", "embedding", cents,
+      Seq(1.0, 0.05), k = 4, nProbe = 2)
+      .select(col("vec_id")).as[Long].collect().toSeq === Seq(1L, 2L, 4L, 3L))
+    assert(Similarity.knnCosine(emb.union(q), "vec_id", "embedding",
+      queryId = 50L, k = 4)
+      .select(col("vec_id")).as[Long].collect().toSeq === Seq(1L, 2L, 4L, 3L))
     // a zero-norm QUERY scores NaN against every candidate → no
     // neighbors → semanticDedupFlags keeps it (the NULL/keep contract)
     val zq = Seq((60L, Seq(0.0, 0.0))).toDF("vec_id", "embedding")
