@@ -92,7 +92,7 @@ object Bench {
     "q133_semantic_dedup_pq", // no-full-vector semantic dedup (ADC top-1)
     "q134_decontaminate_auto", // estimator-picked broadcast-vs-bloom
     "q136_bucketed_revenue", // bucketed write + zero-exchange join/agg
-    "q137_dup_components_auto", // auto plain-vs-doubling components
+    "q137_dup_components_auto", // q107's body: the one components loop
     "q138_semantic_ingest_pq", // streaming PQ ingest, two-epoch path
     "q139_ivf_migrated", // managed codebook migration + probe
     "q140_semantic_dedup_sdc", // symmetric-distance (SDC) PQ dedup

@@ -4,15 +4,15 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.ops.Dedup
 
-/** The chain-graph scale point for the two connected-components loops
-  * — the adversary their scaladoc names but (pre-r15) never measured:
-  * on template-family corpora (diameter ≤ ~3) both converge in a
-  * handful of rounds and the plain loop's single shuffle per round
-  * wins; on a LONG-DIAMETER graph the plain loop's O(diameter) rounds
-  * are the cost and pointer-doubling's O(log diameter) is the escape.
-  * This records rounds × per-round wall for BOTH loops over the SAME
-  * banded pair graph of a `GrowDocs mode=chain` corpus, plus a
-  * distributed label-parity check.
+/** The scale point for the connected-components loop: rounds ×
+  * per-round wall over the banded pair graph of a `GrowDocs` corpus —
+  * `mode=chain` for the long-diameter adversary, where the loop
+  * switches from plain propagation to pointer jumping, or a template
+  * corpus for the shallow case, where it never jumps. It records every
+  * distributed round's (changed, jump, sec) as the loop returns it,
+  * the plain/jump round counts, and a label-parity check against the
+  * driver union-find. The plain/fast/auto legs of the three loops this
+  * one replaced are on record in `CC_1m_*_r15*.json`.
   *
   * Banding is r=1 (numHashes = bands = 16): chain edges sit at
   * J ≈ 0.326, where the default r=4 banding catches ~4% of edges
@@ -22,26 +22,22 @@ import graft.ops.Dedup
   * verify keeps the 0.3 cut: chain edges (0.3258) pass, everything
   * else is J=0 by construction.
   *
-  * The pair graph materializes ONCE (localCheckpoint) before either
-  * loop runs: the loops' own edge persist covers the within-loop
-  * reuse, but re-deriving the banding pipeline per loop would put
-  * ~2× the setup cost into whichever loop runs second.
+  * The pair graph materializes ONCE (localCheckpoint) before the loop
+  * runs, so neither leg re-derives the banding pipeline. The loop runs
+  * with `spark.sql.autoBroadcastJoinThreshold = -1` (set after the
+  * pair graph is built): an edge list within the broadcast budget
+  * would take the driver union-find and run no round, and rounds ×
+  * per-round wall is the shape under test. The parity leg then raises
+  * the threshold to 1 GiB so the same operator finishes on the driver.
   *
-  * The loops run with `spark.sql.autoBroadcastJoinThreshold = -1`
-  * (set after the pair graph is built): an edge list within the
-  * broadcast budget would take the driver union-find and run no
-  * round, and rounds × per-round wall is the shape under test. Each
-  * loop's line and the JSON name the regime that ran.
-  *
-  * Usage: CcBench <documentsDir> [outDir] [maxPlain=200] [maxFast=40]
+  * Usage: CcBench <documentsDir> [outDir] [maxIters=40]
   */
 object CcBench {
 
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/tmp/grown1m_chain")
     val outDir = args.lift(1).getOrElse("/tmp/cc_bench")
-    val maxPlain = args.lift(2).map(_.toInt).getOrElse(200)
-    val maxFast = args.lift(3).map(_.toInt).getOrElse(40)
+    val maxIters = args.lift(2).map(_.toInt).getOrElse(40)
     val spark = BenchProto.session()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -56,56 +52,41 @@ object CcBench {
     val pairsSec = (System.nanoTime() - tPairs0) / 1e9
     println(f"pairs: $nPairs rows in $pairsSec%.1f s")
 
-    // the distributed loops are the comparison: no driver finish
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    def regime(rounds: Int): String =
-      if (rounds == 0) "driver" else "distributed"
-    def timeLoop(tag: String, run: () => org.apache.spark.sql.DataFrame)
-    : (org.apache.spark.sql.DataFrame, Int, Double) = {
+    def timed(threshold: String) = {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       val t0 = System.nanoTime()
-      val labels = run()
+      val (labels, rounds) = Dedup.components(pairs, maxIters)
       val n = labels.count() // the loop materializes on return; count pins it
-      val sec = (System.nanoTime() - t0) / 1e9
-      val rounds = Dedup.lastCcRounds
-      val perRound =
-        if (rounds == 0) "" else f" (${sec / rounds}%.2f s/round)"
-      println(f"$tag: ${regime(rounds)}, $n labels, $rounds rounds, " +
-        f"$sec%.1f s$perRound")
-      (labels, rounds, sec)
+      (labels, rounds, n, (System.nanoTime() - t0) / 1e9)
     }
-    // fast first: if the plain loop blows its round budget the fast
-    // number is already on record
-    val (fastL, fastRounds, fastSec) =
-      timeLoop("fast", () => Dedup.connectedComponentsFast(pairs, maxFast))
-    // the auto loop under its DEFAULT switchAfter — the number a caller
-    // who doesn't know the graph shape gets on this adversary
-    val (autoL, autoRounds, autoSec) =
-      timeLoop("auto", () => Dedup.connectedComponentsAuto(pairs,
-        maxIters = maxFast + 4))
-    val (plainL, plainRounds, plainSec) =
-      timeLoop("plain", () => Dedup.connectedComponents(pairs, maxPlain))
+    val (labels, rounds, n, sec) = timed("-1")
+    val jumps = rounds.count(_.jump)
+    println(f"distributed: $n labels, ${rounds.size} rounds " +
+      f"(${rounds.size - jumps} plain, $jumps jump), $sec%.1f s")
+    rounds.zipWithIndex.foreach { case (r, i) =>
+      println(f"  round ${i + 1}: ${if (r.jump) "jump" else "plain"} " +
+        f"changed=${r.changed} ${r.sec}%.2f s")
+    }
+    val (driverL, driverRounds, _, driverSec) = timed((1L << 30).toString)
+    val regime = if (driverRounds.isEmpty) "driver" else "distributed"
+    println(f"parity leg: $regime, $driverSec%.1f s")
 
-    val mismatches = plainL.as("p")
-      .join(fastL.as("f"), Seq("id"), "full")
-      .filter(col("p.rep").isNull || col("f.rep").isNull ||
-        col("p.rep") =!= col("f.rep")).count()
-    val autoMismatches = plainL.as("p")
-      .join(autoL.as("a"), Seq("id"), "full")
-      .filter(col("p.rep").isNull || col("a.rep").isNull ||
-        col("p.rep") =!= col("a.rep")).count()
-    val components = plainL.select("rep").distinct().count()
+    val mismatches = labels.as("l")
+      .join(driverL.as("d"), Seq("id"), "full")
+      .filter(col("l.rep").isNull || col("d.rep").isNull ||
+        col("l.rep") =!= col("d.rep")).count()
+    val components = labels.select("rep").distinct().count()
 
+    val perRound = rounds.map(r =>
+      f"""{"changed":${r.changed},"jump":${r.jump},"sec":${r.sec}%.2f}""")
+      .mkString("[", ",", "]")
     val json =
-      f"""{"metric":"cc_chain","docs":$nDocs,"pairs":$nPairs,""" +
+      f"""{"metric":"cc","docs":$nDocs,"pairs":$nPairs,""" +
         f""""pairs_sec":$pairsSec%.1f,"components":$components,""" +
-        f""""plain":{"regime":"${regime(plainRounds)}",""" +
-        f""""rounds":$plainRounds,"sec":$plainSec%.1f},""" +
-        f""""fast":{"regime":"${regime(fastRounds)}",""" +
-        f""""rounds":$fastRounds,"sec":$fastSec%.1f},""" +
-        f""""auto":{"regime":"${regime(autoRounds)}",""" +
-        f""""rounds":$autoRounds,"sec":$autoSec%.1f},""" +
-        f""""label_mismatches":$mismatches,""" +
-        f""""auto_label_mismatches":$autoMismatches}"""
+        f""""rounds":${rounds.size},"plain_rounds":${rounds.size - jumps},""" +
+        f""""jump_rounds":$jumps,"sec":$sec%.1f,"per_round":$perRound,""" +
+        f""""parity_regime":"$regime","parity_sec":$driverSec%.1f,""" +
+        f""""label_mismatches":$mismatches}"""
     BenchProto.writeArtifact(outDir, s"cc_${nDocs}.json", json)
     spark.stop()
   }

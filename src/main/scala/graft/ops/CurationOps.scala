@@ -148,44 +148,30 @@ object CurationOps {
     * kills every false positive — so the choice is purely physical
     * (q134 shares q98's oracle verbatim).
     *
-    * `broadcastBench = Some(x)` forces a regime; the None default
-    * estimates the exact set from ONE narrow agg over the bench side
+    * The regime comes from ONE narrow agg over the bench side
     * (row count + text chars — bench-sized, i.e. exactly the quantity
     * being bounded): distinct shingle strings are bounded above by
     * ~3× the text bytes (every word starts one 3-shingle carrying ~3
     * words) plus per-entry join-hash overhead. The bound ignores
     * cross-doc dedup, so it overestimates on templated suites — which
     * errs toward bloom, the regime that is correct at every scale and
-    * merely leaves a few seconds on the table for small suites. The
-    * same estimate sizes the sketch (`expectedBenchGrams ≈ one gram
-    * per word), so an auto-picked bloom path never inherits a default
-    * sized for a different suite.
+    * merely leaves a few seconds on the table for small suites.
+    * `broadcastMaxBytes` forces either regime (-1 always takes the
+    * bloom path, `Long.MaxValue` the broadcast). The same estimate
+    * sizes the sketch (`expectedBenchGrams` ≈ one gram per word), so
+    * the bloom path never inherits a default sized for a different
+    * suite.
     */
   def decontaminateAuto(docs: DataFrame, textCol: String, idCol: String,
       benchPred: Column, minShared: Int = 3, flagAt: Int = 8,
-      fpp: Double = 0.03, broadcastBench: Option[Boolean] = None,
+      fpp: Double = 0.03,
       broadcastMaxBytes: Long = BroadcastGramMaxBytes): DataFrame = {
-    val (useBroadcast, estGrams) = broadcastBench match {
-      // forced broadcast never consumes the estimate — skip the scan
-      case Some(true) => (true, 0L)
-      // forced bloom still sizes its sketch from THIS suite's estimate:
-      // a hardcoded default here undersized the sketch on large suites
-      // (fpp collapse — correctness saved only by the exact-verify
-      // tail), contradicting the "never inherits a default sized for a
-      // different suite" contract (r16 ADVICE)
-      case Some(false) =>
-        val (_, grams, _) =
-          benchGramEstimate(docs.filter(benchPred), textCol)
-        (false, grams)
-      case None =>
-        val (rows, grams, estSetBytes) =
-          benchGramEstimate(docs.filter(benchPred), textCol)
-        val pick = estSetBytes <= broadcastMaxBytes
-        System.err.println(s"[graft] decontaminateAuto regime: ~" +
-          s"${estSetBytes >> 20} MiB estimated exact gram set for " +
-          s"$rows bench rows -> ${if (pick) "broadcast" else "bloom"}")
-        (pick, grams)
-    }
+    val (rows, estGrams, estSetBytes) =
+      benchGramEstimate(docs.filter(benchPred), textCol)
+    val useBroadcast = estSetBytes <= broadcastMaxBytes
+    System.err.println(s"[graft] decontaminateAuto regime: ~" +
+      s"${estSetBytes >> 20} MiB estimated exact gram set for " +
+      s"$rows bench rows -> ${if (useBroadcast) "broadcast" else "bloom"}")
     if (useBroadcast)
       decontaminate(docs, textCol, idCol, benchPred, minShared, flagAt)
     else

@@ -663,7 +663,6 @@ object Dedup {
       textCol: String, idCol: String, numHashes: Int = 16, bands: Int = 4,
       minJaccard: Double = 0.3,
       tokensOf: Column => Column = wordShingles(_, 3),
-      broadcastBatch: Option[Boolean] = None,
       broadcastMaxBytes: Long = BroadcastShingleMaxBytes): DataFrame = {
     requireBands(numHashes, bands)
     // The broadcast regime BOUNDS the batch: its (id, fp, toks) frame
@@ -677,27 +676,25 @@ object Dedup {
     // a corpus-sized batch), but nothing must fit whole anywhere.
     // Flags are identical either way (q130 shares q104's oracle).
     //
-    // `broadcastBatch = Some(x)` forces a regime; the None default
-    // AUTO-selects: one narrow batch-sided agg (row count + text chars)
-    // estimates the dominant broadcast — the shingle frame, ~3× the
-    // text (every word lands in ~3 three-word shingles) plus per-row
-    // array overhead — and estimates above `broadcastMaxBytes` take
-    // the shuffle regime. The estimate costs one extra batch scan
-    // (batch-sized, i.e. exactly the quantity being bounded), and is
-    // deliberately coarse: chars ≈ bytes and the 3× multiplier assume
-    // the default `wordShingles(_, 3)` tokenizer; a custom `tokensOf`
-    // with very different expansion should force its regime explicitly.
-    val useBroadcast = broadcastBatch.getOrElse {
-      val est = batch.agg(count(lit(1)),
-        coalesce(sum(length(col(textCol))), lit(0L))).head
-      val rows = est.getLong(0)
-      val estShingleBytes = est.getLong(1) * 3L + rows * 64L
-      val pick = estShingleBytes <= broadcastMaxBytes
-      System.err.println(s"[graft] crossDedupFlags auto regime: ~" +
-        s"${estShingleBytes >> 20} MiB estimated shingle frame for " +
-        s"$rows batch rows -> ${if (pick) "broadcast" else "shuffle"}")
-      pick
-    }
+    // The regime is AUTO-selected: one narrow batch-sided agg (row
+    // count + text chars) estimates the dominant broadcast — the
+    // shingle frame, ~3× the text (every word lands in ~3 three-word
+    // shingles) plus per-row array overhead — and estimates above
+    // `broadcastMaxBytes` take the shuffle regime. The estimate costs
+    // one extra batch scan (batch-sized, i.e. exactly the quantity
+    // being bounded), and is deliberately coarse: chars ≈ bytes and
+    // the 3× multiplier assume the default `wordShingles(_, 3)`
+    // tokenizer; a custom `tokensOf` with very different expansion
+    // should force its regime through `broadcastMaxBytes` (-1 always
+    // shuffles, `Long.MaxValue` always broadcasts).
+    val est = batch.agg(count(lit(1)),
+      coalesce(sum(length(col(textCol))), lit(0L))).head
+    val rows = est.getLong(0)
+    val estShingleBytes = est.getLong(1) * 3L + rows * 64L
+    val useBroadcast = estShingleBytes <= broadcastMaxBytes
+    System.err.println(s"[graft] crossDedupFlags auto regime: ~" +
+      s"${estShingleBytes >> 20} MiB estimated shingle frame for " +
+      s"$rows batch rows -> ${if (useBroadcast) "broadcast" else "shuffle"}")
     // the candidate join runs BEFORE the shingle projection of the
     // corpus verify side — Catalyst has no rule to push a join below a
     // projection, so ordering it here is what keeps the shingle+md5
@@ -1088,38 +1085,49 @@ object Dedup {
     * decisions; components cannot).
     *
     * Scale shape: the edge list (derived from the expensive banding
-    * pipeline) is persisted once and its size observed with one count
-    * over that cache. If it fits the session's broadcast budget
-    * ([[DriverFinish]]: 16 B per directed edge against
-    * `spark.sql.autoBroadcastJoinThreshold`), the edges are collected
-    * and the components come from a driver union-find in one pass —
-    * no rounds, [[lastCcRounds]] = 0. At curation sizes (a few
-    * thousand pairs) that replaces ~30 Spark jobs of a few kilobytes
-    * each. Above the budget, or with the threshold at -1, the
-    * distributed loop runs: each iteration pays ONE hash shuffle
-    * (neighbor-label join + min agg) over the cached edges — without
-    * the persist every iteration would re-run the whole MinHash/verify
-    * pipeline. The loop early-stops on a converged iteration observed
-    * on the round's own checkpoint job, and throws if `maxIters`
-    * rounds did not converge (silently returning partial labels would
-    * split components, the exact inconsistency this operator exists to
-    * prevent).
+    * pipeline) is persisted once, and ONE bounded collect of at most
+    * budget/16 + 1 edge rows decides whether it fits the session's
+    * broadcast budget ([[DriverFinish]]: 16 B per directed edge against
+    * `spark.sql.autoBroadcastJoinThreshold`; no count job). If it does,
+    * the components come from a driver union-find over those rows in
+    * one pass, with no round. At curation sizes (a few thousand pairs)
+    * that replaces ~30 Spark jobs of a few kilobytes each. Above the
+    * budget, or with the threshold at -1, the distributed loop runs
+    * over the cached closed neighborhoods — without the persist every
+    * round would re-run the whole MinHash/verify pipeline. It
+    * early-stops on a converged round observed on the round's own
+    * checkpoint job, and throws if `maxIters` rounds did not converge
+    * (silently returning partial labels would split components, the
+    * exact inconsistency this operator exists to prevent). `maxIters`
+    * bounds only these rounds: the driver finish is exact at any
+    * diameter.
     *
-    * CONVERGENCE CONTRACT: the driver finish is exact in one pass at
-    * any diameter, so `maxIters` only bounds the distributed loop.
-    * There, rounds-to-converge = O(component DIAMETER), not corpus
-    * size — plus one final all-stable round to observe convergence.
-    * Near-dup clusters in real corpora are template families,
-    * star/clique-shaped with diameter ≤ ~3, so the loop is a handful of
-    * rounds at ANY corpus size (measured on the 4M-doc grown corpus:
-    * 4 rounds — 3 changing + 1 stability-observation — per-round wall
-    * flat; DOCS_4m_r14 / SCALE_r14 §4; per-round changed-counts and
-    * walls log under GRAFT_CC_LOG=1). The adversary is a CHAIN-shaped
-    * graph (a~b~c~…~z, diameter = n): min-label propagation needs O(n)
-    * rounds there, and `maxIters` exists to turn that pathology into a
-    * loud error instead of an unbounded driver loop; graphs that
-    * legitimately carry long chains want [[connectedComponentsFast]]
-    * or [[connectedComponentsAuto]].
+    * The engine, not the caller, picks the round shape. The first
+    * four rounds are PLAIN propagation: ONE hash shuffle
+    * (neighbor-label join + min agg) each. Near-dup clusters in real
+    * corpora are template families, star/clique-shaped with diameter ≤
+    * ~3, and converge inside them — 3 changing rounds plus the
+    * stability round, measured flat per round on the 4M-doc grown
+    * corpus (DOCS_4m_r14 / SCALE_r14 §4). A graph still changing after
+    * them is chain-shaped (a~b~…~z, diameter = n, where propagation
+    * alone needs O(n) rounds), so every later round also POINTER-JUMPS
+    * (`rep(x) ← rep(rep(x))` — labels are node ids, so the label table
+    * self-joins as its own lookup), which doubles the distance a
+    * minimum travels per round: O(log diameter) rounds for a second
+    * shuffle per round (cf. hash-to-min, Rastogi et al. 2012). On the
+    * 1M-doc chain adversary that took 17.4 s where jumping from round 0
+    * took 20.7 s and plain rounds alone 140.2 s (CC_1m_chain_r15b.json);
+    * on shallow graphs it runs the plain loop's rounds
+    * (CC_1m_shallow_r15.json).
+    *
+    * Correctness: both round shapes only DECREASE labels and keep every
+    * label the id of a node reachable from its owner (neighbor labels
+    * are reachable through the edge; `rep(rep(x))` transitively), so
+    * labels are bounded below by the component min. At `changed == 0`
+    * the propagate step was a no-op: every edge has equal labels at
+    * both ends, so labels are constant per component, and the min
+    * node's own label can never move off itself, so the constant is
+    * the component min — whatever mix of shapes ran before.
     *
     * Returns (id, rep): one row per node of the pair graph (isolated
     * docs never enter; their "component" is trivially themselves). The
@@ -1133,119 +1141,37 @@ object Dedup {
     * `unpersist()` obligation (the round-6 foot-gun).
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20)
-  : DataFrame =
-    componentsLoop(pairs, maxIters, jumpFrom = Int.MaxValue,
-      "connectedComponents", " (component diameter exceeds maxIters)")
+  : DataFrame = components(pairs, maxIters)._1
 
-  /** Iteration count of the most recent connected-components call that
-    * CONVERGED — a driver-side bench hook (CcBench records rounds ×
-    * per-round wall without parsing the GRAFT_CC_LOG stderr). 0 when
-    * the call took the driver finish (no rounds ran). Last-writer-wins
-    * under concurrency; never read it for correctness.
+  /** One distributed round of [[components]]: the labels it changed,
+    * whether it pointer-jumped, and its wall seconds.
     */
-  @volatile private[graft] var lastCcRounds: Int = 0
+  private[graft] final case class CcRound(changed: Long, jump: Boolean,
+      sec: Double)
 
-  /** [[connectedComponents]] with POINTER JUMPING — the chain-graph
-    * escape the plain loop's scaladoc names: min-label propagation
-    * alone needs O(diameter) rounds (a path a~b~…~z is the adversary),
-    * while alternating each propagation with a label-shortcut round
-    * (`rep(x) ← rep(rep(x))` — labels are themselves node ids, so the
-    * label table self-joins as its own lookup) doubles the distance a
-    * minimum travels per round: O(log diameter) rounds total, the
-    * standard pointer-doubling argument (cf. hash-to-min, Rastogi et
-    * al. 2012). Per round it pays TWO hash shuffles (the neighbor join
-    * + the self-join) against the plain loop's one, so on the
-    * template-family regime (diameter ≤ ~3) it is strictly MORE
-    * expensive — use it when components can legitimately be long
-    * chains (citation/link graphs, time-ordered revision chains), not
-    * as a default. Same regime rule as the plain loop: an edge list
-    * within the broadcast budget takes the driver union-find instead
-    * of any round, whatever its diameter.
-    *
-    * Correctness: both steps only DECREASE labels and both preserve
-    * "label is the id of a node reachable from me" (neighbor labels
-    * are reachable through the edge; `rep(rep(x))` is reachable
-    * transitively), so labels are bounded below by the component min;
-    * at a fixpoint every edge has equal labels at both ends (each end
-    * ≤ the other) ⇒ labels are constant per component, and the min
-    * node's own label can never move off itself ⇒ the constant is the
-    * component min. Same convergence observation, cache ownership,
-    * maxIters guard, and GRAFT_CC_LOG hook as the plain loop; DedupSpec
-    * proves label-parity on the banded pair graph and convergence on a
-    * chain 10× longer than its maxIters.
-    */
-  def connectedComponentsFast(pairs: DataFrame, maxIters: Int = 20)
-  : DataFrame =
-    componentsLoop(pairs, maxIters, jumpFrom = 0,
-      "connectedComponentsFast",
-      " (log₂ of the component diameter exceeds maxIters?)")
+  /** The round from which every distributed round also pointer-jumps. */
+  private val CcJumpFrom = 4
 
-  /** [[connectedComponents]] with the plain-vs-pointer-doubling regime
-    * AUTO-selected — the third measured-boundary auto (after
-    * crossDedupFlags' broadcast-vs-shuffle and decontaminateAuto's
-    * exact-vs-bloom): the plain loop wins on template-family graphs
-    * (diameter ≤ ~3, ONE shuffle/round — CC_1m_chain_r15 measured the
-    * fast loop ~2.7× per round) while chains need the fast loop
-    * (O(log d) vs O(d) rounds), and today the caller must know their
-    * graph's shape to pick. This loop runs PLAIN rounds first and
-    * switches to pointer-doubling only if convergence hasn't been
-    * observed after `switchAfter` rounds — a diameter the caller never
-    * sees costs nothing (template families converge before the switch
-    * and pay exactly the plain loop), while a chain pays `switchAfter`
-    * cheap rounds then finishes in O(log remaining-diameter). Both
-    * choices are under the plain loop's regime rule: an edge list
-    * within the broadcast budget takes the driver union-find and runs
-    * no round of either shape.
-    *
-    * Interleaving is sound because BOTH round shapes preserve the two
-    * invariants the fixpoint argument needs — labels only DECREASE and
-    * every label is the id of a reachable node — so any mix converges,
-    * and at `changed == 0` the propagate step alone was a no-op, which
-    * is exactly the plain loop's fixpoint: labels constant per
-    * component, pinned to the component min by the min node's own
-    * immovable label. Labels produced mid-run by either shape are
-    * valid input to the other.
-    *
-    * Same cache ownership, convergence observation, maxIters guard,
-    * and GRAFT_CC_LOG hook as both fixed loops; q137 shares q107's
-    * oracle verbatim, DedupSpec proves parity on the banded graph plus
-    * chain convergence inside a budget the plain loop throws on, and
-    * asserts the shallow case never pays a jump round
-    * ([[lastCcRounds]] ≤ switchAfter).
+  /** [[connectedComponents]] with the distributed rounds it ran, in
+    * order; Nil when the driver finish took the edge list.
     */
-  def connectedComponentsAuto(pairs: DataFrame, switchAfter: Int = 4,
-      maxIters: Int = 20): DataFrame = {
-    require(switchAfter >= 1 && switchAfter <= maxIters,
-      s"switchAfter ($switchAfter) must be in [1, maxIters=$maxIters]")
-    componentsLoop(pairs, maxIters, jumpFrom = switchAfter,
-      "connectedComponentsAuto", "")
-  }
-
-  /** The one loop behind the three public forms: plain propagation
-    * rounds before round `jumpFrom`, propagate + pointer-jump rounds
-    * from it on (`Int.MaxValue` = plain loop, 0 = fast loop), after the
-    * shared prologue that may finish on the driver instead.
-    */
-  private def componentsLoop(pairs: DataFrame, maxIters: Int,
-      jumpFrom: Int, name: String, hint: String): DataFrame = {
+  private[graft] def components(pairs: DataFrame, maxIters: Int)
+  : (DataFrame, Seq[CcRound]) = {
     // edges persist for the one-time setup, not the loop: the size
-    // probe counts them, `closed` references them TWICE (the union
-    // below) and the initial labels scan them once more — unpersisted,
-    // each consumer re-runs the full upstream MinHash/verify pairs
-    // pipeline (~2-3× one-time setup cost, the r14 advice finding).
-    // Dropped right after the first materialization of closed.
+    // probe collects from them, `closed` references them TWICE (the
+    // union below) and the initial labels scan them once more —
+    // unpersisted, each consumer re-runs the full upstream
+    // MinHash/verify pairs pipeline (~2-3× one-time setup cost, the
+    // r14 advice finding). Dropped right after the first
+    // materialization of closed.
     val edges = pairs.select(col("id1").as("a"), col("id2").as("b"))
       .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
       .persist()
     driverComponents(edges) match {
       case Some(labels) =>
         edges.unpersist()
-        lastCcRounds = 0
-        if (sys.env.contains("GRAFT_CC_LOG"))
-          System.err.println(s"[$name] driver finish")
-        labels
-      case None =>
-        distributedComponents(edges, maxIters, jumpFrom, name, hint)
+        (labels, Nil)
+      case None => distributedComponents(edges, maxIters)
     }
   }
 
@@ -1290,8 +1216,8 @@ object Dedup {
       }
   }
 
-  private def distributedComponents(edges: DataFrame, maxIters: Int,
-      jumpFrom: Int, name: String, hint: String): DataFrame = {
+  private def distributedComponents(edges: DataFrame, maxIters: Int)
+  : (DataFrame, Seq[CcRound]) = {
     // self-loops CLOSE the neighborhood so each round is ONE join+agg
     // with labels referenced ONCE. The former round shape —
     // union(neighbor-min join, own labels) — referenced labels TWICE,
@@ -1323,11 +1249,12 @@ object Dedup {
     var labels = closed.filter(col("b") === col("a"))
       .select(col("a").as("id"), col("a").as("rep")).localCheckpoint(true)
     edges.unpersist()
+    val rounds = Vector.newBuilder[CcRound]
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
       val t0 = System.nanoTime()
-      val jump = i >= jumpFrom
+      val jump = i >= CcJumpFrom
       // propagate: everyone adopts the min label in their CLOSED
       // neighborhood. The self row (a,a) carries a's OWN current label
       // through the join, so the same aggregate also recovers the
@@ -1365,24 +1292,16 @@ object Dedup {
       labels = next.select(col("id"), col("rep"))
       converged = changed == 0
       i += 1
-      // scale-measurement hook (SCALE_r10/r14): per-iteration
-      // label-change counts and round walls put the driver-loop cost
-      // curve on record — opt-in via env so the gate's stderr stays
-      // quiet
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        System.err.println(f"[$name] iter $i " +
-          f"${if (jump) "jump" else "plain"} changed=$changed " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
+      rounds += CcRound(changed, jump, (System.nanoTime() - t0) / 1e9)
     }
     closed.unpersist()
     if (!converged)
       throw new IllegalStateException(
-        s"$name did not converge in $maxIters iterations$hint; " +
+        s"connectedComponents did not converge in $maxIters iterations; " +
           "raise maxIters")
-    lastCcRounds = i
     // the converged labels are already checkpoint-materialized; the
     // caller gets a plain frame with no unpersist obligation
-    labels
+    (labels, rounds.result())
   }
 
   /** Transitive-consistent keep/drop flags for every document: keep iff

@@ -1294,14 +1294,15 @@ object Similarity {
     * skipped, and empty cells keep their previous centroid. Returns
     * the final codebook (cid, centroid).
     *
-    * Regime rule ([[DriverFinish]]): when the training input fits the
-    * session's broadcast budget — rows × (8·dim + 16) B against
-    * `spark.sql.autoBroadcastJoinThreshold`, observed with one count —
-    * it is collected once and the rounds run in driver memory
-    * ([[localKmeans]], the same rules), as [[Pq.train]] trains on its
-    * bounded driver sample. A √n codebook's training sample is that
-    * size at curation scale, where each distributed round is a Spark
-    * job over a few kilobytes. Above the budget, or with the threshold
+    * Regime rule ([[DriverFinish]]): one bounded collect of at most
+    * budget/(8·dim + 16) + 1 rows, with no count job, tells whether
+    * the training input fits the session's broadcast budget — rows ×
+    * (8·dim + 16) B against `spark.sql.autoBroadcastJoinThreshold`.
+    * If it does, the collected rows are the input and the rounds run
+    * in driver memory ([[localKmeans]], the same rules), as
+    * [[Pq.train]] trains on its bounded driver sample. A √n
+    * codebook's training sample is that size at curation scale, where
+    * each distributed round is a Spark job over a few kilobytes. Above the budget, or with the threshold
     * at -1, the rounds are a driver loop over the [[kmeansStep]]
     * shape: each assigns every vector with the zero-shuffle broadcast
     * fold, recomputes the per-cell means with ONE (cell, dim)-keyed

@@ -30,6 +30,20 @@ object TextDedup {
   private def queryTmpDir(tag: String, s: SparkSession, d: String): String =
     QueryTmp.dir(tag, s, d)
 
+  /** The q107/q132/q137 body: component sizes over the shingle
+    * near-dup pair graph, exact dups pre-collapsed.
+    */
+  private val dupComponents: (SparkSession, String) => DataFrame = (s, d) => {
+    val pairs = Dedup.minhashBandPairsOver(Tables.documents(s, d),
+      TextFunctions.wordShingles(col("text"), 3), "doc_id",
+      minJaccard = 0.3,
+      collapseExactOn = Some(TextFunctions.fingerprint(col("text"))))
+    Dedup.connectedComponents(pairs)
+      .groupBy("rep")
+      .agg(count(lit(1)).as("size"), max(col("id")).as("id_max"))
+      .orderBy("rep")
+  }
+
   /** The ~2000-token bin assignment shared by q97/q106 and the q119
     * capstone: `bin = floor(exclusivePrefixTokens / 2000)` per language
     * stratum in doc_id order, computed with [[graft.ops.PrefixSum]]'s
@@ -392,16 +406,16 @@ object TextDedup {
     // flags through plain equi-joins instead of batch broadcasts —
     // the escape for a batch that grows with the corpus (a fixed
     // fraction, a backfill), where the broadcast build OOMs (measured
-    // at 4M docs / 400k-doc batch, DOCS_4m_r13). The regime is FORCED
-    // here (the auto default picks it by size estimate — q104
-    // exercises that path); shares q104's oracle verbatim: the flags
-    // are a pure function of the data and split.
+    // at 4M docs / 400k-doc batch, DOCS_4m_r13). A -1 byte boundary
+    // puts every estimate above it, so the auto switch takes the
+    // shuffle regime; shares q104's oracle verbatim: the flags are a
+    // pure function of the data and split.
     "q130_cross_dedup_shuffled" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val isBatch = col("doc_id") % 10 === 9
       Dedup.crossDedupFlags(
         docs.filter(isBatch), docs.filter(!isBatch), "text", "doc_id",
-        broadcastBatch = Some(false))
+        broadcastMaxBytes = -1L)
         .orderBy("doc_id")
     }),
 
@@ -490,55 +504,16 @@ object TextDedup {
 
     // Duplicate-GROUP clustering: connected components by min-label
     // propagation over the shingle near-dup pair graph (each component
-    // named by its smallest member). One shuffle per iteration,
-    // iterations = cluster diameter, above the broadcast budget; at gate
-    // sizes the edge list fits it and a driver union-find finishes. The
-    // pairwise greedy drop can split a transitive a~b~c chain —
-    // components cannot.
-    "q107_dup_components" -> ((s, d) => {
-      val pairs = Dedup.minhashBandPairsOver(Tables.documents(s, d),
-        TextFunctions.wordShingles(col("text"), 3), "doc_id",
-        minJaccard = 0.3,
-        collapseExactOn = Some(TextFunctions.fingerprint(col("text"))))
-      Dedup.connectedComponents(pairs)
-        .groupBy("rep")
-        .agg(count(lit(1)).as("size"), max(col("id")).as("id_max"))
-        .orderBy("rep")
-    }),
-
-    // q107's pointer-doubling twin: the SAME components through
-    // propagate+shortcut rounds (O(log diameter) instead of
-    // O(diameter)) — the escape for legitimately chain-shaped pair
-    // graphs, where plain propagation's round count is the diameter
-    // itself. Shares q107's oracle verbatim: components are a pure
-    // function of the pair graph.
-    "q132_dup_components_fast" -> ((s, d) => {
-      val pairs = Dedup.minhashBandPairsOver(Tables.documents(s, d),
-        TextFunctions.wordShingles(col("text"), 3), "doc_id",
-        minJaccard = 0.3,
-        collapseExactOn = Some(TextFunctions.fingerprint(col("text"))))
-      Dedup.connectedComponentsFast(pairs)
-        .groupBy("rep")
-        .agg(count(lit(1)).as("size"), max(col("id")).as("id_max"))
-        .orderBy("rep")
-    }),
-
-    // q107's AUTO twin — plain rounds until `switchAfter`, pointer
-    // doubling only if convergence stalls: the default a caller who
-    // doesn't know their graph's diameter should reach for. On gate
-    // data (template families, diameter ≤ 3) it converges before the
-    // switch and pays exactly q107's plan. Shares q107's oracle
-    // verbatim.
-    "q137_dup_components_auto" -> ((s, d) => {
-      val pairs = Dedup.minhashBandPairsOver(Tables.documents(s, d),
-        TextFunctions.wordShingles(col("text"), 3), "doc_id",
-        minJaccard = 0.3,
-        collapseExactOn = Some(TextFunctions.fingerprint(col("text"))))
-      Dedup.connectedComponentsAuto(pairs)
-        .groupBy("rep")
-        .agg(count(lit(1)).as("size"), max(col("id")).as("id_max"))
-        .orderBy("rep")
-    }),
+    // named by its smallest member). At gate sizes the edge list fits
+    // the broadcast budget and a driver union-find finishes; above it
+    // the engine's one loop runs plain rounds, then pointer-jumping
+    // ones if the graph is still changing. The pairwise greedy drop can
+    // split a transitive a~b~c chain — components cannot. q132 and q137
+    // keep the names of the retired pointer-doubling and auto loops and
+    // share this body and q107's oracle.
+    "q107_dup_components" -> dupComponents,
+    "q132_dup_components_fast" -> dupComponents,
+    "q137_dup_components_auto" -> dupComponents,
 
     // Token-set Jaccard for id-adjacent pairs.
     "q50_jaccard_adjacent" -> ((s, d) => {
@@ -715,10 +690,8 @@ object TextDedup {
     ).mkString(", ")
     val simhashBits = (1 to 16).map(j =>
       s"CASE WHEN b$j > 0 THEN '1' ELSE '0' END").mkString(" || ")
-    // the components derivation, shared by q107 (plain min-label
-    // propagation) and q132 (pointer doubling): same pair graph, same
-    // component semantics — DuckDB computes reachability exactly with a
-    // recursive CTE, so both loop shapes answer to one oracle
+    // the components derivation of q107/q132/q137: DuckDB computes
+    // reachability exactly with a recursive CTE
     val dupComponentsOracle =
       s"""WITH RECURSIVE $keepCte,
          |tok AS (
@@ -1159,10 +1132,8 @@ object TextDedup {
            |  CAST(SUM(n_tok) AS BIGINT) AS n_tokens
            |FROM binned GROUP BY 1, 2 ORDER BY lang, bin""".stripMargin,
 
-      // q132 shares this oracle verbatim: the component labels are a
-      // pure function of the pair graph — the pointer-doubling loop
-      // must produce exactly the plain propagation's (and DuckDB's
-      // recursive-CTE's) components
+      // one body, one oracle: the component labels are a pure
+      // function of the pair graph
       "q107_dup_components" -> dupComponentsOracle,
       "q132_dup_components_fast" -> dupComponentsOracle,
       "q137_dup_components_auto" -> dupComponentsOracle,

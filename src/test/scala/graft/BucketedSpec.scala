@@ -117,9 +117,11 @@ class BucketedSpec extends AnyFunSuite {
     // behavior that keeps q136's layout (and plan) unchanged
     assert(BucketedTables.bucketCountFor(rows) === 8)
     // force the stats to dominate: a 1-byte target makes the count the
-    // maxBuckets clamp; a non-power-of-two clamp is itself respected
+    // maxBuckets clamp, a power of two or not
     assert(BucketedTables.bucketCountFor(rows, targetBucketBytes = 1L,
       minBuckets = 8, maxBuckets = 64) === 64)
+    assert(BucketedTables.bucketCountFor(rows, targetBucketBytes = 1L,
+      minBuckets = 8, maxBuckets = 100) === 100)
     // mid-range: estimated bytes / target lands strictly between
     // min and max and must round UP to a power of two
     val bytes = rows.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -162,5 +164,11 @@ class BucketedSpec extends AnyFunSuite {
       minBuckets = 8, maxBuckets = Int.MaxValue) === Int.MaxValue)
     assert(BucketedTables.bucketCountFor(huge, targetBucketBytes = 1L,
       minBuckets = 8, maxBuckets = (1 << 30) + 1) === (1 << 30) + 1)
+    // the largest range there is: 8·(2^63 − 1) estimated bytes clamp
+    // to the Int bound. The read is metadata-only — a job over 2^63
+    // rows would not return
+    assert(BucketedTables.bucketCountFor(spark.range(Long.MaxValue).toDF(),
+      targetBucketBytes = 1L, minBuckets = 8,
+      maxBuckets = Int.MaxValue) === Int.MaxValue)
   }
 }

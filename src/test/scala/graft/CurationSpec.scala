@@ -101,7 +101,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("decontaminateAuto picks each regime through the threshold, " +
-    "results identical, and the forced override wins") {
+    "results identical") {
     val docs = ((0L to 20L).map { i =>
       if (i == 0L) (i, "one two three four five six seven eight")
       else if (i == 10L) (i, "alpha beta gamma delta epsilon zeta")
@@ -132,13 +132,6 @@ class CurationSpec extends AnyFunSuite {
     assert(asBloom.queryExecution.executedPlan.toString
       .contains("might_contain"),
       "over-threshold auto run should take the bloom path")
-    // an explicit regime overrides the estimate entirely
-    val forced = CurationOps.decontaminateAuto(docs, "text", "doc_id",
-      pred, minShared = 2, flagAt = 4,
-      broadcastBench = Some(false), broadcastMaxBytes = Long.MaxValue)
-    assert(forced.queryExecution.executedPlan.toString
-      .contains("might_contain"),
-      "Some(false) must force the bloom regime regardless of threshold")
   }
 
   test("redact masks digit runs and counts them") {

@@ -728,13 +728,6 @@ class DedupSpec extends AnyFunSuite {
         .as[(Long, Boolean, Boolean)].collect().toSeq === expect)
       assert(viaSh.orderBy("doc_id")
         .as[(Long, Boolean, Boolean)].collect().toSeq === expect)
-      // the explicit override beats the estimate in both directions
-      assert(bcExchanges(Dedup.crossDedupFlags(batch, corpus, "text",
-        "doc_id", broadcastBatch = Some(true),
-        broadcastMaxBytes = 0L)) >= 3)
-      assert(bcExchanges(Dedup.crossDedupFlags(batch, corpus, "text",
-        "doc_id", broadcastBatch = Some(false),
-        broadcastMaxBytes = Long.MaxValue)) == 0)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
@@ -758,110 +751,67 @@ class DedupSpec extends AnyFunSuite {
       "connectedComponents leaked a cached frame")
   }
 
-  test("connectedComponentsFast: label-parity with the plain loop, and " +
-    "converges on a chain an order of magnitude longer than its round " +
-    "budget (where plain propagation's O(diameter) loop throws)") {
+  test("connected components: plain rounds until the switch, pointer " +
+    "jumps after it — a diameter-3 graph never jumps, the 101-node chain " +
+    "jumps and converges inside maxIters = 15") {
     import spark.implicits._
     withBroadcastThreshold("-1") {
-      // parity on a mixed graph: chain + clique + isolated pair
-      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L),
-        (20L, 21L), (21L, 22L), (20L, 22L))
-        .toDF("id1", "id2")
-      val plain = graft.ops.Dedup.connectedComponents(pairs)
-        .orderBy("id").as[(Long, Long)].collect().toSeq
-      val fast = graft.ops.Dedup.connectedComponentsFast(pairs)
-        .orderBy("id").as[(Long, Long)].collect().toSeq
-      assert(fast === plain, "pointer doubling changed the components")
+      // diameter 3 (the 4-chain) plus a clique and a pair: 3 changing
+      // rounds and the stability round, all before the switch
+      val shallow = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L),
+        (20L, 21L), (21L, 22L), (20L, 22L)).toDF("id1", "id2")
+      val (labels, rounds) = Dedup.components(shallow, maxIters = 20)
+      assert(labels.orderBy("id").as[(Long, Long)].collect().toSeq ===
+        Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (7L, 7L), (8L, 7L),
+          (20L, 20L), (21L, 20L), (22L, 20L)))
+      assert(rounds.nonEmpty && !rounds.exists(_.jump),
+        s"a diameter-3 graph paid a jump round: $rounds")
+      assert(rounds.last.changed == 0 && rounds.init.forall(_.changed > 0))
       assert(spark.sharedState.cacheManager.isEmpty,
-        "connectedComponentsFast leaked a cached frame")
+        "the distributed loop leaked a cached frame")
       // the loud-error contract, at a cheap size: a 10-node path
       // (diameter 9) cannot converge in 3 propagation rounds
       assertThrows[IllegalStateException] {
-        graft.ops.Dedup.connectedComponents(
+        Dedup.connectedComponents(
           (0L until 9L).map(i => (i, i + 1)).toDF("id1", "id2"),
           maxIters = 3)
       }
       // the chain adversary: a 101-node path (diameter 100). Plain
-      // propagation moves the min one hop per round — it would need
-      // ~100 rounds; doubling covers the distance in ~7 rounds plus the
-      // stability round, inside a 10-round budget
+      // propagation alone moves the min one hop per round (~100
+      // rounds); 4 plain rounds advance it 4 hops, then doubling covers
+      // the remaining ~96 in ~7 jump rounds + stability
       val chain = (0L until 100L).map(i => (i, i + 1)).toDF("id1", "id2")
-      val fastChain = graft.ops.Dedup.connectedComponentsFast(
-        chain, maxIters = 10)
-      assert(fastChain.count() == 101)
-      assert(fastChain.filter(col("rep") =!= 0L).count() == 0,
+      val (chainLabels, chainRounds) = Dedup.components(chain, maxIters = 15)
+      assert(chainLabels.count() == 101)
+      assert(chainLabels.filter(col("rep") =!= 0L).count() == 0,
         "chain did not collapse to the single min label")
-      // seeded random-graph differential sweep: sparse graphs (fragmented
-      // components) and denser ones (few big components) must agree with
-      // the plain loop label-for-label
-      for (seed <- Seq(11, 12, 13); density <- Seq(0.6, 1.5)) {
-        val rnd = new scala.util.Random(seed * 1000 + (density * 10).toInt)
-        val n = 60
-        val es = (1 to (n * density).toInt).map { _ =>
-          (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
-        }.filter(e => e._1 != e._2)
-        val g = es.toDF("id1", "id2")
-        val want = graft.ops.Dedup.connectedComponents(g, maxIters = 40)
-          .orderBy("id").as[(Long, Long)].collect().toSeq
-        val got = graft.ops.Dedup.connectedComponentsFast(g, maxIters = 40)
-          .orderBy("id").as[(Long, Long)].collect().toSeq
-        assert(got === want, s"divergence at seed=$seed density=$density")
-      }
+      assert(chainRounds.map(_.jump) ===
+        Seq.fill(4)(false) ++ Seq.fill(chainRounds.size - 4)(true),
+        s"expected 4 plain rounds, then jumps: $chainRounds")
+      assert(chainRounds.size <= 15 && chainRounds.last.changed == 0)
+      assert(spark.sharedState.cacheManager.isEmpty)
     }
   }
 
-  test("connectedComponentsAuto: shallow graphs converge before the " +
-    "switch (pure plain-loop cost), chains switch and finish inside a " +
-    "budget the plain loop throws on, and labels match both fixed " +
-    "loops on a seeded sweep") {
+  test("connected components: an empty pair frame gives an empty " +
+    "(id, rep) frame of the pairs' id type in both regimes") {
     import spark.implicits._
-    withBroadcastThreshold("-1") {
-      // shallow mixed graph (diameter 4 < switchAfter 5): converges in
-      // 5 rounds — all plain, no jump round ever paid
-      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L),
-        (20L, 21L), (21L, 22L), (20L, 22L))
-        .toDF("id1", "id2")
-      val plain = graft.ops.Dedup.connectedComponents(pairs)
-        .orderBy("id").as[(Long, Long)].collect().toSeq
-      val auto = graft.ops.Dedup.connectedComponentsAuto(pairs,
-        switchAfter = 5)
-        .orderBy("id").as[(Long, Long)].collect().toSeq
-      assert(auto === plain, "auto loop changed the components")
-      assert(graft.ops.Dedup.lastCcRounds <= 5,
-        s"shallow graph took ${graft.ops.Dedup.lastCcRounds} rounds — " +
-          "it should converge before the switch")
-      assert(spark.sharedState.cacheManager.isEmpty,
-        "connectedComponentsAuto leaked a cached frame")
-      // the chain adversary under a budget the PLAIN loop throws on:
-      // 4 plain rounds advance the min 4 hops, then doubling covers the
-      // remaining ~96 in ~7 jump rounds + stability — inside 15
-      val chain = (0L until 100L).map(i => (i, i + 1)).toDF("id1", "id2")
-      assertThrows[IllegalStateException] {
-        graft.ops.Dedup.connectedComponents(chain, maxIters = 15)
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    for ((empty, idType) <- Seq(
+        Seq.empty[(Long, Long)].toDF("id1", "id2") -> LongType,
+        Seq.empty[(Int, Int)].toDF("id1", "id2") -> IntegerType)) {
+      val driver = Dedup.components(empty, maxIters = 20)
+      val distributed = withBroadcastThreshold("-1") {
+        Dedup.components(empty, maxIters = 20)
       }
-      val autoChain = graft.ops.Dedup.connectedComponentsAuto(
-        chain, switchAfter = 4, maxIters = 15)
-      assert(autoChain.count() == 101)
-      assert(autoChain.filter(col("rep") =!= 0L).count() == 0,
-        "chain did not collapse to the single min label")
-      // seeded sweep incl. a switch mid-convergence (switchAfter 1 jumps
-      // from round 2): any plain/jump interleave must land on the same
-      // fixpoint
-      for (seed <- Seq(31, 32); switchAfter <- Seq(1, 3)) {
-        val rnd = new scala.util.Random(seed * 977 + switchAfter)
-        val n = 50
-        val es = (1 to (n * 2)).map { _ =>
-          (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
-        }.filter(e => e._1 != e._2)
-        val g = es.toDF("id1", "id2")
-        val want = graft.ops.Dedup.connectedComponents(g, maxIters = 40)
-          .orderBy("id").as[(Long, Long)].collect().toSeq
-        val got = graft.ops.Dedup.connectedComponentsAuto(g,
-          switchAfter = switchAfter, maxIters = 40)
-          .orderBy("id").as[(Long, Long)].collect().toSeq
-        assert(got === want,
-          s"divergence at seed=$seed switchAfter=$switchAfter")
+      assert(driver._2.isEmpty, "an empty edge list left the driver")
+      assert(distributed._2.nonEmpty, "threshold -1 took the driver")
+      for ((labels, _) <- Seq(driver, distributed)) {
+        assert(labels.columns.toSeq === Seq("id", "rep"))
+        assert(labels.schema.map(_.dataType) === Seq(idType, idType))
+        assert(labels.count() == 0)
       }
+      assert(spark.sharedState.cacheManager.isEmpty)
     }
   }
 
@@ -872,55 +822,56 @@ class DedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.DataFrame
     def labels(df: DataFrame): Seq[(Long, Long)] =
       df.orderBy("id").as[(Long, Long)].collect().toSeq
-    def driver(g: DataFrame): Seq[(Long, Long)] = {
-      val got = labels(Dedup.connectedComponents(g, maxIters = 40))
-      assert(Dedup.lastCcRounds == 0, "the driver finish ran rounds")
+    def driver(g: DataFrame, maxIters: Int = 40): Seq[(Long, Long)] = {
+      val (comps, rounds) = Dedup.components(g, maxIters)
+      val got = labels(comps)
+      assert(rounds.isEmpty, "the driver finish ran rounds")
       assert(spark.sharedState.cacheManager.isEmpty,
         "the driver finish leaked a cached frame")
       got
     }
-    def distributed(g: DataFrame, plain: Boolean): Seq[Seq[(Long, Long)]] =
+    def distributed(g: DataFrame, maxIters: Int = 40): Seq[(Long, Long)] =
       withBroadcastThreshold("-1") {
-        val loops = Seq(
-          () => Dedup.connectedComponentsFast(g, maxIters = 40),
-          () => Dedup.connectedComponentsAuto(g, switchAfter = 3,
-            maxIters = 40)) ++
-          (if (plain) Seq(() => Dedup.connectedComponents(g, maxIters = 40))
-          else Nil)
-        loops.map { run =>
-          val got = labels(run())
-          assert(Dedup.lastCcRounds > 0, "threshold -1 took the driver")
-          got
-        }
+        val (comps, rounds) = Dedup.components(g, maxIters)
+        val got = labels(comps)
+        assert(rounds.nonEmpty, "threshold -1 took the driver")
+        assert(spark.sharedState.cacheManager.isEmpty,
+          "the distributed loop leaked a cached frame")
+        got
       }
-    val sweep = for (seed <- Seq(11, 12); density <- Seq(0.6, 1.5)) yield {
+    // seeded random graphs: sparse ones (fragmented components) and
+    // denser ones (few big components)
+    def random(seed: Int, n: Int, density: Double): Seq[(Long, Long)] = {
       val rnd = new scala.util.Random(seed * 1000 + (density * 10).toInt)
-      val n = 60
-      s"seed=$seed density=$density" -> (1 to (n * density).toInt).map {
-        _ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
+      (1 to (n * density).toInt).map { _ =>
+        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
       }.filter(e => e._1 != e._2)
     }
-    val graphs = sweep ++ Seq(
+    val sweep = (for (seed <- Seq(11, 12, 13); density <- Seq(0.6, 1.5))
+      yield s"seed=$seed density=$density" -> random(seed, 60, density)) ++
+      Seq(31, 32).map(seed => s"seed=$seed density=2" -> random(seed, 50, 2))
+    // paths of 2…12 nodes: diameters 1…11 straddle the switch round,
+    // so they converge before it, at it, and at every jump round after
+    val chains = (2 to 12).map(n =>
+      s"$n-node chain" -> (1L until n.toLong).map(i => (i, i + 1)))
+    val graphs = sweep ++ chains ++ Seq(
       // self-edges (one on an otherwise isolated node) and the same
       // pair listed in both orientations and twice
       "self-edges+duplicates" -> Seq((1L, 1L), (1L, 2L), (2L, 1L),
         (1L, 2L), (2L, 3L), (3L, 3L), (9L, 9L), (5L, 6L), (6L, 5L)))
     for ((name, es) <- graphs) {
       val g = es.toDF("id1", "id2")
-      val want = driver(g)
-      for (got <- distributed(g, plain = true))
-        assert(got === want, s"regime divergence on $name")
+      assert(distributed(g) === driver(g), s"regime divergence on $name")
     }
     assert(driver(Seq((1L, 1L), (9L, 9L)).toDF("id1", "id2")) ===
       Seq((1L, 1L), (9L, 9L)))
-    // the 101-node chain: the driver finish is exact at any diameter,
-    // even under a round budget the plain loop throws on
+    // the 101-node chain: the driver finish is exact at any diameter;
+    // the distributed loop lands on the same labels inside 15 rounds
     val chain = (0L until 100L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val chainLabels = labels(Dedup.connectedComponents(chain, maxIters = 15))
+    val chainLabels = driver(chain, maxIters = 15)
     assert(chainLabels === (0L to 100L).map(i => (i, 0L)))
-    assert(Dedup.lastCcRounds == 0)
-    for (got <- distributed(chain, plain = false))
-      assert(got === chainLabels, "chain regime divergence")
+    assert(distributed(chain, maxIters = 15) === chainLabels,
+      "chain regime divergence")
     // int ids keep their type through the driver finish
     val intIds = Seq((3, 4), (4, 5)).toDF("id1", "id2")
     val intLabels = Dedup.connectedComponents(intIds)
@@ -936,29 +887,32 @@ class DedupSpec extends AnyFunSuite {
     "and a self-edge-only graph converges to one label per node") {
     import spark.implicits._
     val g = Seq((1L, 1L), (1L, 2L), (7L, 7L)).toDF("id1", "id2")
+    // diameter 2 (1~2~3, min at an end): 2 changing rounds + stability
+    val path3 = Seq((3L, 2L), (2L, 1L)).toDF("id1", "id2")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("id").as[(Long, Long)].collect().toSeq
     withBroadcastThreshold("-1") {
       assertThrows[IllegalStateException] {
         Dedup.connectedComponents(g, maxIters = 0)
-      }
-      assertThrows[IllegalStateException] {
-        Dedup.connectedComponentsFast(g, maxIters = 0)
-      }
-      assertThrows[IllegalArgumentException] {
-        Dedup.connectedComponentsAuto(g, switchAfter = 1, maxIters = 0)
       }
       assert(spark.sharedState.cacheManager.isEmpty,
         "a throwing loop leaked a cached frame")
       // a graph of self-edges alone is converged after its first
       // round: one label per node, each its own rep
       val selfOnly = Seq((1L, 1L), (7L, 7L), (7L, 7L)).toDF("id1", "id2")
-      assert(Dedup.connectedComponents(selfOnly, maxIters = 1)
-        .orderBy("id").as[(Long, Long)].collect().toSeq ===
+      assert(rows(Dedup.connectedComponents(selfOnly, maxIters = 1)) ===
         Seq((1L, 1L), (7L, 7L)))
+      // a budget below the switch round is valid: 3 plain rounds
+      // converge a diameter-2 graph
+      assert(rows(Dedup.connectedComponents(path3, maxIters = 3)) ===
+        Seq((1L, 1L), (2L, 1L), (3L, 1L)))
     }
-    // the driver finish needs no rounds: the same graph at maxIters = 0
-    assert(Dedup.connectedComponents(g, maxIters = 0)
-      .orderBy("id").as[(Long, Long)].collect().toSeq ===
+    // the driver finish needs no rounds: the same graphs at
+    // maxIters = 0 and 3
+    assert(rows(Dedup.connectedComponents(g, maxIters = 0)) ===
       Seq((1L, 1L), (2L, 1L), (7L, 7L)))
+    assert(rows(Dedup.connectedComponents(path3, maxIters = 3)) ===
+      Seq((1L, 1L), (2L, 1L), (3L, 1L)))
   }
 
   test("crossDedupFlagsFromIndexes: flag-identical to the inline path " +
